@@ -1,0 +1,8 @@
+"""Make the benchmark's modules and the repository root importable."""
+
+import os
+import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(HERE))
+sys.path.insert(1, os.path.dirname(os.path.dirname(HERE)))
