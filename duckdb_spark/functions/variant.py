@@ -35,22 +35,11 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from duckdb_spark.functions.scalar2 import _pd
+
 
 def _c(x) -> Column:
     return F.col(x) if isinstance(x, str) else (x if isinstance(x, Column) else F.lit(x))
-
-
-_PD_CACHE: dict = {}
-
-
-def _pd(key: str, ret: str, impl):
-    from pyspark.sql.functions import pandas_udf
-
-    u = _PD_CACHE.get(key)
-    if u is None:
-        u = pandas_udf(ret)(impl)
-        _PD_CACHE[key] = u
-    return u
 
 
 # ---------------------------------------------------------------- paths

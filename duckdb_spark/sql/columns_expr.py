@@ -30,25 +30,6 @@ def has_columns_expr(sql: str) -> bool:
     return re.search(r"(?i)\bCOLUMNS\s*\(", sql) is not None
 
 
-def from_segment(sql: str) -> str | None:
-    """Text of the top-level FROM clause (for schema probing)."""
-    toks = _tokens(sql)
-    depth = 0
-    start = -1
-    for i, t in enumerate(toks):
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and start < 0 and t.upper() == "FROM":
-            start = i + 1
-        elif depth == 0 and start >= 0 and (
-            t.upper() in _CLAUSE_END or t == ";"
-        ):
-            return "".join(toks[start:i])
-    return "".join(toks[start:]) if start >= 0 else None
-
-
 def _code(tok: str) -> bool:
     return bool(tok.strip()) and not tok.startswith("--") \
         and not tok.startswith("/*")

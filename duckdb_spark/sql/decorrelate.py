@@ -377,7 +377,7 @@ def _find_refs(s_toks: list[str], outer_aliases: dict[str, str],
 
 
 def _bind(s_text: str, refs: list[str], row, dtypes) -> str:
-    from duckdb_spark.relation import _sql_lit
+    from duckdb_spark.statements import _sql_lit
 
     bound = s_text
     order = sorted(range(len(refs)), key=lambda k: -len(refs[k]))
@@ -399,7 +399,7 @@ def _bind(s_text: str, refs: list[str], row, dtypes) -> str:
 
 
 def _lit(v, dt) -> str:
-    from duckdb_spark.relation import _sql_lit
+    from duckdb_spark.statements import _sql_lit
 
     return _sql_lit(v, dt)
 

@@ -1577,7 +1577,7 @@ def run_file(
                     else:
                         # SUM(BIGINT) overflow: the reference promotes to
                         # HUGEINT — re-run through DECIMAL(38,0)
-                        from duckdb_spark.relation import _rewrite_fn_calls
+                        from duckdb_spark.statements import _rewrite_fn_calls
 
                         sql2 = _rewrite_fn_calls(
                             rec.sql, "sum",
