@@ -372,10 +372,11 @@ def _fold_guard(vals, result: Column) -> Column:
 
 
 def welford_sq_fold(vals, field: str) -> Column:
-    """count * var_pop over `field` of a position-sorted struct array —
-    DuckDB's regr_sxx/regr_syy (extension/core_functions/aggregate/
-    regression/regr_sxx_syy.cpp; update formula STDDevBaseOperation in
-    algebraic/stddev.hpp), replayed operation-for-operation."""
+    """count * var_pop over `field` ("x" or "y") of a position-sorted
+    struct array of (x, y) pairs — DuckDB's regr_sxx/regr_syy
+    (extension/core_functions/aggregate/regression/regr_sxx_syy.cpp;
+    update formula STDDevBaseOperation in algebraic/stddev.hpp),
+    replayed operation-for-operation."""
     vals = _c(vals)
     init = F.struct(
         F.lit(0.0).alias("n"), F.lit(0.0).alias("mean"), F.lit(0.0).alias("dsq")
@@ -387,10 +388,11 @@ def welford_sq_fold(vals, field: str) -> Column:
         md = (inp - s["mean"]) / n
         nm = s["mean"] + md
         inc = (inp - nm) * (inp - s["mean"])
-        # NULL skip (ADVICE r12): DuckDB's regr_sxx/syy skip NULL rows;
-        # propagating one through the accumulator NULLed the whole group.
+        # NULL skip (ADVICE r12): DuckDB's regr_sxx/syy skip a row whose
+        # x OR y is NULL; propagating one through the accumulator NULLed
+        # the whole group.
         return F.when(
-            inp.isNotNull(),
+            e["x"].isNotNull() & e["y"].isNotNull(),
             F.struct(n.alias("n"), nm.alias("mean"), (s["dsq"] + inc).alias("dsq")),
         ).otherwise(s)
 

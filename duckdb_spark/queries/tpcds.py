@@ -513,30 +513,29 @@ def _oracle(sql: str) -> str:
     return sql.format(**{t: f"read_parquet('{TPCDS_DIR}/{t}.parquet')" for t in TABLES})
 
 
-# Last fixture dir whose views are bound, per SparkSession: registering 24
-# temp views costs ~24 parquet schema reads of driver time, which used to be
-# charged to EVERY timed query call (VERDICT r06 wrong-item 4). Re-register
-# only when the session or fixture dir changes.
+# Last fixture dir whose views are bound, per SparkSession (bind_views).
 _BOUND: dict[int, str] = {}
 
 
 def _spark_run(spark: SparkSession, sql: str, sf_dir: str = "") -> DataFrame:
-    from duckdb_spark.queries import bench_scale_mult
+    from duckdb_spark.queries import bench_scale_mult, bind_views
     from duckdb_spark.sql.dialect import translate
+    from duckdb_spark.statements import materialize_ctes
 
-    d = ensure_fixture(bench_scale_mult(sf_dir))
-    if _BOUND.get(id(spark)) != d:
-        # Views carry a tpcds_ prefix: the raw names (customer, ...) collide
-        # with the TPC-H temp views other query modules bind in the SAME
-        # session, and the _BOUND cache would skip re-registration after a
-        # tpch_* call clobbered them (round-8 scan: 12 tpcds queries threw
-        # UNRESOLVED_COLUMN when run after tpch_* in one session).
-        for t in TABLES:
-            spark.read.parquet(f"{d}/{t}.parquet").createOrReplaceTempView(
-                f"tpcds_{t}"
-            )
-        _BOUND[id(spark)] = d
-    return spark.sql(translate(sql.format(**{t: f"tpcds_{t}" for t in TABLES})))
+    # Views carry a tpcds_ prefix: the raw names (customer, ...) collide
+    # with the TPC-H temp views other query modules bind in the SAME
+    # session, and the _BOUND cache would skip re-registration after a
+    # tpch_* call clobbered them (round-8 scan: 12 tpcds queries threw
+    # UNRESOLVED_COLUMN when run after tpch_* in one session).
+    views = {f"tpcds_{t}": t for t in TABLES}
+    bind_views(spark, _BOUND, ensure_fixture(bench_scale_mult(sf_dir)), views)
+    sql = sql.format(**{t: v for v, t in views.items()})
+
+    def run(text: str) -> DataFrame:
+        return spark.sql(translate(text))
+
+    df = materialize_ctes(spark, sql, run)
+    return run(sql) if df is None else df
 
 
 _AVGR = None
@@ -565,65 +564,6 @@ def _tpcds(name: str, sql: str):
         """TPC-DS over the deterministic fixture (fact tables scale with
         sf_dir; reference extension/tpcds/dsdgen)."""
         return _spark_run(spark, _sql, sf_dir)
-
-    q.__name__ = name
-    return q
-
-
-def _tpcds_mat_cte(name: str, sql: str, cte: str = "year_total",
-                   alias_prefix: str = "t_", body_filter: str | None = None):
-    """Register a query whose FIRST CTE is referenced many times by the
-    main SELECT (Catalyst inlines CTEs, multiplying the fact scans):
-    materialize the CTE once per invocation (localCheckpoint → temp view,
-    rebuilt inside every timed run) and point the main query's FROM-clause
-    references at the view. Only `<cte> <alias_prefix>…` table references
-    are rewritten, so columns that share the CTE's name stay untouched.
-    `body_filter` (must be on CTE output/group-key columns — filter
-    through aggregation is only equivalence-preserving there) is pushed
-    into the materialization."""
-    sql = _expand_avgr(sql)
-    view = f"{name}_cte"
-    marker = f"WITH {cte} AS\n  ("
-    _, rest = sql.split(marker, 1)
-    body, main = rest.split(")\nSELECT", 1)
-    main = "SELECT" + main
-    assert f"{cte} {alias_prefix}" in main, name
-    main = main.replace(f"{cte} {alias_prefix}", f"{view} {alias_prefix}")
-    assert f" {cte} " not in main, name
-    cte_sql = body if body_filter is None else (
-        f"SELECT * FROM (\n{body}\n) __mat WHERE {body_filter}")
-
-    @register(name, oracle=_oracle(sql))
-    def q(spark: SparkSession, sf_dir: str, _cte=cte_sql, _main=main,
-          _view=view) -> DataFrame:
-        _spark_run(spark, _cte, sf_dir).localCheckpoint(eager=True) \
-            .createOrReplaceTempView(_view)
-        return _spark_run(spark, _main, sf_dir)
-
-    q.__name__ = name
-    return q
-
-
-def _tpcds_mat_v1(name: str, sql: str):
-    """q47/q57 shape: v1 (windowed monthly sums) self-joined 3× inside v2
-    for lag/lead. Materialize v1 once; keep v2 as an ordinary CTE."""
-    sql = _expand_avgr(sql)
-    view = f"{name}_v1"
-    _, rest = sql.split("WITH v1 AS\n  (", 1)
-    body, main = rest.split("),\nv2 AS", 1)
-    main = "WITH v2 AS" + main
-    assert "FROM v1, v1 v1_lag, v1 v1_lead" in main, name
-    main = main.replace(
-        "FROM v1, v1 v1_lag, v1 v1_lead",
-        f"FROM {view} v1, {view} v1_lag, {view} v1_lead")
-    assert "FROM v1," not in main, name
-
-    @register(name, oracle=_oracle(sql))
-    def q(spark: SparkSession, sf_dir: str, _v1=body, _main=main,
-          _view=view) -> DataFrame:
-        _spark_run(spark, _v1, sf_dir).localCheckpoint(eager=True) \
-            .createOrReplaceTempView(_view)
-        return _spark_run(spark, _main, sf_dir)
 
     q.__name__ = name
     return q
@@ -1824,20 +1764,22 @@ LIMIT 100
 """)
 
 # q31 — county web/store quarter-over-quarter growth comparison (31.sql)
-_Q31_ORACLE = """
-WITH ss AS
+_tpcds("tpcds_q31", """
+WITH ss AS MATERIALIZED
   (SELECT ca_county, d_qoy, d_year,
           SUM(ss_ext_sales_price) AS store_sales
    FROM {store_sales} store_sales, {date_dim} date_dim,
         {customer_address} customer_address
    WHERE ss_sold_date_sk = d_date_sk AND ss_addr_sk = ca_address_sk
+     AND d_year = 2000 AND d_qoy IN (1, 2, 3)
    GROUP BY ca_county, d_qoy, d_year),
-ws AS
+ws AS MATERIALIZED
   (SELECT ca_county, d_qoy, d_year,
           SUM(ws_ext_sales_price) AS web_sales
    FROM {web_sales} web_sales, {date_dim} date_dim,
         {customer_address} customer_address
    WHERE ws_sold_date_sk = d_date_sk AND ws_bill_addr_sk = ca_address_sk
+     AND d_year = 2000 AND d_qoy IN (1, 2, 3)
    GROUP BY ca_county, d_qoy, d_year)
 SELECT ss1.ca_county, ss1.d_year,
        ROUND(CAST(ws2.web_sales AS DOUBLE) / CAST(ws1.web_sales AS DOUBLE), 4)
@@ -1868,51 +1810,7 @@ WHERE ss1.d_qoy = 1 AND ss1.d_year = 2000
              THEN CAST(ss3.store_sales AS DOUBLE) / CAST(ss2.store_sales AS DOUBLE)
              ELSE NULL END
 ORDER BY ss1.ca_county
-"""
-
-# Spark side of q31 (guide §3.3 / VERDICT r12 item 7): the two CTEs are
-# each referenced 3× and Catalyst inlines CTEs, so the reference text scans
-# store_sales and web_sales three times each. Materialize each CTE ONCE
-# per invocation (localCheckpoint, rebuilt inside every timed run) and
-# self-join the tiny (county, qoy) aggregates. The quarter/year filter is
-# pushed INTO the materialized aggregate — provably equivalent because
-# d_qoy/d_year are GROUP BY keys (filter on group keys commutes with the
-# aggregation) and the outer query only consumes qoy 1-3 of year 2000.
-_Q31_CTE = """
-SELECT ca_county, d_qoy, d_year, SUM({fact_price}) AS {alias}
-FROM {fact} fact, {date_dim} date_dim, {customer_address} customer_address
-WHERE {fact_date} = d_date_sk AND {fact_addr} = ca_address_sk
-  AND d_year = 2000 AND d_qoy IN (1, 2, 3)
-GROUP BY ca_county, d_qoy, d_year
-"""
-
-
-@register("tpcds_q31", oracle=_oracle(_Q31_ORACLE))
-def tpcds_q31(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q31 with both shared CTEs materialized once (6 fact scans → 2)."""
-    ss_sql = _Q31_CTE.format(
-        fact="{store_sales}", fact_price="ss_ext_sales_price",
-        fact_date="ss_sold_date_sk", fact_addr="ss_addr_sk",
-        alias="store_sales", date_dim="{date_dim}",
-        customer_address="{customer_address}",
-    )
-    ws_sql = _Q31_CTE.format(
-        fact="{web_sales}", fact_price="ws_ext_sales_price",
-        fact_date="ws_sold_date_sk", fact_addr="ws_bill_addr_sk",
-        alias="web_sales", date_dim="{date_dim}",
-        customer_address="{customer_address}",
-    )
-    _spark_run(spark, ss_sql, sf_dir).localCheckpoint(eager=True) \
-        .createOrReplaceTempView("tpcds_q31_ss")
-    _spark_run(spark, ws_sql, sf_dir).localCheckpoint(eager=True) \
-        .createOrReplaceTempView("tpcds_q31_ws")
-    main = _Q31_ORACLE.split("SELECT ss1.ca_county", 1)[1]
-    main = ("SELECT ss1.ca_county" + main).replace(
-        "FROM ss ss1, ss ss2, ss ss3, ws ws1, ws ws2, ws ws3",
-        "FROM tpcds_q31_ss ss1, tpcds_q31_ss ss2, tpcds_q31_ss ss3, "
-        "tpcds_q31_ws ws1, tpcds_q31_ws ws2, tpcds_q31_ws ws3",
-    )
-    return _spark_run(spark, main, sf_dir)
+""")
 
 # q32 — excess catalog discount vs 1.3x item average (32.sql)
 _tpcds("tpcds_q32", """
@@ -2027,8 +1925,8 @@ LIMIT 100
 
 # q47 — store monthly sales vs yearly average with lag/lead self-joins
 # (47.sql)
-_tpcds_mat_v1("tpcds_q47", """
-WITH v1 AS
+_tpcds("tpcds_q47", """
+WITH v1 AS MATERIALIZED
   (SELECT i_category, i_brand, s_store_name, s_company_name, d_year, d_moy,
           SUM(ss_sales_price) AS sum_sales,
           AVG(SUM(ss_sales_price)) OVER (PARTITION BY i_category, i_brand,
@@ -2120,8 +2018,8 @@ LIMIT 100
 """)
 
 # q57 — catalog/call-center monthly deviation (q47's catalog twin, 57.sql)
-_tpcds_mat_v1("tpcds_q57", """
-WITH v1 AS
+_tpcds("tpcds_q57", """
+WITH v1 AS MATERIALIZED
   (SELECT i_category, i_brand, cc_name, d_year, d_moy,
           SUM(cs_sales_price) AS sum_sales,
           AVG(SUM(cs_sales_price)) OVER (PARTITION BY i_category, i_brand,
@@ -2829,8 +2727,11 @@ LIMIT 100
 # extended to a total order wherever the reference's isn't (LIMIT safety).
 
 # q4 — three-channel year-over-year customer growth (04.sql)
-_tpcds_mat_cte("tpcds_q04", """
-WITH year_total AS
+# The main query reads only years 2001 and 2002, and d_year is a GROUP BY
+# key of every branch, so the year filter inside year_total keeps the
+# result and materializes two years instead of all.
+_tpcds("tpcds_q04", """
+WITH year_total AS MATERIALIZED
   (SELECT c_customer_id customer_id, c_first_name customer_first_name,
           c_last_name customer_last_name,
           c_preferred_cust_flag customer_preferred_cust_flag,
@@ -2841,6 +2742,7 @@ WITH year_total AS
           's' sale_type
    FROM {customer} customer, {store_sales} store_sales, {date_dim} date_dim
    WHERE c_customer_sk = ss_customer_sk AND ss_sold_date_sk = d_date_sk
+     AND d_year IN (2001, 2002)
    GROUP BY c_customer_id, c_first_name, c_last_name, c_preferred_cust_flag,
             c_birth_country, c_login, c_email_address, d_year
    UNION ALL
@@ -2852,6 +2754,7 @@ WITH year_total AS
    FROM {customer} customer, {catalog_sales} catalog_sales,
         {date_dim} date_dim
    WHERE c_customer_sk = cs_bill_customer_sk AND cs_sold_date_sk = d_date_sk
+     AND d_year IN (2001, 2002)
    GROUP BY c_customer_id, c_first_name, c_last_name, c_preferred_cust_flag,
             c_birth_country, c_login, c_email_address, d_year
    UNION ALL
@@ -2862,6 +2765,7 @@ WITH year_total AS
           'w' sale_type
    FROM {customer} customer, {web_sales} web_sales, {date_dim} date_dim
    WHERE c_customer_sk = ws_bill_customer_sk AND ws_sold_date_sk = d_date_sk
+     AND d_year IN (2001, 2002)
    GROUP BY c_customer_id, c_first_name, c_last_name, c_preferred_cust_flag,
             c_birth_country, c_login, c_email_address, d_year)
 SELECT t_s_secyear.customer_id, t_s_secyear.customer_first_name,
@@ -2900,7 +2804,7 @@ ORDER BY t_s_secyear.customer_id NULLS FIRST,
          t_s_secyear.customer_last_name NULLS FIRST,
          t_s_secyear.customer_preferred_cust_flag NULLS FIRST
 LIMIT 100
-""", body_filter="dyear IN (2001, 2002)")
+""")
 
 # q8 — store profit for zips with >10 preferred customers (08.sql; zip
 # list drawn from the fixture's 300-value pool)
@@ -2970,8 +2874,11 @@ LIMIT 100
 """)
 
 # q11 — store/web year-over-year growth (11.sql)
-_tpcds_mat_cte("tpcds_q11", """
-WITH year_total AS
+# The main query reads only years 2001 and 2002, and d_year is a GROUP BY
+# key of every branch, so the year filter inside year_total keeps the
+# result and materializes two years instead of all.
+_tpcds("tpcds_q11", """
+WITH year_total AS MATERIALIZED
   (SELECT c_customer_id customer_id, c_first_name customer_first_name,
           c_last_name customer_last_name,
           c_preferred_cust_flag customer_preferred_cust_flag,
@@ -2981,6 +2888,7 @@ WITH year_total AS
           's' sale_type
    FROM {customer} customer, {store_sales} store_sales, {date_dim} date_dim
    WHERE c_customer_sk = ss_customer_sk AND ss_sold_date_sk = d_date_sk
+     AND d_year IN (2001, 2002)
    GROUP BY c_customer_id, c_first_name, c_last_name, c_preferred_cust_flag,
             c_birth_country, c_login, c_email_address, d_year
    UNION ALL
@@ -2989,6 +2897,7 @@ WITH year_total AS
           SUM(ws_ext_list_price - ws_ext_discount_amt), 'w' sale_type
    FROM {customer} customer, {web_sales} web_sales, {date_dim} date_dim
    WHERE c_customer_sk = ws_bill_customer_sk AND ws_sold_date_sk = d_date_sk
+     AND d_year IN (2001, 2002)
    GROUP BY c_customer_id, c_first_name, c_last_name, c_preferred_cust_flag,
             c_birth_country, c_login, c_email_address, d_year)
 SELECT t_s_secyear.customer_id, t_s_secyear.customer_first_name,
@@ -3015,11 +2924,11 @@ ORDER BY t_s_secyear.customer_id NULLS FIRST,
          t_s_secyear.customer_last_name NULLS FIRST,
          t_s_secyear.customer_preferred_cust_flag NULLS FIRST
 LIMIT 100
-""", body_filter="dyear IN (2001, 2002)")
+""")
 
 # q14 (part 1) — cross-channel item intersection vs average sales (14.sql)
-_Q14_ORACLE = """
-WITH cross_items AS
+_tpcds("tpcds_q14", """
+WITH cross_items AS MATERIALIZED
   (SELECT i_item_sk ss_item_sk
    FROM {item} item,
      (SELECT iss.i_brand_id brand_id, iss.i_class_id class_id,
@@ -3039,7 +2948,7 @@ WITH cross_items AS
         AND d3.d_year BETWEEN 1999 AND 1999 + 2) sq1
    WHERE i_brand_id = brand_id AND i_class_id = class_id
      AND i_category_id = category_id),
-avg_sales AS
+avg_sales AS MATERIALIZED
   (SELECT AVG(quantity * list_price) average_sales
    FROM (SELECT ss_quantity quantity, ss_list_price list_price
          FROM {store_sales} store_sales, {date_dim} date_dim
@@ -3092,36 +3001,7 @@ GROUP BY ROLLUP (channel, i_brand_id, i_class_id, i_category_id)
 ORDER BY channel NULLS FIRST, i_brand_id NULLS FIRST,
          i_class_id NULLS FIRST, i_category_id NULLS FIRST
 LIMIT 100
-"""
-
-# Spark side of q14 (guide §3.3 / VERDICT r12 item 7): cross_items and
-# avg_sales are each referenced 3× by the channel branches; Catalyst
-# inlines CTEs, making q14 the heaviest plan in the registry (87 scans /
-# 49 Exchanges at r12). Materialize each CTE ONCE per invocation
-# (localCheckpoint, rebuilt inside every timed run): the INTERSECT pipeline
-# and the 3-channel average run once instead of three times. The pieces are
-# carved out of the oracle literal itself so the texts cannot drift.
-_q14_rest = _Q14_ORACLE.split("WITH cross_items AS\n  (", 1)[1]
-_Q14_CI, _q14_rest = _q14_rest.split("),\navg_sales AS", 1)
-_Q14_AV = _q14_rest.split(") sq2)", 1)[0].split("(", 1)[1] + ") sq2"
-_Q14_MAIN = ("SELECT channel, i_brand_id"
-             + _Q14_ORACLE.split("SELECT channel, i_brand_id", 1)[1]) \
-    .replace("FROM cross_items", "FROM tpcds_q14_ci") \
-    .replace("FROM avg_sales", "FROM tpcds_q14_av")
-assert _Q14_CI.lstrip().startswith("SELECT i_item_sk")
-assert _Q14_AV.lstrip().startswith("SELECT AVG(")
-assert "cross_items" not in _Q14_MAIN and "avg_sales" not in _Q14_MAIN
-del _q14_rest
-
-
-@register("tpcds_q14", oracle=_oracle(_Q14_ORACLE))
-def tpcds_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q14 with the two shared CTEs materialized once per invocation."""
-    _spark_run(spark, _Q14_CI, sf_dir).localCheckpoint(eager=True) \
-        .createOrReplaceTempView("tpcds_q14_ci")
-    _spark_run(spark, _Q14_AV, sf_dir).localCheckpoint(eager=True) \
-        .createOrReplaceTempView("tpcds_q14_av")
-    return _spark_run(spark, _Q14_MAIN, sf_dir)
+""")
 
 # q18 — catalog demographics rollup over country/state/county (18.sql)
 _tpcds("tpcds_q18", """
@@ -3170,8 +3050,8 @@ LIMIT 100
 # q23 (part 1) — best store customers buying frequent items (23.sql;
 # the fixture's (item, day) pairs are unique by construction, so the
 # frequency threshold adapts from > 4 to > 0 — the shape is unchanged)
-_Q23_ORACLE = """
-WITH frequent_ss_items AS
+_tpcds("tpcds_q23", """
+WITH frequent_ss_items AS MATERIALIZED
   (SELECT itemdesc, i_item_sk item_sk, d_date solddate, COUNT(*) cnt
    FROM {store_sales} store_sales, {date_dim} date_dim,
      (SELECT SUBSTRING(i_item_desc, 1, 30) itemdesc, * FROM {item} item) sq1
@@ -3188,7 +3068,7 @@ max_store_sales AS
            AND ss_sold_date_sk = d_date_sk
            AND d_year IN (1999, 2000, 2001, 2002)
          GROUP BY c_customer_sk) sq2),
-best_ss_customer AS
+best_ss_customer AS MATERIALIZED
   (SELECT c_customer_sk, SUM(ss_quantity * ss_sales_price) ssales
    FROM {store_sales} store_sales, {customer} customer,
         max_store_sales
@@ -3221,33 +3101,7 @@ FROM (SELECT c_last_name, c_first_name,
 ORDER BY c_last_name NULLS FIRST, c_first_name NULLS FIRST,
          sales NULLS FIRST
 LIMIT 100
-"""
-
-# Spark side of q23 (§3.3): frequent_ss_items and best_ss_customer are
-# each referenced twice (the two channel branches); materialize each once
-# per invocation. best_ss_customer keeps its max_store_sales CTE inline
-# (single reference). View names reuse the CTE names, so the main SELECT
-# text is byte-identical to the oracle's.
-_q23_rest = _Q23_ORACLE.split("WITH frequent_ss_items AS\n  (", 1)[1]
-_Q23_FREQ, _q23_rest = _q23_rest.split("),\nmax_store_sales AS\n  (", 1)
-_Q23_MAX, _q23_rest = _q23_rest.split("),\nbest_ss_customer AS\n  (", 1)
-_Q23_BEST, _Q23_MAIN = _q23_rest.split(")\nSELECT c_last_name", 1)
-_Q23_BEST = "WITH max_store_sales AS (" + _Q23_MAX + ") " + _Q23_BEST
-_Q23_MAIN = "SELECT c_last_name" + _Q23_MAIN
-assert _Q23_FREQ.lstrip().startswith("SELECT itemdesc")
-assert _Q23_BEST.lstrip().startswith("WITH max_store_sales")
-del _q23_rest
-
-
-@register("tpcds_q23", oracle=_oracle(_Q23_ORACLE))
-def tpcds_q23(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q23 with the twice-referenced CTEs materialized once."""
-    _spark_run(spark, _Q23_FREQ, sf_dir).localCheckpoint(eager=True) \
-        .createOrReplaceTempView("frequent_ss_items")
-    _spark_run(spark, _Q23_BEST, sf_dir).localCheckpoint(eager=True) \
-        .createOrReplaceTempView("best_ss_customer")
-    return _spark_run(spark, _Q23_MAIN, sf_dir)
-
+""")
 
 # q24 (part 1) — store-return customers by color, zip-matched stores
 # (24.sql; i_color adapted to the fixture palette)
@@ -3921,8 +3775,8 @@ LIMIT 100
 """)
 
 # q74 — store/web net-paid year-over-year growth (74.sql)
-_tpcds_mat_cte("tpcds_q74", """
-WITH year_total AS
+_tpcds("tpcds_q74", """
+WITH year_total AS MATERIALIZED
   (SELECT c_customer_id customer_id, c_first_name customer_first_name,
           c_last_name customer_last_name, d_year AS year_,
           SUM(ss_net_paid) year_total, 's' sale_type

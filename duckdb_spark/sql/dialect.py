@@ -24,6 +24,7 @@ nesting tracked) — not a regex pass over raw text.
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
 _TOKEN_RE = re.compile(
     r"""
@@ -3270,6 +3271,85 @@ def _rewrite_select_in_subquery(toks: list[str]) -> list[str]:
 
 
 
+class Cte(NamedTuple):
+    """One entry of a WITH list. Spans are token indices, end exclusive."""
+    name: str
+    cols: list[str]
+    key: list[str]  # USING KEY (…) entries
+    materialized: bool | None  # AS MATERIALIZED / AS NOT MATERIALIZED / neither
+    span: tuple[int, int]  # name through the body's closing paren
+    body: tuple[int, int]  # inside the body's parentheses
+
+
+class WithList(NamedTuple):
+    recursive: bool
+    ctes: list[Cte]
+    main: int  # token index where the main statement starts
+
+
+def parse_with(toks: list[str]) -> WithList | None:
+    """Parse the leading `WITH [RECURSIVE] name [(cols)] [USING KEY (keys)]
+    AS [[NOT] MATERIALIZED] (body), …` list of a tokenized statement; None
+    when it does not start with WITH or the list does not parse."""
+    j = _next_code(toks, 0)
+    if j >= len(toks) or not _is_word(toks[j], "WITH"):
+        return None
+    j = _next_code(toks, j + 1)
+    recursive = j < len(toks) and _is_word(toks[j], "RECURSIVE")
+    if recursive:
+        j = _next_code(toks, j + 1)
+
+    def ident_list(k: int) -> tuple[list[str], int] | None:
+        c = _match_paren(toks, k)
+        if c < 0:
+            return None
+        names = [a.strip('`"') for a in _split_top_args(toks[k + 1:c])]
+        return names, _next_code(toks, c + 1)
+
+    ctes: list[Cte] = []
+    while True:
+        if j >= len(toks) or not re.match(r"^[A-Za-z_`\"]", toks[j]):
+            return None
+        start, name = j, toks[j].strip('`"')
+        j = _next_code(toks, j + 1)
+        cols: list[str] = []
+        key: list[str] = []
+        if j < len(toks) and toks[j] == "(":
+            parsed = ident_list(j)
+            if parsed is None:
+                return None
+            cols, j = parsed
+        if j < len(toks) and _is_word(toks[j], "USING"):
+            j = _next_code(toks, j + 1)
+            if j >= len(toks) or not _is_word(toks[j], "KEY"):
+                return None
+            j = _next_code(toks, j + 1)
+            parsed = ident_list(j) if j < len(toks) and toks[j] == "(" else None
+            if parsed is None:
+                return None
+            key, j = parsed
+        if j >= len(toks) or not _is_word(toks[j], "AS"):
+            return None
+        j = _next_code(toks, j + 1)
+        hint: list[str] = []
+        while j < len(toks) and toks[j].upper() in ("NOT", "MATERIALIZED"):
+            hint.append(toks[j].upper())
+            j = _next_code(toks, j + 1)
+        if hint not in ([], ["MATERIALIZED"], ["NOT", "MATERIALIZED"]):
+            return None
+        if j >= len(toks) or toks[j] != "(":
+            return None
+        c = _match_paren(toks, j)
+        if c < 0:
+            return None
+        ctes.append(Cte(name, cols, key, len(hint) == 1 if hint else None,
+                        (start, c + 1), (j + 1, c)))
+        j = _next_code(toks, c + 1)
+        if j >= len(toks) or toks[j] != ",":
+            return WithList(recursive, ctes, j)
+        j = _next_code(toks, j + 1)
+
+
 def split_recursive_cte(sql: str, include_union_all: bool = False) -> dict | None:
     """Parse `WITH RECURSIVE name [(cols)] [USING KEY (keys)] AS
     ( base UNION [ALL] step ) tail` for the forms Spark's native
@@ -3289,64 +3369,21 @@ def split_recursive_cte(sql: str, include_union_all: bool = False) -> dict | Non
             break
         toks = toks[i + 1:c]
         i = _next_code(toks, 0)
-    if i >= len(toks) or not _is_word(toks[i], "WITH"):
+    w = parse_with(toks)
+    if w is None or not w.recursive:
         return None
-    i = _next_code(toks, i + 1)
-    if i >= len(toks) or not _is_word(toks[i], "RECURSIVE"):
-        return None
-    i = _next_code(toks, i + 1)
-    prefix_ctes: list[str] = []  # non-recursive CTEs BEFORE the recursive
-    while True:
-        if i >= len(toks) or not re.match(r"^[A-Za-z_`\"]", toks[i]):
-            return None
-        cte_start = i
-        name = toks[i].strip('`"')
-        i = _next_code(toks, i + 1)
-        cols: list[str] = []
-        if i < len(toks) and toks[i] == "(":
-            c = _match_paren(toks, i)
-            if c < 0:
-                return None
-            cols = [a.strip().strip('`"')
-                    for a in _split_top_args(toks[i + 1:c])]
-            i = _next_code(toks, c + 1)
-        key: list[str] = []
-        if i < len(toks) and _is_word(toks[i], "USING"):
-            j = _next_code(toks, i + 1)
-            if j >= len(toks) or not _is_word(toks[j], "KEY"):
-                return None
-            j = _next_code(toks, j + 1)
-            if j >= len(toks) or toks[j] != "(":
-                return None
-            c = _match_paren(toks, j)
-            if c < 0:
-                return None
-            key = [a.strip().strip('`"')
-                   for a in _split_top_args(toks[j + 1:c])]
-            i = _next_code(toks, c + 1)
-        if i >= len(toks) or not _is_word(toks[i], "AS"):
-            return None
-        i = _next_code(toks, i + 1)
-        while i < len(toks) and re.match(r"^[A-Za-z_]", toks[i]) and \
-                toks[i].upper() in ("NOT", "MATERIALIZED"):
-            i = _next_code(toks, i + 1)
-        if i >= len(toks) or toks[i] != "(":
-            return None
-        body_close = _match_paren(toks, i)
-        if body_close < 0:
-            return None
-        body = toks[i + 1:body_close]
-        # first top-level UNION splits base from the recursive step
+    # the first entry with a top-level UNION (or a key) is the recursive
+    # one; the NON-recursive entries before it (recursive_cte_key_probe.
+    # test:647) are re-prefixed onto base/step/tail below
+    for n, cte in enumerate(w.ctes):
+        body = toks[cte.body[0]:cte.body[1]]
         u = _top_level_index(body, 0, len(body), "UNION")
-        if u >= 0 or key:
+        if u >= 0 or cte.key:
             break
-        # leading NON-recursive CTE (recursive_cte_key_probe.test:647):
-        # collect; its text is re-prefixed onto base/step/tail below
-        nxt0 = _next_code(toks, body_close + 1)
-        if nxt0 >= len(toks) or toks[nxt0] != ",":
-            return None
-        prefix_ctes.append("".join(toks[cte_start:body_close + 1]).strip())
-        i = _next_code(toks, nxt0 + 1)
+    else:
+        return None
+    prefix_ctes = ["".join(toks[slice(*c.span)]).strip() for c in w.ctes[:n]]
+    key = cte.key
     if u < 0:
         return None
     after = _next_code(body, u + 1)
@@ -3384,7 +3421,7 @@ def split_recursive_cte(sql: str, include_union_all: bool = False) -> dict | Non
             raise ValueError(
                 "Binder Error: USING KEY requires at least one key column "
                 "(only aggregate entries given)")
-    tail_toks = toks[body_close + 1:]
+    tail_toks = toks[cte.span[1]:]
     t0 = _next_code(tail_toks, 0)
     pfx = (", ".join(prefix_ctes) + ", ") if prefix_ctes else ""
     if t0 < len(tail_toks) and tail_toks[t0] == ",":
@@ -3396,8 +3433,8 @@ def split_recursive_cte(sql: str, include_union_all: bool = False) -> dict | Non
     else:
         tail = "".join(tail_toks)
     return {
-        "name": name,
-        "cols": cols,
+        "name": cte.name,
+        "cols": cte.cols,
         "key": key,
         "base": (f"WITH {', '.join(prefix_ctes)} " if prefix_ctes else "")
         + "".join(body[:u]).strip(),
@@ -3460,38 +3497,10 @@ def split_with_prefix(sql: str) -> tuple[str, str]:
     """Split a statement into (WITH-clause text, body text); ("", sql)
     when it doesn't start with WITH or doesn't parse."""
     toks = _tokens(sql)
-    i = _next_code(toks, 0)
-    if i >= len(toks) or not _is_word(toks[i], "WITH"):
+    w = parse_with(toks)
+    if w is None:
         return "", sql
-    j = _next_code(toks, i + 1)
-    if j < len(toks) and _is_word(toks[j], "RECURSIVE"):
-        j = _next_code(toks, j + 1)
-    while j < len(toks):
-        if not re.match(r"^[A-Za-z_`\"]", toks[j]):
-            return "", sql
-        j = _next_code(toks, j + 1)
-        if j < len(toks) and toks[j] == "(":
-            c = _match_paren(toks, j)
-            if c < 0:
-                return "", sql
-            j = _next_code(toks, c + 1)
-        if j >= len(toks) or not _is_word(toks[j], "AS"):
-            return "", sql
-        j = _next_code(toks, j + 1)
-        while j < len(toks) and re.match(r"^[A-Za-z_]", toks[j]) and \
-                toks[j].upper() in ("NOT", "MATERIALIZED"):
-            j = _next_code(toks, j + 1)
-        if j >= len(toks) or toks[j] != "(":
-            return "", sql
-        c = _match_paren(toks, j)
-        if c < 0:
-            return "", sql
-        j = _next_code(toks, c + 1)
-        if j < len(toks) and toks[j] == ",":
-            j = _next_code(toks, j + 1)
-            continue
-        break
-    return "".join(toks[:j]), "".join(toks[j:])
+    return "".join(toks[:w.main]), "".join(toks[w.main:])
 
 
 def strip_unused_ctes(sql: str) -> str:
@@ -3515,45 +3524,13 @@ def strip_unused_ctes(sql: str) -> str:
         i += 1
     sql = "".join(toks)
     toks = _tokens(sql)
-    i = _next_code(toks, 0)
-    if i >= len(toks) or not _is_word(toks[i], "WITH"):
+    w = parse_with(toks)
+    if w is None:
         return sql
-    j = _next_code(toks, i + 1)
-    recursive = ""
-    if j < len(toks) and _is_word(toks[j], "RECURSIVE"):
-        recursive = "RECURSIVE "
-        j = _next_code(toks, j + 1)
-    ctes: list[tuple[str, int, int]] = []  # (name, start_tok, end_tok_excl)
-    while j < len(toks):
-        start = j
-        if not re.match(r"^[A-Za-z_`\"]", toks[j]):
-            return sql
-        name = toks[j].strip('`"').lower()
-        j = _next_code(toks, j + 1)
-        if j < len(toks) and toks[j] == "(":
-            c = _match_paren(toks, j)
-            if c < 0:
-                return sql
-            j = _next_code(toks, c + 1)
-        if j >= len(toks) or not _is_word(toks[j], "AS"):
-            return sql
-        j = _next_code(toks, j + 1)
-        while j < len(toks) and re.match(r"^[A-Za-z_]", toks[j]) and \
-                toks[j].upper() in ("NOT", "MATERIALIZED"):
-            j = _next_code(toks, j + 1)
-        if j >= len(toks) or toks[j] != "(":
-            return sql
-        c = _match_paren(toks, j)
-        if c < 0:
-            return sql
-        ctes.append((name, start, c + 1))
-        j = _next_code(toks, c + 1)
-        if j < len(toks) and toks[j] == ",":
-            j = _next_code(toks, j + 1)
-            continue
-        break
-    body = "".join(toks[j:])
-    texts = {n: "".join(toks[s:e]) for n, s, e in ctes}
+    recursive = "RECURSIVE " if w.recursive else ""
+    names = [c.name.lower() for c in w.ctes]
+    texts = {c.name.lower(): "".join(toks[slice(*c.span)]) for c in w.ctes}
+    body = "".join(toks[w.main:])
     # keep set: referenced (word-boundary) from the body, transitively
     # through retained CTEs (later defs can reference earlier ones)
     keep: set[str] = set()
@@ -3561,7 +3538,7 @@ def strip_unused_ctes(sql: str) -> str:
     changed = True
     while changed:
         changed = False
-        for n, s, e in ctes:
+        for n in names:
             if n in keep:
                 continue
             pat = re.compile(rf"(?i)\b{re.escape(n)}\b")
@@ -3570,9 +3547,9 @@ def strip_unused_ctes(sql: str) -> str:
             ):
                 keep.add(n)
                 changed = True
-    if len(keep) == len(ctes):
+    if len(keep) == len(names):
         return sql
-    kept = [texts[n] for n, _, _ in ctes if n in keep]
+    kept = [texts[n] for n in names if n in keep]
     if not kept:
         return body
     return f"WITH {recursive}" + ", ".join(kept) + " " + body
@@ -3775,36 +3752,10 @@ def _rewrite_from_first(sql: str) -> str:
     toks = _tokens(sql)
     i = _next_code(toks, 0)
     if i < len(toks) and _is_word(toks[i], "WITH"):
-        # skip CTE list: [RECURSIVE] name [(cols)] AS [MATERIALIZED] (…) ,…
-        j = _next_code(toks, i + 1)
-        if j < len(toks) and _is_word(toks[j], "RECURSIVE"):
-            j = _next_code(toks, j + 1)
-        while j < len(toks):
-            if not re.match(r"^[A-Za-z_`\"]", toks[j]):
-                return sql
-            j = _next_code(toks, j + 1)
-            if j < len(toks) and toks[j] == "(":  # column list
-                c = _match_paren(toks, j)
-                if c < 0:
-                    return sql
-                j = _next_code(toks, c + 1)
-            if j >= len(toks) or not _is_word(toks[j], "AS"):
-                return sql
-            j = _next_code(toks, j + 1)
-            while j < len(toks) and re.match(r"^[A-Za-z_]", toks[j]) and \
-                    toks[j].upper() in ("NOT", "MATERIALIZED"):
-                j = _next_code(toks, j + 1)
-            if j >= len(toks) or toks[j] != "(":
-                return sql
-            c = _match_paren(toks, j)
-            if c < 0:
-                return sql
-            j = _next_code(toks, c + 1)
-            if j < len(toks) and toks[j] == ",":
-                j = _next_code(toks, j + 1)
-                continue
-            break
-        i = j
+        w = parse_with(toks)
+        if w is None:
+            return sql
+        i = w.main
     if i >= len(toks) or not _is_word(toks[i], "FROM"):
         return sql
     # `FROM … SELECT cols` → move the SELECT list up front

@@ -575,44 +575,6 @@ def values_equal(expected: str, actual: str, type_char: str) -> bool:
 # ------------------------------------------------------------- execution
 
 
-def _parse_cte_list(with_txt: str) -> list[tuple[str, list[str] | None, str]]:
-    """Parse a WITH clause into [(name, column_aliases, body_sql)]."""
-    from duckdb_spark.sql.dialect import _is_word, _match_paren, _next_code, _tokens
-
-    toks = _tokens(with_txt)
-    i = _next_code(toks, 0)
-    if i >= len(toks) or not _is_word(toks[i], "WITH"):
-        return []
-    j = _next_code(toks, i + 1)
-    if j < len(toks) and _is_word(toks[j], "RECURSIVE"):
-        j = _next_code(toks, j + 1)
-    out: list[tuple[str, list[str] | None, str]] = []
-    while j < len(toks):
-        name = toks[j].strip('`"')
-        j = _next_code(toks, j + 1)
-        cols = None
-        if j < len(toks) and toks[j] == "(":
-            c = _match_paren(toks, j)
-            cols = [x.strip().strip('`"') for x in
-                    "".join(toks[j + 1:c]).split(",")]
-            j = _next_code(toks, c + 1)
-        if j >= len(toks) or not _is_word(toks[j], "AS"):
-            break
-        j = _next_code(toks, j + 1)
-        while j < len(toks) and toks[j].upper() in ("NOT", "MATERIALIZED"):
-            j = _next_code(toks, j + 1)
-        if j >= len(toks) or toks[j] != "(":
-            break
-        c = _match_paren(toks, j)
-        out.append((name, cols, "".join(toks[j + 1:c]).strip()))
-        j = _next_code(toks, c + 1)
-        if j < len(toks) and toks[j] == ",":
-            j = _next_code(toks, j + 1)
-            continue
-        break
-    return out
-
-
 _CREATE_TABLE_RE = re.compile(
     r"(?is)^\s*create\s+(?:or\s+replace\s+)?(?:temp(?:orary)?\s+)?table\s+"
     r"(?:if\s+not\s+exists\s+)?([\w\".]+)\s*(.*)$"
@@ -908,23 +870,26 @@ class SLSession:
         # (they are either tiny VALUES lists or RETURNING row sets); the
         # main DML then runs through the normal handlers.
         if re.match(r"(?is)^\s*WITH\b", sql):
-            from duckdb_spark.sql.dialect import split_with_prefix
+            from duckdb_spark.sql.dialect import _tokens, parse_with
 
-            with_txt, body = split_with_prefix(sql)
-            if with_txt and re.match(r"(?is)^\s*(INSERT|UPDATE|DELETE)\b", body):
+            toks = _tokens(sql)
+            w = parse_with(toks)
+            body = "".join(toks[w.main:]) if w else ""
+            if re.match(r"(?is)^(INSERT|UPDATE|DELETE)\b", body):
                 views = []
                 try:
-                    for name, cols, cbody in _parse_cte_list(with_txt):
-                        if re.match(r"(?is)^\s*(INSERT|UPDATE|DELETE)\b", cbody):
+                    for cte in w.ctes:
+                        cbody = "".join(toks[slice(*cte.body)]).strip()
+                        if re.match(r"(?is)^(INSERT|UPDATE|DELETE)\b", cbody):
                             res = self._execute_one(cbody)
                             df = res.df() if res is not None else \
                                 self.spark.createDataFrame([], "x: int")
                         else:
                             df = self.con.sql(cbody).df()
-                        if cols:
-                            df = df.toDF(*cols)
-                        df.createOrReplaceTempView(name)
-                        views.append(name)
+                        if cte.cols:
+                            df = df.toDF(*cte.cols)
+                        df.createOrReplaceTempView(cte.name)
+                        views.append(cte.name)
                     return self._execute_one(body)
                 finally:
                     for v in views:

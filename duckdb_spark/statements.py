@@ -248,11 +248,12 @@ def _rewrite_fn_calls(query: str, fname: str, template) -> str:
 
 
 def _materialize(df: DataFrame) -> DataFrame:
-    """Truncate lineage between recursive-CTE rounds. localCheckpoint is
-    the cheap path; Spark's rewriteStatsAndConstraints can throw
-    NoSuchElementException checkpointing a union of already-checkpointed
-    frames (constraint exprId mismatch) — rebuilding from the JVM RDD
-    drops the stale constraints, then checkpoint normally."""
+    """Compute `df` once and truncate its lineage (recursive-CTE rounds,
+    MATERIALIZED CTEs). localCheckpoint is the cheap path; Spark's
+    rewriteStatsAndConstraints can throw NoSuchElementException
+    checkpointing a union of already-checkpointed frames (constraint
+    exprId mismatch) — rebuilding from the JVM RDD drops the stale
+    constraints, then checkpoint normally."""
     try:
         return df.localCheckpoint(eager=True)
     except Exception:
@@ -263,6 +264,51 @@ def _materialize(df: DataFrame) -> DataFrame:
 
 # names of the temp views statements register
 _seq = itertools.count(1)
+
+
+def materialize_ctes(spark, query: str, run) -> DataFrame | None:
+    """DuckDB's `WITH x AS MATERIALIZED (…)` (physical_cte.cpp): each
+    marked entry of the top-level WITH list runs once, in order, through
+    `run` (statement text → DataFrame) and `_materialize`, and its body
+    becomes a read of the result's temp view; then `run` answers the
+    statement. Only the marked bodies change: references, later entries
+    and the main statement keep their text. The views are dropped once
+    the statement is analyzed. Unlike DuckDB, which recomputes the CTE
+    on every fetch, a marked entry is computed once when the statement
+    is built, so the returned frame keeps that snapshot. None when no
+    entry of a non-RECURSIVE top-level list is marked, or the statement
+    is not a query."""
+    if not re.search(r"(?i)\bMATERIALIZED\b", query):
+        return None
+    toks = dialect._tokens(query)
+    w = dialect.parse_with(toks)
+    if w is None or w.recursive or not any(c.materialized for c in w.ctes) \
+            or w.main >= len(toks) \
+            or toks[w.main].upper() not in ("SELECT", "FROM", "VALUES", "("):
+        return None
+    texts = ["".join(toks[slice(*c.span)]) for c in w.ctes]
+    views = []
+    try:
+        for n, cte in enumerate(w.ctes):
+            if not cte.materialized:
+                continue
+            body = "".join(toks[slice(*cte.body)])
+            # a subquery, so a body with its own WITH list stays valid
+            df = run(f"WITH {', '.join(texts[:n])} SELECT * FROM ({body})"
+                     if n else body)
+            view = f"__cte_{re.sub(r'[^A-Za-z0-9_]', '_', cte.name)}_{next(_seq)}"
+            _materialize(df).createOrReplaceTempView(view)
+            views.append(view)
+            # keep `name [(cols)] AS`, drop the MATERIALIZED keyword
+            hint = dialect._prev_code(toks, cte.body[0] - 2)
+            texts[n] = "".join(toks[cte.span[0]:hint]) + f"(SELECT * FROM {view})"
+        out = list(toks)
+        for cte, text in reversed(list(zip(w.ctes, texts))):
+            out[slice(*cte.span)] = [text]
+        return run("".join(out))
+    finally:
+        for view in views:
+            spark.catalog.dropTempView(view)
 
 
 # ------------------------------------------------------------------ steps
@@ -446,10 +492,9 @@ def describe(con, query):
         return query
     kw, rest = m.group(1).upper(), m.group(2).strip()
     rest = re.sub(r"(?is)^TABLE\s+", "", rest)
-    if re.match(r"(?is)^(SELECT|WITH|FROM|VALUES)\b", rest):
-        df = con.sql(rest).df()
-    else:
-        df = con.sql(f"SELECT * FROM {rest}").df()
+    # a query's columns are all nullable to DuckDB; a table keeps its own
+    is_query = re.match(r"(?is)^(SELECT|WITH|FROM|VALUES)\b", rest) is not None
+    df = con.sql(rest if is_query else f"SELECT * FROM {rest}").df()
     if kw == "SUMMARIZE":
         from duckdb_spark.operators.sketch import summarize
 
@@ -458,7 +503,7 @@ def describe(con, query):
 
     rows = [
         (f.name, spark_type_to_duckdb(f.dataType),
-         "YES" if f.nullable else "NO", None, None, None)
+         "YES" if f.nullable or is_query else "NO", None, None, None)
         for f in df.schema.fields
     ]
     return con.spark.createDataFrame(
@@ -579,6 +624,14 @@ def strip_unused_ctes(con, query):
         except Exception:
             pass
     return query
+
+
+def materialized_ctes(con, query):
+    """`AS MATERIALIZED` entries of the WITH list, computed once, when
+    the statement is built (`materialize_ctes`). After
+    `strip_unused_ctes`, so an unreferenced entry never runs."""
+    df = materialize_ctes(con.spark, query, lambda t: con.sql(t).df())
+    return query if df is None else df
 
 
 def string_tables(con, query):
@@ -1699,10 +1752,10 @@ STEPS = (
     prepared_statement, macro_ddl, macro_expand, managed_table,
     recursive_view, copy_to, copy_from, describe_cte, describe_in_from,
     describe, limit_percent_nested, limit_percent, create_schema,
-    drop_schema, strip_unused_ctes, string_tables, sql_table_functions,
-    columns_star, using_star_order, struct_unnest, positional_ref,
-    lateral_recursive, recursive_cte, limit_expr, offset_expr,
-    union_by_name,
+    drop_schema, strip_unused_ctes, materialized_ctes, string_tables,
+    sql_table_functions, columns_star, using_star_order, struct_unnest,
+    positional_ref, lateral_recursive, recursive_cte, limit_expr,
+    offset_expr, union_by_name,
 )
 
 

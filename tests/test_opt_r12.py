@@ -194,6 +194,22 @@ def test_regr_folds_bit_identical_to_duckdb(spark):
         ).fetchall()
     }
     assert got == exp  # exact float equality — bit-identity is the contract
+    # a row whose x OR y is NULL is skipped by all three
+    pairs = [(1.0, 2.0), (2.0, None), (4.0, 5.0), (None, 7.0)]
+    small = spark.createDataFrame(
+        [(i, x, y) for i, (x, y) in enumerate(pairs)], "pos long, x double, y double"
+    ).agg(F.array_sort(F.collect_list(F.struct("pos", "x", "y"))).alias("v"))
+    got = small.select(
+        welford_sq_fold(F.col("v"), "x"),
+        covar_sxy_fold(F.col("v")),
+        welford_sq_fold(F.col("v"), "y"),
+    ).first()
+    exp = con.execute(
+        "SELECT regr_sxx(y, x), regr_sxy(y, x), regr_syy(y, x) FROM (VALUES "
+        "(1.0::DOUBLE, 2.0::DOUBLE), (2.0, NULL), (4.0, 5.0), (NULL, 7.0)) t(x, y)"
+    ).fetchone()
+    assert tuple(got) == exp
+    assert (exp[0], exp[2]) == (4.5, 4.5)
 
 
 def test_arg_max_fold_first_scan_order_max_wins(spark):

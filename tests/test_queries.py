@@ -64,3 +64,22 @@ def test_every_oracle_parses(oracle):
         except Exception as e:  # noqa: BLE001
             bad.append(f"{name}: {type(e).__name__}: {e}")
     assert not bad, "\n".join(bad)
+
+
+def test_materialized_ctes_run_once_and_leave_no_views(spark, monkeypatch):
+    """The TPC-DS queries whose SQL marks CTEs `AS MATERIALIZED` checkpoint
+    each marked CTE once per call, under a per-call view name that is
+    dropped again."""
+    cls = type(spark.range(1))  # the session's concrete DataFrame class
+    checkpoints = []
+    real = cls.localCheckpoint
+    monkeypatch.setattr(cls, "localCheckpoint", lambda df, *a, **k: (
+        checkpoints.append(df), real(df, *a, **k))[1])
+    q.QUERIES["tpcds_q03"](spark, SF_DIR)  # binds the fixture views
+    before = {t.name for t in spark.catalog.listTables()}
+    for name in ("tpcds_q04", "tpcds_q11", "tpcds_q14", "tpcds_q23",
+                 "tpcds_q31", "tpcds_q47", "tpcds_q57", "tpcds_q74"):
+        checkpoints.clear()
+        q.QUERIES[name](spark, SF_DIR)
+        assert len(checkpoints) == q.ORACLE[name].count("AS MATERIALIZED") > 0, name
+    assert {t.name for t in spark.catalog.listTables()} == before

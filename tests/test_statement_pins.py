@@ -39,6 +39,12 @@ class Case:
     expect: list | None = None  # our rows, where pip duckdb 1.0.0 differs
 
 
+# a twice-referenced aggregate: marked, it is computed once
+MATERIALIZED_AGG = (
+    "WITH agg AS {hint} (SELECT n_regionkey, count(*) AS c FROM nation "
+    "GROUP BY n_regionkey) SELECT a.n_regionkey, a.c + b.c AS c2 "
+    "FROM agg a JOIN agg b ON a.n_regionkey = b.n_regionkey")
+
 STEP_CASES = {
     "prepared_statement": Case(
         "prepared_statement", "EXECUTE pin_p(41)",
@@ -74,6 +80,11 @@ STEP_CASES = {
         "SELECT column_name, column_type FROM "
         "(DESCRIBE SELECT 42 AS j, 'x' AS k)"),
     "describe": Case("describe", "DESCRIBE nation"),
+    # every column of a described query is nullable, as in DuckDB
+    "describe-query": Case("describe", "DESCRIBE SELECT 1 AS a"),
+    "describe-query_over_view": Case(
+        "describe", "DESCRIBE SELECT * FROM pin_dv",
+        setup=(V + "pin_dv AS SELECT 1 AS a, 'x' AS b",)),
     "limit_percent_nested": Case(
         "limit_percent_nested",
         "SELECT count(*) AS n FROM (SELECT * FROM nation LIMIT 20%)"),
@@ -91,6 +102,21 @@ STEP_CASES = {
         "strip_unused_ctes",
         "WITH unused AS (SELECT 1 AS x), used AS (SELECT 2 AS y) "
         "SELECT * FROM used"),
+    "materialized_ctes": Case(
+        "materialized_ctes", MATERIALIZED_AGG.format(hint="MATERIALIZED")),
+    # a marked second entry whose body has its own WITH list
+    "materialized_ctes-nested_with": Case(
+        "materialized_ctes",
+        "WITH a AS (SELECT n_regionkey AS x FROM nation), b AS MATERIALIZED "
+        "(WITH c AS (SELECT x FROM a) SELECT x, count(*) AS n FROM c "
+        "GROUP BY x) SELECT * FROM b"),
+    "no_step-not_materialized": Case(
+        None, MATERIALIZED_AGG.format(hint="NOT MATERIALIZED")),
+    # an unreferenced MATERIALIZED entry is stripped before it could run
+    "strip_unused_ctes-materialized": Case(
+        "strip_unused_ctes",
+        "WITH unused AS MATERIALIZED (SELECT count(*) AS c FROM nation), "
+        "used AS (SELECT 2 AS y) SELECT * FROM used"),
     "string_tables": Case(
         "string_tables", "SELECT count(*) AS n FROM '{sf}/nation.parquet'"),
     "sql_table_functions": Case(
@@ -378,6 +404,20 @@ def test_every_step_and_fallback_is_pinned():
     unpinned = {"sum_overflow", "select_alias_only", "implicit_lateral",
                 "variant_equality"}
     assert {f.__name__ for f in (*STEPS, *FALLBACKS)} - unpinned == pinned
+
+
+def test_unreferenced_materialized_cte_never_runs(con):
+    con.sql(STEP_CASES["strip_unused_ctes-materialized"].sql)
+    assert con.last_trace == [("strip_unused_ctes", "rewrote")]
+
+
+def test_materialized_cte_is_scanned_once(con):
+    """The marked entry is read back from its materialized view, so the
+    main plan scans no parquet; inlined, both references scan nation."""
+    for hint, scans in (("MATERIALIZED", 0), ("NOT MATERIALIZED", 2)):
+        df = con.sql(MATERIALIZED_AGG.format(hint=hint)).df()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == scans, plan
 
 
 # ------------------------------------------------------------ loop policy
