@@ -34,12 +34,16 @@ def recursive_cte(
     `distinct=True` ≡ UNION (dedupe, terminate when no *new* rows);
     `distinct=False` ≡ UNION ALL (terminate when step yields no rows).
     """
-    acc = base.localCheckpoint(eager=True)
+    # UNION identity applies to the base rows too
+    acc = (base.distinct() if distinct else base).localCheckpoint(eager=True)
     working = acc
     for _ in range(max_iterations):
         nxt = step(working)
         if distinct:
-            nxt = nxt.exceptAll(acc).distinct()
+            # subtract = EXCEPT DISTINCT: dedupe within the round AND
+            # against the accumulated set (exceptAll is a multiset
+            # difference, so a row produced twice would survive it)
+            nxt = nxt.subtract(acc)
         nxt = nxt.localCheckpoint(eager=True)
         if nxt.isEmpty():
             return acc

@@ -111,6 +111,29 @@ def test_recursive_cte_cycle_terminates(spark):
     assert sorted(r["node"] for r in out.collect()) == [0, 1]
 
 
+def test_recursive_cte_union_dedupes_base(spark):
+    # UNION: duplicate base rows collapse (pip duckdb WITH RECURSIVE … UNION)
+    base = spark.createDataFrame([(1,), (1,)], "x long")
+    out = recursive_cte(
+        base,
+        lambda w: w.filter(F.col("x") < 3).select((F.col("x") + 1).alias("x")),
+        distinct=True,
+    )
+    assert sorted(r["x"] for r in out.collect()) == [1, 2, 3]
+
+
+def test_recursive_cte_union_dedupes_step(spark):
+    # UNION: a step emitting each row twice, or a row already held, adds it once
+    base = spark.createDataFrame([(1,), (2,)], "x long")
+
+    def step(w):
+        nxt = w.filter(F.col("x") < 3).select((F.col("x") + 1).alias("x"))
+        return nxt.unionByName(nxt)
+
+    out = recursive_cte(base, step, distinct=True)
+    assert sorted(r["x"] for r in out.collect()) == [1, 2, 3]
+
+
 def test_distinct_on_keep_last(spark):
     df = spark.createDataFrame(
         [("a", 1, "x"), ("a", 2, "y"), ("b", 5, "z")], "k string, o int, p string"
