@@ -41,7 +41,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # (SparkSession id, sf_dir, name) → DataFrame. Re-reading the same parquet
 # repeats driver-side file listing + footer reads (~100-300 ms/table); the
 # logical plan is immutable so memoizing is safe. Keyed by session id so a
-# restarted session doesn't serve stale plans.
+# restarted session doesn't serve stale plans. It stays a module dict rather
+# than session state because the benchmark's traced run probes it by this
+# exact key (perfbench/layers.py).
 _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
 

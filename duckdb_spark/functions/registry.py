@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_spark import state
 from duckdb_spark.functions import aggregates as A
 from duckdb_spark.functions import scalar as S
 
@@ -226,7 +227,7 @@ def register_sql_functions(spark: SparkSession) -> list[str]:
     try:
         from duckdb_spark.types import duck_type_text
 
-        spark.udf.register("__ducktype", duck_type_text, "string")
+        state.register_udf(spark, "__ducktype", duck_type_text, "string")
         created.append("typeof")
     except Exception:
         pass

@@ -88,8 +88,7 @@ def read_csv(spark: SparkSession, path: str, **options) -> DataFrame:
             from pyspark.sql import types as T
 
             from duckdb_spark.sql.textcast import (
-                RUNTIME_CASTS,
-                runtime_cast_fn,
+                register_runtime_cast,
                 runtime_cast_name,
             )
             from duckdb_spark.types import duckdb_type_to_spark
@@ -100,8 +99,7 @@ def read_csv(spark: SparkSession, path: str, **options) -> DataFrame:
                 if isinstance(st, (T.ArrayType, T.StructType, T.MapType)) \
                         and isinstance(df.schema[cn].dataType, T.StringType):
                     fn = runtime_cast_name(dty, False)
-                    spark.udf.register(
-                        fn, runtime_cast_fn(*RUNTIME_CASTS[fn]), st)
+                    register_runtime_cast(spark, fn)
                     sel.append(F.expr(f"{fn}(`{cn}`)").alias(cn))
                 else:
                     sel.append(F.col(cn).cast(st).alias(cn))

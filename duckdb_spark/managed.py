@@ -31,6 +31,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_spark import state
+
 _CREATE_RE = re.compile(
     r"(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?TABLE\s+"
     r"(IF\s+NOT\s+EXISTS\s+)?([\w.\"]+)\s*(.*?)\s*;?\s*$"
@@ -209,6 +211,26 @@ def _bind_values_types(src_sql: str, dtypes: list) -> str:
     return "".join(toks)
 
 
+def mark_columns(spark, table: str, coldefs: list[tuple[str, str]]) -> None:
+    """Record which `(column, DuckDB type)` definitions of `table` are TIME,
+    TIMETZ or an enum (BIGINT / string carriers in Spark, so the Spark
+    schema can't tell), replacing the table's earlier marks."""
+    from duckdb_spark.sql.dialect import expand_type_aliases, lookup_enum_members
+
+    st, key = state.of(spark), table.lower()
+    for marks in (st.time_cols, st.timetz_cols, st.enum_cols):
+        marks.pop(key, None)
+    for cname, ctype in coldefs:
+        col, ty = cname.strip('"').lower(), expand_type_aliases(ctype).strip().upper()
+        if ty in ("TIME", "TIME WITHOUT TIME ZONE"):
+            st.time_cols.setdefault(key, set()).add(col)
+        if ty in ("TIMETZ", "TIME WITH TIME ZONE"):
+            st.timetz_cols.setdefault(key, set()).add(col)
+        members = lookup_enum_members(ctype)
+        if members:
+            st.enum_cols.setdefault(key, {})[col] = members
+
+
 class ManagedTables:
     """Per-connection registry of external-parquet writable tables."""
 
@@ -262,9 +284,7 @@ class ManagedTables:
                 return False
             self.spark.sql(f"DROP TABLE IF EXISTS `{name}`")
             del self.tables[name]
-            from duckdb_spark.sql.dialect import TIME_TABLE_COLS
-
-            TIME_TABLE_COLS.pop(name.lower(), None)
+            mark_columns(self.spark, name, [])
             return None
         m = _TRUNCATE_RE.match(query)
         if m and _flat(m.group(1)) in self.tables:
@@ -432,9 +452,7 @@ class ManagedTables:
 
         inner = body[1:body.rfind(")")]
         fields = []
-        time_cols: set[str] = set()
-        timetz_cols: set[str] = set()
-        enum_cols: dict[str, list[str]] = {}
+        coldefs = []
         for coldef in _split_coldefs(inner):
             if re.match(r"(?i)^(primary|unique|check|foreign|constraint)\b",
                         coldef):
@@ -447,39 +465,11 @@ class ManagedTables:
                 r"(?i)\s+(primary\s+key|not\s+null|unique|default\b.*"
                 r"|check\s*\(.*|collate\s+\S+)",
                 "", mm.group(3)).strip()
-            expanded = expand_type_aliases(ctype)
-            if expanded.strip().upper() in ("TIME",
-                                            "TIME WITHOUT TIME ZONE"):
-                time_cols.add(cname.lower())
-            if expanded.strip().upper() in ("TIMETZ",
-                                            "TIME WITH TIME ZONE"):
-                timetz_cols.add(cname.lower())
-            from duckdb_spark.sql.dialect import lookup_enum_members
-
-            members = lookup_enum_members(ctype)
-            if members:
-                enum_cols[cname.lower()] = members
+            coldefs.append((cname, ctype))
             fields.append(T.StructField(
-                cname, duckdb_type_to_spark(expanded)
+                cname, duckdb_type_to_spark(expand_type_aliases(ctype))
             ))
-        from duckdb_spark.sql.dialect import (
-            ENUM_TABLE_COLS,
-            TIME_TABLE_COLS,
-            TIMETZ_TABLE_COLS,
-        )
-
-        if time_cols:
-            TIME_TABLE_COLS[name.lower()] = time_cols
-        else:
-            TIME_TABLE_COLS.pop(name.lower(), None)
-        if timetz_cols:
-            TIMETZ_TABLE_COLS[name.lower()] = timetz_cols
-        else:
-            TIMETZ_TABLE_COLS.pop(name.lower(), None)
-        if enum_cols:
-            ENUM_TABLE_COLS[name.lower()] = enum_cols
-        else:
-            ENUM_TABLE_COLS.pop(name.lower(), None)
+        mark_columns(self.spark, name, coldefs)
         self._point(name, T.StructType(fields), 0)
         return None
 
@@ -498,13 +488,10 @@ class ManagedTables:
         if ridx >= 0:
             ret = src_sql[ridx + len("RETURNING"):].rstrip("; \t\n").strip()
             src_sql = src_sql[:ridx].strip()
-        from duckdb_spark.sql.dialect import (
-            TIME_TABLE_COLS,
-            TIMETZ_TABLE_COLS,
-        )
-
-        has_time_cols = bool(TIME_TABLE_COLS.get(name.lower())
-                             or TIMETZ_TABLE_COLS.get(name.lower()))
+        st = state.of(self.spark)
+        tcols = st.time_cols.get(name.lower(), set())
+        tzcols = st.timetz_cols.get(name.lower(), set())
+        has_time_cols = bool(tcols or tzcols)
         if src_sql.upper().startswith("VALUES") and has_time_cols:
             # TIME columns carry BIGINT µs but VALUES feed text
             # ('12:11:49.5'): consensus typing keeps the strings so the
@@ -536,8 +523,6 @@ class ManagedTables:
         # name-based resolution — normalize positionally first
         src = src.toDF(*[f"__src{ci}" for ci in range(len(src.columns))])
         by_name = dict(zip(cols, src.columns))
-        tcols = TIME_TABLE_COLS.get(name.lower(), set())
-        tzcols = TIMETZ_TABLE_COLS.get(name.lower(), set())
         src_types = {f.name: f.dataType for f in src.schema.fields}
 
         def _bind(f):

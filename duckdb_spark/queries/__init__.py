@@ -10,6 +10,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from duckdb_spark import state
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -31,18 +33,19 @@ def bench_scale_mult(sf_dir: str) -> int:
     return max(1, int(round(sf / 0.01)))
 
 
-def bind_views(spark: SparkSession, bound: dict[int, str], fixture: str,
-               views: dict[str, str]) -> None:
+def bind_views(spark: SparkSession, fixture: str, views: dict[str, str]) -> None:
     """Register each temp view of `views` (view name → parquet file stem in
-    the `fixture` dir), unless `bound` says this session already has this
-    fixture's views. Registering costs one parquet schema read per view,
-    which would otherwise be charged to every timed query call (VERDICT
-    r06 wrong-item 4)."""
-    if bound.get(id(spark)) == fixture:
+    the `fixture` dir), unless this session already has this fixture's
+    views. Registering costs one parquet schema read per view, which would
+    otherwise be charged to every timed query call (VERDICT r06
+    wrong-item 4)."""
+    bound = state.of(spark).bound
+    key = tuple(views)
+    if bound.get(key) == fixture:
         return
     for view, stem in views.items():
         spark.read.parquet(f"{fixture}/{stem}.parquet").createOrReplaceTempView(view)
-    bound[id(spark)] = fixture
+    bound[key] = fixture
 
 
 def register(name: str, oracle: str | None = None):

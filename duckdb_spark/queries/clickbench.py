@@ -134,15 +134,10 @@ def ensure_fixture(mult: int = 1) -> str:
     return out_dir
 
 
-# Last fixture dir whose hits view is bound, per SparkSession (bind_views).
-_BOUND: dict[int, str] = {}
-
-
 def _bind_hits(spark: SparkSession, sf_dir: str) -> None:
     from duckdb_spark.queries import bench_scale_mult, bind_views
 
-    bind_views(spark, _BOUND, ensure_fixture(bench_scale_mult(sf_dir)),
-               {"hits": "hits"})
+    bind_views(spark, ensure_fixture(bench_scale_mult(sf_dir)), {"hits": "hits"})
 
 
 def _spark_run(spark: SparkSession, sql: str, sf_dir: str = "") -> DataFrame:

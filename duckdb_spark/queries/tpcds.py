@@ -513,10 +513,6 @@ def _oracle(sql: str) -> str:
     return sql.format(**{t: f"read_parquet('{TPCDS_DIR}/{t}.parquet')" for t in TABLES})
 
 
-# Last fixture dir whose views are bound, per SparkSession (bind_views).
-_BOUND: dict[int, str] = {}
-
-
 def _spark_run(spark: SparkSession, sql: str, sf_dir: str = "") -> DataFrame:
     from duckdb_spark.queries import bench_scale_mult, bind_views
     from duckdb_spark.sql.dialect import translate
@@ -524,11 +520,11 @@ def _spark_run(spark: SparkSession, sql: str, sf_dir: str = "") -> DataFrame:
 
     # Views carry a tpcds_ prefix: the raw names (customer, ...) collide
     # with the TPC-H temp views other query modules bind in the SAME
-    # session, and the _BOUND cache would skip re-registration after a
+    # session, and the bind_views record would skip re-registration after a
     # tpch_* call clobbered them (round-8 scan: 12 tpcds queries threw
     # UNRESOLVED_COLUMN when run after tpch_* in one session).
     views = {f"tpcds_{t}": t for t in TABLES}
-    bind_views(spark, _BOUND, ensure_fixture(bench_scale_mult(sf_dir)), views)
+    bind_views(spark, ensure_fixture(bench_scale_mult(sf_dir)), views)
     sql = sql.format(**{t: v for v, t in views.items()})
 
     def run(text: str) -> DataFrame:

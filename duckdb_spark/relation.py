@@ -21,7 +21,7 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_spark import statements
+from duckdb_spark import state, statements
 from duckdb_spark.catalog import DEFAULT_SF_DIR, register_views
 from duckdb_spark.session import get_spark
 from duckdb_spark.sql import dialect
@@ -172,32 +172,28 @@ class Connection:
         from duckdb_spark.operators.udtf import register_builtin_udtfs
 
         register_builtin_udtfs(self.spark)
+        self._decorrelate_depth = 0
+        self._sql_depth = 0
+        self.last_trace: list[tuple[str, str]] = []
         # __dkrender is reachable from the MAIN translate pass (nested →
         # VARCHAR casts render DuckDB-style), so register it eagerly
         from duckdb_spark.sql.textcast import render_duck
 
-        self._rtcast_registered = {"__dkrender"}
-        self._decorrelate_depth = 0
-        self._sql_depth = 0
-        self.last_trace: list[tuple[str, str]] = []
-        self.spark.udf.register(
-            "__dkrender",
-            lambda v: None if v is None else render_duck(v),
-            "string")
+        state.register_udf(
+            self.spark, "__dkrender",
+            lambda v: None if v is None else render_duck(v), "string")
         # nested-comparison UDFs are reachable from the MAIN translate pass
         # too (rewrite_nested_comparisons); worker threads' active-session
         # lookup can miss, so bind them to THIS session eagerly
-        from duckdb_spark.sql.nestcmp import nest_eq, nest_in, nest_key
+        from duckdb_spark.sql.nestcmp import register_udfs
 
-        self.spark.udf.register("__dknesteq", nest_eq, "boolean")
-        self.spark.udf.register("__dknestkey", nest_key, "binary")
-        self.spark.udf.register("__dknestin", nest_in, "boolean")
+        register_udfs(self.spark)
         # C-style %g/%e formatting: java.util.Formatter's %g rounds via a
         # different decimal path than C printf (0.9999999999999999 at %.17g
         # → '...90' vs '...89'); Python's % operator is C-compatible
         # (decimal_float_cast.test:26)
-        self.spark.udf.register(
-            "__dkfmtg",
+        state.register_udf(
+            self.spark, "__dkfmtg",
             lambda fmt, v: None if fmt is None or v is None else fmt % v,
             "string")
 
@@ -214,7 +210,7 @@ class Connection:
         `last_trace` lists what ran for the statement, nested statements
         included: `(step, "rewrote" | "answered" | "raised")` and
         `(fallback, "ok" | "raised" | "failed: <error type>")`."""
-        dialect.set_active_spark(self.spark)
+        state.activate(self.spark)
         if self._sql_depth == 0:
             self.last_trace = []
         trace = self.last_trace

@@ -26,6 +26,8 @@ from __future__ import annotations
 import re
 from typing import NamedTuple
 
+from duckdb_spark import state
+
 _TOKEN_RE = re.compile(
     r"""
       '(?:[^']|'')*'            # single-quoted string
@@ -762,65 +764,33 @@ def _rewrite_where_null(toks: list[str]) -> list[str]:
     return out
 
 
-import threading as _threading
-
-_SESSION_SETTINGS = _threading.local()
-
-
 def set_session_setting(name: str, value: str) -> None:
     """Record a DuckDB session setting that changes dialect semantics
-    (`SET order_by_non_integer_literal=true`, …). Thread-local: concurrent
-    sqllogic workers don't leak settings into each other."""
-    d = getattr(_SESSION_SETTINGS, "d", None)
-    if d is None:
-        d = _SESSION_SETTINGS.d = {}
-    d[name.lower()] = str(value).strip().strip("'\"").lower()
+    (`SET order_by_non_integer_literal=true`, …) on the active session."""
+    state.current().settings[name.lower()] = \
+        str(value).strip().strip("'\"").lower()
 
 
 def get_session_setting(name: str, default: str = "") -> str:
-    return getattr(_SESSION_SETTINGS, "d", {}).get(name.lower(), default)
+    return state.current().settings.get(name.lower(), default)
 
 
-def reset_session_settings() -> None:
-    _SESSION_SETTINGS.d = {}
-    _SESSION_SETTINGS.types = {}
-
-
-def registered_type_aliases() -> dict[str, str]:
-    """CREATE TYPE aliases (reference catalog type entries,
-    create_type_info.cpp): lowercase qualified name → DuckDB type text
-    with nested aliases already expanded. Thread-local like settings."""
-    d = getattr(_SESSION_SETTINGS, "types", None)
-    if d is None:
-        d = _SESSION_SETTINGS.types = {}
-    return d
-
-
-def registered_enum_types() -> dict[str, list[str]]:
-    """CREATE TYPE … AS ENUM member lists (declaration order — enums
-    compare and sort by member position, reference enum_type.cpp).
-    Keyed like registered_type_aliases."""
-    d = getattr(_SESSION_SETTINGS, "enum_types", None)
-    if d is None:
-        d = _SESSION_SETTINGS.enum_types = {}
-    return d
-
-
-def lookup_enum_members(type_text: str) -> list[str] | None:
-    """Member list for a (possibly schema-qualified) enum type name."""
-    d = registered_enum_types()
-    if not d:
-        return None
-    nm = type_text.strip().strip('"').lower()
+def _type_entry(d: dict, name: str):
+    """The entry of `d` for a (possibly schema-qualified) type name:
+    catalog prefixes drop, a bare name also resolves through SEARCH_PATH."""
+    nm = name.strip().strip('"').lower()
     for pfx in ("memory.", "temp.", "main."):
         if nm.startswith(pfx):
             nm = nm[len(pfx):]
     if nm in d:
         return d[nm]
     sp = get_session_setting("search_path")
-    if sp and "." not in nm and f"{sp}.{nm}" in d:
-        return d[f"{sp}.{nm}"]
-    return None
+    return d.get(f"{sp}.{nm}") if sp and "." not in nm else None
+
+
+def lookup_enum_members(type_text: str) -> list[str] | None:
+    """Member list for a (possibly schema-qualified) enum type name."""
+    return _type_entry(state.current().enums, type_text)
 
 
 def register_type_alias(name: str, definition: str) -> None:
@@ -835,65 +805,33 @@ def register_type_alias(name: str, definition: str) -> None:
         key = f"{sp}.{key}"
     em = re.match(r"(?is)^ENUM\s*\((.*)\)\s*$", defn)
     if em:
-        registered_enum_types()[key] = [
+        state.current().enums[key] = [
             m.group(1).replace("''", "'")
             for m in re.finditer(r"'((?:[^']|'')*)'", em.group(1))
         ]
         defn = "VARCHAR"  # enum emulation is string-backed
-    registered_type_aliases()[key] = expand_type_aliases(defn)
+    state.current().types[key] = expand_type_aliases(defn)
 
 
 def unregister_type_alias(name: str) -> None:
-    registered_type_aliases().pop(name.strip().strip('"').lower(), None)
+    key = name.strip().strip('"').lower()
+    state.current().types.pop(key, None)
+    state.current().enums.pop(key, None)
 
 
 def expand_type_aliases(ty: str) -> str:
     """Substitute registered CREATE TYPE aliases (bare, schema-qualified,
     or resolvable through SEARCH_PATH) inside a DuckDB type text."""
-    d = registered_type_aliases()
+    d = state.current().types
     if not d:
         return ty
-
-    def look(nm: str) -> str | None:
-        nm = nm.lower()
-        for pfx in ("memory.", "temp.", "main."):
-            if nm.startswith(pfx):
-                nm = nm[len(pfx):]
-        if nm in d:
-            return d[nm]
-        sp = get_session_setting("search_path")
-        if sp and "." not in nm and f"{sp}.{nm}" in d:
-            return d[f"{sp}.{nm}"]
-        return None
-
     pat = re.compile(r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*")
     prev, n = None, 0
     while prev != ty and n < 5:
         prev = ty
-        ty = pat.sub(lambda m: look(m.group(0)) or m.group(0), ty)
+        ty = pat.sub(lambda m: _type_entry(d, m.group(0)) or m.group(0), ty)
         n += 1
     return ty
-
-
-def registered_schemas() -> set[str]:
-    """User schemas created this session (CREATE SCHEMA emulation:
-    `s.t` flattens to the `s__t` temp view; thread-local like every
-    session setting)."""
-    return {
-        s for s in get_session_setting("__schemas", "").split(",") if s
-    }
-
-
-def register_schema(name: str) -> None:
-    s = registered_schemas()
-    s.add(name.lower())
-    set_session_setting("__schemas", ",".join(sorted(s)))
-
-
-def unregister_schema(name: str) -> None:
-    s = registered_schemas()
-    s.discard(name.lower())
-    set_session_setting("__schemas", ",".join(sorted(s)))
 
 
 def flat_table_name(raw: str) -> str:
@@ -914,7 +852,7 @@ def _rewrite_schema_refs(toks: list[str]) -> list[str]:
     table name keeps working as a qualifier; `main`/catalog prefixes
     drop. Column position: only 3-part refs (`s.t.c` → `t.c`) rewrite —
     a bare `a.b` is ambiguous with column.field access."""
-    schemas = registered_schemas()
+    schemas = state.current().schemas
     out = list(toks)
     bindings: dict[tuple[str, str], bool] = {}
     in_from: dict[int, bool] = {0: False}
@@ -4128,7 +4066,7 @@ def _rewrite_group_by_all_having(toks: list[str]) -> list[str]:
 def _substitute_filter_aliases(sql: str) -> str:
     """DuckDB lets WHERE/HAVING/QUALIFY reference SELECT-list aliases;
     Spark resolves only real columns there. Inline the definitions.
-    Retry-only (__select_alias setting): columns must win over aliases
+    Retry-only (`select_alias` flag): columns must win over aliases
     when both resolve."""
     toks = _tokens(sql)
     aliases = _collect_select_aliases(toks)
@@ -4157,7 +4095,7 @@ def _substitute_filter_aliases(sql: str) -> str:
                 aliases[name] = "".join(etoks)
         if not changed:
             break
-    only = get_session_setting("__select_alias_only")
+    only = state.flag("select_alias_only")
     if only:
         # second-stage retry: ONE named alias (taken from the analyzer's
         # unresolved-column message) substituted query-wide — DuckDB lets
@@ -5049,7 +4987,7 @@ def _expand_range_tvf(out: list[str], i: int, j: int, close: int) -> int:
     temporal = bool(re.search(
         r"(?i)\b(date|timestamp|interval|now)\b", "".join(out[j:close + 1])
     ))
-    if get_session_setting("__range_lateral"):
+    if state.flag("range_lateral"):
         # correlated arguments (range(t.level) in a FROM list): Spark's
         # range TVF needs foldable args — LATERAL VIEW explode keeps the
         # row-dependent sequence (retry-gated on NON_FOLDABLE_ARGUMENT)
@@ -6437,9 +6375,7 @@ def _rewrite_brackets(toks: list[str]) -> list[str]:
             # DuckDB out-of-range/zero subscripts yield NULL; Spark's
             # element_at raises (index 0 even under try_). nullif routes 0
             # to NULL (→ NULL result), try_ absorbs out-of-range.
-            if re.match(r"(?s)^'.*'$", idx) and get_session_setting(
-                "__struct_subscript"
-            ):
+            if re.match(r"(?s)^'.*'$", idx) and state.flag("struct_subscript"):
                 # retry mode: `s['field']` is a STRUCT access (DuckDB
                 # subscripts structs by name; Spark needs dot syntax).
                 # Parenthesized so a following subscript still sees a
@@ -7620,9 +7556,10 @@ def translate(sql: str) -> str:
     if re.search(r"(?is)\bBY\s+NAME\b", sql):
         sql = rewrite_nested_union_by_name(sql)
     sql = _fold_time_literals(sql)
-    if TIME_TABLE_COLS or TIMETZ_TABLE_COLS:
+    st = state.current()
+    if st.time_cols or st.timetz_cols:
         sql = mark_time_table_columns(sql)
-    if ENUM_TABLE_COLS:
+    if st.enum_cols:
         sql = mark_enum_table_columns(sql)
     sql = _rewrite_unnest_group_by(sql)
     # `TABLE t` ≡ `SELECT * FROM t` (reference parser TableStatement)
@@ -7705,9 +7642,9 @@ def translate(sql: str) -> str:
     # named windows inline FIRST: later OVER-spec passes (orderless-over,
     # frame rewrites) must see the resolved spec, not the reference
     sql = _rewrite_named_windows(sql)
-    if get_session_setting("__window_alias"):
+    if state.flag("window_alias"):
         sql = _substitute_window_aliases(sql)
-    if get_session_setting("__select_alias"):
+    if state.flag("select_alias"):
         sql = _substitute_filter_aliases(sql)
     # `x IN (SELECT <expr>)` with no FROM is a single-row membership test
     # ≡ `x = (<expr>)` — and unlike the subquery form, Spark resolves
@@ -8921,22 +8858,11 @@ def _nestcmp_from_tables(toks: list[str]) -> dict[str, str]:
     return tables
 
 
-import threading as _threading
-
-_ACTIVE_SPARK = _threading.local()
-
-
-def set_active_spark(spark) -> None:
-    """Thread-local session for schema-aware passes. Worker threads (the
-    sqllogic runner uses spark.newSession() per worker) each carry their
-    own temp-view catalog, and SparkSession.getActiveSession() is not
-    reliably set before the first spark.sql of a thread — Connection.sql
-    pins its session here at entry."""
-    _ACTIVE_SPARK.spark = spark
-
-
 def _get_active_spark():
-    spark = getattr(_ACTIVE_SPARK, "spark", None)
+    """The session schema-aware passes read: the one `Connection.sql`
+    activated (worker threads' SparkSession.getActiveSession() is not
+    reliably set before their first spark.sql), else Spark's active one."""
+    spark = state.active_spark()
     if spark is not None:
         return spark
     try:
@@ -9270,39 +9196,20 @@ def rewrite_struct_concat(sql: str) -> str:
 
 
 
-# Managed tables with declared TIME columns (µs-since-midnight BIGINTs):
-# table name (lower) → {column names (lower)}. Populated by
-# managed.ManagedTables._create, consumed by mark_time_table_columns.
-
-# Same for TIMETZ columns (packed int64 carrier, time_tz.hpp emulation).
-
-# Managed-table columns declared with a CREATE TYPE … AS ENUM alias:
-# table (lower) → {col (lower): member list in declaration order}.
-# Enum values compare/sort by member POSITION (reference enum_type.cpp);
-# the string emulation loses that, so references get an __dkenumN marker.
-ENUM_TABLE_COLS: dict[str, dict[str, list[str]]] = {}
-
-
-def _enum_marks() -> list[list[str]]:
-    d = getattr(_SESSION_SETTINGS, "enum_marks", None)
-    if d is None:
-        d = _SESSION_SETTINGS.enum_marks = []
-    return d
-
-
 def mark_enum_table_columns(sql: str) -> str:
     """Wrap references of enum-declared managed-table columns in an
     `__dkenumN(...)` marker (N indexes the session's member-list store).
     The marker is stripped at the end of translate; histogram (and any
     other member-order-sensitive macro) reads it before the strip
     (test_histogram.test:140 — keys sort 'ok' before 'happy')."""
-    if not ENUM_TABLE_COLS or "SELECT" not in sql.upper():
+    st = state.current()
+    if not st.enum_cols or "SELECT" not in sql.upper():
         return sql
     toks = _tokens(sql)
     tables = _nestcmp_from_tables(toks)
     live: dict[str, tuple[set[str], list[str]]] = {}
     for alias, tbl in tables.items():
-        for c, members in ENUM_TABLE_COLS.get(tbl.lower(), {}).items():
+        for c, members in st.enum_cols.get(tbl.lower(), {}).items():
             if c in live:
                 live[c][0].add(alias)
             else:
@@ -9311,7 +9218,7 @@ def mark_enum_table_columns(sql: str) -> str:
         return sql
 
     def _mark(members: list[str]) -> str:
-        marks = _enum_marks()
+        marks = st.enum_marks
         try:
             idx = marks.index(members)
         except ValueError:
@@ -9595,9 +9502,9 @@ def rewrite_nested_comparisons(sql: str) -> str:
     if not nested_cols and not has_literal_hint:
         if changed:
             try:
-                from duckdb_spark.sql.nestcmp import ensure_udfs
+                from duckdb_spark.sql.nestcmp import register_udfs
 
-                ensure_udfs(_get_active_spark())
+                register_udfs(_get_active_spark())
             except Exception:  # noqa: BLE001
                 pass
             return "".join(toks)
@@ -9777,9 +9684,9 @@ def rewrite_nested_comparisons(sql: str) -> str:
     if not changed:
         return sql
     try:
-        from duckdb_spark.sql.nestcmp import ensure_udfs
+        from duckdb_spark.sql.nestcmp import register_udfs
 
-        ensure_udfs(_get_active_spark())
+        register_udfs(_get_active_spark())
     except Exception:  # noqa: BLE001
         pass
     return "".join(toks)
@@ -10006,8 +9913,6 @@ _UGB_COUNTER: list[str] = []
 # every shared helper above is defined) lets them import those
 # helpers at their module top without a circular-import failure.
 from duckdb_spark.sql.dialect_time import (  # noqa: E402,F401
-    TIMETZ_TABLE_COLS,
-    TIME_TABLE_COLS,
     _TIMETZ_MAX_OFFSET,
     _TIMETZ_OFF_MOD,
     _TM_SAFE_FNS,

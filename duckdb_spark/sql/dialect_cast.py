@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import re
 
+from duckdb_spark import state
 from duckdb_spark.sql.dialect import (  # noqa: E402 — bound at the
     # END of dialect.py's module body (ordered-pipeline split), so
     # every helper below is already defined when this executes
@@ -32,7 +33,6 @@ from duckdb_spark.sql.dialect import (  # noqa: E402 — bound at the
     _top_level_index,
     duck_blob_hex,
     expand_type_aliases,
-    get_session_setting,
 )
 
 
@@ -359,7 +359,7 @@ def _rewrite_pg_cast(toks: list[str]) -> list[str]:
             # runtime mode (Connection.sql retry): non-literal operand →
             # per-target-type parse/coerce UDF (reference string_cast.cpp)
             if (
-                get_session_setting("__text_cast_runtime")
+                state.flag("text_cast_runtime")
                 and re.match(
                     r"(?is)^(.*\[\s*\d*\s*\]|STRUCT\s*\(|MAP\s*\(|TUPLE\s*\()", rawty)
                 and not re.match(
@@ -461,7 +461,7 @@ def _rewrite_pg_cast(toks: list[str]) -> list[str]:
                 re.match(r"(?is)^(VARCHAR|STRING|TEXT)$", rawty.strip())
                 and mlit is None
                 and not re.match(r"(?is)^\s*__dk", operand)
-                and (get_session_setting("__text_cast_runtime")
+                and (state.flag("text_cast_runtime")
                      or _NESTED_HINT_RE.search(operand))
             ):
                 out.extend(_tokens(f"__dkrender({operand})"))
@@ -1196,7 +1196,7 @@ def _rewrite_cast_types(toks: list[str]) -> list[str]:
         # cast). `x::VARCHAR::T` chains collapse: the UDF renders duck-
         # style then reparses, matching the reference value→text→value.
         if (
-            get_session_setting("__text_cast_runtime")
+            state.flag("text_cast_runtime")
             and re.match(r"(?is)^(STRUCT\s*\(|MAP\s*\(|TUPLE\s*\(|.*\[\s*\d*\s*\]$)", ty)
             and not re.match(
                 r"(?is)^\s*(array|named_struct|map|struct|collect_list|"
@@ -1214,7 +1214,7 @@ def _rewrite_cast_types(toks: list[str]) -> list[str]:
             and mlit is None
             and out[i].upper() in ("CAST", "TRY_CAST")
             and not re.match(r"(?is)^\s*__dk", operand)
-            and (get_session_setting("__text_cast_runtime")
+            and (state.flag("text_cast_runtime")
                  or _NESTED_HINT_RE.search(operand))
         ):
             out[i:close + 1] = _tokens(f"__dkrender({operand})")

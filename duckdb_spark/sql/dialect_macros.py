@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import re
 
+from duckdb_spark import state
 from duckdb_spark.sql.dialect import (  # noqa: E402 — bound at the END
     # of dialect.py's module body (ordered-pipeline split), so every
     # helper below is already defined when this executes
@@ -21,7 +22,6 @@ from duckdb_spark.sql.dialect import (  # noqa: E402 — bound at the END
     _SQL_LIT_RE,
     _TO_INTERVAL_FNS,
     _balanced,
-    _enum_marks,
     _has_top_level_comma,
     _rewrite_division,
     _seq_expr,
@@ -66,7 +66,7 @@ def _macro_histogram(x: str) -> str:
     lst = f"collect_list({x})"
     em = re.search(r"__dkenum(\d+)", x)
     if em:
-        members = _enum_marks()[int(em.group(1))]
+        members = state.current().enum_marks[int(em.group(1))]
         arr = "array(" + ", ".join(
             "'" + m.replace("'", "''") + "'" for m in members) + ")"
         sorted_ = (

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import re
 
+from duckdb_spark import state
 from duckdb_spark.sql.dialect import (  # noqa: E402 — bound at the END
     # of dialect.py's module body (ordered-pipeline split), so every
     # helper below is already defined when this executes
@@ -77,8 +78,6 @@ _TM_SAFE_FNS = {
     # collected TIME values (test_mode.test:168)
     "element_at", "try_element_at",
 }
-TIME_TABLE_COLS: dict[str, set[str]] = {}
-TIMETZ_TABLE_COLS: dict[str, set[str]] = {}
 def _strip_time_markers(s: str) -> str:
     # longest first: "__dktml".replace("__dktm", "") would leave "l"
     return re.sub(r"__dkt[mz][lm]?", "", s)
@@ -165,7 +164,8 @@ def mark_time_table_columns(sql: str) -> str:
     in operator/keyword positions; skips function calls and alias
     definitions. The marker is identity once rewrite_time_outputs strips
     it, so over-wrapping inside WHERE/GROUP BY is harmless."""
-    if (not TIME_TABLE_COLS and not TIMETZ_TABLE_COLS) or \
+    st = state.current()
+    if (not st.time_cols and not st.timetz_cols) or \
             "SELECT" not in sql.upper():
         return sql
     toks = _tokens(sql)
@@ -173,9 +173,9 @@ def mark_time_table_columns(sql: str) -> str:
     live: dict[str, set[str]] = {}
     tz_cols: set[str] = set()
     for alias, tbl in tables.items():
-        for c in TIME_TABLE_COLS.get(tbl.lower(), ()):
+        for c in st.time_cols.get(tbl.lower(), ()):
             live.setdefault(c, set()).add(alias)
-        for c in TIMETZ_TABLE_COLS.get(tbl.lower(), ()):
+        for c in st.timetz_cols.get(tbl.lower(), ()):
             live.setdefault(c, set()).add(alias)
             tz_cols.add(c)
     if not live:

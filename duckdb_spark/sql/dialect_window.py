@@ -1442,7 +1442,7 @@ def _substitute_window_aliases(sql: str) -> str:
     aliases (`i // 2 AS inside, … OVER (ORDER BY inside)`); Spark raises
     LATERAL_COLUMN_ALIAS_IN_WINDOW. Inline the alias definition into
     OVER specs and window-call argument lists. Retry-only (gated by the
-    __window_alias setting): DuckDB prefers real columns over aliases,
+    `window_alias` flag): DuckDB prefers real columns over aliases,
     so this must not run on queries Spark resolves natively."""
     toks = _tokens(sql)
     # window-dependent aliases can't be inlined into another window

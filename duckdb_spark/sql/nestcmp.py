@@ -32,6 +32,8 @@ import math
 import struct
 from decimal import Decimal
 
+from duckdb_spark import state
+
 _I64_BIAS = 1 << 63
 _U64_MASK = (1 << 64) - 1
 
@@ -273,17 +275,13 @@ def order_key_sql(expr: str, dtype) -> str | None:
     return None
 
 
-_REGISTERED: set[int] = set()
-
-
-def ensure_udfs(spark) -> None:
-    """Register __dknesteq / __dknestkey on this session (idempotent)."""
-    if spark is None or id(spark) in _REGISTERED:
+def register_udfs(spark) -> None:
+    """Register __dknesteq / __dknestkey / __dknestin on `spark`."""
+    if spark is None:
         return
-    spark.udf.register("__dknesteq", nest_eq, "boolean")
-    spark.udf.register("__dknestkey", nest_key, "binary")
-    spark.udf.register("__dknestin", nest_in, "boolean")
-    _REGISTERED.add(id(spark))
+    state.register_udf(spark, "__dknesteq", nest_eq, "boolean")
+    state.register_udf(spark, "__dknestkey", nest_key, "binary")
+    state.register_udf(spark, "__dknestin", nest_in, "boolean")
 
 
 # --------------------------------------------------------- BY NAME unify

@@ -573,6 +573,8 @@ def fold_string_to_integer(text: str, ducktype: str) -> str | None:
 # per-row runtime cast too). The dialect emits a deterministic UDF name and
 # records it in RUNTIME_CASTS; Connection.sql registers pending names on
 # its retry path. Correctness corner only — never a scan-scale hot path.
+# RUNTIME_CASTS is module-wide, not session state: a name is a hash of its
+# (type, is_try) pair, so the entry is the same for every session.
 
 RUNTIME_CASTS: dict[str, tuple[str, bool]] = {}  # name -> (ducktype, is_try)
 
@@ -584,6 +586,15 @@ def runtime_cast_name(ducktype: str, is_try: bool) -> str:
     name = "__dktc_" + hashlib.md5(key.encode()).hexdigest()[:10]
     RUNTIME_CASTS[name] = (ducktype.strip(), is_try)
     return name
+
+
+def register_runtime_cast(spark, name: str) -> None:
+    """Register the runtime-cast UDF `name` of RUNTIME_CASTS on `spark`."""
+    from duckdb_spark import state
+
+    ducktype, is_try = RUNTIME_CASTS[name]
+    state.register_udf(spark, name, runtime_cast_fn(ducktype, is_try),
+                       duckdb_type_to_spark(ducktype))
 
 
 def render_duck(v) -> str:

@@ -57,6 +57,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from duckdb_spark import state
+
 
 _IV_UNIT_US = {
     "week": 7 * 86400_000_000, "day": 86400_000_000,
@@ -746,9 +748,12 @@ class SLSession:
             self._register(t, df.schema, df.collect())
 
     def _drop(self, name: str) -> None:
+        from duckdb_spark.managed import mark_columns
+
         self.tables.pop(name, None)
         self.views.discard(name)
         self.pkeys.pop(name, None)
+        mark_columns(self.spark, name, [])
         self.spark.catalog.dropTempView(name)
 
     def reset(self) -> None:
@@ -761,15 +766,14 @@ class SLSession:
         self.views.clear()
         self.pkeys.clear()
         self._txn = None
-        from duckdb_spark.sql.dialect import reset_session_settings
-
-        reset_session_settings()
+        state.of(self.spark).reset()
 
     # -- SQL entry --------------------------------------------------
     def execute(self, sql: str):
         """Route one record's SQL; returns a Relation for queries, None for
         handled DDL/DML. Records may hold several ';'-separated statements
         (the reference runner sends the whole block); the last result wins."""
+        state.activate(self.spark)
         stmts = _split_statements(sql)
         if len(stmts) > 1:
             res = None
@@ -832,11 +836,9 @@ class SLSession:
             src.createOrReplaceTempView(view)
             from pyspark.sql import types as _T2
             from duckdb_spark.sql.textcast import (
-                RUNTIME_CASTS,
-                runtime_cast_fn,
+                register_runtime_cast,
                 runtime_cast_name,
             )
-            from duckdb_spark.types import duckdb_type_to_spark as _d2s
 
             def _copy_cast(s: str, f) -> str:
                 dty = spark_type_to_duckdb(f.dataType)
@@ -847,13 +849,7 @@ class SLSession:
                     # (cast/string_to_list_cast.test:485 COPY FROM into
                     # INT[]/VARCHAR[]/DATE[] columns)
                     fn = runtime_cast_name(dty, False)
-                    if fn not in getattr(self, "_rtcast_done", set()):
-                        done = self._rtcast_done = getattr(
-                            self, "_rtcast_done", set())
-                        self.spark.udf.register(
-                            fn, runtime_cast_fn(*RUNTIME_CASTS[fn]),
-                            _d2s(dty))
-                        done.add(fn)
+                    register_runtime_cast(self.spark, fn)
                     return f'{fn}("{s}") AS "{f.name}"'
                 return f'CAST("{s}" AS {dty}) AS "{f.name}"'
 
@@ -930,9 +926,7 @@ class SLSession:
             body = body[1:body.rfind(")")]
             fields = []
             pk: list[str] = []
-            from duckdb_spark.sql.dialect import TIME_TABLE_COLS as _TTC
-
-            _TTC.pop(name.lower(), None)
+            coldefs = []
             for coldef in _split_coldefs(body):
                 if re.match(r"(?i)^(primary|unique|check|foreign|constraint)\b", coldef):
                     km = re.match(
@@ -973,27 +967,11 @@ class SLSession:
                     }.get(coll.group(1).lower())
                     if spark_coll:
                         dt = T.StringType(spark_coll)
-                _exp_ty = expand_type_aliases(ctype).strip().upper()
-                if _exp_ty in ("TIME", "TIME WITHOUT TIME ZONE"):
-                    from duckdb_spark.sql.dialect import TIME_TABLE_COLS
-
-                    TIME_TABLE_COLS.setdefault(
-                        name.lower(), set()).add(cname.strip('"').lower())
-                if _exp_ty in ("TIMETZ", "TIME WITH TIME ZONE"):
-                    from duckdb_spark.sql.dialect import TIMETZ_TABLE_COLS
-
-                    TIMETZ_TABLE_COLS.setdefault(
-                        name.lower(), set()).add(cname.strip('"').lower())
-                from duckdb_spark.sql.dialect import (
-                    ENUM_TABLE_COLS,
-                    lookup_enum_members,
-                )
-
-                _emem = lookup_enum_members(ctype)
-                if _emem:
-                    ENUM_TABLE_COLS.setdefault(name.lower(), {})[
-                        cname.strip('"').lower()] = _emem
+                coldefs.append((cname, ctype))
                 fields.append(T.StructField(cname, dt))
+            from duckdb_spark.managed import mark_columns
+
+            mark_columns(self.spark, name, coldefs)
             self._register(name, T.StructType(fields), [])
             if pk:
                 self.pkeys[name] = pk
@@ -1064,13 +1042,9 @@ class SLSession:
                     "Binder Error: data-modifying statement must be at "
                     "the top level"
                 )
-            from duckdb_spark.sql.dialect import TIME_TABLE_COLS as _TTC2
-            from duckdb_spark.sql.dialect import (
-                TIMETZ_TABLE_COLS as _TZC2,
-            )
-
-            _tcols = _TTC2.get(name.lower(), set())
-            _tzcols = _TZC2.get(name.lower(), set())
+            st = state.of(self.spark)
+            _tcols = st.time_cols.get(name.lower(), set())
+            _tzcols = st.timetz_cols.get(name.lower(), set())
             if src_sql.upper().startswith("VALUES") and \
                     (_tcols or _tzcols):
                 # TIME columns carry BIGINT µs but VALUES feed text — keep
@@ -1281,17 +1255,10 @@ class SLSession:
         if m:
             self._drop(_flat(m.group(2)))
             return None
-        m = re.match(r"(?is)^\s*SET\s+(?:SESSION\s+|GLOBAL\s+)?(\w+)\s*=\s*(.+?)\s*$", sql)
-        if m:
-            # record DuckDB semantic settings (thread-local) so the dialect
-            # can honor e.g. order_by_non_integer_literal
-            from duckdb_spark.sql.dialect import set_session_setting
+        from duckdb_spark.statements import SET_RE
 
-            val = m.group(2).strip().rstrip(";").strip()
-            if len(val) >= 2 and val[0] == val[-1] and val[0] in "'\"":
-                val = val[1:-1]
-            set_session_setting(m.group(1), val.lower())
-            return None
+        if SET_RE.match(sql):
+            return self.con.sql(sql)
         if _NOOP_RE.match(sql):
             # still reject syntactically broken PRAGMAs (unbalanced parens
             # or stray tokens — the reference parser does)

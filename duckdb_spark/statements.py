@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as _T
 
+from duckdb_spark import state
 from duckdb_spark.sql import dialect
 from duckdb_spark.sql.columns_expr import _CLAUSE_END
 from duckdb_spark.sql.textcast import TextCastError
@@ -40,16 +41,11 @@ def is_duckdb_error(e: BaseException) -> bool:
         isinstance(e, ValueError) and _DUCKDB_ERROR.match(str(e)) is not None)
 
 
-def _translate_with(query: str, tq: str, settings: dict) -> str | None:
-    """Translate with dialect session settings switched on for this call
-    only; None when the settings change nothing."""
-    for k, v in settings.items():
-        dialect.set_session_setting(k, v)
-    try:
+def _translate_with(query: str, tq: str, **flags: str) -> str | None:
+    """Translate with dialect flags switched on for this call only; None
+    when the flags change nothing."""
+    with state.flags(**flags):
         retried = dialect.translate(query)
-    finally:
-        for k in settings:
-            dialect.set_session_setting(k, "")
     return None if retried == tq else retried
 
 
@@ -326,6 +322,22 @@ def macro_ddl(con, query):
     return None if con.macros.handle_ddl(query) else query
 
 
+SET_RE = re.compile(
+    r"(?is)^\s*SET\s+(?:SESSION\s+|GLOBAL\s+)?(\w+)\s*(?:=|\bTO\b)"
+    r"\s*(.+?)\s*;?\s*$")
+
+
+def duckdb_setting(con, query):
+    """`SET [SESSION|GLOBAL] name = value` of an undotted DuckDB setting
+    (default_null_order, …) is recorded on the session state for the
+    dialect to honour; dotted `spark.*` keys reach Spark's own SET."""
+    m = SET_RE.match(query)
+    if not m:
+        return query
+    dialect.set_session_setting(m.group(1), m.group(2))
+    return None
+
+
 def macro_expand(con, query):
     return con.macros.expand(query)
 
@@ -591,11 +603,12 @@ def create_schema(con, query):
     if not m:
         return query
     name = m.group(2).strip('"').lower()
-    if name in dialect.registered_schemas() and not m.group(1):
+    schemas = state.of(con.spark).schemas
+    if name in schemas and not m.group(1):
         raise ValueError(
             f'Catalog Error: Schema with name "{name}" already exists!'
         )
-    dialect.register_schema(name)
+    schemas.add(name)
     return None
 
 
@@ -607,7 +620,7 @@ def drop_schema(con, query):
     if not m:
         return query
     name = m.group(1).strip('"').lower()
-    dialect.unregister_schema(name)
+    state.of(con.spark).schemas.discard(name)
     for t in con.spark.catalog.listTables():
         if t.name.lower().startswith(name + "__"):
             try:
@@ -1749,13 +1762,13 @@ def union_by_name(con, query):
 
 
 STEPS = (
-    prepared_statement, macro_ddl, macro_expand, managed_table,
-    recursive_view, copy_to, copy_from, describe_cte, describe_in_from,
-    describe, limit_percent_nested, limit_percent, create_schema,
-    drop_schema, strip_unused_ctes, materialized_ctes, string_tables,
-    sql_table_functions, columns_star, using_star_order, struct_unnest,
-    positional_ref, lateral_recursive, recursive_cte, limit_expr,
-    offset_expr, union_by_name,
+    prepared_statement, macro_ddl, duckdb_setting, macro_expand,
+    managed_table, recursive_view, copy_to, copy_from, describe_cte,
+    describe_in_from, describe, limit_percent_nested, limit_percent,
+    create_schema, drop_schema, strip_unused_ctes, materialized_ctes,
+    string_tables, sql_table_functions, columns_star, using_star_order,
+    struct_unnest, positional_ref, lateral_recursive, recursive_cte,
+    limit_expr, offset_expr, union_by_name,
 )
 
 
@@ -1766,7 +1779,7 @@ def struct_subscript(con, query, tq, msg):
     key vs struct field): the struct reading, when the map reading fails
     analysis."""
     if "element_at" in msg and ("UNEXPECTED_INPUT_TYPE" in msg or "MAP" in msg):
-        return _translate_with(query, tq, {"__struct_subscript": "1"})
+        return _translate_with(query, tq, struct_subscript="1")
     return None
 
 
@@ -1783,18 +1796,13 @@ def runtime_text_cast(con, query, tq, msg):
         "INVALID_JSON_SCHEMA" in msg and "to_json" in msg
     )):
         return None
-    from duckdb_spark.sql.textcast import RUNTIME_CASTS, runtime_cast_fn
-    from duckdb_spark.types import duckdb_type_to_spark
+    from duckdb_spark.sql.textcast import RUNTIME_CASTS, register_runtime_cast
 
-    retried = _translate_with(query, tq, {"__text_cast_runtime": "1"})
+    retried = _translate_with(query, tq, text_cast_runtime="1")
     if retried is None:
         return None
-    done = con._rtcast_registered
-    for name, (ducktype, is_try) in list(RUNTIME_CASTS.items()):
-        if name not in done:
-            con.spark.udf.register(name, runtime_cast_fn(ducktype, is_try),
-                                   duckdb_type_to_spark(ducktype))
-            done.add(name)
+    for name in list(RUNTIME_CASTS):
+        register_runtime_cast(con.spark, name)
     return retried
 
 
@@ -2275,7 +2283,7 @@ def window_alias(con, query, tq, msg):
     doesn't: aliases inlined into window specs (fallback-only: columns
     must win over aliases when both resolve)."""
     if "LATERAL_COLUMN_ALIAS_IN_WINDOW" in msg:
-        return _translate_with(query, tq, {"__window_alias": "1"})
+        return _translate_with(query, tq, window_alias="1")
     return None
 
 
@@ -2727,7 +2735,7 @@ def range_lateral(con, query, tq, msg):
     explode(sequence) form."""
     if "NON_FOLDABLE_ARGUMENT" in msg and re.search(
             r"`(range|generate_series)`|`(start|end|step)`", msg):
-        return _translate_with(query, tq, {"__range_lateral": "1"})
+        return _translate_with(query, tq, range_lateral="1")
     return None
 
 
@@ -2754,7 +2762,7 @@ def select_alias(con, query, tq, msg):
     """DuckDB resolves SELECT-list aliases in WHERE/HAVING/QUALIFY; Spark
     doesn't: the definitions inlined there."""
     if "UNRESOLVED_COLUMN" in msg:
-        return _translate_with(query, tq, {"__select_alias": "1"})
+        return _translate_with(query, tq, select_alias="1")
     return None
 
 
@@ -2765,8 +2773,8 @@ def select_alias_only(con, query, tq, msg):
     nm = "UNRESOLVED_COLUMN" in msg and \
         re.search(r"with name `([A-Za-z_]\w*)` cannot", msg)
     if nm:
-        return _translate_with(query, tq, {"__select_alias": "1",
-                                           "__select_alias_only": nm.group(1)})
+        return _translate_with(query, tq, select_alias="1",
+                               select_alias_only=nm.group(1))
     return None
 
 

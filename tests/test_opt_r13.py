@@ -91,9 +91,7 @@ def test_cb_q32_packed_key_matches_sql_form(spark):
     from duckdb_spark.queries import clickbench as CB
     from duckdb_spark.sql.dialect import translate
 
-    d = CB.ensure_fixture(1)
-    spark.read.parquet(f"{d}/hits.parquet").createOrReplaceTempView("hits")
-    CB._BOUND[id(spark)] = d
+    CB._bind_hits(spark, "/root/testdata/sf0.001")
     ref = spark.sql(translate(CB._CB_Q32_SQL.format(hits="hits")))
     got = CB.cb_q32(spark, "/root/testdata/sf0.001")
     # name+type must match (nullability may differ: COUNT(*) is
@@ -108,9 +106,7 @@ def test_cb_q30_q31_packed_key_match_sql_form(spark):
     from duckdb_spark.queries import clickbench as CB
     from duckdb_spark.sql.dialect import translate
 
-    d = CB.ensure_fixture(1)
-    spark.read.parquet(f"{d}/hits.parquet").createOrReplaceTempView("hits")
-    CB._BOUND[id(spark)] = d
+    CB._bind_hits(spark, "/root/testdata/sf0.001")
     for sql, fn in ((CB._CB_Q30_SQL, CB.cb_q30), (CB._CB_Q31_SQL, CB.cb_q31)):
         ref = spark.sql(translate(sql.format(hits="hits")))
         got = fn(spark, "/root/testdata/sf0.001")

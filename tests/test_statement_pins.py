@@ -37,6 +37,7 @@ class Case:
     check: str | None = None  # compared instead of the statement's own result
     error: str | None = None  # phrase both engines' errors carry
     expect: list | None = None  # our rows, where pip duckdb 1.0.0 differs
+    own_session: bool = False  # runs on a new session: it changes a setting
 
 
 # a twice-referenced aggregate: marked, it is computed once
@@ -52,6 +53,11 @@ STEP_CASES = {
     "macro_ddl": Case(
         "macro_ddl", "CREATE MACRO pin_add(a, b) AS a + b",
         check="SELECT pin_add(1, 2) AS s"),
+    "duckdb_setting": Case(
+        "duckdb_setting", "SET default_null_order = 'nulls_first'",
+        check="SELECT x, row_number() OVER (ORDER BY x) AS r "
+              "FROM (VALUES (1), (NULL), (2)) t(x)",
+        own_session=True),
     "macro_expand": Case(
         "macro_expand", "SELECT pin_mul(2, 3) AS s",
         setup=("CREATE MACRO pin_mul(a, b) AS a * b",)),
@@ -386,6 +392,8 @@ def _run(con, duck, dirs, case: Case):
 @pytest.mark.parametrize("case", [pytest.param(c, id=k) for k, c in
                                   {**STEP_CASES, **FALLBACK_CASES}.items()])
 def test_pin(con, duck, dirs, case):
+    if case.own_session:
+        con, duck = Connection(con.spark.newSession()), duckdb.connect()
     trace, _ = _run(con, duck, dirs, case)
     if case.fired is None:
         assert trace == []
