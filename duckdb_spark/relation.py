@@ -208,58 +208,61 @@ class Connection:
         propagate, and when none succeeds the original error is raised.
 
         `last_trace` lists what ran for the statement, nested statements
-        included: `(step, "rewrote" | "answered" | "raised")` and
-        `(fallback, "ok" | "raised" | "failed: <error type>")`."""
+        included: `(step, "rewrote" | "answered" | "raised")`,
+        `(fallback, "ok" | "raised" | "failed: <error type>")`, and
+        `(pass, "translated" | "raised")` for each `dialect.PASSES` entry
+        that changed or rejected a text `dialect.translate` was given."""
         state.activate(self.spark)
         if self._sql_depth == 0:
             self.last_trace = []
         trace = self.last_trace
         self._sql_depth += 1
         try:
-            if params is not None:
-                query = bind_parameters(query, params)
-            for step in statements.STEPS:
-                try:
-                    out = step(self, query)
-                except Exception:
-                    trace.append((step.__name__, "raised"))
-                    raise
-                if isinstance(out, str):
-                    if out != query:
-                        trace.append((step.__name__, "rewrote"))
-                        query = out
-                    continue
-                trace.append((step.__name__, "answered"))
-                return Relation(out) if isinstance(out, DataFrame) else out
-            try:
-                tq = dialect.translate(query)
-            except Exception as e:  # noqa: BLE001 — fallbacks may apply
-                tq, err = "", e
-            else:
-                try:
-                    return Relation(self.spark.sql(tq))
-                except Exception as e:  # noqa: BLE001 — fallbacks may apply
-                    err = e
-            msg = str(err)
-            for fallback in statements.FALLBACKS:
-                try:
-                    out = fallback(self, query, tq, msg)
-                    if out is None:
-                        continue
-                    if isinstance(out, str):
-                        out = self.spark.sql(out)
-                    if isinstance(out, DataFrame):
-                        out = Relation(out)
-                except Exception as e:  # noqa: BLE001 — next fallback
-                    if statements.is_duckdb_error(e):
-                        trace.append((fallback.__name__, "raised"))
+            with state.tracing(trace):
+                if params is not None:
+                    query = bind_parameters(query, params)
+                for step in statements.STEPS:
+                    try:
+                        out = step(self, query)
+                    except Exception:
+                        trace.append((step.__name__, "raised"))
                         raise
-                    trace.append(
-                        (fallback.__name__, f"failed: {type(e).__name__}"))
-                    continue
-                trace.append((fallback.__name__, "ok"))
-                return out
-            raise err
+                    if isinstance(out, str):
+                        if out != query:
+                            trace.append((step.__name__, "rewrote"))
+                            query = out
+                        continue
+                    trace.append((step.__name__, "answered"))
+                    return Relation(out) if isinstance(out, DataFrame) else out
+                try:
+                    tq = dialect.translate(query)
+                except Exception as e:  # noqa: BLE001 — fallbacks may apply
+                    tq, err = "", e
+                else:
+                    try:
+                        return Relation(self.spark.sql(tq))
+                    except Exception as e:  # noqa: BLE001 — fallbacks may apply
+                        err = e
+                msg = str(err)
+                for fallback in statements.FALLBACKS:
+                    try:
+                        out = fallback(self, query, tq, msg)
+                        if out is None:
+                            continue
+                        if isinstance(out, str):
+                            out = self.spark.sql(out)
+                        if isinstance(out, DataFrame):
+                            out = Relation(out)
+                    except Exception as e:  # noqa: BLE001 — next fallback
+                        if statements.is_duckdb_error(e):
+                            trace.append((fallback.__name__, "raised"))
+                            raise
+                        trace.append(
+                            (fallback.__name__, f"failed: {type(e).__name__}"))
+                        continue
+                    trace.append((fallback.__name__, "ok"))
+                    return out
+                raise err
         finally:
             self._sql_depth -= 1
             if self._sql_depth == 0 and trace:

@@ -666,16 +666,13 @@ def _runtime_cast_chain(operand: str) -> str:
     return op
 
 
-def _fold_mixed_interval_literals(sql: str) -> str:
+def _fold_mixed_interval_literals(sql: str, restore) -> str:
     """`INTERVAL '5 months 2 days 12:11:49'` mixes year-month and
     day-time fields — unrepresentable in Spark's split interval types
     (ParseException). Fold such literals into the (months, days, micros)
     struct emulation (types.py INTERVAL; test_mode.test:222)."""
-    if not re.search(r"(?i)\bINTERVAL\s*'", sql):
-        return sql
-
     def rep(m: re.Match) -> str:
-        txt = m.group(1)
+        txt = restore(m.group(1))
         has_ym = re.search(r"(?i)\b(year|month|mon)s?\b", txt)
         has_dt = re.search(
             r"(?i)\b(week|day|hour|minute|min|second|sec|millisecond|ms|"
@@ -692,12 +689,13 @@ def _fold_mixed_interval_literals(sql: str) -> str:
     return re.sub(r"(?i)\bINTERVAL\s*'([^']*)'", rep, sql)
 
 
-def _fold_time_literals(sql: str) -> str:
+def _fold_time_literals(sql: str, restore) -> str:
     """`TIME 'hh:mm:ss[.ffffff]'` → µs-since-midnight BIGINT (the TIME
     emulation, SURVEY §1.2; Spark has no TIME type)."""
     return re.sub(
         r"(?i)\bTIME\s*'([^']*)'",
-        lambda m: f"__dktm(CAST({_parse_time_us(m.group(1))} AS BIGINT))",
+        lambda m: "__dktm(CAST("
+        f"{_parse_time_us(restore(m.group(1)))} AS BIGINT))",
         sql,
     )
 

@@ -1983,15 +1983,12 @@ def _ordered_window_repl(
     return None
 
 
-def _strip_orderless_range_frames(sql: str) -> str:
+def _strip_orderless_range_frames(toks: list[str]) -> list[str]:
     """`OVER (RANGE …)` without an ORDER BY: every row is a peer, so the
     frame is the whole partition — drop the frame clause (Spark raises
     RANGE_FRAME_WITHOUT_ORDER; reference allows the degenerate spelling,
     test_streaming_window.test:359)."""
-    if not re.search(r"(?i)\bRANGE\b", sql):
-        return sql
-    toks = _tokens(sql)
-    changed = False
+    toks = list(toks)
     i = 0
     while i < len(toks):
         if not _is_word(toks[i], "OVER"):
@@ -2014,10 +2011,9 @@ def _strip_orderless_range_frames(sql: str) -> str:
             for k in range(len(spec)):
                 if _is_word(spec[k], "RANGE") and _depth_at(spec, k) == 0:
                     toks[op + 1 + k:close] = []
-                    changed = True
                     break
         i = close + 1
-    return "".join(toks) if changed else sql
+    return toks
 
 
 

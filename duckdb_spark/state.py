@@ -70,6 +70,8 @@ class _Active:
     state: SessionState
     # per-call translate flags (`flags`), never stored on the state
     flags: dict[str, str] = field(default_factory=dict)
+    # the `Connection.last_trace` of the statement being run (`tracing`)
+    trace: list | None = None
 
 
 _ACTIVE: contextvars.ContextVar[_Active] = contextvars.ContextVar("duckdb_spark_active")
@@ -109,6 +111,21 @@ def flags(**values: str):
         yield
     finally:
         _ACTIVE.reset(token)
+
+
+@contextlib.contextmanager
+def tracing(trace: list):
+    """Let the enclosed translate calls append what fired to `trace`."""
+    token = _ACTIVE.set(dataclasses.replace(_active(), trace=trace))
+    try:
+        yield
+    finally:
+        _ACTIVE.reset(token)
+
+
+def trace() -> list | None:
+    """The list `tracing` points at, or None outside it."""
+    return _active().trace
 
 
 def flag(name: str) -> str:

@@ -22,6 +22,7 @@ from __future__ import annotations
 import itertools
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as _T
@@ -1043,9 +1044,13 @@ def positional_ref(con, query):
     binder): resolve against the FROM relation's schema at bind time.
     Not for set-op statements — there #N appears in the trailing ORDER BY
     and binds the union OUTPUT (the dialect layer rewrites those to
-    ordinals)."""
-    if not re.search(r"#\d+", query) or re.search(
-        r"(?is)\b(UNION|EXCEPT|INTERSECT)\b", query,
+    ordinals). A `#` inside a string literal is not a reference, so the
+    step reads the literal-masked text."""
+    if "#" not in query:
+        return query
+    masked, restore = dialect._mask_literals(query)
+    if not re.search(r"#\d+", masked) or re.search(
+        r"(?is)\b(UNION|EXCEPT|INTERSECT)\b", masked,
     ):
         return query
     # `#N` binds only the innermost SELECT's own FROM: a subquery scope
@@ -1055,7 +1060,7 @@ def positional_ref(con, query):
     _info: dict[int, list[bool]] = {0: [False, False]}
     _hash_scopes: list[int] = []
     _parent = {0: 0}
-    for _t in dialect._tokens(query):
+    for _t in dialect._tokens(masked):
         if _t == "(":
             _parent[_next_id] = _stack[-1]
             _info[_next_id] = [False, False]
@@ -1078,46 +1083,47 @@ def positional_ref(con, query):
             raise ValueError(
                 "Binder Error: Positional reference is out of range"
             )
-    span = _from_span(query)
-    if span is None or not _outside(query, span, r"#\d+"):
+    span = _from_span(masked)
+    if span is None or not _outside(masked, span, r"#\d+"):
         return query
     start, end = span
+    src = restore(masked[start:end])
     try:
-        schema = _from_schema(con, query, span)
-        cols = [f.name for f in schema.fields]
-        if len(set(c.lower() for c in cols)) == len(cols):
-            return re.sub(
-                r"#(\d+)",
-                lambda g: f"`{cols[int(g.group(1)) - 1]}`"
-                if 0 < int(g.group(1)) <= len(cols)
-                else g.group(0),
-                query,
-            )
-        # duplicate FROM column names (`FROM range(1) a, range(1) b`):
-        # name-based rewrite would be ambiguous — publish positional alias
-        # columns
-        from pyspark.sql import functions as F
-
-        base = con.sql(f"SELECT * FROM {query[start:end]}").df()
-        renamed = base.toDF(*[f"__pos_{i + 1}" for i in range(len(cols))])
-        lowers = [c.lower() for c in cols]
-        aug = renamed.select(
-            "*",
-            *[F.col(f"__pos_{i + 1}").alias(cols[i])
-              for i in range(len(cols))
-              if lowers.count(lowers[i]) == 1],
-        )
-        aug.createOrReplaceTempView("__positional_from")
-        query = query[:start] + " __positional_from " + query[end:]
-        return re.sub(
+        schema = con.sql(f"SELECT * FROM {src} LIMIT 0").df().schema
+    except AnalysisException:
+        # the source does not stand alone (a CTE name, a lateral
+        # reference): the `#N` is left for Spark to reject
+        return query
+    cols = [f.name for f in schema.fields]
+    if len(set(c.lower() for c in cols)) == len(cols):
+        return restore(re.sub(
             r"#(\d+)",
-            lambda g: f"__pos_{g.group(1)}"
+            lambda g: f"`{cols[int(g.group(1)) - 1]}`"
             if 0 < int(g.group(1)) <= len(cols)
             else g.group(0),
-            query,
-        )
-    except Exception:  # noqa: BLE001 — probe failed; leave untouched
-        return query
+            masked,
+        ))
+    # duplicate FROM column names (`FROM range(1) a, range(1) b`):
+    # name-based rewrite would be ambiguous — publish positional alias
+    # columns
+    base = con.sql(f"SELECT * FROM {src}").df()
+    renamed = base.toDF(*[f"__pos_{i + 1}" for i in range(len(cols))])
+    lowers = [c.lower() for c in cols]
+    aug = renamed.select(
+        "*",
+        *[F.col(f"__pos_{i + 1}").alias(cols[i])
+          for i in range(len(cols))
+          if lowers.count(lowers[i]) == 1],
+    )
+    aug.createOrReplaceTempView("__positional_from")
+    masked = masked[:start] + " __positional_from " + masked[end:]
+    return restore(re.sub(
+        r"#(\d+)",
+        lambda g: f"__pos_{g.group(1)}"
+        if 0 < int(g.group(1)) <= len(cols)
+        else g.group(0),
+        masked,
+    ))
 
 
 def lateral_recursive(con, query):

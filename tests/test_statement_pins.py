@@ -1,13 +1,14 @@
 """Pins for every statement step and error fallback of `Connection.sql`
-(duckdb_spark/statements.py).
+(duckdb_spark/statements.py) and every pass of `dialect.translate`
+(`dialect.PASSES`).
 
 Each case runs one DuckDB-dialect statement through a Connection, reads
-`Connection.last_trace` to check that the named step or fallback fired,
-and compares the result with pip duckdb on the same text. An error case
-checks that both engines raise with the same phrase. A case with
-`expect` pins a behaviour of later DuckDB releases that pip duckdb 1.0.0
-does not have (it raises, or concatenates two lists as text): our rows
-must equal `expect`.
+`Connection.last_trace` to check that the named step, fallback or pass
+fired, and compares the result with pip duckdb on the same text. An
+error case checks that both engines raise with the same phrase. A case
+with `expect` pins a behaviour of later DuckDB releases that pip duckdb
+1.0.0 does not have (it raises, or concatenates two lists as text): our
+rows must equal `expect`, and its setup runs on our side only.
 
 Placeholders: `{sf}` is the fixture directory, `{data}` a directory both
 engines read, `{tmp}` a directory each engine writes on its own.
@@ -31,7 +32,7 @@ V = "CREATE OR REPLACE TEMP VIEW "
 
 @dataclass(frozen=True)
 class Case:
-    fired: str | None  # None: Spark answers the translation, trace is empty
+    fired: str | None  # None: no step or fallback fires, Spark answers
     sql: str
     setup: tuple = ()
     check: str | None = None  # compared instead of the statement's own result
@@ -139,6 +140,10 @@ STEP_CASES = {
         "SELECT UNNEST(s) FROM (SELECT struct_pack(a := 1, b := 'x') AS s)"),
     "positional_ref": Case(
         "positional_ref", "SELECT #2 FROM (VALUES (1, 'a')) t(x, y)"),
+    # a `#N` inside a string literal is not a reference
+    "positional_ref-literal": Case(
+        "positional_ref",
+        "SELECT #2 FROM (VALUES (1, 'a#1')) t(x, y) WHERE y = 'a#1'"),
     "lateral_recursive": Case(
         "lateral_recursive",
         "SELECT i, n FROM (VALUES (2), (3)) t(i), LATERAL (WITH RECURSIVE "
@@ -325,6 +330,398 @@ FALLBACK_CASES = {
         error="Unimplemented type for cast"),
 }
 
+# one case per `dialect.PASSES` entry: its trace shows `(name, "translated")`
+# or, for a check, `(name, "raised")`
+PASS_CASES = {
+    "materialized_hint": Case(
+        "materialized_hint", MATERIALIZED_AGG.format(hint="NOT MATERIALIZED")),
+    "timetz_spelling": Case(
+        "timetz_spelling",
+        "SELECT CAST('12:00:00+01' AS TIME WITH TIME ZONE) = "
+        "CAST('11:00:00+00' AS TIMETZ) AS e"),
+    # duckdb 1.0.0 has no TIME_NS
+    "time_ns": Case(
+        "time_ns", "SELECT CAST('12:34:56.123' AS TIME_NS) AS t",
+        expect=[("12:34:56.123",)]),
+    "limit_null": Case(
+        "limit_null", "SELECT count(*) AS n FROM (SELECT * FROM nation LIMIT NULL)"),
+    "clamp_limits": Case(
+        "clamp_limits",
+        "SELECT count(*) AS n FROM (SELECT * FROM nation LIMIT 9999999999)"),
+    "clamp_limits-past_int64": Case(
+        "clamp_limits",
+        "SELECT * FROM nation LIMIT 99999999999999999999",
+        error="out of range"),
+    # duckdb 1.0.0 answers NULL: IEEE float division came later
+    "float_div_zero": Case(
+        "float_div_zero", "SELECT 1.0 / 0 AS x", expect=[(float("inf"),)]),
+    "digit_separators": Case(
+        "digit_separators", "SELECT 1_000_000 AS n"),
+    # duckdb 1.0.0 has no Python-style lambda
+    "python_lambda": Case(
+        "python_lambda", "SELECT list_transform(l, lambda x: x + 1) AS l "
+        "FROM (SELECT [1, 2] AS l)", expect=[([2, 3],)]),
+    # duckdb 1.0.0 has no prefix aliases
+    "prefix_colon_aliases": Case(
+        "prefix_colon_aliases", "SELECT j: 42", expect=[(42,)]),
+    "sample_percent": Case(
+        "sample_percent", "SELECT count(*) AS n FROM nation USING SAMPLE 100%"),
+    "sample_rows": Case(
+        "sample_rows", "SELECT count(*) AS n FROM nation USING SAMPLE 5"),
+    "generate_subscripts": Case(
+        "generate_subscripts",
+        "SELECT generate_subscripts(l, 1) AS i FROM (SELECT [4, 5, 6] AS l)"),
+    "offset_before_limit": Case(
+        "offset_before_limit",
+        "SELECT n_nationkey FROM nation ORDER BY 1 OFFSET 2 LIMIT 3"),
+    "from_first": Case("from_first", "FROM region"),
+    "from_first_subquery": Case(
+        "from_first_subquery", "SELECT count(*) AS n FROM (FROM nation)"),
+    "mixed_interval_literals": Case(
+        "mixed_interval_literals",
+        "SELECT mode(i) = INTERVAL '1 month 2 days' AS e FROM (VALUES "
+        "(INTERVAL '1 month 2 days'), (INTERVAL '1 month 2 days')) t(i)"),
+    "nested_union_by_name": Case(
+        "nested_union_by_name",
+        "SELECT * FROM (SELECT 1 AS a, 2 AS b UNION ALL BY NAME "
+        "SELECT 3 AS b, 4 AS a) t"),
+    "time_literals": Case("time_literals", "SELECT TIME '12:34:56' AS t"),
+    "time_columns": Case(
+        "time_columns", "SELECT count(*) AS n FROM pin_tm WHERE t < TIME '02:00:00'",
+        setup=("CREATE TABLE pin_tm (t TIME)",
+               "INSERT INTO pin_tm VALUES (TIME '01:02:03'), (TIME '03:00:00')")),
+    "enum_columns": Case(
+        "enum_columns", "SELECT m FROM pin_en",
+        setup=("CREATE TYPE pin_mood AS ENUM ('sad', 'ok', 'happy')",
+               "CREATE TABLE pin_en (m pin_mood)",
+               "INSERT INTO pin_en VALUES ('ok'), ('happy')")),
+    # duckdb 1.0.0: UNNEST is not allowed under GROUP BY
+    "unnest_group_by": Case(
+        "unnest_group_by",
+        "SELECT unnest(l) AS u, count(*) AS c FROM pin_ug GROUP BY u",
+        setup=(V + "pin_ug AS SELECT * FROM (VALUES ([1, 2]), ([2, 3])) t(l)",),
+        expect=[(1, 1), (2, 2), (3, 1)]),
+    "table_statement": Case("table_statement", "TABLE region"),
+    "bit_literals": Case(
+        "bit_literals", "SELECT CAST(BIT '0101' AS VARCHAR) AS b"),
+    "infinite_typed_literals": Case(
+        "infinite_typed_literals", "SELECT CAST(DATE 'infinity' AS VARCHAR) AS d"),
+    # duckdb 1.0.0 cannot pack an empty struct
+    "typeof_empty_struct": Case(
+        "typeof_empty_struct", "SELECT typeof(struct_pack()) AS t",
+        expect=[("STRUCT",)]),
+    "empty_struct_compare": Case(
+        "empty_struct_compare", "SELECT struct_pack() = row() AS e",
+        expect=[(True,)]),
+    "empty_struct_pack": Case(
+        "empty_struct_pack", "SELECT struct_pack() IS NOT NULL AS e",
+        expect=[(True,)]),
+    "empty_row_struct": Case(
+        "empty_row_struct", "SELECT row()::STRUCT IS NOT NULL AS e",
+        expect=[(True,)]),
+    "timestamptz_literals": Case(
+        "timestamptz_literals",
+        "SELECT epoch(TIMESTAMPTZ '2020-01-01 00:00:00+00') AS e"),
+    "timestamp_literals": Case(
+        "timestamp_literals", "SELECT TIMESTAMP '2020-01-01 10:00:00' AS t"),
+    "precision_timestamp_literals": Case(
+        "precision_timestamp_literals",
+        "SELECT CAST(TIMESTAMP_MS '2020-01-01 10:00:00.123456' AS VARCHAR) AS t"),
+    "precision_timestamp_casts": Case(
+        "precision_timestamp_casts",
+        "SELECT CAST('2020-01-01 10:00:00.123456'::TIMESTAMP_MS AS VARCHAR) AS t"),
+    "star_alias_series": Case(
+        "star_alias_series", "SELECT * AS x FROM range(3)"),
+    "by_star": Case(
+        "by_star", "SELECT n_regionkey FROM nation GROUP BY * ORDER BY *"),
+    "named_windows": Case(
+        "named_windows",
+        "SELECT n_nationkey, row_number() OVER w AS r FROM nation "
+        "WINDOW w AS (ORDER BY n_nationkey)"),
+    "window_alias_refs": Case(
+        "window_alias_refs", FALLBACK_CASES["window_alias"].sql),
+    "filter_alias_refs": Case(
+        "filter_alias_refs", FALLBACK_CASES["select_alias"].sql),
+    "in_fromless_select": Case(
+        "in_fromless_select",
+        "SELECT n_nationkey FROM nation WHERE n_regionkey IN (SELECT 1)"),
+    # duckdb 1.0.0 has no multi-column IN
+    "row_in_subquery": Case(
+        "row_in_subquery",
+        "SELECT n_nationkey FROM nation WHERE row(n_regionkey, n_nationkey) "
+        "IN (SELECT r_regionkey, r_regionkey FROM region)",
+        expect=[(0,), (1,), (2,), (3,), (4,)]),
+    "select_in_subquery": Case(
+        "select_in_subquery",
+        "SELECT n_nationkey, n_regionkey IN (SELECT r_regionkey FROM region "
+        "WHERE r_regionkey < 2) AS f FROM nation"),
+    "any_all": Case(
+        "any_all",
+        "SELECT n_nationkey FROM nation WHERE n_regionkey = ANY "
+        "(SELECT r_regionkey FROM region WHERE r_regionkey < 2)"),
+    "empty_group_keys": Case(
+        "empty_group_keys",
+        "SELECT n_regionkey, count(*) AS c FROM nation GROUP BY (), n_regionkey"),
+    "empty_group_by": Case(
+        "empty_group_by", "SELECT count(*) AS c FROM nation GROUP BY ()"),
+    "grouping_qualified_args": Case(
+        "grouping_qualified_args",
+        "SELECT n.n_regionkey, GROUPING(n.n_regionkey) AS g FROM nation n "
+        "GROUP BY ROLLUP (n.n_regionkey)"),
+    "duplicate_from_aliases": Case(
+        "duplicate_from_aliases", "SELECT * FROM nation a, region a",
+        error="uplicate alias"),
+    "quoted_identifiers": Case(
+        "quoted_identifiers", 'SELECT "n_name" FROM nation'),
+    "by_positional_refs": Case(
+        "by_positional_refs",
+        "SELECT n_nationkey AS a FROM nation UNION ALL SELECT r_regionkey "
+        "FROM region ORDER BY #1 LIMIT 3"),
+    "schema_refs": Case(
+        "schema_refs", "SELECT a FROM pin_sr.v",
+        setup=("CREATE SCHEMA pin_sr", "CREATE VIEW pin_sr.v AS SELECT 1 AS a")),
+    "leadlag_named_args": Case(
+        "leadlag_named_args",
+        "SELECT n_nationkey, lag(n_nationkey, \"offset\" := 2) OVER "
+        "(ORDER BY n_nationkey) AS l FROM nation"),
+    "tuple_literals": Case(
+        "tuple_literals", "SELECT CAST((1, 'a') AS VARCHAR) AS t"),
+    "lateral_fromless_derived": Case(
+        "lateral_fromless_derived",
+        "SELECT i, j FROM (VALUES (1), (2)) t(i), (SELECT [i + 1] AS j) s"),
+    "name_anonymous_derived": Case(
+        "name_anonymous_derived",
+        "SELECT unnamed_subquery.a FROM (SELECT 1 AS a)"),
+    "grouping_set_limits": Case(
+        "grouping_set_limits",
+        "SELECT count(*) FROM nation GROUP BY CUBE (" +
+        ", ".join(["n_regionkey"] * 17) + ")",
+        error="grouping set count of 65535 exceeded"),
+    "expand_dup_grouping": Case(
+        "expand_dup_grouping",
+        "SELECT n_regionkey, grouping(n_regionkey) AS g, count(*) AS c "
+        "FROM nation GROUP BY CUBE (n_regionkey, n_regionkey)"),
+    "grouping_in_order_by": Case(
+        "grouping_in_order_by",
+        "SELECT count(*) AS c FROM nation GROUP BY ROLLUP (n_regionkey) "
+        "ORDER BY grouping(n_regionkey), c"),
+    "group_by_all_having": Case(
+        "group_by_all_having",
+        "SELECT n_regionkey, count(*) AS c FROM nation GROUP BY ALL "
+        "HAVING n_nationkey > 20"),
+    "plain_grouping": Case(
+        "plain_grouping",
+        "SELECT n_regionkey, grouping(n_regionkey) AS g FROM nation "
+        "GROUP BY n_regionkey"),
+    "const_cast_ranges": Case(
+        "const_cast_ranges", "SELECT 1000::UTINYINT AS x", error="out of range"),
+    "order_by_terms": Case(
+        "order_by_terms", "SELECT n_name FROM nation ORDER BY -1",
+        error="ORDER term out of range"),
+    "strictness": Case(
+        "strictness", "SELECT n_name FROM nation LIMIT -1",
+        error="cannot be negative"),
+    "fromless_window_correlation": Case(
+        "fromless_window_correlation",
+        "SELECT (SELECT sum(n_nationkey) OVER ()) AS s FROM nation",
+        error="correlated columns in window functions not supported"),
+    "unnest_in_window_args": Case(
+        "unnest_in_window_args",
+        "SELECT sum(unnest([1, 2])) OVER () AS s",
+        error="UNNEST not supported here"),
+    "inline_fromless_subqueries": Case(
+        "inline_fromless_subqueries",
+        "SELECT n_nationkey, (SELECT 100 - n_nationkey) AS d FROM nation"),
+    "alias_expr_strictness": Case(
+        "alias_expr_strictness",
+        "SELECT 1 AS k, count(*) AS c FROM nation GROUP BY k + 1",
+        error="Binder Error"),
+    "frame_bounds": Case(
+        "frame_bounds",
+        "SELECT sum(n_nationkey) OVER (ORDER BY n_nationkey ROWS BETWEEN "
+        "UNBOUNDED FOLLOWING AND CURRENT ROW) AS s FROM nation",
+        error="UNBOUNDED FOLLOWING"),
+    "trailing_commas": Case("trailing_commas", "SELECT n_name, FROM nation"),
+    "export_state": Case(
+        "export_state",
+        "SELECT finalize(sum(n_nationkey) EXPORT_STATE) AS s FROM nation"),
+    # duckdb 1.0.0 has no GROUPS frames
+    "groups_frames": Case(
+        "groups_frames",
+        "SELECT x, sum(x) OVER (ORDER BY k GROUPS BETWEEN 1 PRECEDING AND "
+        "CURRENT ROW) AS s FROM (VALUES (1, 1), (2, 1), (3, 2)) t(x, k)",
+        expect=[(1, 3), (2, 3), (3, 6)]),
+    "empty_frames": Case(
+        "empty_frames",
+        "SELECT n_nationkey, count(n_nationkey) OVER (ORDER BY n_nationkey "
+        "ROWS BETWEEN 1 PRECEDING AND 2 PRECEDING) AS c FROM nation"),
+    "exclude_frames": Case(
+        "exclude_frames",
+        "SELECT n_nationkey, sum(n_nationkey) OVER (ORDER BY n_nationkey "
+        "ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE CURRENT ROW) AS s "
+        "FROM nation"),
+    "frame_bound_exprs": Case(
+        "frame_bound_exprs",
+        "SELECT n_nationkey, sum(n_nationkey) OVER (ORDER BY n_nationkey "
+        "ROWS BETWEEN n_regionkey PRECEDING AND CURRENT ROW) AS s FROM nation"),
+    "ignored_frames": Case(
+        "ignored_frames",
+        "SELECT n_nationkey, row_number() OVER (ORDER BY n_nationkey ROWS "
+        "BETWEEN 1 PRECEDING AND CURRENT ROW) AS r FROM nation"),
+    "ntile_null": Case(
+        "ntile_null",
+        "SELECT n_nationkey, ntile(NULL) OVER (ORDER BY n_nationkey) AS t "
+        "FROM nation"),
+    "collate": Case(
+        "collate",
+        "SELECT n_name FROM nation WHERE n_name COLLATE NOCASE = 'china'"),
+    "star_exclude": Case(
+        "star_exclude", "SELECT * EXCLUDE (r_name) FROM region"),
+    "floordiv": Case("floordiv", "SELECT n_nationkey // 4 AS q FROM nation"),
+    "regex_op": Case(
+        "regex_op", "SELECT n_name FROM nation WHERE n_name ~ '^CH'"),
+    "escape_null": Case(
+        "escape_null", "SELECT n_name LIKE 'A%' ESCAPE NULL AS m FROM nation"),
+    "null_cast_chains": Case(
+        "null_cast_chains", "SELECT NULL::VARCHAR::INTEGER[] AS l"),
+    "const_string_int_casts": Case(
+        "const_string_int_casts", "SELECT '1e2'::INTEGER AS x"),
+    "pg_casts": Case("pg_casts", "SELECT n_nationkey::VARCHAR AS s FROM nation"),
+    "cast_types": Case(
+        "cast_types", "SELECT CAST(n_nationkey AS HUGEINT) AS h FROM nation"),
+    "float_int_casts": Case(
+        "float_int_casts", "SELECT CAST(3.7::DOUBLE AS INTEGER) AS i"),
+    "brackets": Case("brackets", "SELECT [1, 2, 3][2] AS e"),
+    "struct_literals": Case("struct_literals", "SELECT {{'k': 1}}.k AS v"),
+    "division": Case("division", "SELECT n_nationkey / 4 AS d FROM nation"),
+    "values_specials": Case(
+        "values_specials",
+        "SELECT * FROM (VALUES (1.5::DOUBLE), ('inf')) t(x)"),
+    "values_colnames": Case(
+        "values_colnames", "SELECT col0 FROM (VALUES (1), (2))"),
+    "table_col_aliases": Case(
+        "table_col_aliases",
+        "WITH c(a, b) AS (SELECT 1, 2) SELECT * FROM c t(x)"),
+    "filter_where": Case(
+        "filter_where",
+        "SELECT count(*) FILTER (n_regionkey = 1) AS c FROM nation"),
+    "ignore_nulls_args": Case(
+        "ignore_nulls_args",
+        "SELECT n_nationkey, last_value(n_name IGNORE NULLS) OVER "
+        "(ORDER BY n_nationkey) AS l FROM nation"),
+    "where_null": Case("where_null", "SELECT n_name FROM nation WHERE NULL"),
+    "bool_int_compare": Case("bool_int_compare", "SELECT true = 1 AS e"),
+    "int_bool_context": Case(
+        "int_bool_context", "SELECT CASE WHEN 1 THEN 'y' ELSE 'n' END AS r"),
+    "distinct_window": Case(
+        "distinct_window",
+        "SELECT n_nationkey, count(DISTINCT n_regionkey) OVER "
+        "(ORDER BY n_nationkey) AS c FROM nation"),
+    "list_quantifier": Case(
+        "list_quantifier", "SELECT 2 = ANY([1, 2, 3]) AS e"),
+    "group_by_lists": Case(
+        "group_by_lists",
+        "SELECT n_regionkey, count(*) AS c FROM nation "
+        "GROUP BY (n_regionkey, n_name)"),
+    "window_filter": Case(
+        "window_filter",
+        "SELECT n_nationkey, count(*) FILTER (WHERE n_regionkey = 1) OVER "
+        "(ORDER BY n_nationkey) AS c FROM nation"),
+    "orderless_over": Case(
+        "orderless_over",
+        "SELECT count(*) AS n FROM (SELECT lag(n_nationkey) OVER () AS l "
+        "FROM nation)"),
+    "rowid": Case(
+        "rowid", "SELECT count(DISTINCT rowid) AS n FROM pin_ri",
+        setup=("CREATE TABLE pin_ri AS SELECT * FROM region",)),
+    "asof_join": Case(
+        "asof_join",
+        "SELECT a.t, b.v FROM (VALUES (1), (5)) a(t) ASOF JOIN "
+        "(VALUES (0, 'x'), (4, 'y')) b(t, v) ON a.t >= b.t"),
+    "lateral_values": Case(
+        "lateral_values",
+        "SELECT i, v FROM (VALUES (1), (2)) t(i), LATERAL (VALUES (i), "
+        "(i * 10)) s(v)"),
+    "dynamic_interval": Case(
+        "dynamic_interval",
+        "SELECT DATE '2020-01-01' + INTERVAL (n_regionkey) DAY AS d FROM nation"),
+    "array_subquery": Case(
+        "array_subquery",
+        "SELECT ARRAY(SELECT r_regionkey FROM region ORDER BY 1) AS a"),
+    "table_functions": Case(
+        "table_functions", "SELECT range FROM range(3)"),
+    "select_unnest": Case(
+        "select_unnest", "SELECT unnest([1, 2]) + 1 AS u"),
+    "within_group": Case(
+        "within_group",
+        "SELECT mode() WITHIN GROUP (ORDER BY x) AS m "
+        "FROM (VALUES (1), (2), (2)) t(x)"),
+    "order_by_all": Case(
+        "order_by_all", "SELECT n_regionkey, n_name FROM nation ORDER BY ALL"),
+    "null_order": Case(
+        "null_order", "SELECT x FROM (VALUES (1), (NULL)) t(x) ORDER BY x LIMIT 1"),
+    "calls": Case("calls", "SELECT count() AS n FROM nation"),
+    "values_structs": Case(
+        "values_structs", "SELECT s[1] AS a FROM (VALUES ((1, 2)), ((3, 4))) t(s)"),
+    "values_coerce": Case(
+        "values_coerce",
+        "SELECT * FROM (VALUES (CAST(1 AS BIGINT)), (2)) t(x)"),
+    "concat_null": Case("concat_null", "SELECT [1, 2] || NULL AS l"),
+    "array_struct_elems": Case(
+        "array_struct_elems", "SELECT [{{'t': 'x', 'n': 1}}, ('y', 2)] AS l"),
+    "named_struct_casts": Case(
+        "named_struct_casts",
+        "SELECT CAST({{'b': 1, 'a': 'x'}} AS STRUCT(a VARCHAR, b INTEGER)) AS s"),
+    "volatile_agg_args": Case(
+        "volatile_agg_args", "SELECT count(DISTINCT uuid()) AS n FROM nation"),
+    "distinct_order_by": Case(
+        "distinct_order_by",
+        "SELECT DISTINCT n_regionkey FROM nation ORDER BY n_nationkey LIMIT 2"),
+    "distinct_on": Case(
+        "distinct_on",
+        "SELECT DISTINCT ON (n_regionkey) n_regionkey, n_name FROM nation "
+        "ORDER BY n_regionkey, n_name"),
+    "qualify": Case(
+        "qualify",
+        "SELECT n_name FROM nation QUALIFY row_number() OVER "
+        "(ORDER BY n_nationkey) <= 2"),
+    # duckdb 1.0.0 has no such setting
+    "scalar_subquery_first_row": Case(
+        "scalar_subquery_first_row",
+        "SELECT (SELECT x FROM (VALUES (1), (2)) t(x) ORDER BY 1) AS r",
+        setup=("SET scalar_subquery_error_on_multiple_rows = false",),
+        expect=[(1,)], own_session=True),
+    "scalar_subquery_offset": Case(
+        "scalar_subquery_offset",
+        "SELECT r_regionkey, (SELECT n_nationkey FROM nation WHERE "
+        "n_regionkey = r_regionkey ORDER BY n_nationkey OFFSET 1 LIMIT 1) "
+        "AS k FROM region"),
+    "sample_before_alias": Case(
+        "sample_before_alias",
+        "SELECT count(*) AS n FROM nation AS t TABLESAMPLE (100 PERCENT)"),
+    # duckdb 1.0.0 has no struct_concat
+    "struct_concat": Case(
+        "struct_concat",
+        "SELECT struct_concat(struct_pack(a := 1), struct_pack(b := 2)) AS s",
+        expect=[({"a": 1, "b": 2},)]),
+    "nested_comparisons": Case(
+        "nested_comparisons", "SELECT [1, NULL] = [1, NULL] AS e"),
+    "time_outputs": Case(
+        "time_outputs", "SELECT TIME '01:00:00' + INTERVAL 1 HOUR AS t"),
+    "orderless_range_frames": Case(
+        "orderless_range_frames",
+        "SELECT sum(n_nationkey) OVER (RANGE BETWEEN UNBOUNDED PRECEDING AND "
+        "UNBOUNDED FOLLOWING) AS s FROM nation"),
+    "enum_markers": Case(
+        "enum_markers", "SELECT m FROM pin_en2 WHERE m = 'ok'",
+        setup=("CREATE TYPE pin_mood2 AS ENUM ('sad', 'ok', 'happy')",
+               "CREATE TABLE pin_en2 (m pin_mood2)",
+               "INSERT INTO pin_en2 VALUES ('ok'), ('happy')")),
+    "where_paren": Case(
+        "where_paren",
+        "SELECT n_name FROM nation WHERE EXISTS (SELECT 1)"),
+}
+
 
 @pytest.fixture(scope="module")
 def con(spark):
@@ -359,7 +756,8 @@ def _run(con, duck, dirs, case: Case):
     """Run the case on both engines; returns our trace and result."""
     for s in case.setup:
         con.sql(s.format(**dirs["ours"]))
-        duck.execute(s.format(**dirs["duck"]))
+        if case.expect is None:
+            duck.execute(s.format(**dirs["duck"]))
     if case.error:
         with pytest.raises(Exception) as ours:
             con.sql(case.sql.format(**dirs["ours"]))
@@ -389,14 +787,23 @@ def _run(con, duck, dirs, case: Case):
     return trace, rel
 
 
-@pytest.mark.parametrize("case", [pytest.param(c, id=k) for k, c in
-                                  {**STEP_CASES, **FALLBACK_CASES}.items()])
+def _statement_entries(trace):
+    """The step and fallback entries of a trace, without translate's."""
+    from duckdb_spark.statements import FALLBACKS, STEPS
+
+    names = {f.__name__ for f in (*STEPS, *FALLBACKS)}
+    return [e for e in trace if e[0] in names]
+
+
+@pytest.mark.parametrize("case", [
+    pytest.param(c, id=k) for k, c in
+    {**STEP_CASES, **FALLBACK_CASES, **PASS_CASES}.items()])
 def test_pin(con, duck, dirs, case):
     if case.own_session:
         con, duck = Connection(con.spark.newSession()), duckdb.connect()
     trace, _ = _run(con, duck, dirs, case)
     if case.fired is None:
-        assert trace == []
+        assert _statement_entries(trace) == []
         return
     outcomes = [o for name, o in trace if name == case.fired]
     assert outcomes and not any(o.startswith("failed") for o in outcomes), trace
@@ -414,9 +821,20 @@ def test_every_step_and_fallback_is_pinned():
     assert {f.__name__ for f in (*STEPS, *FALLBACKS)} - unpinned == pinned
 
 
+def test_every_translate_pass_is_pinned():
+    from duckdb_spark.sql.dialect import PASSES
+    from duckdb_spark.statements import FALLBACKS, STEPS
+
+    names = [p.name for p in PASSES]
+    assert len(set(names)) == len(names)
+    assert not set(names) & {f.__name__ for f in (*STEPS, *FALLBACKS)}
+    assert set(names) == {c.fired for c in PASS_CASES.values()}
+
+
 def test_unreferenced_materialized_cte_never_runs(con):
     con.sql(STEP_CASES["strip_unused_ctes-materialized"].sql)
-    assert con.last_trace == [("strip_unused_ctes", "rewrote")]
+    assert _statement_entries(con.last_trace) == [
+        ("strip_unused_ctes", "rewrote")]
 
 
 def test_materialized_cte_is_scanned_once(con):
@@ -432,7 +850,7 @@ def test_materialized_cte_is_scanned_once(con):
 
 def test_plain_statement_has_empty_trace(con):
     con.sql("SELECT n_name FROM nation WHERE n_nationkey < 3")
-    assert con.last_trace == []
+    assert _statement_entries(con.last_trace) == []
 
 
 def test_failed_fallbacks_raise_the_original_error(con):
@@ -454,6 +872,6 @@ def test_incomparable_types_raise_binder_error(con):
 def test_nested_statement_appends_to_outer_trace(con, caplog):
     with caplog.at_level(logging.DEBUG, logger="duckdb_spark"):
         con.sql("SELECT column_name FROM (DESCRIBE SELECT 1 AS a)")
-    assert con.last_trace == [("describe", "answered"),
-                              ("describe_in_from", "rewrote")]
+    assert _statement_entries(con.last_trace) == [
+        ("describe", "answered"), ("describe_in_from", "rewrote")]
     assert str(con.last_trace) in caplog.text
