@@ -59,18 +59,21 @@ def _tokens(sql: str) -> list[str]:
 # What is statement text and what is literal contents is decided here, once
 # (the reference tokenizes first, parser.cpp:269). Each string literal's
 # contents become a code of private-use characters that no keyword, digit
-# or punctuation pattern matches; double-quoted identifiers and comments
-# are lexed whole so a quote inside them opens no literal.
-_LITERAL_RE = re.compile(
-    r"""'((?:[^']++|'')*+)'
-      | \$([A-Za-z_]\w*|)\$(.*?)\$\2\$
-      | "(?:[^"]++|"")*+" | --[^\n]* | /\*.*?\*/""",
-    re.VERBOSE | re.DOTALL,
-)
+# or punctuation pattern matches; equal contents share one code, so passes
+# that compare expressions textually still see two equal literals as
+# equal. Double-quoted identifiers and comments are lexed whole so a quote
+# inside them opens no literal; a code character written anywhere outside
+# a literal is itself coded, so `restore` gives it back unchanged.
 _CODE_CHARS = "".join(chr(0xE000 + d) for d in range(10))
 _TO_CODE = str.maketrans("0123456789", _CODE_CHARS)
 _FROM_CODE = str.maketrans(_CODE_CHARS, "0123456789")
 _CODE_RE = re.compile(f"[{_CODE_CHARS}]+")
+_LITERAL_RE = re.compile(
+    r"""'((?:[^']++|'')*+)'
+      | \$([A-Za-z_]\w*|)\$(.*?)\$\2\$
+      | "(?:[^"]++|"")*+" | --[^\n]* | /\*.*?\*/ | """ + _CODE_RE.pattern,
+    re.VERBOSE | re.DOTALL,
+)
 
 
 def _mask_literals(sql: str) -> tuple[str, Callable[[str], str]]:
@@ -79,18 +82,20 @@ def _mask_literals(sql: str) -> tuple[str, Callable[[str], str]]:
     code. The quotes stay, so shapes such as `'…'::T`, `TIMESTAMP '…'`
     and `{'k': v}` still match. A dollar-quoted string ($$…$$,
     $tag$…$tag$) comes back in standard quoting."""
-    contents: list[str] = []
+    index: dict[str, int] = {}
 
-    def code(m: re.Match) -> str:
+    def code(contents: str) -> str:
+        return str(index.setdefault(contents, len(index))).translate(_TO_CODE)
+
+    def mask(m: re.Match) -> str:
         if m.group(1) is not None:
-            contents.append(m.group(1))
-        elif m.group(3) is not None:
-            contents.append(m.group(3).replace("'", "''"))
-        else:
-            return m.group(0)
-        return "'" + str(len(contents) - 1).translate(_TO_CODE) + "'"
+            return "'" + code(m.group(1)) + "'"
+        if m.group(3) is not None:
+            return "'" + code(m.group(3).replace("'", "''")) + "'"
+        return _CODE_RE.sub(lambda c: code(c.group(0)), m.group(0))
 
-    masked = _LITERAL_RE.sub(code, sql)
+    masked = _LITERAL_RE.sub(mask, sql)
+    contents = list(index)
 
     def restore(text: str) -> str:
         return _CODE_RE.sub(
@@ -103,18 +108,6 @@ def _is_word(tok: str, word: str) -> bool:
     return tok.upper() == word
 
 
-def _find_top_level(toks: list[str], word: str, start: int = 0) -> int:
-    """Index of a top-level (depth-0) keyword token, or -1."""
-    depth = 0
-    for i in range(start, len(toks)):
-        t = toks[i]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and _is_word(t, word):
-            return i
-    return -1
 
 
 
@@ -1641,16 +1634,6 @@ def _rewrite_bool_int_compare(toks: list[str]) -> list[str]:
         elif rb and lint:
             out[li] = "false" if out[li] == "0" else "true"
     return out
-
-
-def _prev_code(toks: list[str], i: int) -> int:
-    while i >= 0 and (toks[i].isspace() or toks[i].startswith("--")):
-        i -= 1
-    return i
-
-
-
-
 
 
 _NEED_ORDER_WINFNS = {
@@ -3441,9 +3424,7 @@ def rename_table_ident(sql: str, old: str, new: str) -> str:
     for idx, t in enumerate(toks):
         if not re.fullmatch(r"[A-Za-z_]\w*", t) or t.lower() != old.lower():
             continue
-        p = idx - 1
-        while p >= 0 and toks[p].isspace():
-            p -= 1
+        p = _prev_code(toks, idx - 1)
         if p >= 0 and toks[p] == ".":
             continue
         n = _next_code(toks, idx + 1)
@@ -3913,9 +3894,7 @@ def _check_grouping_set_limits(toks: list[str]) -> None:
         if j >= len(toks) or toks[j] != "(":
             i += 1
             continue
-        p = i - 1
-        while p >= 0 and toks[p].isspace():
-            p -= 1
+        p = _prev_code(toks, i - 1)
         if not (p >= 0 and (toks[p] == "," or _is_word(toks[p], "BY"))):
             i += 1
             continue
@@ -5057,9 +5036,7 @@ def _split_clauses(sql: str) -> dict[str, str]:
             if up in ("SELECT", "FROM", "WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW", "ORDER", "LIMIT", "OFFSET"):
                 if up in ("GROUP", "ORDER"):
                     # require following BY
-                    j = i + 1
-                    while j < len(toks) and toks[j].isspace():
-                        j += 1
+                    j = _next_code(toks, i + 1)
                     if j < len(toks) and toks[j].upper() == "BY":
                         marks.append((i, up))
                 else:
@@ -5099,7 +5076,7 @@ def _rewrite_qualify(sql: str) -> str:
     if changed0:
         sql = "".join(toks)
         toks = _tokens(sql)
-    qi = _find_top_level(toks, "QUALIFY")
+    qi = _top_level_index(toks, 0, len(toks), "QUALIFY")
     if qi < 0:
         return sql
     # keep a WITH prefix out of the clause split (the rewrite would
@@ -5107,7 +5084,7 @@ def _rewrite_qualify(sql: str) -> str:
     with_txt, body = split_with_prefix(sql)
     if with_txt:
         return with_txt + " " + _rewrite_qualify(body)
-    wi = _find_top_level(toks, "WINDOW")
+    wi = _top_level_index(toks, 0, len(toks), "WINDOW")
     if wi > qi:
         # reference parser: the WINDOW clause precedes QUALIFY
         # (test_qualify.test:195)
@@ -5342,7 +5319,7 @@ def _rewrite_distinct_on(sql: str) -> str:
         return sql
     toks = _tokens(sql)
     # find the ON ( ... ) span
-    oi = _find_top_level(toks, "ON")
+    oi = _top_level_index(toks, 0, len(toks), "ON")
     depth = 0
     start = None
     for i in range(oi, len(toks)):
@@ -7504,14 +7481,31 @@ def _drop_by_positional_marks(toks: list[str]) -> list[str]:
     return toks
 
 
+def _code_words(toks: list[str]) -> list[str]:
+    """The upper-cased tokens that are neither whitespace nor comments; a
+    string literal is one token, so its contents never read as a word."""
+    return [t.upper() for t in toks
+            if not t.isspace() and not t.startswith(("--", "/*"))]
+
+
+def _is_grouping_call(toks: list[str], i: int) -> bool:
+    if toks[i].lower() not in ("grouping", "grouping_id"):
+        return False
+    j = _next_code(toks, i + 1)
+    return j < len(toks) and toks[j] == "("
+
+
 def _hoist_grouping_order(toks: list[str]) -> list[str]:
     """grouping() in ORDER BY over non-output grouping columns: Spark's
     Sort can't bind it (combined_with_grouping.test:254)."""
     ob = _top_level_index(toks, 0, len(toks), "ORDER")
-    if ob >= 0 and re.search(r"(?i)\bgrouping(_id)?\s*\(",
-                             _mask_literals("".join(toks[ob:]))[0]):
+    if ob >= 0 and any(_is_grouping_call(toks, i)
+                       for i in range(ob, len(toks))):
         return _hoist_grouping_having(toks)
     return toks
+
+
+_GROUP_BY_END = {"HAVING", "ORDER", "LIMIT", "WINDOW", "QUALIFY", ")", ";"}
 
 
 def _fold_plain_grouping(toks: list[str]) -> list[str]:
@@ -7519,69 +7513,70 @@ def _fold_plain_grouping(toks: list[str]) -> list[str]:
     reference; Spark requires grouping sets. One-GROUP-BY statements can
     validate the argument is a grouping column (reference binder
     strictness)."""
-    code, restore = _mask_literals("".join(toks))
-    up = code.upper()
-    if ("GROUPING" not in up or "ROLLUP" in up or "CUBE" in up
-            or re.search(r"GROUPING\s+SETS", up)):
+    words = _code_words(toks)
+    if ("ROLLUP" in words or "CUBE" in words
+            or ("GROUPING", "SETS") in zip(words, words[1:])):
         return toks
     toks = list(toks)
-    gb = re.findall(
-        r"(?is)\bGROUP\s+BY\s+(.*?)(?:\bHAVING\b|\bORDER\b|\bLIMIT\b"
-        r"|\bWINDOW\b|\bQUALIFY\b|\)|;|$)", code,
-    )
+    by = [i for i, t in enumerate(toks) if _is_word(t, "BY")
+          and _is_word(toks[max(_prev_code(toks, i - 1), 0)], "GROUP")]
     gcols = None
-    if len(gb) == 1:
+    if len(by) == 1:
+        end = next((k for k in range(by[0] + 1, len(toks))
+                    if toks[k].upper() in _GROUP_BY_END), len(toks))
         gcols = {
             re.sub(r"^\w+\.", "", c.strip().lower())
-            for c in restore(gb[0]).split(",") if c.strip()
+            for c in "".join(toks[by[0] + 1:end]).split(",") if c.strip()
         }
     i = 0
     while i < len(toks):
-        if (re.match(r"^[A-Za-z_]", toks[i])
-                and toks[i].lower() in ("grouping", "grouping_id")):
+        if _is_grouping_call(toks, i):
             j = _next_code(toks, i + 1)
-            if j < len(toks) and toks[j] == "(":
-                if not re.search(r"\bGROUP\s+BY\b", up):
+            if not by:
+                raise ValueError(
+                    "Binder Error: GROUPING statement cannot be "
+                    "used without groups"
+                )
+            c = _match_paren(toks, j)
+            if c > 0:
+                w = _top_level_index(toks, 0, i, "WHERE")
+                if w >= 0 and _top_level_index(
+                    toks, w, i, "GROUP"
+                ) < 0 and _top_level_index(toks, w, i, "SELECT") < 0:
                     raise ValueError(
-                        "Binder Error: GROUPING statement cannot be "
-                        "used without groups"
+                        "Binder Error: GROUPING statement is not "
+                        "supported in the WHERE clause"
                     )
-                c = _match_paren(toks, j)
-                if c > 0:
-                    w = _top_level_index(toks, 0, i, "WHERE")
-                    if w >= 0 and _top_level_index(
-                        toks, w, i, "GROUP"
-                    ) < 0 and _top_level_index(toks, w, i, "SELECT") < 0:
-                        raise ValueError(
-                            "Binder Error: GROUPING statement is not "
-                            "supported in the WHERE clause"
-                        )
-                    arg = re.sub(
-                        r"^\w+\.", "",
-                        "".join(toks[j + 1:c]).strip().lower(),
+                arg = re.sub(
+                    r"^\w+\.", "",
+                    "".join(toks[j + 1:c]).strip().lower(),
+                )
+                if gcols is not None and arg and arg not in gcols:
+                    raise ValueError(
+                        "Binder Error: GROUPING clause argument "
+                        "must be a grouping column"
                     )
-                    if gcols is not None and arg and arg not in gcols:
-                        raise ValueError(
-                            "Binder Error: GROUPING clause argument "
-                            "must be a grouping column"
-                        )
-                    toks[i:c + 1] = ["0"]
+                toks[i:c + 1] = ["0"]
         i += 1
     return toks
+
+
+_FRAME_UNITS = {"ROWS", "RANGE", "GROUPS"}
 
 
 def _check_frame_bounds(toks: list[str]) -> None:
     """Invalid frame bounds (reference window binder): a frame cannot
     START at UNBOUNDED FOLLOWING or END at UNBOUNDED PRECEDING."""
-    code = _mask_literals("".join(toks))[0]
-    if re.search(
-        r"(?is)\b(ROWS|RANGE|GROUPS)\s+(BETWEEN\s+)?UNBOUNDED\s+FOLLOWING",
-        code,
-    ) or re.search(r"(?is)\bAND\s+UNBOUNDED\s+PRECEDING\b", code):
-        raise ValueError(
-            "Binder Error: Invalid window frame: frame cannot start with "
-            "UNBOUNDED FOLLOWING or end with UNBOUNDED PRECEDING"
-        )
+    w = _code_words(toks)
+    for i in range(1, len(w) - 1):
+        if w[i] == "UNBOUNDED" and (
+                w[i + 1] == "FOLLOWING" and (w[i - 1] in _FRAME_UNITS or (
+                    w[i - 1] == "BETWEEN" and w[i - 2] in _FRAME_UNITS))
+                or w[i + 1] == "PRECEDING" and w[i - 1] == "AND"):
+            raise ValueError(
+                "Binder Error: Invalid window frame: frame cannot start with "
+                "UNBOUNDED FOLLOWING or end with UNBOUNDED PRECEDING"
+            )
 
 
 def _drop_trailing_commas(toks: list[str]) -> list[str]:
@@ -7589,9 +7584,7 @@ def _drop_trailing_commas(toks: list[str]) -> list[str]:
     toks = list(toks)
     for i, t in enumerate(toks):
         if t == ")" or _is_word(t, "FROM"):
-            p = i - 1
-            while p >= 0 and toks[p].isspace():
-                p -= 1
+            p = _prev_code(toks, i - 1)
             if p >= 0 and toks[p] == ",":
                 toks[p] = " "
     return toks
@@ -7614,6 +7607,24 @@ def _strip_export_state(toks: list[str]) -> list[str]:
                     toks[k] = ""
                 toks[i] = ""
     return toks
+
+
+def _guard_where_paren(toks: list[str]) -> list[str]:
+    """`FROM t WHERE (pred)`: Spark's parser reads `t WHERE (pred)` as
+    table alias WHERE with a column list (WHERE is not reserved there) and
+    silently renames columns, also when a comment sits between the source
+    and WHERE. A leading non-paren token forces the WHERE-clause reading;
+    `true AND (pred)` is identity in a boolean context
+    (test_uncorrelated_exists_subquery.test:15 — EXISTS folds to `(true)`,
+    producing exactly this shape)."""
+    out = list(toks)
+    for i in reversed(range(len(toks))):
+        if _is_word(toks[i], "WHERE"):
+            n, p = _next_code(toks, i + 1), _prev_code(toks, i - 1)
+            if n < len(toks) and toks[n] == "(" and p >= 0 and (
+                    toks[p] == ")" or re.match(r"^[A-Za-z_`\"]", toks[p])):
+                out[i + 1:i + 1] = [" ", "true", " ", "AND", " "]
+    return out
 
 
 class Pass(NamedTuple):
@@ -8826,13 +8837,14 @@ def check_duplicate_from_aliases(toks: list[str]) -> None:
         i += 1
 
 
-def rewrite_struct_concat(sql: str) -> str:
+def rewrite_struct_concat(sql: str, restore) -> str:
     """struct_concat(a, b, …) → named_struct with the merged field lists
     (reference struct_concat.cpp). Constructor arguments contribute their
-    literal pairs; typed NULLs contribute NULL fields; bare column
-    references resolve their field names from the FROM tables' schemas on
-    the active session. Zero args / non-struct args / duplicate names
-    raise the reference's Invalid Input Error."""
+    literal pairs, whose key names are read through `restore`; typed NULLs
+    contribute NULL fields; bare column references resolve their field
+    names from the FROM tables' schemas on the active session. Zero args /
+    non-struct args / duplicate names raise the reference's Invalid Input
+    Error."""
     if not re.search(r"(?i)\bstruct_concat\s*\(", sql):
         return sql
     toks = _tokens(sql)
@@ -8880,7 +8892,7 @@ def rewrite_struct_concat(sql: str) -> str:
             raise ValueError(
                 "Invalid Input Error: struct_concat: At least one "
                 "argument is required")
-        pairs: list[tuple[str, str]] = []
+        pairs: list[tuple[str, str, str]] = []  # (name, value, key literal)
         arg_named: list[bool] = []
         ok = True
         for pos, a in enumerate(args, 1):
@@ -8891,13 +8903,12 @@ def rewrite_struct_concat(sql: str) -> str:
             m = re.match(r"(?is)^named_struct\s*\((.*)\)\s*$", a)
             if m:
                 parts = _split_top_args(_tokens(m.group(1)))
-                keys = [parts[k].strip().strip("'")
-                        for k in range(0, len(parts) - 1, 2)]
+                lits = [parts[k].strip() for k in range(0, len(parts) - 1, 2)]
+                keys = [restore(lit).strip("'") for lit in lits]
                 arg_named.append(not all(
                     re.fullmatch(r"col\d+", k) for k in keys))
-                for k in range(0, len(parts) - 1, 2):
-                    key = parts[k].strip().strip("'")
-                    pairs.append((key, parts[k + 1].strip()))
+                pairs += [(key, parts[k].strip(), lit) for key, lit, k
+                          in zip(keys, lits, range(1, len(parts), 2))]
                 continue
             m = re.match(
                 r"(?is)^(?:TRY_)?CAST\s*\(\s*NULL\s+AS\s+STRUCT\s*<(.*)>"
@@ -8906,14 +8917,14 @@ def rewrite_struct_concat(sql: str) -> str:
             if m:
                 for fdef in _split_top_args(_tokens(m.group(1))):
                     fname = fdef.strip().split(":")[0].strip().strip('`"')
-                    pairs.append((fname, "NULL"))
+                    pairs.append((fname, "NULL", f"'{fname}'"))
                 continue
             if re.fullmatch(r"[A-Za-z_]\w*(\s*\.\s*[A-Za-z_]\w*)?",
                             a.strip()):
                 names = _fields_of(re.sub(r"\s", "", a))
                 if names:
                     for nm2 in names:
-                        pairs.append((nm2, f"{a}.`{nm2}`"))
+                        pairs.append((nm2, f"{a}.`{nm2}`", f"'{nm2}'"))
                     continue
                 ok = False
                 break
@@ -8929,16 +8940,17 @@ def rewrite_struct_concat(sql: str) -> str:
                 "and unnamed STRUCTs")
         if arg_named and not any(arg_named):
             # all unnamed (ROW tuples): renumber col1..colN sequentially
-            pairs = [(f"col{k + 1}", v) for k, (_, v) in enumerate(pairs)]
+            pairs = [(f"col{k + 1}", v, f"'col{k + 1}'")
+                     for k, (_, v, _) in enumerate(pairs)]
         seen: set[str] = set()
-        for key, _v in pairs:
+        for key, _v, _lit in pairs:
             if key.lower() in seen:
                 raise ValueError(
                     f"Invalid Input Error: struct_concat: Arguments "
                     f'contain duplicate STRUCT entry "{key}"')
             seen.add(key.lower())
         repl = "named_struct(" + ", ".join(
-            f"'{k}', {v}" for k, v in pairs) + ")"
+            f"{lit}, {v}" for _k, v, lit in pairs) + ")"
         toks[i:close + 1] = _tokens(repl)
         changed = True
         i += 1
@@ -9511,7 +9523,7 @@ def _rewrite_unnest_group_by(sql: str) -> str:
         return sql
     toks = _tokens(sql)
     for kw in ("UNION", "EXCEPT", "INTERSECT", "WITH"):
-        if _find_top_level(toks, kw) >= 0:
+        if _top_level_index(toks, 0, len(toks), kw) >= 0:
             return sql
     clauses = _split_clauses(sql)
     if "SELECT" not in clauses or "GROUP" not in clauses:
@@ -9998,20 +10010,13 @@ PASSES: tuple[Pass, ...] = (
     _sub("sample_before_alias",
          r"(?is)\bAS\s+(\w+)\s+TABLESAMPLE\s*\(([^()]*)\)",
          r"TABLESAMPLE (\2) AS \1"),
-    Pass("struct_concat", TEXT, rewrite_struct_concat),
+    Pass("struct_concat", LITERALS, rewrite_struct_concat),
     Pass("nested_comparisons", TEXT, rewrite_nested_comparisons),
-    Pass("time_outputs", TEXT, rewrite_time_outputs),
+    Pass("time_outputs", LITERALS, rewrite_time_outputs),
     Pass("orderless_range_frames", TOKENS, _strip_orderless_range_frames,
          _has(r"(?is)^(?=.*\bOVER\b)(?=.*\bRANGE\b)")),
     # enum member-order markers served their purpose (histogram key
     # sorting); the emulation value is the plain string
     _sub("enum_markers", r"__dkenum\d+", ""),
-    # `FROM t WHERE (pred)`: Spark's parser reads `t WHERE (pred)` as table
-    # alias WHERE with a column list (WHERE is not reserved there) and
-    # silently renames columns. A leading non-paren token forces the
-    # WHERE-clause reading; `true AND (pred)` is identity in a boolean
-    # context (test_uncorrelated_exists_subquery.test:15 — EXISTS folds to
-    # `(true)`, producing exactly this shape).
-    _sub("where_paren", r"(?i)(?<=[\w$)`\"])(\s*)(WHERE)(?=\s*\()",
-         r"\1\2 true AND "),
+    Pass("where_paren", TOKENS, _guard_where_paren, _has(r"(?i)\bWHERE\b")),
 )

@@ -235,7 +235,7 @@ def mark_time_table_columns(sql: str) -> str:
         changed = True
         i += len(ins)
     return "".join(toks) if changed else sql
-def rewrite_time_outputs(sql: str) -> str:
+def rewrite_time_outputs(sql: str, restore) -> str:
     """TIME render parity. The TIME emulation carries µs-since-midnight
     BIGINTs; fold sites mark them `__dktm(...)`. This pass (a) folds
     marker ± INTERVAL arithmetic into day-wrapped micros at translate
@@ -243,7 +243,8 @@ def rewrite_time_outputs(sql: str) -> str:
     marker itself, or a value-preserving aggregate over one) in a text
     formatter so they render 'HH:MM:SS[.ffffff]' like the reference
     (test_scalar_aggr.test:42, test_mode.test:146), and (c) strips the
-    remaining markers so every other use stays a plain BIGINT."""
+    remaining markers so every other use stays a plain BIGINT. The unit
+    of `date_part('<unit>', …)` is read through `restore`."""
     if "__dktm" not in sql and "__dktz" not in sql:
         return sql
     toks = _tokens(sql)
@@ -325,10 +326,9 @@ def rewrite_time_outputs(sql: str) -> str:
         argtoks = None
         if low in ("date_part", "datepart") :
             args = _split_top_args(inner)
-            if len(args) == 2 and re.fullmatch(
-                r"'(\w+)s?'", args[0].strip().lower()
-            ):
-                u = args[0].strip().strip("'").lower().rstrip("s")
+            lit = restore(args[0].strip()).lower() if len(args) == 2 else ""
+            if re.fullmatch(r"'(\w+)s?'", lit):
+                u = lit.strip("'").rstrip("s")
                 if u in _UNIT_EXPR and "__dktm" in args[1]:
                     unit, argtoks = u, args[1]
         elif low.rstrip("s") in _UNIT_EXPR:

@@ -75,9 +75,8 @@ def _from_span(query: str) -> tuple[int, int] | None:
     return start, end
 
 
-def _from_schema(con, query: str, span: tuple[int, int]):
-    """Schema of the FROM source at `span`, by a `LIMIT 0` probe."""
-    src = query[span[0]:span[1]]
+def _from_schema(con, src: str):
+    """Schema of the FROM source text `src`, by a `LIMIT 0` probe."""
     return con.sql(f"SELECT * FROM {src} LIMIT 0").df().schema
 
 
@@ -860,7 +859,8 @@ def columns_star(con, query):
         span = _from_span(query)
         if span is None or not _outside(query, span, r"(?i)\bCOLUMNS\s*\("):
             raise LookupError("no FROM source to probe")
-        return [f.name for f in _from_schema(con, query, span).fields]
+        return [f.name for f in
+                _from_schema(con, query[span[0]:span[1]]).fields]
 
     try:
         return expand_columns(query, _src_cols)
@@ -961,8 +961,7 @@ def _reorder_using_star(con, query: str) -> str | None:
         txt = "".join(item_toks).strip()
         if not txt:
             raise LookupError("empty join item")
-        df = con.sql(f"SELECT * FROM {txt} LIMIT 0").df()
-        return [f.name for f in df.schema.fields]
+        return [f.name for f in _from_schema(con, txt).fields]
 
     cols = probe(items[0])
     for jn, item in zip(joins, items[1:]):
@@ -1024,7 +1023,7 @@ def struct_unnest(con, query):
     if not span or not _outside(query, span, unnest):
         return query
     try:
-        schema = _from_schema(con, query, span)
+        schema = _from_schema(con, query[span[0]:span[1]])
     except Exception:  # noqa: BLE001 — fall through untouched
         return query
     structs = {f.name.lower() for f in schema.fields
@@ -1089,7 +1088,7 @@ def positional_ref(con, query):
     start, end = span
     src = restore(masked[start:end])
     try:
-        schema = con.sql(f"SELECT * FROM {src} LIMIT 0").df().schema
+        schema = _from_schema(con, src)
     except AnalysisException:
         # the source does not stand alone (a CTE name, a lateral
         # reference): the `#N` is left for Spark to reject

@@ -704,10 +704,17 @@ PASS_CASES = {
         "struct_concat",
         "SELECT struct_concat(struct_pack(a := 1), struct_pack(b := 2)) AS s",
         expect=[({"a": 1, "b": 2},)]),
+    # unnamed ROW tuples are renumbered: the pass reads the key names
+    "struct_concat-row_tuples": Case(
+        "struct_concat", "SELECT struct_concat(row(1, 2), row(3)) AS s",
+        expect=[({"col1": 1, "col2": 2, "col3": 3},)]),
     "nested_comparisons": Case(
         "nested_comparisons", "SELECT [1, NULL] = [1, NULL] AS e"),
     "time_outputs": Case(
         "time_outputs", "SELECT TIME '01:00:00' + INTERVAL 1 HOUR AS t"),
+    # the unit is a literal the pass reads through `restore`
+    "time_outputs-date_part": Case(
+        "time_outputs", "SELECT date_part('hour', TIME '12:34:56') AS h"),
     "orderless_range_frames": Case(
         "orderless_range_frames",
         "SELECT sum(n_nationkey) OVER (RANGE BETWEEN UNBOUNDED PRECEDING AND "
@@ -720,6 +727,10 @@ PASS_CASES = {
     "where_paren": Case(
         "where_paren",
         "SELECT n_name FROM nation WHERE EXISTS (SELECT 1)"),
+    # Spark's lexer drops the comment between the source and WHERE
+    "where_paren-comment": Case(
+        "where_paren",
+        "SELECT n_name FROM nation -- note.\nWHERE (n_nationkey > 20)"),
 }
 
 
@@ -829,6 +840,14 @@ def test_every_translate_pass_is_pinned():
     assert len(set(names)) == len(names)
     assert not set(names) & {f.__name__ for f in (*STEPS, *FALLBACKS)}
     assert set(names) == {c.fired for c in PASS_CASES.values()}
+
+
+def test_where_paren_reads_whole_words():
+    from duckdb_spark.sql.dialect import translate
+
+    # `anywhere (1)` ends in "where" but holds no WHERE keyword
+    assert translate("SELECT anywhere (1) FROM t") == \
+        "SELECT anywhere (1) FROM t"
 
 
 def test_unreferenced_materialized_cte_never_runs(con):

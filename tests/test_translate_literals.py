@@ -17,6 +17,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from duckdb_spark import state
 from duckdb_spark.relation import Connection
 from duckdb_spark.sql.dialect import translate
 from tests.conftest import SF_DIR, assert_matches_oracle
@@ -53,6 +54,39 @@ def _select(s: str) -> str:
 @given(_CONTENTS)
 def test_translate_keeps_literal_contents(s):
     assert translate(_select(s)) == _select(s)
+
+
+def _fired(sql: str) -> list[str]:
+    trace: list = []
+    with state.tracing(trace):
+        translate(sql)
+    return [name for name, _ in trace]
+
+
+def test_equal_literals_stay_equal():
+    # the ORDER BY key is one of the DISTINCT items, so the statement is
+    # not rewritten into the DISTINCT ON form
+    sql = ("SELECT DISTINCT concat(a, '-') FROM t "
+           "ORDER BY concat(a, '-')")
+    assert "distinct_order_by" not in _fired(sql)
+
+
+def test_struct_concat_reads_key_names():
+    with pytest.raises(ValueError, match='duplicate STRUCT entry "a"'):
+        translate("SELECT struct_concat(struct_pack(a := 1), "
+                  "struct_pack(a := 2)) AS s")
+    with pytest.raises(ValueError, match="Cannot mix named and unnamed"):
+        translate("SELECT struct_concat(struct_pack(a := 1), row(2)) AS s")
+    assert "'col3', 3" in translate(
+        "SELECT struct_concat(row(1, 2), row(3)) AS s")
+
+
+def test_code_characters_outside_literals_survive():
+    # the private-use characters the mask writes its codes in, found in
+    # an identifier and a comment, come back unchanged
+    p = chr(0xE000) + chr(0xE001)
+    sql = f'SELECT \'a\' AS "x{p}" FROM t -- {p}\n'
+    assert translate(sql) == f"SELECT 'a' AS `x{p}` FROM t -- {p}\n"
 
 
 # contents that match some pass's pattern
