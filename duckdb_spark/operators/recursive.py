@@ -1,119 +1,249 @@
-"""WITH RECURSIVE driver loop (SURVEY.md §2.7).
+"""WITH RECURSIVE as one driver-side fixpoint loop (SURVEY.md §2.7).
 
-Reference: `src/execution/operator/set/physical_recursive_cte.cpp` —
-iterate: working table → recursive step → dedupe against accumulated
-result; stop when the step yields no new rows (UNION semantics) or no rows
-(UNION ALL semantics).
+Reference: `src/execution/operator/set/physical_recursive_cte.cpp` and
+its USING KEY variant `physical_recursive_cte_key_join.cpp` — iterate:
+working table → recursive step → merge into the result; stop when a
+round adds nothing.
 
-Spark has no WITH RECURSIVE; the idiomatic pattern is a driver-side loop
-with `localCheckpoint()` per iteration to truncate lineage (otherwise the
-plan tree grows exponentially). The per-iteration `count()` action is the
-fixpoint test — unavoidable in any engine (DuckDB's executor does the same
-check on its intermediate table sizes).
+Spark's own recursion runs only plain UNION ALL; every other WITH
+RECURSIVE form, from SQL (`statements`) or from DataFrames, runs through
+`recursive_cte`. It decides, once for all of them:
 
-Scale: each iteration is a distributed join/union; the accumulated result
-stays partitioned. `max_iterations` bounds runaway cycles like DuckDB's
-(implicit) resource limits.
+- the round cap, `MAX_ROUNDS`;
+- lineage: a distributed round is cut by `materialize`, or the plan tree
+  grows with every round;
+- where a round runs. While the accumulated rows number at most
+  `INLINE_ROWS` (and have scalar types) they stay on the driver: UNION
+  dedupes in a Python set and the next working table goes back to Spark
+  as VALUES text, which Spark folds into the step's plan with no job
+  (25–40 ms a round, against 180–270 ms for a checkpointed round, on a
+  4-core host). Each working row is rendered once, so the text costs
+  O(result) in all. Past that size, or under USING KEY, rounds are
+  checkpointed and the result stays partitioned.
 """
 
 from __future__ import annotations
 
+import datetime
+import decimal
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# rounds before a recursion counts as runaway (the reference has no cap)
+MAX_ROUNDS = 20_000
+INLINE_ROWS = 50_000
+# Spark's LogicalRDD.rewriteStatsAndConstraints throws on unions of
+# checkpointed frames (stale exprIds); the loop gains nothing from
+# constraint inference
+_CONSTRAINTS = "spark.sql.constraintPropagation.enabled"
+_INLINE_TYPES = (
+    "tinyint", "smallint", "int", "bigint", "float", "double", "string",
+    "boolean", "date", "timestamp", "timestamp_ntz",
+)
+_NAN = object()
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute `df` once and truncate its lineage (recursive rounds,
+    MATERIALIZED CTEs). localCheckpoint is the cheap path; Spark's
+    rewriteStatsAndConstraints can throw NoSuchElementException
+    checkpointing a union of already-checkpointed frames (constraint
+    exprId mismatch) — rebuilding from the JVM RDD drops the stale
+    constraints, then checkpoint normally."""
+    try:
+        return df.localCheckpoint(eager=True)
+    except Exception:
+        df = df.persist()
+        df.count()
+        return df
+
+
+def sql_literal(v, dt) -> str:
+    """Render a driver-side value as a typed SQL literal."""
+    ts = dt.simpleString()
+    if v is None:
+        return f"CAST(NULL AS {ts})"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, float):
+        if v != v:
+            return f"CAST('NaN' AS {ts})"
+        if v in (float("inf"), float("-inf")):
+            return f"CAST('{v}' AS {ts})"
+        return f"CAST({v!r} AS {ts})"
+    if isinstance(v, int):
+        return f"CAST({v} AS {ts})"
+    if isinstance(v, decimal.Decimal):
+        return f"CAST('{v}' AS {ts})"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
+    if isinstance(v, datetime.datetime):
+        return f"CAST('{v.isoformat(sep=' ')}' AS {ts})"
+    if isinstance(v, datetime.date):
+        return f"DATE '{v.isoformat()}'"
+    if isinstance(v, (bytes, bytearray)):
+        return f"CAST(unhex('{bytes(v).hex()}') AS BINARY)"
+    if isinstance(v, (list, tuple)) and isinstance(dt, T.ArrayType):
+        if not v:
+            return f"CAST(array() AS {ts})"
+        return "array(" + ", ".join(
+            sql_literal(e, dt.elementType) for e in v) + ")"
+    if isinstance(v, dict) and isinstance(dt, T.MapType):
+        if not v:
+            return f"CAST(map() AS {ts})"
+        return "map(" + ", ".join(
+            f"{sql_literal(k, dt.keyType)}, {sql_literal(x, dt.valueType)}"
+            for k, x in v.items()) + ")"
+    if isinstance(dt, T.StructType) and hasattr(v, "__fields__"):
+        return "named_struct(" + ", ".join(
+            "'" + f.name.replace("'", "''") + "', "
+            + sql_literal(v[i], f.dataType)
+            for i, f in enumerate(dt.fields)) + ")"
+    raise ValueError(f"not inlinable: {type(v)}")
+
+
+def _values(spark, schema: T.StructType, rows: list) -> DataFrame:
+    """Driver rows back in Spark as a VALUES relation of `schema`'s
+    types. The step may have produced wider values or NULLs where the
+    base schema says non-nullable; the literals carry the base types."""
+    if not rows:
+        return spark.createDataFrame([], schema)
+    vals = ", ".join(
+        "(" + ", ".join(sql_literal(v, f.dataType)
+                        for v, f in zip(r, schema.fields)) + ")"
+        for r in rows)
+    names = ", ".join(
+        "`" + f.name.replace("`", "``") + "`" for f in schema.fields)
+    return spark.sql(f"SELECT * FROM (VALUES {vals}) AS __v({names})")
+
+
+def _dedupe_key(row) -> tuple:
+    """A row as UNION compares it: NaN equals NaN in SQL, not in Python."""
+    return tuple(_NAN if v != v else v for v in row)
+
+
+def _latest_by_key(hist: DataFrame, key: list[str]) -> DataFrame:
+    """USING KEY state: one row per key, with the latest round's other
+    columns. NULL keys are equal, as in the reference's keyed hash
+    table, and a key keeps the form it was first stored in
+    (recursive_cte_key_probe.test:102: a -0.0 key probed with +0.0
+    stays -0.0)."""
+    def col(name: str):
+        return F.col("`" + name.replace("`", "``") + "`")
+
+    keys = {k.lower() for k in key}
+    cols = [c for c in hist.columns if c != "__iter"]
+    return hist.groupBy(
+        *[col(k).alias(f"__key{i}") for i, k in enumerate(key)]
+    ).agg(*[
+        (F.min_by if c.lower() in keys else F.max_by)(
+            col(c), "__iter").alias(c)
+        for c in cols
+    ]).select(*map(col, cols))
 
 
 def recursive_cte(
     base: DataFrame,
     step: Callable[[DataFrame], DataFrame],
     distinct: bool = True,
-    max_iterations: int = 100,
+    key: list[str] | None = None,
+    keyed_state: Callable[[DataFrame], DataFrame] | None = None,
+    state_view: str | None = None,
+    until: Callable[[DataFrame], bool] | None = None,
 ) -> DataFrame:
-    """Evaluate WITH RECURSIVE: base UNION [ALL] step(working) fixpoint.
+    """Evaluate WITH RECURSIVE: `base` UNION [ALL] `step(working)` to a
+    fixpoint, where `working` is the last round's rows.
 
-    `distinct=True` ≡ UNION (dedupe, terminate when no *new* rows);
-    `distinct=False` ≡ UNION ALL (terminate when step yields no rows).
+    - `distinct=True` is UNION: the base and every round are deduped
+      against all rows so far, and the loop ends when a round adds no
+      new row. `distinct=False` is UNION ALL: it ends when a round
+      yields no rows.
+    - `key` makes it USING KEY: the result is a keyed state in which a
+      round's rows replace the stored rows with the same key.
+      `keyed_state(history)` derives the state from every row produced,
+      tagged with its round in `__iter`; the default keeps the latest
+      round's values. The loop also ends when a round leaves the state
+      unchanged.
+    - `state_view` names a temp view bound to the rows so far (the keyed
+      state under USING KEY) before each round, for steps that read
+      them; it is dropped at the end.
+    - `until(rows so far)`, asked every 16 rounds, ends the loop early
+      when it returns True (a LIMIT the consumer has already met).
     """
-    # UNION identity applies to the base rows too
-    acc = (base.distinct() if distinct else base).localCheckpoint(eager=True)
-    working = acc
-    for _ in range(max_iterations):
-        nxt = step(working)
-        if distinct:
-            # subtract = EXCEPT DISTINCT: dedupe within the round AND
-            # against the accumulated set (exceptAll is a multiset
-            # difference, so a row produced twice would survive it)
-            nxt = nxt.subtract(acc)
-        nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            return acc
-        acc = acc.unionByName(nxt).localCheckpoint(eager=True)
-        working = nxt
-    raise RuntimeError(f"recursive_cte: no fixpoint after {max_iterations} iterations")
+    spark = base.sparkSession
+    keyed = key is not None
+    if keyed and keyed_state is None:
+        def keyed_state(h):
+            return _latest_by_key(h, key)
+    old = spark.conf.get(_CONSTRAINTS, "true")
+    spark.conf.set(_CONSTRAINTS, "false")
+    try:
+        cols = base.columns
+        rows = None  # the rows so far, while they are kept on the driver
+        if keyed:
+            hist = materialize(base.withColumn("__iter", F.lit(0)))
+            working = hist.drop("__iter")
+            state = materialize(keyed_state(hist))
+        else:
+            hist = state = working = materialize(
+                base.distinct() if distinct else base)
+            if all(f.dataType.simpleString() in _INLINE_TYPES
+                   or f.dataType.simpleString().startswith("decimal")
+                   for f in hist.schema.fields):
+                got = hist.limit(INLINE_ROWS + 1).collect()
+                if len(got) <= INLINE_ROWS:
+                    rows, seen = got, set(map(_dedupe_key, got))
+                    working = _values(spark, hist.schema, rows)
 
+        def so_far() -> DataFrame:
+            return state if rows is None else _values(spark, hist.schema, rows)
 
-def recursive_cte_using_key(
-    base: DataFrame,
-    step: Callable[[DataFrame], DataFrame],
-    key_cols: list[str],
-    max_iterations: int = 100,
-) -> DataFrame:
-    """WITH RECURSIVE ... USING KEY (reference
-    physical_recursive_cte_key_join.cpp): the recurring table is KEYED —
-    each iteration's rows REPLACE existing rows with the same key instead
-    of accumulating, and iteration stops when a round changes nothing.
-    The canonical use is iterative relaxation (shortest paths, PageRank-
-    style updates) where plain UNION recursion would accumulate every
-    intermediate state.
-
-    Distributed shape: each round is one shuffle on the key (anti-join +
-    union); the working set stays at |keys| rows instead of growing by
-    |new rows| per round — exactly why the reference added the variant.
-    """
-    from pyspark.sql import functions as F
-
-    acc = base.localCheckpoint(eager=True)
-    payload = [c for c in base.columns if c not in key_cols]
-    for _ in range(max_iterations):
-        nxt = step(acc).localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            return acc
-        # replace-by-key: new rows win the PAYLOAD, but keys that already
-        # exist keep their STORED representation (reference keyed state —
-        # recursive_cte_key_probe.test:102: a -0.0 key probed with +0.0
-        # stays -0.0; a plain nxt-first union would re-store the probe's
-        # normalized key)
-        # NULL keys compare EQUAL in the reference's keyed hash table, so
-        # every key match below is eqNullSafe (a plain == would re-add a
-        # NULL-key row as "fresh" while keeping the old one — duplicating
-        # state instead of replacing it). Backtick-quote names so keys
-        # with spaces/dots resolve.
-        def _q(side: str, k: str):
-            return F.col(f"{side}.`" + k.replace("`", "``") + "`")
-
-        keyset = acc.select(*key_cols).distinct()
-        upd = (
-            keyset.alias("a")
-            .join(nxt.alias("n"),
-                  [_q("a", k).eqNullSafe(_q("n", k)) for k in key_cols],
-                  "inner")
-            .select(*[_q("a", k).alias(k) for k in key_cols],
-                    *[_q("n", c).alias(c) for c in payload])
-        )
-        fresh = nxt.alias("n").join(
-            keyset.alias("a"),
-            [_q("n", k).eqNullSafe(_q("a", k)) for k in key_cols],
-            "left_anti")
-        kept = acc.alias("a").join(
-            nxt.select(*key_cols).distinct().alias("n"),
-            [_q("a", k).eqNullSafe(_q("n", k)) for k in key_cols],
-            "left_anti")
-        merged = upd.unionByName(fresh).unionByName(kept) \
-            .localCheckpoint(eager=True)
-        # fixpoint: nothing changed (same multiset of rows)
-        if merged.exceptAll(acc).isEmpty() and acc.exceptAll(merged).isEmpty():
-            return acc
-        acc = merged
-    raise RuntimeError(
-        f"recursive_cte_using_key: no fixpoint after {max_iterations} iterations"
-    )
+        for it in range(1, MAX_ROUNDS + 1):
+            if until is not None and it % 16 == 0 and until(so_far()):
+                break
+            if state_view:
+                so_far().createOrReplaceTempView(state_view)
+            nxt = step(working).toDF(*cols)
+            if rows is not None:
+                got = nxt.limit(INLINE_ROWS - len(rows) + 1).collect()
+                if len(rows) + len(got) <= INLINE_ROWS:
+                    if distinct:
+                        fresh = {_dedupe_key(r): r for r in got}
+                        got = [r for k, r in fresh.items() if k not in seen]
+                        seen.update(fresh)
+                    if not got:
+                        break
+                    rows += got
+                    working = _values(spark, hist.schema, got)
+                    continue
+                # the rows outgrew the driver: checkpointed from here on
+                hist = state = materialize(so_far())
+                rows = None
+            if distinct:
+                nxt = nxt.subtract(hist.drop("__iter"))
+            nxt = materialize(nxt)
+            if nxt.isEmpty():
+                break
+            hist = materialize(hist.unionByName(
+                nxt.withColumn("__iter", F.lit(it)) if keyed else nxt))
+            if keyed:
+                new = materialize(keyed_state(hist))
+                same = (new.exceptAll(state).isEmpty()
+                        and state.exceptAll(new).isEmpty())
+                state = new
+                if same:
+                    break
+            else:
+                state = hist
+            working = nxt
+        else:
+            raise RuntimeError(
+                f"recursive CTE: no fixpoint after {MAX_ROUNDS} rounds")
+        return so_far()
+    finally:
+        spark.conf.set(_CONSTRAINTS, old)
+        if state_view:
+            spark.catalog.dropTempView(state_view)

@@ -377,13 +377,11 @@ def _find_refs(s_toks: list[str], outer_aliases: dict[str, str],
 
 
 def _bind(s_text: str, refs: list[str], row, dtypes) -> str:
-    from duckdb_spark.statements import _sql_lit
-
     bound = s_text
     order = sorted(range(len(refs)), key=lambda k: -len(refs[k]))
     for k in order:
         ref = refs[k]
-        lit = _sql_lit(row[k], dtypes[k]).replace("\\", "\\\\")
+        lit = _lit(row[k], dtypes[k]).replace("\\", "\\\\")
         if "(" in ref:
             bound = bound.replace(ref, lit.replace("\\\\", "\\"))
         elif "." in ref:
@@ -399,9 +397,9 @@ def _bind(s_text: str, refs: list[str], row, dtypes) -> str:
 
 
 def _lit(v, dt) -> str:
-    from duckdb_spark.statements import _sql_lit
+    from duckdb_spark.operators.recursive import sql_literal
 
-    return _sql_lit(v, dt)
+    return sql_literal(v, dt)
 
 
 def _empty_grouping_fallback(con, bound_sql: str):

@@ -3923,8 +3923,9 @@ def _check_grouping_set_limits(toks: list[str]) -> None:
 def _rewrite_group_by_all_having(toks: list[str]) -> list[str]:
     """`GROUP BY ALL … HAVING c` where c isn't a SELECT item: the
     reference adds the HAVING-referenced column to the grouping keys
-    (reference group_by_all binder). Spark's native GROUP BY ALL only
-    groups by the select list — expand explicitly."""
+    (reference group_by_all binder), unless c appears only inside an
+    aggregate. Spark's native GROUP BY ALL only groups by the select
+    list — expand explicitly."""
     out = list(toks)
     i = 0
     while i < len(out):
@@ -3988,9 +3989,10 @@ def _rewrite_group_by_all_having(toks: list[str]) -> list[str]:
                 break
             e += 1
         extra = []
+        agg_end = -1  # a column inside an aggregate call is no key
         for x in range(h + 1, e):
             t2 = out[x]
-            if not re.fullmatch(r"[A-Za-z_]\w*", t2):
+            if x < agg_end or not re.fullmatch(r"[A-Za-z_]\w*", t2):
                 continue
             if t2.upper() in _NONFN_WORDS or t2.upper() in (
                 "AND", "OR", "NOT", "NULL", "TRUE", "FALSE", "IS", "IN",
@@ -4004,6 +4006,8 @@ def _rewrite_group_by_all_having(toks: list[str]) -> list[str]:
                 continue
             n = _next_code(out, x + 1)
             if n < e and out[n] == "(":
+                if _COMMON_AGG_RE.match(t2 + "("):
+                    agg_end = _match_paren(out, n)
                 continue
             if t2.lower() in sel_names or t2 in extra:
                 continue
@@ -4046,29 +4050,6 @@ def _substitute_filter_aliases(sql: str) -> str:
                 aliases[name] = "".join(etoks)
         if not changed:
             break
-    only = state.flag("select_alias_only")
-    if only:
-        # second-stage retry: ONE named alias (taken from the analyzer's
-        # unresolved-column message) substituted query-wide — DuckDB lets
-        # correlated subqueries in the select list and GROUP BY reference
-        # lateral aliases (test_grouped_correlated_subquery.test:49
-        # `(col1+1) AS k, k IN (SELECT ColID + k …) GROUP BY k`)
-        name = only.lower()
-        if name not in aliases:
-            return sql
-        expr = aliases[name]
-        out = list(toks)
-        for k, t2 in enumerate(out):
-            if not (re.match(r"^[A-Za-z_]\w*$", t2) and t2.lower() == name):
-                continue
-            p = _prev_code(out, k - 1)
-            if p >= 0 and (out[p] == "." or _is_word(out[p], "AS")):
-                continue
-            n = _next_code(out, k + 1)
-            if n < len(out) and out[n] == "(":
-                continue
-            out[k] = "(" + expr + ")"
-        return "".join(out)
     out = list(toks)
     i = 0
     while i < len(out):

@@ -37,6 +37,23 @@ from duckdb_spark.sql.dialect import (  # noqa: E402 — bound at the
 
 
 _INT_CAST_TYPES = {"TINYINT", "SMALLINT", "INT", "INTEGER", "BIGINT", "LONG"}
+# operand text DuckDB types DOUBLE: a double-returning function, a
+# division, a cast to a floating type or an exponent literal
+_DOUBLE_OPERAND = re.compile(
+    r"(?i)\b(log|log10|log2|ln|sqrt|cbrt|exp|pow|power|avg|mean|sin|cos|"
+    r"tan|asin|acos|atan|atan2|radians|degrees|random)\s*\(|/"
+    r"|\bAS\s+(double|float|real)\b|\d[eE][+-]?\d")
+
+
+def _round_decimal(operand: str) -> str:
+    """DuckDB casts a DECIMAL to an integer rounding half away from
+    zero, as Spark's round() does; Spark's cast truncates. Only a
+    visibly decimal operand (a decimal literal, nothing DOUBLE) is
+    wrapped: DOUBLE operands round half to even, which
+    `_rewrite_float_int_casts` writes."""
+    if re.search(r"\d\.\d", operand) and not _DOUBLE_OPERAND.search(operand):
+        return f"round({operand})"
+    return operand
 
 
 def _rewrite_float_int_casts(toks: list[str]) -> list[str]:
@@ -45,12 +62,13 @@ def _rewrite_float_int_casts(toks: list[str]) -> list[str]:
     NumericTryCast via std::nearbyint). Rewriting every int cast would
     risk precision loss on int64-valued expressions (rint goes through
     DOUBLE, exact only to 2^53), so only casts whose operand is visibly
-    fractional — a top-level `*` or `/`, or a double-returning function
-    (percent_rank, cume_dist, avg, …) — get the rint treatment."""
+    fractional — a top-level `*` or `/`, a double-returning function
+    (percent_rank, cume_dist, avg, sqrt, …) or a cast to a floating
+    type — get the rint treatment."""
     out = list(toks)
     i = 0
     while i < len(out):
-        if not _is_word(out[i], "CAST"):
+        if not (_is_word(out[i], "CAST") or _is_word(out[i], "TRY_CAST")):
             i += 1
             continue
         op = _next_code(out, i + 1)
@@ -82,10 +100,10 @@ def _rewrite_float_int_casts(toks: list[str]) -> list[str]:
                 frac = True
             elif re.match(r"^[A-Za-z_]", t) and t.upper() in _DOUBLE_FNS:
                 frac = True
-        if not frac:
+        etext = "".join(expr).strip()
+        if not (frac or _DOUBLE_OPERAND.search(etext)):
             i = op + 1
             continue
-        etext = "".join(expr).strip()
         out[op + 1:a + op + 1] = _tokens(
             f"rint(CAST(({etext}) AS DOUBLE)) ")
         i = op + 1
@@ -518,17 +536,8 @@ def _rewrite_pg_cast(toks: list[str]) -> list[str]:
                         _union_cast_sql("CAST", operand, members)))
                     continue
             target = _map_type(rawty)
-            # DuckDB float→int casts ROUND (half away from zero); Spark
-            # truncates. Wrap round() when the operand is visibly floating
-            # (float fn / float literal / division) and the target integral.
-            if target.upper() in (
-                "INT", "INTEGER", "BIGINT", "SMALLINT", "TINYINT",
-            ) and re.search(
-                r"(?i)\b(log|log10|log2|ln|sqrt|cbrt|exp|pow|power|avg|mean|"
-                r"sin|cos|tan|asin|acos|atan|atan2|radians|degrees|random)\s*\(|"
-                r"\d\.\d|/", operand,
-            ):
-                operand = f"round({operand})"
+            if target.upper() in _INT_CAST_TYPES:
+                operand = _round_decimal(operand)
             # emit as tokens, not one blob — later passes (fn renames,
             # bracket/list handling) must still see inside the operand
             out.extend(_tokens(f"CAST({operand} AS {target})"))
@@ -1426,18 +1435,11 @@ def _rewrite_cast_types(toks: list[str]) -> list[str]:
                 i += 1
                 continue
         mapped = _map_type(ty)
-        # DuckDB numeric→int casts ROUND half away from zero; Spark
-        # truncates (same rule as the `::` pass above)
-        if mapped.upper() in (
-            "INT", "INTEGER", "BIGINT", "SMALLINT", "TINYINT",
-        ) and re.search(
-            r"(?i)\b(log|log10|log2|ln|sqrt|cbrt|exp|pow|power|avg|mean|"
-            r"sin|cos|tan|asin|acos|atan|atan2|radians|degrees|random)\s*\(|"
-            r"\d\.\d|/", operand,
-        ):
+        if mapped.upper() in _INT_CAST_TYPES \
+                and _round_decimal(operand) != operand:
             kw = out[i]
             out[i:close + 1] = _tokens(
-                f"{kw}(round({operand}) AS {mapped})")
+                f"{kw}({_round_decimal(operand)} AS {mapped})")
             i += 1
             continue
         if ty and mapped != ty:

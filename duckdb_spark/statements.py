@@ -25,9 +25,9 @@ import re
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as _T
 
 from duckdb_spark import state
+from duckdb_spark.operators import recursive
 from duckdb_spark.sql import dialect
 from duckdb_spark.sql.columns_expr import _CLAUSE_END
 from duckdb_spark.sql.textcast import TextCastError
@@ -158,67 +158,6 @@ def _parse_path_arg(arg: str) -> str | list[str] | None:
     return None
 
 
-_INLINABLE_TYPES = (
-    "tinyint", "smallint", "int", "bigint", "float", "double", "string",
-    "boolean", "date", "timestamp", "timestamp_ntz",
-)
-
-
-def _inlinable_schema(schema) -> bool:
-    return all(
-        f.dataType.simpleString() in _INLINABLE_TYPES
-        or f.dataType.simpleString().startswith("decimal")
-        for f in schema.fields
-    )
-
-
-def _sql_lit(v, dt) -> str:
-    """Render a driver-side value as a typed SQL literal."""
-    import datetime
-    import decimal
-
-    ts = dt.simpleString()
-    if v is None:
-        return f"CAST(NULL AS {ts})"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, float):
-        if v != v:
-            return f"CAST('NaN' AS {ts})"
-        if v in (float("inf"), float("-inf")):
-            return f"CAST('{v}' AS {ts})"
-        return f"CAST({v!r} AS {ts})"
-    if isinstance(v, int):
-        return f"CAST({v} AS {ts})"
-    if isinstance(v, decimal.Decimal):
-        return f"CAST('{v}' AS {ts})"
-    if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
-    if isinstance(v, datetime.datetime):
-        return f"CAST('{v.isoformat(sep=' ')}' AS {ts})"
-    if isinstance(v, datetime.date):
-        return f"DATE '{v.isoformat()}'"
-    if isinstance(v, (bytes, bytearray)):
-        return f"CAST(unhex('{bytes(v).hex()}') AS BINARY)"
-    if isinstance(v, (list, tuple)) and isinstance(dt, _T.ArrayType):
-        if not v:
-            return f"CAST(array() AS {ts})"
-        return "array(" + ", ".join(
-            _sql_lit(e, dt.elementType) for e in v) + ")"
-    if isinstance(v, dict) and isinstance(dt, _T.MapType):
-        if not v:
-            return f"CAST(map() AS {ts})"
-        return "map(" + ", ".join(
-            f"{_sql_lit(k, dt.keyType)}, {_sql_lit(x, dt.valueType)}"
-            for k, x in v.items()) + ")"
-    if isinstance(dt, _T.StructType) and hasattr(v, "__fields__"):
-        return "named_struct(" + ", ".join(
-            "'" + f.name.replace("'", "''") + "', "
-            + _sql_lit(v[i], f.dataType)
-            for i, f in enumerate(dt.fields)) + ")"
-    raise ValueError(f"not inlinable: {type(v)}")
-
-
 def _rewrite_fn_calls(query: str, fname: str, template) -> str:
     """Replace every `fname(args)` call in raw DuckDB SQL text with
     template(argtext) — token/paren-aware (analyzer error messages
@@ -243,21 +182,6 @@ def _rewrite_fn_calls(query: str, fname: str, template) -> str:
     return "".join(qt) if changed else query
 
 
-def _materialize(df: DataFrame) -> DataFrame:
-    """Compute `df` once and truncate its lineage (recursive-CTE rounds,
-    MATERIALIZED CTEs). localCheckpoint is the cheap path; Spark's
-    rewriteStatsAndConstraints can throw NoSuchElementException
-    checkpointing a union of already-checkpointed frames (constraint
-    exprId mismatch) — rebuilding from the JVM RDD drops the stale
-    constraints, then checkpoint normally."""
-    try:
-        return df.localCheckpoint(eager=True)
-    except Exception:
-        df = df.persist()
-        df.count()
-        return df
-
-
 # names of the temp views statements register
 _seq = itertools.count(1)
 
@@ -265,7 +189,7 @@ _seq = itertools.count(1)
 def materialize_ctes(spark, query: str, run) -> DataFrame | None:
     """DuckDB's `WITH x AS MATERIALIZED (…)` (physical_cte.cpp): each
     marked entry of the top-level WITH list runs once, in order, through
-    `run` (statement text → DataFrame) and `_materialize`, and its body
+    `run` (statement text → DataFrame) and `recursive.materialize`, and its body
     becomes a read of the result's temp view; then `run` answers the
     statement. Only the marked bodies change: references, later entries
     and the main statement keep their text. The views are dropped once
@@ -293,7 +217,7 @@ def materialize_ctes(spark, query: str, run) -> DataFrame | None:
             df = run(f"WITH {', '.join(texts[:n])} SELECT * FROM ({body})"
                      if n else body)
             view = f"__cte_{re.sub(r'[^A-Za-z0-9_]', '_', cte.name)}_{next(_seq)}"
-            _materialize(df).createOrReplaceTempView(view)
+            recursive.materialize(df).createOrReplaceTempView(view)
             views.append(view)
             # keep `name [(cols)] AS`, drop the MATERIALIZED keyword
             hint = dialect._prev_code(toks, cte.body[0] - 2)
@@ -353,7 +277,8 @@ def managed_table(con, query):
 def recursive_view(con, query):
     """CREATE RECURSIVE VIEW v (cols) AS body — sugar for a view over
     WITH RECURSIVE (reference parser/statement/create_statement.cpp);
-    materialized at creation via the iterative recursive-CTE loop."""
+    materialized at creation through `Connection.sql`, so Spark's own
+    recursion or the one fixpoint loop (`_recursive_cte_sql`) runs it."""
     m = re.match(
         r"(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?RECURSIVE\s+VIEW\s+"
         r"([\w\"]+)\s*(?:\(([^)]*)\))?\s*AS\s+(.*?);?\s*$",
@@ -732,110 +657,110 @@ def sql_table_functions(con, query):
         prefix = m.group(1)
         name = m.group(2).lower()
         args = m.group(3).strip()
-        try:
-            if name == "pragma_table_info":
-                df = I.pragma_table_info(
-                    con.spark, args.strip("'\""))
-            elif name == "repeat":
-                parts = [a.strip() for a in args.split(",")]
-                if len(parts) != 2:
-                    return m.group(0)  # scalar repeat(str, n)
+        if name == "pragma_table_info":
+            df = I.pragma_table_info(
+                con.spark, args.strip("'\""))
+        elif name == "repeat":
+            parts = [a.strip() for a in args.split(",")]
+            if len(parts) != 2:
+                return m.group(0)  # scalar repeat(str, n)
+            try:
                 vals = con.spark.sql(
                     f"SELECT ({parts[0]}) AS v, "
                     f"CAST(({parts[1]}) AS BIGINT) AS n"
                 ).collect()[0]
-                if vals["n"] is None or isinstance(vals["v"], str):
-                    return m.group(0)  # scalar string repeat
-                df = tablefn.repeat(con.spark, vals["v"], int(vals["n"]))
-            elif name == "lttb":
-                # lttb(table, x, y, n): LTTB downsampling TVF over a
-                # named table/view (operators/sketch.py lttb — the
-                # beyond-reference pipeline operator surfaced to SQL
-                # text; VERDICT r08 item 8)
-                parts = _split_top_level(args)
-                if len(parts) != 4:
-                    return m.group(0)
-                from duckdb_spark.operators import sketch
+            except AnalysisException:
+                return m.group(0)  # scalar repeat over columns
+            if vals["n"] is None or isinstance(vals["v"], str):
+                return m.group(0)  # scalar string repeat
+            df = tablefn.repeat(con.spark, vals["v"], int(vals["n"]))
+        elif name == "lttb":
+            # lttb(table, x, y, n): LTTB downsampling TVF over a
+            # named table/view (operators/sketch.py lttb — the
+            # beyond-reference pipeline operator surfaced to SQL
+            # text; VERDICT r08 item 8)
+            parts = _split_top_level(args)
+            if len(parts) != 4:
+                return m.group(0)
+            from duckdb_spark.operators import sketch
 
-                src = con.sql(f"SELECT * FROM {parts[0].strip()}").df()
-                df = sketch.lttb(
-                    src, parts[1].strip(), parts[2].strip(),
-                    int(parts[3].strip()))
-            elif name in (
-                "read_parquet", "parquet_scan", "read_csv",
-                "read_csv_auto", "read_json", "read_json_auto",
-                "read_json_objects", "read_ndjson", "read_text",
-                "read_blob", "sniff_csv",
-            ):
-                from duckdb_spark.io import readers
+            src = con.sql(f"SELECT * FROM {parts[0].strip()}").df()
+            df = sketch.lttb(
+                src, parts[1].strip(), parts[2].strip(),
+                int(parts[3].strip()))
+        elif name in (
+            "read_parquet", "parquet_scan", "read_csv",
+            "read_csv_auto", "read_json", "read_json_auto",
+            "read_json_objects", "read_ndjson", "read_text",
+            "read_blob", "sniff_csv",
+        ):
+            from duckdb_spark.io import readers
 
-                parts = _split_top_level(args)
-                if not parts:
-                    return m.group(0)
-                paths = _parse_path_arg(parts[0])
-                if paths is None:
-                    return m.group(0)
-                opts = {}
-                for p in parts[1:]:
-                    om = re.match(r"(?s)^\s*(\w+)\s*(?::?=)\s*(.*)$", p)
-                    if om:
-                        opts[om.group(1).lower()] = om.group(2).strip()
-                if name in ("read_parquet", "parquet_scan"):
-                    df = readers.read_parquet(
-                        con.spark, paths,
-                        union_by_name=opts.get("union_by_name", "")
-                        .lower() == "true",
-                    )
-                elif name in ("read_csv", "read_csv_auto"):
-                    kw = {}
-                    if opts.get("header", "").lower() in ("true", "false", "0", "1"):
-                        kw["header"] = opts["header"].lower() in ("true", "1")
-                    if opts.get("delim") or opts.get("sep"):
-                        kw["sep"] = (opts.get("delim") or opts["sep"]).strip("'\"")
-                    cm2 = opts.get("columns", "")
-                    if cm2.strip().startswith("{"):
-                        # columns={'id':'BIGINT','v':'UUID[]'}: the
-                        # declared types BIND (nested types parse via
-                        # the textcast runtime in readers.read_csv —
-                        # string_to_list_cast.test:503)
-                        cols2 = {}
-                        for pc in cm2.strip()[1:-1].split(","):
-                            km2 = re.match(
-                                r"(?s)^\s*'([^']+)'\s*:\s*'([^']+)'\s*$",
-                                pc)
-                            if km2:
-                                cols2[km2.group(1)] = km2.group(2)
-                        if cols2:
-                            kw["columns"] = cols2
-                            kw["header"] = kw.get("header", True)
-                    df = readers.read_csv(con.spark, paths, **kw)
-                elif name == "sniff_csv":
-                    # one-row result mirroring the reference's output
-                    # columns (src/function/table/sniff_csv.cpp);
-                    # Columns renders as its duck text form
-                    info = dict(readers.sniff_csv(
-                        paths[0] if isinstance(paths, list)
-                        else paths))
-                    info["Columns"] = str(info.get("Columns"))
-                    row = tuple(
-                        v if isinstance(v, (int, bool)) or v is None
-                        else str(v) for v in info.values())
-                    schema = ", ".join(
-                        f"{k} boolean" if isinstance(v, bool)
-                        else f"{k} bigint" if isinstance(v, int)
-                        else f"{k} string"
-                        for k, v in info.items())
-                    df = con.spark.createDataFrame([row], schema)
-                elif name == "read_text":
-                    df = readers.read_text(con.spark, paths)
-                elif name == "read_blob":
-                    df = readers.read_blob(con.spark, paths)
-                else:
-                    df = readers.read_json(con.spark, paths)
+            parts = _split_top_level(args)
+            if not parts:
+                return m.group(0)
+            paths = _parse_path_arg(parts[0])
+            if paths is None:
+                return m.group(0)
+            opts = {}
+            for p in parts[1:]:
+                om = re.match(r"(?s)^\s*(\w+)\s*(?::?=)\s*(.*)$", p)
+                if om:
+                    opts[om.group(1).lower()] = om.group(2).strip()
+            if name in ("read_parquet", "parquet_scan"):
+                df = readers.read_parquet(
+                    con.spark, paths,
+                    union_by_name=opts.get("union_by_name", "")
+                    .lower() == "true",
+                )
+            elif name in ("read_csv", "read_csv_auto"):
+                kw = {}
+                if opts.get("header", "").lower() in ("true", "false", "0", "1"):
+                    kw["header"] = opts["header"].lower() in ("true", "1")
+                if opts.get("delim") or opts.get("sep"):
+                    kw["sep"] = (opts.get("delim") or opts["sep"]).strip("'\"")
+                cm2 = opts.get("columns", "")
+                if cm2.strip().startswith("{"):
+                    # columns={'id':'BIGINT','v':'UUID[]'}: the
+                    # declared types BIND (nested types parse via
+                    # the textcast runtime in readers.read_csv —
+                    # string_to_list_cast.test:503)
+                    cols2 = {}
+                    for pc in cm2.strip()[1:-1].split(","):
+                        km2 = re.match(
+                            r"(?s)^\s*'([^']+)'\s*:\s*'([^']+)'\s*$",
+                            pc)
+                        if km2:
+                            cols2[km2.group(1)] = km2.group(2)
+                    if cols2:
+                        kw["columns"] = cols2
+                        kw["header"] = kw.get("header", True)
+                df = readers.read_csv(con.spark, paths, **kw)
+            elif name == "sniff_csv":
+                # one-row result mirroring the reference's output
+                # columns (src/function/table/sniff_csv.cpp);
+                # Columns renders as its duck text form
+                info = dict(readers.sniff_csv(
+                    paths[0] if isinstance(paths, list)
+                    else paths))
+                info["Columns"] = str(info.get("Columns"))
+                row = tuple(
+                    v if isinstance(v, (int, bool)) or v is None
+                    else str(v) for v in info.values())
+                schema = ", ".join(
+                    f"{k} boolean" if isinstance(v, bool)
+                    else f"{k} bigint" if isinstance(v, int)
+                    else f"{k} string"
+                    for k, v in info.items())
+                df = con.spark.createDataFrame([row], schema)
+            elif name == "read_text":
+                df = readers.read_text(con.spark, paths)
+            elif name == "read_blob":
+                df = readers.read_blob(con.spark, paths)
             else:
-                df = getattr(I, name)(con.spark)
-        except Exception:
-            return m.group(0)
+                df = readers.read_json(con.spark, paths)
+        else:
+            df = getattr(I, name)(con.spark)
         view = f"__tvf_{name}_{next(_seq)}"
         df.createOrReplaceTempView(view)
         return f"{prefix} {view} "
@@ -1253,7 +1178,7 @@ def lateral_recursive(con, query):
     for row in outer_rows:
         bound = inner
         for nm, val, dt in zip(o_names, row, o_types):
-            lit = _sql_lit(val, dt)
+            lit = recursive.sql_literal(val, dt)
             if oalias:
                 bound = re.sub(
                     rf"(?is)(?<![\w.]){re.escape(oalias)}\s*\.\s*"
@@ -1292,16 +1217,14 @@ def lateral_recursive(con, query):
 
 
 def _recursive_cte_sql(con, rec: dict):
-    """Driver-loop evaluation of the recursive-CTE forms Spark's
-    native recursion can't run (UNION-distinct, USING KEY). The
-    recursive reference is the WORKING table (last round's rows);
-    `recurring.<name>` is the accumulated keyed state (reference
-    physical_recursive_cte.cpp / physical_recursive_cte_key_join.cpp).
-    Each round localCheckpoints to truncate lineage; the accumulated
-    result stays partitioned (SURVEY §2.7 scale notes)."""
-    from duckdb_spark.sql.dialect import rename_table_ident
-
-    name, cols, key = rec["name"], rec["cols"], rec["key"]
+    """Run a WITH RECURSIVE that Spark's native recursion can't (UNION,
+    USING KEY, `recurring.<name>`, the shapes `recursive_loop` retries)
+    through the one fixpoint loop, `operators.recursive.recursive_cte`,
+    then answer the tail over its result. In the step, the bare name is
+    the working table (last round's rows) and `recurring.<name>` the
+    rows so far, or the keyed state (reference
+    physical_recursive_cte.cpp / physical_recursive_cte_key_join.cpp)."""
+    name = rec["name"]
     internal = f"__rec_{name}"
     recurring = f"__recurring_{name}"
 
@@ -1311,13 +1234,11 @@ def _recursive_cte_sql(con, rec: dict):
         sql = re.sub(
             rf"(?is)\brecurring\s*\.\s*{re.escape(name)}\b", recurring, sql
         )
-        return rename_table_ident(sql, name, internal)
+        return dialect.rename_table_ident(sql, name, internal)
 
-    from duckdb_spark.sql.dialect import _tokens, _top_level_index
-
-    step_toks = _tokens(rec["step"])
+    step_toks = dialect._tokens(rec["step"])
     for kw in ("ORDER", "LIMIT", "OFFSET"):
-        ix = _top_level_index(step_toks, 0, len(step_toks), kw)
+        ix = dialect._top_level_index(step_toks, 0, len(step_toks), kw)
         if ix >= 0:
             raise ValueError(
                 f"Binder Error: {kw} BY is not supported in the "
@@ -1326,208 +1247,36 @@ def _recursive_cte_sql(con, rec: dict):
                 else f"Binder Error: {kw} is not supported in the "
                      f"recursive term of a recursive CTE"
             )
-    # Spark's LogicalRDD.rewriteStatsAndConstraints throws on
-    # checkpointed-union constraints (stale exprIds); the loop doesn't
-    # benefit from constraint inference — turn it off for the duration
-    cp_key = "spark.sql.constraintPropagation.enabled"
-    cp_old = con.spark.conf.get(cp_key, "true")
-    con.spark.conf.set(cp_key, "false")
-    try:
-        return _recursive_cte_run(con, rec, _subst, cols)
-    finally:
-        con.spark.conf.set(cp_key, cp_old)
+    base = con.sql(rec["base"]).df()
+    if rec["cols"]:
+        base = base.toDF(*rec["cols"])
+    step_sql, tail = _subst(rec["step"]), _subst(rec["tail"])
 
+    def step(working: DataFrame) -> DataFrame:
+        working.createOrReplaceTempView(internal)
+        return con.sql(step_sql).df()
 
-def _recursive_cte_run(con, rec: dict, _subst, cols):
-    name, key = rec["name"], rec["key"]
-    internal = f"__rec_{name}"
-    recurring = f"__recurring_{name}"
-    base_df = con.sql(rec["base"]).df()
-    if cols:
-        base_df = base_df.toDF(*cols)
-    out_cols = base_df.columns
-    step_sql = _subst(rec["step"])
-    if key:
-        acc = _recursive_keyed(
-            con, base_df, step_sql, key, out_cols, internal, recurring,
-            rec["distinct"],
-        )
-    else:
-        distinct = rec["distinct"]
-        # UNION identity applies to the base rows too
-        acc = _materialize(base_df.distinct() if distinct else base_df)
-        acc_n = acc.count()
-        if acc_n <= 2000 and _inlinable_schema(acc.schema):
-            # long-thin recursions (1000 rounds of one row) cost a
-            # full Spark job per round in the DataFrame loop; inline
-            # the working set as VALUES text and iterate driver-side
-            fast = _recursive_plain_driver(
-                con, acc, step_sql, internal, recurring, distinct
-            )
-            if fast is not None:
-                fast.createOrReplaceTempView(internal)
-                try:
-                    return con.sql(_subst(rec["tail"]))
-                finally:
-                    try:
-                        con.spark.catalog.dropTempView(recurring)
-                    except Exception:
-                        pass
-        working = acc
-        lm = re.search(r"(?is)\bLIMIT\s+(\d+)\b", rec["tail"])
-        for _rnd in range(200):
-            if lm and _rnd % 16 == 15:
-                # unbounded recursion drained through a LIMIT: stop
-                # as soon as the tail is satisfied (reference
-                # pipelined recursion; checked every 16 rounds)
-                acc.createOrReplaceTempView(internal)
-                res = con.sql(_subst(rec["tail"]))
-                n_lim = int(lm.group(1))
-                if res is not None and \
-                        res.df().limit(n_lim).count() >= n_lim:
-                    try:
-                        return res
-                    finally:
-                        try:
-                            con.spark.catalog.dropTempView(recurring)
-                        except Exception:  # noqa: BLE001
-                            pass
-            working.createOrReplaceTempView(internal)
-            acc.createOrReplaceTempView(recurring)
-            nxt = con.sql(step_sql).df().toDF(*out_cols)
-            if distinct:
-                # subtract = EXCEPT DISTINCT: dedupe within the round
-                # AND against the accumulated set (exceptAll is
-                # multiset — duplicate production would survive one
-                # removal)
-                nxt = _materialize(nxt.subtract(acc))
-            else:
-                nxt = _materialize(nxt)
-            if nxt.isEmpty():
-                break
-            acc = _materialize(acc.unionByName(nxt))
-            working = nxt
-        else:
-            # unbounded recursion consumed through a LIMIT: if the
-            # tail is already satisfied by the accumulated rows,
-            # stop producing (reference pipelined recursion stops
-            # when the limit operator is full)
-            lm = re.search(r"(?is)\bLIMIT\s+(\d+)\b", rec["tail"])
-            if lm:
-                acc.createOrReplaceTempView(internal)
-                res = con.sql(_subst(rec["tail"]))
-                n_lim = int(lm.group(1))
-                if res is not None and \
-                        res.df().limit(n_lim).count() >= n_lim:
-                    try:
-                        return res
-                    finally:
-                        try:
-                            con.spark.catalog.dropTempView(recurring)
-                        except Exception:  # noqa: BLE001
-                            pass
-            raise RuntimeError(
-                "recursive CTE: no fixpoint after 200 rounds"
-            )
-    acc.createOrReplaceTempView(internal)
-    try:
-        return con.sql(_subst(rec["tail"]))
-    finally:
-        for v in (recurring,):
-            try:
-                con.spark.catalog.dropTempView(v)
-            except Exception:
-                pass
+    # a recursion read through a LIMIT stops once the tail has its rows,
+    # as the reference's pipeline does (so an unbounded one ends); only a
+    # tail with no blocking or non-monotone operator can be answered
+    # from the rows so far, and keyed rows are replaced, not added
+    lim = re.search(r"(?is)\bLIMIT\s+(\d+)\b", tail)
+    if rec["key"] or dialect._COMMON_AGG_RE.search(tail) or re.search(
+            r"(?is)\b(ORDER|GROUP|HAVING|DISTINCT|OVER|QUALIFY|EXCEPT|"
+            r"INTERSECT|NOT)\b", tail):
+        lim = None
 
+    def limit_met(acc: DataFrame) -> bool:
+        acc.createOrReplaceTempView(internal)
+        n = int(lim.group(1))
+        return con.sql(tail).df().limit(n).count() >= n
 
-def _recursive_plain_driver(
-    con,
-    acc_df: DataFrame,
-    step_sql: str,
-    internal: str,
-    recurring: str,
-    distinct: bool = True,
-) -> DataFrame | None:
-    """Driver-side recursion: the working set is inlined as a VALUES
-    temp view each round (no per-round Spark job beyond the step
-    itself); UNION rows dedupe in a Python set. Returns the final
-    DataFrame, or None to fall back to the distributed loop when the
-    frontier outgrows the inline budget."""
-    schema = acc_df.schema
-    cols = [f.name for f in schema.fields]
-    types = [f.dataType for f in schema.fields]
-    need_recurring = recurring in step_sql
-
-    def _mkview(name: str, rows) -> None:
-        vals = ", ".join(
-            "(" + ", ".join(_sql_lit(v, t) for v, t in zip(r, types)) + ")"
-            for r in rows
-        )
-        collist = ", ".join(f"`{c}`" for c in cols)
-        con.spark.sql(
-            f"CREATE OR REPLACE TEMP VIEW {name} AS "
-            f"SELECT * FROM (VALUES {vals}) AS __v({collist})"
-        )
-
-    rows0 = [tuple(r) for r in acc_df.collect()]
-    if distinct:
-        seen: set = set(rows0)
-        all_rows = list(seen)
-        working = list(seen)
-    else:
-        all_rows = list(rows0)
-        working = list(rows0)
-    for _ in range(20000):
-        if len(working) > 2000 or len(all_rows) > 50000:
-            return None
-        _mkview(internal, working)
-        if need_recurring:
-            _mkview(recurring, all_rows)
-        nxt = [tuple(r) for r in con.sql(step_sql).df().collect()]
-        if distinct:
-            fresh = [r for r in dict.fromkeys(nxt) if r not in seen]
-            if not fresh:
-                break
-            seen.update(fresh)
-        else:
-            fresh = nxt
-            if not fresh:
-                break
-        all_rows.extend(fresh)
-        working = fresh
-    else:
-        raise RuntimeError("recursive CTE: no fixpoint after 20000 rounds")
-    # materialize through the same VALUES rendering: collected rows may
-    # be wider than the base schema (step-side type promotion) or NULL
-    # where the literal-derived base schema says non-nullable
-    vals = ", ".join(
-        "(" + ", ".join(_sql_lit(v, t) for v, t in zip(r, types)) + ")"
-        for r in all_rows
-    )
-    collist = ", ".join(f"`{c}`" for c in cols)
-    return con.spark.sql(
-        f"SELECT * FROM (VALUES {vals}) AS __v({collist})"
-    )
-
-
-def _recursive_keyed(
-    con,
-    base_df: DataFrame,
-    step_sql: str,
-    key: list[str],
-    out_cols: list[str],
-    internal: str,
-    recurring: str,
-    distinct: bool,
-) -> DataFrame:
-    """USING KEY state loop. Key entries are plain columns or
-    per-column aggregates (`USING KEY (a, max(b))`, reference
-    physical_recursive_cte_key_join.cpp): the state groups every row
-    ever produced by the plain keys; aggregate entries combine, all
-    other columns take the latest round's value (replace-by-key)."""
+    # USING KEY entries are plain columns or per-column aggregates
+    # (`USING KEY (a, max(b))`): the state groups every row ever produced
+    # by the plain keys; aggregate entries combine
     plain: list[str] = []
     aggs: dict[str, str] = {}  # target col -> full aggregate expr
-    for k in key:
+    for k in rec["key"] or ():
         am = re.match(r"(?is)^(.*\))\s+AS\s+([A-Za-z_]\w*)\s*$", k.strip())
         if am:
             # `sum(v) AS v`: explicit target column
@@ -1549,69 +1298,45 @@ def _recursive_keyed(
             # duplicate plain keys dedupe
             # (recursive_cte_key_aggregation.test:116)
             plain.append(k)
-    hist = _materialize(base_df.withColumn("__iter", F.lit(0)))
-    hist_name = internal + "__hist"
 
-    def _state(h: DataFrame) -> DataFrame:
-        if not aggs and not [c for c in out_cols if c not in plain]:
-            return h.drop("__iter")
-        parts = []
-        for c in out_cols:
-            if c in plain:
+    def keyed_aggregates(hist: DataFrame) -> DataFrame:
+        parts = [f"min_by({k}, __iter) AS {k}" for k in plain]
+        for c in base.columns:
+            if c.lower() in (p.lower() for p in plain):
                 continue
             expr = aggs.get(c.lower())
-            if expr:
-                # ORDER-SENSITIVE aggregates consume the produced rows
-                # in INSERTION order (reference keyed-aggregate state
-                # appends round by round;
-                # recursive_cte_key_aggregation.test:137)
-                if expr.endswith(")") and re.match(
-                    r"(?is)^\s*(list|array_agg|collect_list|"
-                    r"string_agg|group_concat|listagg|first|last)\s*\(",
-                    expr,
-                ) and not re.search(r"(?is)\bORDER\s+BY\b", expr):
-                    expr = expr[:-1] + " ORDER BY __iter)"
-                parts.append(f"{expr} AS {c}")
-            else:
+            if expr is None:
                 parts.append(f"max_by({c}, __iter) AS {c}")
-        h.createOrReplaceTempView(hist_name)
-        # keys keep their STORED representation: Spark's GROUP BY
-        # normalizes -0.0 to 0.0 in the output key, but the reference
-        # keyed state retains the first-stored value when an
-        # equality-compatible probe differs
-        # (recursive_cte_key_probe.test:102)
-        key_sel = [f"min_by({k}, __iter) AS {k}" for k in plain]
-        sel = ", ".join(key_sel + parts)
+                continue
+            # ORDER-SENSITIVE aggregates consume the produced rows in
+            # INSERTION order (reference keyed-aggregate state appends
+            # round by round; recursive_cte_key_aggregation.test:137)
+            if expr.endswith(")") and re.match(
+                r"(?is)^\s*(list|array_agg|collect_list|"
+                r"string_agg|group_concat|listagg|first|last)\s*\(",
+                expr,
+            ) and not re.search(r"(?is)\bORDER\s+BY\b", expr):
+                expr = expr[:-1] + " ORDER BY __iter)"
+            parts.append(f"{expr} AS {c}")
+        hist.createOrReplaceTempView(internal + "__hist")
         return con.sql(
-            f"SELECT {sel} FROM {hist_name} GROUP BY {', '.join(plain)}"
-        ).df().select(*out_cols)
+            f"SELECT {', '.join(parts)} FROM {internal}__hist "
+            f"GROUP BY {', '.join(plain)}"
+        ).df().select(*base.columns)
 
-    working = base_df
-    state = _materialize(_state(hist))
-    for it in range(1, 200):
-        working.createOrReplaceTempView(internal)
-        state.createOrReplaceTempView(recurring)
-        nxt = con.sql(step_sql).df().toDF(*out_cols)
-        if distinct and not aggs:
-            # aggregate entries consume EVERY produced row — a re-
-            # produced row still feeds string_agg/list
-            # (recursive_cte_key_aggregation.test:128); plain keyed
-            # recursion dedupes for termination
-            nxt = nxt.exceptAll(hist.drop("__iter")).distinct()
-        nxt = _materialize(nxt)
-        if nxt.isEmpty():
-            return state
-        hist = _materialize(hist.unionByName(
-            nxt.withColumn("__iter", F.lit(it))
-        ))
-        new_state = _materialize(_state(hist))
-        if (
-            new_state.exceptAll(state).isEmpty()
-            and state.exceptAll(new_state).isEmpty()
-        ):
-            return new_state
-        state, working = new_state, nxt
-    raise RuntimeError("recursive CTE USING KEY: no fixpoint after 200 rounds")
+    acc = recursive.recursive_cte(
+        base, step,
+        # aggregate entries consume EVERY produced row — a re-produced
+        # row still feeds string_agg/list
+        # (recursive_cte_key_aggregation.test:128)
+        distinct=rec["distinct"] and not aggs,
+        key=[k.strip('"') for k in plain] or None,
+        keyed_state=keyed_aggregates if aggs else None,
+        state_view=recurring if recurring in step_sql else None,
+        until=limit_met if lim else None,
+    )
+    acc.createOrReplaceTempView(internal)
+    return con.sql(tail)
 
 
 def recursive_cte(con, query):
@@ -2631,23 +2356,6 @@ def interval_avg_sum(con, query, tq, msg):
     return dialect.translate(new_q) if new_q != query else None
 
 
-def sum_overflow(con, query, tq, msg):
-    """SUM over BIGINT overflows int64 where the reference promotes to
-    HUGEINT — through DECIMAL(38,0)."""
-    if not ("ARITHMETIC_OVERFLOW" in msg and "long overflow" in msg
-            and re.search(r"(?is)\bsum\s*\(", query)):
-        return None
-
-    def _dec(a: str) -> str:
-        if re.match(r"(?is)^\s*DISTINCT\b", a):
-            return "sum(DISTINCT cast({} as decimal(38,0)))".format(
-                re.sub(r"(?is)^\s*DISTINCT\s+", "", a))
-        return f"sum(cast({a} as decimal(38,0)))"
-
-    new_q = _rewrite_fn_calls(query, "sum", _dec)
-    return dialect.translate(new_q) if new_q != query else None
-
-
 def bit_aggregate(con, query, tq, msg):
     """bit_and/bit_or/bit_xor over BIT (binary-backed '0'/'1' emulation,
     SURVEY §1.2): positionwise bitwise agg via base-2 conv to BIGINT and
@@ -2771,18 +2479,6 @@ def select_alias(con, query, tq, msg):
     return None
 
 
-def select_alias_only(con, query, tq, msg):
-    """One specific unresolved name that IS a select alias: substituted
-    query-wide (lateral aliases inside select-list subqueries / GROUP BY
-    — test_grouped_correlated_subquery.test)."""
-    nm = "UNRESOLVED_COLUMN" in msg and \
-        re.search(r"with name `([A-Za-z_]\w*)` cannot", msg)
-    if nm:
-        return _translate_with(query, tq, select_alias="1",
-                               select_alias_only=nm.group(1))
-    return None
-
-
 def setop_order_refs(con, query, tq, msg):
     """Set-op ORDER BY naming another branch's output, a table-qualified
     first-branch column or a branch's select expression: rewritten to
@@ -2790,15 +2486,6 @@ def setop_order_refs(con, query, tq, msg):
     if "UNRESOLVED_COLUMN" not in msg:
         return None
     retried = dialect._rewrite_setop_order_refs(query)
-    return dialect.translate(retried) if retried != query else None
-
-
-def implicit_lateral(con, query, tq, msg):
-    """DuckDB binds comma-joined FROM subqueries laterally without the
-    LATERAL keyword; Spark needs it spelled (lateral_large_lists.test)."""
-    if "UNRESOLVED_COLUMN" not in msg:
-        return None
-    retried = dialect.insert_implicit_lateral(query)
     return dialect.translate(retried) if retried != query else None
 
 
@@ -2855,32 +2542,6 @@ def natural_join_runtime_cast(con, query, tq, msg):
         + query[nat.end():])
 
 
-def variant_equality(con, query, tq, msg):
-    """VARIANT equality uses a total, TYPE-FIRST order (reference
-    variant_comparator; test_variant_filter.test:9): different type
-    ranks are simply not equal. Compares the canonical JSON of both
-    sides as variants — a schema difference shows in the rendering."""
-    if "BINARY_OP_DIFF_TYPES" not in msg or "VARIANT" not in _diff_types(msg):
-        return None
-    em = re.search(r'Cannot resolve "\((.*?) (=|!=|<>) (.*?)\)" due to', msg)
-    if not em:
-        return None
-    lhs, op0, rhs = em.groups()
-    eq = (f"(to_json(try_cast(({lhs}) as variant)) <=> "
-          f"to_json(try_cast(({rhs}) as variant)))")
-    repl = eq if op0 == "=" else f"(NOT {eq})"
-    for cand in (f"{lhs} {op0} {rhs}",
-                 f"{lhs} {'==' if op0 == '=' else op0} {rhs}"):
-        # whitespace-insensitive match: Spark message text normalizes
-        # ", " spacing
-        pat = r"\s*".join(
-            re.escape(t) for t in dialect._tokens(cand) if not t.isspace())
-        new_tq, nsub = re.subn(pat, repl, tq, count=1)
-        if nsub:
-            return new_tq
-    return None
-
-
 def incomparable_types(con, query, tq, msg):
     """Explicit comparisons of incomparable types: DuckDB folds the
     constant side at bind time and raises a Conversion/Binder error —
@@ -2902,10 +2563,8 @@ FALLBACKS = (
     null_interval_setop, time_interval_arith, join_lateral_keyword,
     window_alias, boolean_filter, window_over_rollup, concat_struct_order,
     positional_struct_subscript, numeric_if, alias_in_aggregate, sum_boolean,
-    avg_temporal, interval_avg_sum, sum_overflow, bit_aggregate, bit_count,
-    lttb_timestamp, list_length, median_orderable, range_lateral,
-    derived_alias_padding, setop_string_literal, select_alias,
-    select_alias_only, setop_order_refs, implicit_lateral,
-    bare_table_in_order, natural_join_runtime_cast, variant_equality,
-    incomparable_types,
+    avg_temporal, interval_avg_sum, bit_aggregate, bit_count, lttb_timestamp,
+    list_length, median_orderable, range_lateral, derived_alias_padding,
+    setop_string_literal, select_alias, setop_order_refs,
+    bare_table_in_order, natural_join_runtime_cast, incomparable_types,
 )

@@ -113,6 +113,47 @@ def test_recursive_using_key_aggregate(con):
     assert rows == [(1, 5)]
 
 
+@pytest.mark.parametrize("base", ["SELECT 0", "SELECT i FROM range(2001) r(i)"])
+def test_recursive_round_cap_does_not_depend_on_base_size(con, monkeypatch, base):
+    # one loop, one cap: a recursion of one new row per round answers
+    # like pip duckdb below the cap and raises past it, for a one-row
+    # base and for a base too big to keep on the driver alike
+    import duckdb
+
+    from duckdb_spark.operators import recursive
+
+    monkeypatch.setattr(recursive, "MAX_ROUNDS", 8)
+    monkeypatch.setattr(recursive, "INLINE_ROWS", 2000)
+    lo = 0 if base == "SELECT 0" else 2000
+
+    def q(rounds):
+        return (f"WITH RECURSIVE t(x) AS ({base} UNION SELECT x + 1 FROM t "
+                f"WHERE x >= {lo} AND x < {lo + rounds}) "
+                f"SELECT count(*) AS n FROM t")
+
+    assert _vals(con, q(7)) == duckdb.sql(q(7)).fetchall()
+    with pytest.raises(RuntimeError, match="no fixpoint after 8 rounds"):
+        con.sql(q(8))
+
+
+def test_recursive_union_treats_nan_rows_as_equal(con):
+    # UNION compares NaN equal to NaN, so the recursion ends at once
+    rows = _vals(con, "WITH RECURSIVE t(x) AS (SELECT 'NaN'::DOUBLE UNION "
+                      "SELECT x FROM t) SELECT count(*) AS n FROM t")
+    assert rows == [(1,)]
+
+
+def test_recursive_limit_ends_only_streaming_tails(con):
+    # a LIMIT read straight off the CTE ends an unbounded recursion, as
+    # in pip duckdb; an aggregate over the CTE still sees every row
+    rows = _vals(con, "WITH RECURSIVE t(x) AS (SELECT 1 UNION "
+                      "SELECT x + 1 FROM t) SELECT x FROM t LIMIT 5")
+    assert len(rows) == 5
+    assert _vals(con, "WITH RECURSIVE t(x) AS (SELECT 1 UNION SELECT x + 1 "
+                      "FROM t WHERE x < 40) SELECT max(x) AS m FROM t "
+                      "LIMIT 1") == [(40,)]
+
+
 def test_recursive_term_rejects_order_by(con):
     with pytest.raises(Exception, match="(?i)recursive"):
         con.sql(

@@ -339,8 +339,6 @@ def test_recursive_cte_using_key_shortest_path(spark):
     REPLACES the per-key row instead of accumulating (reference
     physical_recursive_cte_key_join.cpp). Plain UNION recursion on this
     graph would keep every intermediate distance."""
-    from duckdb_spark.operators.recursive import recursive_cte_using_key
-
     edges = spark.createDataFrame(
         [(0, 1, 4.0), (0, 2, 1.0), (2, 1, 2.0), (1, 3, 1.0), (2, 3, 5.0)],
         "src int, dst int, w double",
@@ -361,7 +359,7 @@ def test_recursive_cte_using_key_shortest_path(spark):
         ).filter(F.col("d_old").isNull() | (F.col("d") < F.col("d_old"))).select("node", "d")
         return improved
 
-    out = recursive_cte_using_key(dist, relax, ["node"])
+    out = recursive_cte(dist, relax, key=["node"])
     got = {r.node: r.d for r in out.collect()}
     assert got == {0: 0.0, 1: 3.0, 2: 1.0, 3: 4.0}
 

@@ -129,6 +129,11 @@ STEP_CASES = {
     "sql_table_functions": Case(
         "sql_table_functions",
         "SELECT count(*) AS n FROM read_parquet('{sf}/nation.parquet')"),
+    # the reader's own error surfaces, not an unresolved table function
+    "sql_table_functions-missing_file": Case(
+        "sql_table_functions",
+        "SELECT * FROM read_parquet('{data}/pin_no_such.parquet')",
+        error="pin_no_such.parquet"),
     "columns_star": Case(
         "columns_star", "SELECT COLUMNS('r_.*key') FROM region"),
     "using_star_order": Case(
@@ -302,7 +307,6 @@ FALLBACK_CASES = {
         "SELECT * FROM (SELECT * FROM region) t(a) ORDER BY 1 LIMIT 2"),
     "setop_string_literal": Case(
         "setop_string_literal", "SELECT [1, 2] AS l UNION ALL SELECT '[3]'"),
-    # two aliases: select_alias_only would inline just the one the error names
     "select_alias": Case(
         "select_alias",
         "SELECT n_nationkey AS k, n_regionkey AS r FROM nation "
@@ -312,7 +316,7 @@ FALLBACK_CASES = {
         "SELECT n_nationkey * 2 AS d FROM nation UNION ALL SELECT r_regionkey * 2 "
         "FROM region ORDER BY n_nationkey * 2 LIMIT 3"),
     # a comma-joined subquery naming an earlier FROM item: Spark binds it
-    # laterally itself, so implicit_lateral is not reached
+    # laterally itself
     "no_fallback-comma_lateral": Case(
         None,
         "SELECT i, j FROM (VALUES (1), (2)) t(i), (SELECT i + 1 AS j) s ORDER BY i"),
@@ -509,6 +513,12 @@ PASS_CASES = {
         "group_by_all_having",
         "SELECT n_regionkey, count(*) AS c FROM nation GROUP BY ALL "
         "HAVING n_nationkey > 20"),
+    # c becomes a grouping key; b, only inside an aggregate, does not
+    "group_by_all_having-aggregate_only": Case(
+        "group_by_all_having",
+        "SELECT a, count(*) AS n FROM (VALUES (1, 1, 0), (1, 5, 0), "
+        "(2, 2, 1), (2, 9, 1)) t(a, b, c) GROUP BY ALL "
+        "HAVING max(b) > 3 AND c >= 0"),
     "plain_grouping": Case(
         "plain_grouping",
         "SELECT n_regionkey, grouping(n_regionkey) AS g FROM nation "
@@ -591,6 +601,13 @@ PASS_CASES = {
         "cast_types", "SELECT CAST(n_nationkey AS HUGEINT) AS h FROM nation"),
     "float_int_casts": Case(
         "float_int_casts", "SELECT CAST(3.7::DOUBLE AS INTEGER) AS i"),
+    # DOUBLE rounds half to even; DECIMAL half away from zero
+    "float_int_casts-half_even": Case(
+        "float_int_casts",
+        "SELECT CAST(2.5::DOUBLE AS INTEGER) AS a, "
+        "CAST(-2.5::DOUBLE AS INTEGER) AS b, CAST(5 / 2 AS INTEGER) AS c, "
+        "CAST(2.5 AS INTEGER) AS d, CAST(-2.5 AS INTEGER) AS e, "
+        "TRY_CAST(sqrt(6.25) AS INTEGER) AS f"),
     "brackets": Case("brackets", "SELECT [1, 2, 3][2] AS e"),
     "struct_literals": Case("struct_literals", "SELECT {{'k': 1}}.k AS v"),
     "division": Case("division", "SELECT n_nationkey / 4 AS d FROM nation"),
@@ -825,11 +842,7 @@ def test_every_step_and_fallback_is_pinned():
 
     pinned = {c.fired for c in (*STEP_CASES.values(), *FALLBACK_CASES.values())}
     pinned.discard(None)
-    # reachable only from execution, after Connection.sql has returned, or
-    # never succeeding on this Spark build (see CHANGES.md)
-    unpinned = {"sum_overflow", "select_alias_only", "implicit_lateral",
-                "variant_equality"}
-    assert {f.__name__ for f in (*STEPS, *FALLBACKS)} - unpinned == pinned
+    assert {f.__name__ for f in (*STEPS, *FALLBACKS)} == pinned
 
 
 def test_every_translate_pass_is_pinned():
