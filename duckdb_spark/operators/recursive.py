@@ -12,13 +12,19 @@ RECURSIVE form, from SQL (`statements`) or from DataFrames, runs through
 - the round cap, `MAX_ROUNDS`;
 - lineage: a distributed round is cut by `materialize`, or the plan tree
   grows with every round;
-- where a round runs. While the accumulated rows number at most
-  `INLINE_ROWS` (and have scalar types) they stay on the driver: UNION
-  dedupes in a Python set and the next working table goes back to Spark
-  as VALUES text, which Spark folds into the step's plan with no job
-  (25–40 ms a round, against 180–270 ms for a checkpointed round, on a
-  4-core host). Each working row is rendered once, so the text costs
-  O(result) in all. Past that size, or under USING KEY, rounds are
+- where a round runs. While each round has at most `INLINE_ROUND_ROWS`
+  rows, the rows so far number at most `INLINE_ROWS` and all have
+  scalar types, they stay on the driver: UNION dedupes in a Python set
+  and the next working table goes back to Spark as VALUES text, which
+  Spark folds into the step's plan with no job. Spark parses that text
+  at a cost that grows with the rows it holds, so the inline round wins
+  only for small rounds: on a 4-core host, 80 ms against 250 ms for a
+  checkpointed round of 2,000 rows, even at 5,000 rows, 460 ms against
+  320 ms at 10,000 rows. The rows so far are rendered once more for the
+  result (49 rounds of 1,000 rows, 50,000 in all, take 5.9 s inline
+  against 18.8 s checkpointed) and every 16th round for `until`; a
+  `state_view` renders them every round, so with one they count as a
+  round's rows. Past either bound, or under USING KEY, rounds are
   checkpointed and the result stays partitioned.
 """
 
@@ -34,6 +40,9 @@ from pyspark.sql import types as T
 
 # rounds before a recursion counts as runaway (the reference has no cap)
 MAX_ROUNDS = 20_000
+# a round stays on the driver while it has at most INLINE_ROUND_ROWS
+# rows and the rows so far number at most INLINE_ROWS (timings above)
+INLINE_ROUND_ROWS = 5_000
 INLINE_ROWS = 50_000
 # Spark's LogicalRDD.rewriteStatsAndConstraints throws on unions of
 # checkpointed frames (stale exprIds); the loop gains nothing from
@@ -125,24 +134,35 @@ def _dedupe_key(row) -> tuple:
     return tuple(_NAN if v != v else v for v in row)
 
 
-def _latest_by_key(hist: DataFrame, key: list[str]) -> DataFrame:
-    """USING KEY state: one row per key, with the latest round's other
-    columns. NULL keys are equal, as in the reference's keyed hash
-    table, and a key keeps the form it was first stored in
-    (recursive_cte_key_probe.test:102: a -0.0 key probed with +0.0
-    stays -0.0)."""
+def _keyed_state(hist: DataFrame, key: list[str],
+                 aggregates: Callable[[DataFrame], DataFrame] | None
+                 ) -> DataFrame:
+    """USING KEY state: one row per key. `aggregates(hist)`, if given,
+    returns the columns kept by aggregate entries, one row per key with
+    the keys as `__key0`, `__key1`, …; every other column takes the
+    latest round's value, a NULL included. NULL keys are equal, as in
+    the reference's keyed hash table, and a key keeps the form it was
+    first stored in (recursive_cte_key_probe.test:102: a -0.0 key probed
+    with +0.0 stays -0.0)."""
     def col(name: str):
         return F.col("`" + name.replace("`", "``") + "`")
 
     keys = {k.lower() for k in key}
     cols = [c for c in hist.columns if c != "__iter"]
-    return hist.groupBy(
+    agg = aggregates(hist) if aggregates is not None else None
+    done = {c.lower() for c in agg.columns} if agg is not None else set()
+    state = hist.groupBy(
         *[col(k).alias(f"__key{i}") for i, k in enumerate(key)]
     ).agg(*[
         (F.min_by if c.lower() in keys else F.max_by)(
             col(c), "__iter").alias(c)
-        for c in cols
-    ]).select(*map(col, cols))
+        for c in cols if c.lower() not in done
+    ])
+    if agg is not None:
+        state = state.alias("s").join(agg.alias("a"), [
+            F.col(f"s.__key{i}").eqNullSafe(F.col(f"a.__key{i}"))
+            for i in range(len(key))])
+    return state.select(*map(col, cols))
 
 
 def recursive_cte(
@@ -150,7 +170,7 @@ def recursive_cte(
     step: Callable[[DataFrame], DataFrame],
     distinct: bool = True,
     key: list[str] | None = None,
-    keyed_state: Callable[[DataFrame], DataFrame] | None = None,
+    aggregates: Callable[[DataFrame], DataFrame] | None = None,
     state_view: str | None = None,
     until: Callable[[DataFrame], bool] | None = None,
 ) -> DataFrame:
@@ -162,11 +182,11 @@ def recursive_cte(
       new row. `distinct=False` is UNION ALL: it ends when a round
       yields no rows.
     - `key` makes it USING KEY: the result is a keyed state in which a
-      round's rows replace the stored rows with the same key.
-      `keyed_state(history)` derives the state from every row produced,
-      tagged with its round in `__iter`; the default keeps the latest
-      round's values. The loop also ends when a round leaves the state
-      unchanged.
+      round's rows replace the stored rows with the same key. The state
+      is derived from every row produced, tagged with its round in
+      `__iter`; `aggregates(history)` supplies the columns of aggregate
+      entries (see `_keyed_state`). The loop also ends when a round
+      leaves the state unchanged.
     - `state_view` names a temp view bound to the rows so far (the keyed
       state under USING KEY) before each round, for steps that read
       them; it is dropped at the end.
@@ -175,9 +195,8 @@ def recursive_cte(
     """
     spark = base.sparkSession
     keyed = key is not None
-    if keyed and keyed_state is None:
-        def keyed_state(h):
-            return _latest_by_key(h, key)
+    if aggregates is not None and not keyed:
+        raise ValueError("recursive_cte: aggregates need a key")
     old = spark.conf.get(_CONSTRAINTS, "true")
     spark.conf.set(_CONSTRAINTS, "false")
     try:
@@ -186,15 +205,15 @@ def recursive_cte(
         if keyed:
             hist = materialize(base.withColumn("__iter", F.lit(0)))
             working = hist.drop("__iter")
-            state = materialize(keyed_state(hist))
+            state = materialize(_keyed_state(hist, key, aggregates))
         else:
             hist = state = working = materialize(
                 base.distinct() if distinct else base)
             if all(f.dataType.simpleString() in _INLINE_TYPES
                    or f.dataType.simpleString().startswith("decimal")
                    for f in hist.schema.fields):
-                got = hist.limit(INLINE_ROWS + 1).collect()
-                if len(got) <= INLINE_ROWS:
+                got = hist.limit(INLINE_ROUND_ROWS + 1).collect()
+                if len(got) <= INLINE_ROUND_ROWS:
                     rows, seen = got, set(map(_dedupe_key, got))
                     working = _values(spark, hist.schema, rows)
 
@@ -208,8 +227,10 @@ def recursive_cte(
                 so_far().createOrReplaceTempView(state_view)
             nxt = step(working).toDF(*cols)
             if rows is not None:
-                got = nxt.limit(INLINE_ROWS - len(rows) + 1).collect()
-                if len(rows) + len(got) <= INLINE_ROWS:
+                room = INLINE_ROUND_ROWS if state_view else INLINE_ROWS
+                cap = min(INLINE_ROUND_ROWS, room - len(rows))
+                got = nxt.limit(cap + 1).collect()
+                if len(got) <= cap:
                     if distinct:
                         fresh = {_dedupe_key(r): r for r in got}
                         got = [r for k, r in fresh.items() if k not in seen]
@@ -219,7 +240,7 @@ def recursive_cte(
                     rows += got
                     working = _values(spark, hist.schema, got)
                     continue
-                # the rows outgrew the driver: checkpointed from here on
+                # a round outgrew the driver: checkpointed from here on
                 hist = state = materialize(so_far())
                 rows = None
             if distinct:
@@ -230,7 +251,7 @@ def recursive_cte(
             hist = materialize(hist.unionByName(
                 nxt.withColumn("__iter", F.lit(it)) if keyed else nxt))
             if keyed:
-                new = materialize(keyed_state(hist))
+                new = materialize(_keyed_state(hist, key, aggregates))
                 same = (new.exceptAll(state).isEmpty()
                         and state.exceptAll(new).isEmpty())
                 state = new

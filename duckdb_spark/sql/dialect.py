@@ -197,17 +197,6 @@ def _sql_scalar(v) -> str:
     return repr(v)
 
 
-
-
-
-
-
-
-_DOUBLE_FNS = {"PERCENT_RANK", "CUME_DIST", "AVG", "RANDOM", "ROUND"}
-
-
-
-
 def _values_row_ranges(toks: list[str]) -> list[tuple[int, int]]:
     """Paren spans of every VALUES row constructor in the token list."""
     ranges = []

@@ -11,7 +11,6 @@ from duckdb_spark import state
 from duckdb_spark.sql.dialect import (  # noqa: E402 — bound at the
     # END of dialect.py's module body (ordered-pipeline split), so
     # every helper below is already defined when this executes
-    _DOUBLE_FNS,
     _FLOAT_MAX,
     _NESTED_HINT_RE,
     _NONFN_WORDS,
@@ -37,11 +36,17 @@ from duckdb_spark.sql.dialect import (  # noqa: E402 — bound at the
 
 
 _INT_CAST_TYPES = {"TINYINT", "SMALLINT", "INT", "INTEGER", "BIGINT", "LONG"}
-# operand text DuckDB types DOUBLE: a double-returning function, a
+# functions DuckDB types DOUBLE whatever their arguments (round() keeps
+# its argument's type, so it is not one)
+_DOUBLE_FNS = (
+    "percent_rank", "cume_dist", "avg", "mean", "random", "log", "log10",
+    "log2", "ln", "sqrt", "cbrt", "exp", "pow", "power", "sin", "cos", "tan",
+    "asin", "acos", "atan", "atan2", "radians", "degrees",
+)
+# operand text DuckDB types DOUBLE: a call to one of `_DOUBLE_FNS`, a
 # division, a cast to a floating type or an exponent literal
 _DOUBLE_OPERAND = re.compile(
-    r"(?i)\b(log|log10|log2|ln|sqrt|cbrt|exp|pow|power|avg|mean|sin|cos|"
-    r"tan|asin|acos|atan|atan2|radians|degrees|random)\s*\(|/"
+    r"(?i)\b(" + "|".join(_DOUBLE_FNS) + r")\s*\(|/"
     r"|\bAS\s+(double|float|real)\b|\d[eE][+-]?\d")
 
 
@@ -62,9 +67,8 @@ def _rewrite_float_int_casts(toks: list[str]) -> list[str]:
     NumericTryCast via std::nearbyint). Rewriting every int cast would
     risk precision loss on int64-valued expressions (rint goes through
     DOUBLE, exact only to 2^53), so only casts whose operand is visibly
-    fractional — a top-level `*` or `/`, a double-returning function
-    (percent_rank, cume_dist, avg, sqrt, …) or a cast to a floating
-    type — get the rint treatment."""
+    fractional — a top-level `*` or a `_DOUBLE_OPERAND` — get the rint
+    treatment."""
     out = list(toks)
     i = 0
     while i < len(out):
@@ -96,9 +100,7 @@ def _rewrite_float_int_casts(toks: list[str]) -> list[str]:
                 depth += 1
             elif t == ")":
                 depth -= 1
-            elif depth == 0 and t in ("*", "/"):
-                frac = True
-            elif re.match(r"^[A-Za-z_]", t) and t.upper() in _DOUBLE_FNS:
+            elif depth == 0 and t == "*":
                 frac = True
         etext = "".join(expr).strip()
         if not (frac or _DOUBLE_OPERAND.search(etext)):

@@ -1257,14 +1257,15 @@ def _recursive_cte_sql(con, rec: dict):
         return con.sql(step_sql).df()
 
     # a recursion read through a LIMIT stops once the tail has its rows,
-    # as the reference's pipeline does (so an unbounded one ends); only a
-    # tail with no blocking or non-monotone operator can be answered
-    # from the rows so far, and keyed rows are replaced, not added
-    lim = re.search(r"(?is)\bLIMIT\s+(\d+)\b", tail)
-    if rec["key"] or dialect._COMMON_AGG_RE.search(tail) or re.search(
-            r"(?is)\b(ORDER|GROUP|HAVING|DISTINCT|OVER|QUALIFY|EXCEPT|"
-            r"INTERSECT|NOT)\b", tail):
-        lim = None
+    # as the reference's pipeline does (so an unbounded one ends). Only
+    # a tail that reads the CTE row by row (`SELECT <columns> FROM name
+    # [WHERE …] LIMIT n`, no call, subquery or clause past WHERE) can be
+    # answered from the rows so far; keyed rows are replaced, not added
+    lim = None if rec["key"] else re.fullmatch(
+        rf"(?is)\s*SELECT\s+(?!DISTINCT\b)[^()]*?\s+FROM\s+{re.escape(internal)}"
+        r"(?:\s+(?:AS\s+)?(?!WHERE\b|LIMIT\b)\w+)?"
+        r"(?:\s+WHERE\s+(?:(?!\b(?:SELECT|GROUP|HAVING|WINDOW|QUALIFY|"
+        r"ORDER)\b)[^;])*?)?\s+LIMIT\s+(\d+)\s*;?\s*", tail)
 
     def limit_met(acc: DataFrame) -> bool:
         acc.createOrReplaceTempView(internal)
@@ -1299,14 +1300,15 @@ def _recursive_cte_sql(con, rec: dict):
             # (recursive_cte_key_aggregation.test:116)
             plain.append(k)
 
+    plain_lower = {p.lower() for p in plain}
+
     def keyed_aggregates(hist: DataFrame) -> DataFrame:
-        parts = [f"min_by({k}, __iter) AS {k}" for k in plain]
+        # the columns of aggregate entries, per key; the loop gives the
+        # other columns the latest round's values
+        parts = [f"{k} AS __key{i}" for i, k in enumerate(plain)]
         for c in base.columns:
-            if c.lower() in (p.lower() for p in plain):
-                continue
             expr = aggs.get(c.lower())
-            if expr is None:
-                parts.append(f"max_by({c}, __iter) AS {c}")
+            if expr is None or c.lower() in plain_lower:
                 continue
             # ORDER-SENSITIVE aggregates consume the produced rows in
             # INSERTION order (reference keyed-aggregate state appends
@@ -1322,7 +1324,7 @@ def _recursive_cte_sql(con, rec: dict):
         return con.sql(
             f"SELECT {', '.join(parts)} FROM {internal}__hist "
             f"GROUP BY {', '.join(plain)}"
-        ).df().select(*base.columns)
+        ).df()
 
     acc = recursive.recursive_cte(
         base, step,
@@ -1331,7 +1333,7 @@ def _recursive_cte_sql(con, rec: dict):
         # (recursive_cte_key_aggregation.test:128)
         distinct=rec["distinct"] and not aggs,
         key=[k.strip('"') for k in plain] or None,
-        keyed_state=keyed_aggregates if aggs else None,
+        aggregates=keyed_aggregates if aggs else None,
         state_view=recurring if recurring in step_sql else None,
         until=limit_met if lim else None,
     )

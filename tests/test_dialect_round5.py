@@ -113,6 +113,28 @@ def test_recursive_using_key_aggregate(con):
     assert rows == [(1, 5)]
 
 
+def test_recursive_using_key_keeps_latest_null_beside_aggregates(con):
+    # a non-key column takes the latest round's value, a NULL included,
+    # with and without aggregate entries beside it
+    for key in ("a", "a, sum(b)"):
+        rows = _vals(con, f"""
+            WITH RECURSIVE tbl(a, b, c) USING KEY ({key}) AS (
+                SELECT 1, 5, 'x' UNION ALL
+                SELECT a, b - 1, NULL FROM tbl WHERE b > 3
+            ) TABLE tbl
+        """)
+        assert rows == [(1, 12 if "sum" in key else 3, None)], key
+
+
+def test_recursive_using_key_rejects_aggregates_without_key(con):
+    with pytest.raises(ValueError, match="requires at least one key column"):
+        con.sql("""
+            WITH RECURSIVE tbl(a, b) USING KEY (max(b)) AS (
+                SELECT 1, 5 UNION SELECT a, b - 1 FROM tbl WHERE b > 0
+            ) TABLE tbl
+        """)
+
+
 @pytest.mark.parametrize("base", ["SELECT 0", "SELECT i FROM range(2001) r(i)"])
 def test_recursive_round_cap_does_not_depend_on_base_size(con, monkeypatch, base):
     # one loop, one cap: a recursion of one new row per round answers
@@ -123,7 +145,7 @@ def test_recursive_round_cap_does_not_depend_on_base_size(con, monkeypatch, base
     from duckdb_spark.operators import recursive
 
     monkeypatch.setattr(recursive, "MAX_ROUNDS", 8)
-    monkeypatch.setattr(recursive, "INLINE_ROWS", 2000)
+    monkeypatch.setattr(recursive, "INLINE_ROUND_ROWS", 2000)
     lo = 0 if base == "SELECT 0" else 2000
 
     def q(rounds):
@@ -152,6 +174,14 @@ def test_recursive_limit_ends_only_streaming_tails(con):
     assert _vals(con, "WITH RECURSIVE t(x) AS (SELECT 1 UNION SELECT x + 1 "
                       "FROM t WHERE x < 40) SELECT max(x) AS m FROM t "
                       "LIMIT 1") == [(40,)]
+    # an outer join keeps its row count while its values are still
+    # missing: the rows so far do not answer it
+    import duckdb
+
+    q = ("WITH RECURSIVE t(x) AS (SELECT 1 UNION SELECT x + 1 FROM t "
+         "WHERE x < 100) SELECT u.a, t.x FROM (VALUES (1), (50), (100)) "
+         "u(a) LEFT JOIN t ON t.x = u.a LIMIT 3")
+    assert sorted(_vals(con, q)) == sorted(duckdb.sql(q).fetchall())
 
 
 def test_recursive_term_rejects_order_by(con):

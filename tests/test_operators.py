@@ -364,6 +364,12 @@ def test_recursive_cte_using_key_shortest_path(spark):
     assert got == {0: 0.0, 1: 3.0, 2: 1.0, 3: 4.0}
 
 
+def test_recursive_cte_aggregates_need_a_key(spark):
+    base = spark.createDataFrame([(1, 5)], "a int, b int")
+    with pytest.raises(ValueError, match="aggregates need a key"):
+        recursive_cte(base, lambda w: w, aggregates=lambda h: h)
+
+
 def test_shingle_hashes60_top_bits_equal_md5_prefix_base(spark):
     """The single-pass pipeline derives the 32-bit signature base as
     h60 >> 28; it must equal conv(substr(md5,1,8),16,10) — the value the
