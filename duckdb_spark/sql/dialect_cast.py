@@ -36,18 +36,26 @@ from duckdb_spark.sql.dialect import (  # noqa: E402 — bound at the
 
 
 _INT_CAST_TYPES = {"TINYINT", "SMALLINT", "INT", "INTEGER", "BIGINT", "LONG"}
-# functions DuckDB types DOUBLE whatever their arguments (round() keeps
-# its argument's type, so it is not one)
+# functions DuckDB types DOUBLE whatever their arguments
 _DOUBLE_FNS = (
     "percent_rank", "cume_dist", "avg", "mean", "random", "log", "log10",
     "log2", "ln", "sqrt", "cbrt", "exp", "pow", "power", "sin", "cos", "tan",
     "asin", "acos", "atan", "atan2", "radians", "degrees",
 )
-# operand text DuckDB types DOUBLE: a call to one of `_DOUBLE_FNS`, a
-# division, a cast to a floating type or an exponent literal
 _DOUBLE_OPERAND = re.compile(
     r"(?i)\b(" + "|".join(_DOUBLE_FNS) + r")\s*\(|/"
     r"|\bAS\s+(double|float|real)\b|\d[eE][+-]?\d")
+
+
+def _double_operand(text: str) -> bool:
+    """Whether DuckDB types the operand `text` DOUBLE, as far as the text
+    shows: a call to one of `_DOUBLE_FNS`, a division, a cast to a
+    floating type or an exponent literal. round() keeps its argument's
+    type, so it counts only around no decimal literal (a column, taken
+    as DOUBLE)."""
+    return bool(_DOUBLE_OPERAND.search(text) or (
+        re.search(r"(?i)\bround\s*\(", text)
+        and not re.search(r"\d\.\d", text)))
 
 
 def _round_decimal(operand: str) -> str:
@@ -56,7 +64,7 @@ def _round_decimal(operand: str) -> str:
     visibly decimal operand (a decimal literal, nothing DOUBLE) is
     wrapped: DOUBLE operands round half to even, which
     `_rewrite_float_int_casts` writes."""
-    if re.search(r"\d\.\d", operand) and not _DOUBLE_OPERAND.search(operand):
+    if re.search(r"\d\.\d", operand) and not _double_operand(operand):
         return f"round({operand})"
     return operand
 
@@ -67,7 +75,7 @@ def _rewrite_float_int_casts(toks: list[str]) -> list[str]:
     NumericTryCast via std::nearbyint). Rewriting every int cast would
     risk precision loss on int64-valued expressions (rint goes through
     DOUBLE, exact only to 2^53), so only casts whose operand is visibly
-    fractional — a top-level `*` or a `_DOUBLE_OPERAND` — get the rint
+    fractional — a top-level `*` or a `_double_operand` — get the rint
     treatment."""
     out = list(toks)
     i = 0
@@ -103,7 +111,7 @@ def _rewrite_float_int_casts(toks: list[str]) -> list[str]:
             elif depth == 0 and t == "*":
                 frac = True
         etext = "".join(expr).strip()
-        if not (frac or _DOUBLE_OPERAND.search(etext)):
+        if not (frac or _double_operand(etext)):
             i = op + 1
             continue
         out[op + 1:a + op + 1] = _tokens(
