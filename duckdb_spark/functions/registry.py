@@ -224,13 +224,10 @@ def register_sql_functions(spark: SparkSession) -> list[str]:
     # typeof() renders DuckDB type text (reference LogicalType::ToString):
     # post-process Spark's typeof string; tiny constant strings, so a
     # plain Python UDF is fine (not a data path)
-    try:
-        from duckdb_spark.types import duck_type_text
+    from duckdb_spark.types import duck_type_text
 
-        state.register_udf(spark, "__ducktype", duck_type_text, "string")
-        created.append("typeof")
-    except Exception:
-        pass
+    state.register_udf(spark, "__ducktype", duck_type_text, "string")
+    created.append("typeof")
     failed = []
     for name, ddl in macros.items():
         try:

@@ -57,17 +57,8 @@ _NAN = object()
 
 def materialize(df: DataFrame) -> DataFrame:
     """Compute `df` once and truncate its lineage (recursive rounds,
-    MATERIALIZED CTEs). localCheckpoint is the cheap path; Spark's
-    rewriteStatsAndConstraints can throw NoSuchElementException
-    checkpointing a union of already-checkpointed frames (constraint
-    exprId mismatch) — rebuilding from the JVM RDD drops the stale
-    constraints, then checkpoint normally."""
-    try:
-        return df.localCheckpoint(eager=True)
-    except Exception:
-        df = df.persist()
-        df.count()
-        return df
+    MATERIALIZED CTEs, numbered LATERAL outer rows)."""
+    return df.localCheckpoint(eager=True)
 
 
 def sql_literal(v, dt) -> str:

@@ -178,10 +178,13 @@ class Connection:
         # __dkrender is reachable from the MAIN translate pass (nested →
         # VARCHAR casts render DuckDB-style), so register it eagerly
         from duckdb_spark.sql.textcast import render_duck
+        from duckdb_spark.types import duck_type_text
 
         state.register_udf(
             self.spark, "__dkrender",
             lambda v: None if v is None else render_duck(v), "string")
+        # typeof() renders DuckDB type text through __ducktype
+        state.register_udf(self.spark, "__ducktype", duck_type_text, "string")
         # nested-comparison UDFs are reachable from the MAIN translate pass
         # too (rewrite_nested_comparisons); worker threads' active-session
         # lookup can miss, so bind them to THIS session eagerly

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from duckdb_spark import state
 from duckdb_spark.operators import recursive
-from duckdb_spark.sql import dialect
+from duckdb_spark.sql import dialect, lateral
 from duckdb_spark.sql.columns_expr import _CLAUSE_END
 from duckdb_spark.sql.textcast import TextCastError
 
@@ -1051,169 +1051,12 @@ def positional_ref(con, query):
 
 
 def lateral_recursive(con, query):
-    """`SELECT … FROM <outer>, LATERAL (WITH RECURSIVE …) [alias]
-    [tail]` — the recursion is correlated on outer columns, which no
-    Spark shape supports. Driver loop: bind each outer row's columns
-    as literals inside the lateral body, run the recursive CTE, and
-    union the cross products (reference correlated recursive CTE;
-    outer side capped at 1000 rows — these are generator-style
-    probes, not fact scans)."""
-    if not re.search(r"(?is)\bLATERAL\s*\(\s*WITH\s+RECURSIVE\b", query):
-        return query
-    from duckdb_spark.sql.dialect import _match_paren, _tokens
-
-    toks = _tokens(query)
-    lat = next(
-        (k for k, t in enumerate(toks)
-         if re.match(r"^[A-Za-z_]", t) and t.upper() == "LATERAL"),
-        None,
-    )
-    if lat is None:
-        return query
-    op = lat + 1
-    while op < len(toks) and toks[op].isspace():
-        op += 1
-    if op >= len(toks) or toks[op] != "(":
-        return query
-    oc = _match_paren(toks, op)
-    if oc < 0:
-        return query
-    inner = "".join(toks[op + 1:oc])
-    # outer region: top-level FROM … up to the comma before LATERAL
-    depth = 0
-    fromi = -1
-    for k in range(lat):
-        t = toks[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and re.match(r"^[A-Za-z_]", t) and \
-                t.upper() == "FROM":
-            fromi = k
-    if fromi < 0:
-        return query
-    comma = -1
-    depth = 0
-    for k in range(fromi, lat):
-        t = toks[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif t == "," and depth == 0:
-            comma = k
-    if comma < 0:
-        return query
-    sel_start = next(
-        (k for k, t in enumerate(toks)
-         if re.match(r"^[A-Za-z_]", t) and t.upper() == "SELECT"),
-        None,
-    )
-    if sel_start is None or sel_start > fromi:
-        return query
-    sel = "".join(toks[sel_start + 1:fromi]).strip()
-    outer_src = "".join(toks[fromi + 1:comma]).strip()
-    # optional alias (+ column list) after the lateral group
-    k = oc + 1
-    while k < len(toks) and toks[k].isspace():
-        k += 1
-    if k < len(toks) and re.match(r"^[A-Za-z_]", toks[k]) and \
-            toks[k].upper() == "AS":
-        k += 1
-        while k < len(toks) and toks[k].isspace():
-            k += 1
-    inner_cols: list[str] | None = None
-    if k < len(toks) and re.match(r"^[A-Za-z_]\w*$", toks[k]) and \
-            toks[k].upper() not in ("ORDER", "WHERE", "GROUP", "LIMIT",
-                                    "QUALIFY", "HAVING", "UNION"):
-        k += 1  # alias name (scope is flat here)
-        while k < len(toks) and toks[k].isspace():
-            k += 1
-        if k < len(toks) and toks[k] == "(":
-            cc = _match_paren(toks, k)
-            if cc > 0:
-                inner_cols = [
-                    c.strip() for c in
-                    "".join(toks[k + 1:cc]).split(",")
-                ]
-                k = cc + 1
-    tail = "".join(toks[k:]).strip()
-    outer_df = con.sql(f"SELECT * FROM {outer_src}").df()
-    outer_rows = outer_df.limit(1001).collect()
-    if len(outer_rows) > 1000:
-        raise ValueError(
-            "correlated recursive CTE: outer side exceeds the "
-            "1000-row driver-loop cap"
-        )
-    o_names = outer_df.columns
-    o_types = [f.dataType for f in outer_df.schema.fields]
-    # Names the lateral body declares itself — recursive-CTE names and
-    # column lists, SELECT aliases — shadow same-named outer columns;
-    # substituting into them breaks the CTE's own references (ADVICE
-    # r07 item 4).
-    shadowed: set[str] = set()
-    for m in re.finditer(
-        r"(?is)\bRECURSIVE\s+([A-Za-z_]\w*)\s*\(([^()]*)\)", inner
-    ):
-        shadowed.add(m.group(1).lower())
-        shadowed.update(
-            c.strip().strip('`"').lower()
-            for c in m.group(2).split(",") if c.strip()
-        )
-    shadowed.update(
-        m.group(1).lower()
-        for m in re.finditer(r"(?is)\bAS\s+([A-Za-z_]\w*)", inner)
-    )
-    # outer alias (for dot-qualified correlated refs like alias.col)
-    oalias = None
-    ma = re.search(
-        r"(?is)(?:\bAS\s+)?([A-Za-z_]\w*)\s*"
-        r"(?:\(\s*[A-Za-z_][\w\s,]*\))?\s*$", outer_src,
-    )
-    if ma and ma.group(1).upper() not in ("WHERE", "ON", "USING"):
-        oalias = ma.group(1)
-    combined = []
-    res_schema = None
-    for row in outer_rows:
-        bound = inner
-        for nm, val, dt in zip(o_names, row, o_types):
-            lit = recursive.sql_literal(val, dt)
-            if oalias:
-                bound = re.sub(
-                    rf"(?is)(?<![\w.]){re.escape(oalias)}\s*\.\s*"
-                    rf"{re.escape(nm)}\b(?!\s*\.)",
-                    lit.replace("\\", "\\\\"), bound,
-                )
-            if nm.lower() not in shadowed:
-                bound = re.sub(
-                    rf"(?is)(?<![\w.]){re.escape(nm)}(?!\s*\()\b(?!\s*\.)",
-                    lit.replace("\\", "\\\\"), bound,
-                )
-        try:
-            r = con.sql(bound)
-            if r is None:
-                return query
-            rdf = r.df()
-            if inner_cols:
-                rdf = rdf.toDF(*(
-                    inner_cols + rdf.columns[len(inner_cols):]))
-            res_schema = rdf.schema
-            rows_i = rdf.collect()
-        except Exception:  # noqa: BLE001 — native path reports the error
-            return query
-        for irow in rows_i:
-            combined.append(tuple(row) + tuple(irow))
-    if res_schema is None:
-        return query
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        list(outer_df.schema.fields) + list(res_schema.fields))
-    out_df = con.spark.createDataFrame(combined, schema)
-    view = f"__lat_rec_{next(_seq)}"
-    out_df.createOrReplaceTempView(view)
-    return con.sql(f"SELECT {sel} FROM {view} {tail}")
+    """`SELECT … FROM <outer>, LATERAL (WITH RECURSIVE …) …`: a recursion
+    correlated on the outer row, flattened into one run for all outer
+    rows (`sql/lateral.py`); the text goes on to `recursive_cte` or
+    Spark's native UNION ALL recursion."""
+    return lateral.flatten(con, query) if lateral.GATE.search(query) \
+        else query
 
 
 def _recursive_cte_sql(con, rec: dict):

@@ -47,6 +47,15 @@ MATERIALIZED_AGG = (
     "GROUP BY n_regionkey) SELECT a.n_regionkey, a.c + b.c AS c2 "
     "FROM agg a JOIN agg b ON a.n_regionkey = b.n_regionkey")
 
+
+def _lateral(outer, anchor, where, tail="SELECT x FROM t",
+             union="UNION ALL", sel="i, x"):
+    """A recursion correlated on the outer row `o(i)`."""
+    return (f"SELECT {sel} FROM {outer} o(i), LATERAL (WITH RECURSIVE t(x) "
+            f"AS (SELECT {anchor} {union} SELECT x + 1 FROM t WHERE {where}) "
+            f"{tail}) r")
+
+
 STEP_CASES = {
     "prepared_statement": Case(
         "prepared_statement", "EXECUTE pin_p(41)",
@@ -154,6 +163,41 @@ STEP_CASES = {
         "SELECT i, n FROM (VALUES (2), (3)) t(i), LATERAL (WITH RECURSIVE "
         "r(n) AS (SELECT 1 UNION ALL SELECT n + 1 FROM r WHERE n < i) "
         "SELECT n FROM r)"),
+    # the recursion runs once for all outer rows; `o.i` resolves as written
+    "lateral_recursive-qualified": Case(
+        "lateral_recursive", _lateral(
+            "range(3)", "o.i", "x < o.i + 3", sel="o.i, r.x")
+        + " ORDER BY 1, 2"),
+    # no cap on the outer row count
+    "lateral_recursive-1001_outer_rows": Case(
+        "lateral_recursive", _lateral("range(1001)", "i", "x < i + 3")),
+    # UNION dedupes per outer row: two equal outer rows keep 3 rows each
+    "lateral_recursive-duplicate_outer_rows": Case(
+        "lateral_recursive",
+        _lateral("(VALUES (1), (1))", "i", "x < i + 2", union="UNION")),
+    "lateral_recursive-null_outer_value": Case(
+        "lateral_recursive", _lateral(
+            "(VALUES (1), (NULL))", "coalesce(i, 10)",
+            "x < coalesce(i, 10) + 2", union="UNION")),
+    # `*` over outer plus lateral leaves the row id out
+    "lateral_recursive-star": Case(
+        "lateral_recursive",
+        _lateral("(VALUES (1), (2))", "i", "x < 3", sel="*")),
+    "lateral_recursive-order_limit_tail": Case(
+        "lateral_recursive", _lateral(
+            "range(3)", "i", "x < i + 3",
+            tail="SELECT x FROM t ORDER BY x DESC LIMIT 2")),
+    # the anchor of outer row 0 yields nothing: its count is 0
+    "lateral_recursive-count_tail": Case(
+        "lateral_recursive", _lateral(
+            "range(3)", "i WHERE i > 0", "x < 4", sel="i, n",
+            tail="SELECT count(*) AS n FROM t")),
+    # a bare name binds to the CTE column before the outer one
+    "lateral_recursive-cte_column_shadows_outer": Case(
+        "lateral_recursive",
+        "SELECT o.i AS oi, r.i FROM range(3) o(i), LATERAL (WITH RECURSIVE "
+        "t(i) AS (SELECT o.i UNION ALL SELECT i + 1 FROM t "
+        "WHERE i < o.i + 2) SELECT i FROM t) r"),
     "recursive_cte": Case(
         "recursive_cte",
         "WITH RECURSIVE r(n) AS (SELECT 1 UNION SELECT n + 1 FROM r "
@@ -410,6 +454,9 @@ PASS_CASES = {
         "bit_literals", "SELECT CAST(BIT '0101' AS VARCHAR) AS b"),
     "infinite_typed_literals": Case(
         "infinite_typed_literals", "SELECT CAST(DATE 'infinity' AS VARCHAR) AS d"),
+    # a fresh Connection registers the type-text UDF itself
+    "calls-typeof_fresh_connection": Case(
+        "calls", "SELECT typeof(1::INTEGER) AS t", own_session=True),
     # duckdb 1.0.0 cannot pack an empty struct
     "typeof_empty_struct": Case(
         "typeof_empty_struct", "SELECT typeof(struct_pack()) AS t",
@@ -876,6 +923,22 @@ def test_materialized_cte_is_scanned_once(con):
         df = con.sql(MATERIALIZED_AGG.format(hint=hint)).df()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("FileScan parquet") == scans, plan
+
+
+def test_lateral_recursive_jobs_do_not_grow_with_outer_rows(con):
+    """The recursion runs once for all outer rows, so its Spark job count
+    does not grow from 3 outer rows to 40."""
+    sc = con.spark.sparkContext
+    jobs = []
+    for n in (3, 40):
+        group = f"pin_lateral_jobs_{n}"
+        sc.setJobGroup(group, group)
+        try:
+            con.sql(_lateral(f"range({n})", "i", "x < i + 3")).df().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[1] <= jobs[0], jobs
 
 
 # ------------------------------------------------------------ loop policy
