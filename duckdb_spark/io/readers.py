@@ -15,16 +15,31 @@ Reference surface:
 
 All readers return lazy DataFrames — scans stay distributed, schema
 inference samples, and pushdown applies (check `.explain` → PushedFilters).
+
+`read_parquet`, `read_csv` and `read_json` keep what they read in the
+session's scan cache (`SessionState.scans`), like DuckDB's
+`ParquetFileMetadataCache`: a second read of unchanged local files returns
+the same DataFrame and runs no schema-inference job.
 """
 
 from __future__ import annotations
 
 import csv as _csv
 import glob as _glob
+import hashlib
 import io as _io
+import os
+import threading
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from duckdb_spark import state
+
+# held while an entry is stored or its view registered, so a view never
+# ends up holding an entry that another thread has replaced
+_VIEWS = threading.Lock()
 
 # DuckDB read_csv option name → Spark DataFrameReader option name.
 _CSV_OPTION_MAP = {
@@ -49,6 +64,70 @@ _CSV_OPTION_MAP = {
 }
 
 
+def _fingerprint(path: str | list[str]) -> tuple | None:
+    """The sorted (path, inode, size, mtime_ns) of every local file `path`
+    resolves to: globs expand (`**` too) and directories are walked. None
+    if a path has a scheme other than `file:` or resolves to no file."""
+    found = set()
+    for p in [path] if isinstance(path, str) else path:
+        url = urlparse(p)
+        if url.scheme == "file":
+            p = url.path
+        elif url.scheme:
+            return None
+        files = []
+        for name in _glob.glob(p, recursive=True) if _glob.has_magic(p) else [p]:
+            if os.path.isdir(name):
+                files += [os.path.join(d, f) for d, _, fs in os.walk(name) for f in fs]
+            elif os.path.isfile(name):
+                files.append(name)
+        if not files:
+            return None
+        try:
+            for f in files:
+                st = os.stat(f)
+                found.add((os.path.abspath(f), st.st_ino, st.st_size, st.st_mtime_ns))
+        except OSError:  # gone since the listing
+            return None
+    return tuple(sorted(found))
+
+
+def _cached(spark: SparkSession, reader: str, path, options: dict, read) -> DataFrame:
+    """`read()`, or the DataFrame it gave for the same reader, paths and
+    options while the files had the fingerprint they have now. A changed
+    fingerprint reads again and replaces the entry; a path with no
+    fingerprint is read every time."""
+    fp = _fingerprint(path)
+    if fp is None:
+        return read()
+    scans = state.of(spark).scans
+    key = (reader, repr(path), repr(sorted(options.items())))
+    hit = scans.get(key)
+    if hit is not None and hit.fingerprint == fp:
+        return hit.df
+    df = read()
+    with _VIEWS:  # a thread that read the same files first wins
+        hit = scans.get(key)
+        if hit is None or hit.fingerprint != fp:
+            hit = scans[key] = state.Scan(fp, df)
+    return hit.df
+
+
+def scan_view(spark: SparkSession, df: DataFrame) -> str | None:
+    """The temp view of the cached scan `df`, registered the first time
+    it is asked for; None if `df` is not a cached scan. The name comes
+    from the entry's key, so a replaced entry takes over its view."""
+    with _VIEWS:
+        for key, scan in state.of(spark).scans.items():
+            if scan.df is df:
+                view = f"__tvf_scan_{hashlib.sha1(repr(key).encode()).hexdigest()[:16]}"
+                if not scan.registered:
+                    df.createOrReplaceTempView(view)
+                    scan.registered = True
+                return view
+    return None
+
+
 def read_csv(spark: SparkSession, path: str, **options) -> DataFrame:
     """DuckDB `read_csv_auto` semantics: sniff dialect + infer types by
     default; explicit options override the sniffer.
@@ -60,6 +139,11 @@ def read_csv(spark: SparkSession, path: str, **options) -> DataFrame:
     pass `multiline=False` (or convert to parquet) for splittable scans;
     DuckDB's boundary-detecting parallel CSV scanner has no Spark
     equivalent."""
+    return _cached(spark, "csv", path, options,
+                   lambda: _read_csv(spark, path, **options))
+
+
+def _read_csv(spark: SparkSession, path: str, **options) -> DataFrame:
     spark_opts: dict[str, str] = {"header": "true", "inferSchema": "true",
                                   "escape": '"', "multiLine": "true"}
     schema = options.pop("schema", None)
@@ -237,23 +321,39 @@ def read_csv_with_rejects(
 
 
 def read_parquet(spark: SparkSession, path: str | list[str],
-                 file_row_number: bool = False,
+                 file_row_number: bool = False, filename: bool = False,
                  union_by_name: bool = False, **options) -> DataFrame:
-    reader = spark.read.options(**options)
-    if union_by_name:
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(*path) if isinstance(path, list) else reader.parquet(path)
-    if file_row_number:
-        df = df.selectExpr("*", "_metadata.row_index AS file_row_number")
-    return df
+    """`file_row_number` and `filename` append DuckDB's columns of those
+    names, in that order; `filename` is the local path, not Spark's
+    `file:` URI."""
+    def read() -> DataFrame:
+        reader = spark.read.options(**options)
+        if union_by_name:
+            reader = reader.option("mergeSchema", "true")
+        df = reader.parquet(*path) if isinstance(path, list) else reader.parquet(path)
+        extra = []
+        if file_row_number:
+            extra.append("_metadata.row_index AS file_row_number")
+        if filename:
+            # keep a literal `+` through url_decode
+            extra.append("url_decode(replace(regexp_replace(_metadata.file_path, "
+                         "'^file:(//)?', ''), '+', '%2B')) AS filename")
+        return df.selectExpr("*", *extra) if extra else df
+
+    return _cached(spark, "parquet", path,
+                   dict(options, file_row_number=file_row_number,
+                        filename=filename, union_by_name=union_by_name), read)
 
 
 def read_json(spark: SparkSession, path: str, format: str = "auto", **options) -> DataFrame:
-    reader = spark.read.options(**options)
-    if format in ("array", "auto"):
-        # DuckDB auto-detects top-level-array JSON; Spark needs multiLine.
-        reader = reader.option("multiLine", "true") if format == "array" else reader
-    return reader.json(path)  # Spark accepts str or list here natively
+    def read() -> DataFrame:
+        reader = spark.read.options(**options)
+        if format == "array":
+            # DuckDB auto-detects top-level-array JSON; Spark needs multiLine.
+            reader = reader.option("multiLine", "true")
+        return reader.json(path)  # Spark accepts str or list here natively
+
+    return _cached(spark, "json", path, dict(options, format=format), read)
 
 
 def read_duckdb(spark: SparkSession, db_path: str, table: str) -> DataFrame:

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from duckdb_spark.io.readers import read_parquet
+
 
 def copy_to(
     df: DataFrame,
@@ -128,5 +130,5 @@ def import_database(spark: SparkSession, in_dir: str) -> list[str]:
     with open(f"{in_dir}/manifest.json") as fh:
         manifest = json.load(fh)
     for name in manifest:
-        spark.read.parquet(f"{in_dir}/{name}.parquet").createOrReplaceTempView(name)
+        read_parquet(spark, f"{in_dir}/{name}.parquet").createOrReplaceTempView(name)
     return list(manifest)

@@ -296,7 +296,9 @@ class Connection:
         return Relation(df)
 
     def read_parquet(self, path: str, **options) -> Relation:
-        return Relation(self.spark.read.options(**options).parquet(path))
+        from duckdb_spark.io.readers import read_parquet
+
+        return Relation(read_parquet(self.spark, path, **options))
 
     def read_csv(self, path: str, **options) -> Relation:
         from duckdb_spark.io.readers import read_csv

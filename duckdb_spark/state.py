@@ -16,7 +16,6 @@ from __future__ import annotations
 import contextlib
 import contextvars
 import dataclasses
-import weakref
 from dataclasses import dataclass, field
 
 
@@ -43,24 +42,34 @@ class SessionState:
     udfs: set[str] = field(default_factory=set)
     # fixture dir each set of fixture views is bound to (queries.bind_views)
     bound: dict[tuple[str, ...], str] = field(default_factory=dict)
+    # file scans (io.readers): (reader, paths, options) → Scan
+    scans: dict[tuple[str, str, str], Scan] = field(default_factory=dict)
 
     def reset(self) -> None:
         """Forget the DuckDB catalog: settings, types, schemas and column
-        marks. UDFs and fixture views stay registered on the session, so
-        their records stay too."""
+        marks. UDFs, fixture views and scan views stay registered on the
+        session, so their records stay too."""
         for f in dataclasses.fields(self):
-            if f.name not in ("udfs", "bound"):
+            if f.name not in ("udfs", "bound", "scans"):
                 getattr(self, f.name).clear()
 
 
-_STATES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+@dataclass(eq=False)
+class Scan:
+    """One cached file scan: the DataFrame read while the files had
+    `fingerprint`, and whether SQL text's temp view of it is registered."""
+    fingerprint: tuple
+    df: object
+    registered: bool = False
 
 
 def of(spark) -> SessionState:
-    """The state of `spark`, created on first use and dropped with it."""
-    st = _STATES.get(spark)
+    """The state of `spark`, created on first use and dropped with it. It
+    lives on the session object, so the cached DataFrames in `scans`,
+    which point back at their session, do not keep the session alive."""
+    st = vars(spark).get("_duckdb_spark_state")
     if st is None:
-        st = _STATES.setdefault(spark, SessionState())
+        st = vars(spark).setdefault("_duckdb_spark_state", SessionState())
     return st
 
 

@@ -338,6 +338,7 @@ def copy_from(con, query):
     )
     if not m:
         return query
+    from duckdb_spark.io import readers
     from duckdb_spark.types import spark_type_to_duckdb
 
     name, path, opts = m.group(1).strip('"'), m.group(2), m.group(3) or ""
@@ -356,16 +357,14 @@ def copy_from(con, query):
         fmt = "csv"
     target = con.spark.table(name).schema
     if fmt == "csv":
-        from duckdb_spark.io.readers import csv_for_copy_from
-
-        src = csv_for_copy_from(
+        src = readers.csv_for_copy_from(
             con.spark, path, opts,
             [f.name for f in target.fields],
             [spark_type_to_duckdb(f.dataType) for f in target.fields])
     elif fmt == "json":
-        src = con.spark.read.json(path)
+        src = readers.read_json(con.spark, path)
     else:
-        src = con.spark.read.parquet(path)
+        src = readers.read_parquet(con.spark, path)
     view = f"__copy_from_{next(_seq)}"
     src.createOrReplaceTempView(view)
     sel = ", ".join(
@@ -649,8 +648,11 @@ def sql_table_functions(con, query):
     """Engine-level table functions in SQL text (`FROM
     duckdb_functions()`, `FROM pragma_table_info('t')`, `FROM
     repeat(v, n)`): compute the DataFrame NOW (catalog state is
-    query-time), register a temp view, substitute the call."""
+    query-time), register a temp view, substitute the call. A file read
+    the session's scan cache holds (`readers.scan_view`) keeps one view
+    for as long as its files do not change."""
     import duckdb_spark.introspection as I
+    from duckdb_spark.io import readers
     from duckdb_spark.operators import tablefn
 
     def repl(m: re.Match) -> str:
@@ -694,8 +696,6 @@ def sql_table_functions(con, query):
             "read_json_objects", "read_ndjson", "read_text",
             "read_blob", "sniff_csv",
         ):
-            from duckdb_spark.io import readers
-
             parts = _split_top_level(args)
             if not parts:
                 return m.group(0)
@@ -708,11 +708,10 @@ def sql_table_functions(con, query):
                 if om:
                     opts[om.group(1).lower()] = om.group(2).strip()
             if name in ("read_parquet", "parquet_scan"):
-                df = readers.read_parquet(
-                    con.spark, paths,
-                    union_by_name=opts.get("union_by_name", "")
-                    .lower() == "true",
-                )
+                df = readers.read_parquet(con.spark, paths, **{
+                    k: opts.get(k, "").lower() in ("true", "1")
+                    for k in ("file_row_number", "filename",
+                              "union_by_name")})
             elif name in ("read_csv", "read_csv_auto"):
                 kw = {}
                 if opts.get("header", "").lower() in ("true", "false", "0", "1"):
@@ -761,8 +760,10 @@ def sql_table_functions(con, query):
                 df = readers.read_json(con.spark, paths)
         else:
             df = getattr(I, name)(con.spark)
-        view = f"__tvf_{name}_{next(_seq)}"
-        df.createOrReplaceTempView(view)
+        view = readers.scan_view(con.spark, df)
+        if view is None:
+            view = f"__tvf_{name}_{next(_seq)}"
+            df.createOrReplaceTempView(view)
         return f"{prefix} {view} "
 
     return re.sub(

@@ -12,6 +12,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -33,6 +34,19 @@ def spark():
     spark = get_spark(app_name="duckdb_spark_tests", shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+def spark_jobs(spark, fn) -> int:
+    """The number of Spark jobs `fn()` runs, counted in a job group of
+    its own."""
+    sc = spark.sparkContext
+    group = f"spark_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -25,7 +25,7 @@ import duckdb
 import pytest
 
 from duckdb_spark.relation import Connection
-from tests.conftest import SF_DIR, assert_matches_oracle, normalize
+from tests.conftest import SF_DIR, assert_matches_oracle, normalize, spark_jobs
 
 V = "CREATE OR REPLACE TEMP VIEW "
 
@@ -138,6 +138,13 @@ STEP_CASES = {
     "sql_table_functions": Case(
         "sql_table_functions",
         "SELECT count(*) AS n FROM read_parquet('{sf}/nation.parquet')"),
+    "sql_table_functions-filename": Case(
+        "sql_table_functions",
+        "SELECT * FROM read_parquet('{sf}/region.parquet', filename=true)"),
+    "sql_table_functions-file_row_number": Case(
+        "sql_table_functions",
+        "SELECT * FROM read_parquet('{sf}/region.parquet', "
+        "file_row_number=true)"),
     # the reader's own error surfaces, not an unresolved table function
     "sql_table_functions-missing_file": Case(
         "sql_table_functions",
@@ -928,16 +935,9 @@ def test_materialized_cte_is_scanned_once(con):
 def test_lateral_recursive_jobs_do_not_grow_with_outer_rows(con):
     """The recursion runs once for all outer rows, so its Spark job count
     does not grow from 3 outer rows to 40."""
-    sc = con.spark.sparkContext
-    jobs = []
-    for n in (3, 40):
-        group = f"pin_lateral_jobs_{n}"
-        sc.setJobGroup(group, group)
-        try:
-            con.sql(_lateral(f"range({n})", "i", "x < i + 3")).df().collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    jobs = [spark_jobs(con.spark, lambda n=n: con.sql(
+        _lateral(f"range({n})", "i", "x < i + 3")).df().collect())
+        for n in (3, 40)]
     assert jobs[1] <= jobs[0], jobs
 
 
