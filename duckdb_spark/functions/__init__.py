@@ -1,4 +1,4 @@
 from duckdb_spark.functions import aggregates, scalar
-from duckdb_spark.functions.registry import FUNCTIONS, register_sql_functions
+from duckdb_spark.functions.registry import FUNCTIONS
 
-__all__ = ["scalar", "aggregates", "FUNCTIONS", "register_sql_functions"]
+__all__ = ["scalar", "aggregates", "FUNCTIONS"]

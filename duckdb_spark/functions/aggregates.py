@@ -173,9 +173,11 @@ listagg = string_agg
 
 
 def list_agg(x, order_by=None) -> Column:
-    """array_agg with optional internal ORDER BY."""
+    """array_agg with optional internal ORDER BY. DuckDB keeps NULL
+    elements, which collect_list drops: collect them inside a struct."""
     if order_by is None:
-        return F.collect_list(_c(x))
+        return F.transform(F.collect_list(F.struct(_c(x).alias("v"))),
+                           lambda s: s["v"])
     pairs = F.sort_array(F.collect_list(F.struct(_c(order_by).alias("k"), _c(x).alias("v"))))
     return F.transform(pairs, lambda s: s["v"])
 

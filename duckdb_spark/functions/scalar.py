@@ -18,6 +18,8 @@ Semantics notes (DuckDB behavior we deliberately match):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -144,6 +146,42 @@ def bar(x, minv, maxv, width=80) -> Column:
     return F.repeat(F.lit("█"), F.round(frac * width).cast("int"))
 
 
+_FMT_HOLES = {"{{": "{", "}}": "}", "{}": "%s", "%": "%%"}
+
+
+def fmt_to_printf(fmt: str) -> str | None:
+    """DuckDB format()'s fmt-style string → printf style, when its only
+    holes are bare `{}`; None for any other format spec."""
+    if re.search(r"[{}]", re.sub(r"\{\{|\}\}|\{\}", "", fmt)):
+        return None
+    return re.sub(r"\{\{|\}\}|\{\}|%", lambda m: _FMT_HOLES[m.group()], fmt)
+
+
+def format_(fmt: str, *args) -> Column:
+    printf = fmt_to_printf(fmt)
+    if printf is None:
+        raise NotImplementedError(f"format spec in {fmt!r}: only bare {{}} holes")
+    return F.format_string(printf, *[_c(a) for a in args])
+
+
+def regexp_extract(s, pattern: str, group: int = 0) -> Column:
+    """DuckDB extracts group 0 by default; Spark needs the group."""
+    return F.regexp_extract(_c(s), pattern, group)
+
+
+def regexp_extract_all(s, pattern: str, group: int = 0) -> Column:
+    """DuckDB extracts group 0 by default, Spark group 1."""
+    return F.regexp_extract_all(_c(s), F.lit(pattern), F.lit(group))
+
+
+def encode(s) -> Column:
+    return F.encode(_c(s), "utf-8")
+
+
+def decode(b) -> Column:
+    return F.decode(_c(b), "utf-8")
+
+
 # ---------------------------------------------------------------------------
 # date / time
 
@@ -212,6 +250,11 @@ datepart = date_part
 
 def epoch_ms(ts) -> Column:
     return F.unix_millis(_c(ts).cast("timestamp"))
+
+
+def dayofweek(d) -> Column:
+    """DuckDB counts from Sunday = 0, Spark's dayofweek from Sunday = 1."""
+    return (F.weekday(_c(d)) + 1) % 7
 
 
 def epoch_us(ts) -> Column:
@@ -288,6 +331,11 @@ def strptime(s, fmt: str) -> Column:
 
 # ---------------------------------------------------------------------------
 # math
+
+
+def sign(x) -> Column:
+    """-1, 0 or 1 as TINYINT; Spark's sign answers DOUBLE."""
+    return F.signum(_c(x)).cast("tinyint")
 
 
 def even(x) -> Column:
@@ -390,11 +438,18 @@ def list_sort(arr, asc: bool = True) -> Column:
 
 
 def list_distinct(arr) -> Column:
-    return F.array_distinct(_c(arr))
+    """Distinct non-NULL elements."""
+    return F.array_distinct(F.filter(_c(arr), lambda e: e.isNotNull()))
+
+
+def list_prepend(v, arr) -> Column:
+    """DuckDB takes the element first; Spark's array_prepend takes it last."""
+    return F.array_prepend(_c(arr), v)
 
 
 def list_unique(arr) -> Column:
-    return F.size(F.array_distinct(_c(arr)))
+    """The number of distinct non-NULL elements."""
+    return F.array_size(F.array_distinct(F.filter(_c(arr), lambda e: e.isNotNull())))
 
 
 def list_slice(arr, begin, end) -> Column:

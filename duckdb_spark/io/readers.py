@@ -64,48 +64,58 @@ _CSV_OPTION_MAP = {
 }
 
 
-def _fingerprint(path: str | list[str]) -> tuple | None:
-    """The sorted (path, inode, size, mtime_ns) of every local file `path`
-    resolves to: globs expand (`**` too) and directories are walked. None
-    if a path has a scheme other than `file:` or resolves to no file."""
-    found = set()
+def _resolve(path: str | list[str]) -> list[str] | None:
+    """The local names `path` stands for, made absolute against Python's
+    current directory: globs expand the way DuckDB's do (`**` recurses).
+    None if a path has a scheme other than `file:` or names nothing."""
+    names = []
     for p in [path] if isinstance(path, str) else path:
         url = urlparse(p)
         if url.scheme == "file":
             p = url.path
         elif url.scheme:
             return None
-        files = []
-        for name in _glob.glob(p, recursive=True) if _glob.has_magic(p) else [p]:
-            if os.path.isdir(name):
-                files += [os.path.join(d, f) for d, _, fs in os.walk(name) for f in fs]
-            elif os.path.isfile(name):
-                files.append(name)
-        if not files:
+        found = (sorted(_glob.glob(p, recursive=True)) if _glob.has_magic(p)
+                 else [p] if os.path.exists(p) else [])
+        if not found:
             return None
-        try:
-            for f in files:
-                st = os.stat(f)
-                found.add((os.path.abspath(f), st.st_ino, st.st_size, st.st_mtime_ns))
-        except OSError:  # gone since the listing
-            return None
-    return tuple(sorted(found))
+        names += [os.path.abspath(n) for n in found]
+    return names
+
+
+def _fingerprint(names: list[str]) -> tuple | None:
+    """The sorted (path, inode, size, mtime_ns) of every file among
+    `names`, directories walked; None if there is none."""
+    files = []
+    for name in names:
+        if os.path.isdir(name):
+            files += [os.path.join(d, f) for d, _, fs in os.walk(name) for f in fs]
+        elif os.path.isfile(name):
+            files.append(name)
+    try:
+        stats = [(f, os.stat(f)) for f in set(files)]
+    except OSError:  # gone since the listing
+        return None
+    return tuple(sorted((f, st.st_ino, st.st_size, st.st_mtime_ns)
+                        for f, st in stats)) or None
 
 
 def _cached(spark: SparkSession, reader: str, path, options: dict, read) -> DataFrame:
-    """`read()`, or the DataFrame it gave for the same reader, paths and
-    options while the files had the fingerprint they have now. A changed
-    fingerprint reads again and replaces the entry; a path with no
-    fingerprint is read every time."""
-    fp = _fingerprint(path)
+    """`read(paths)` over the local names `path` resolves to, or the
+    DataFrame it gave for the same reader, paths and options while the
+    files had the fingerprint they have now. A changed fingerprint reads
+    again and replaces the entry. A path that resolves to no local file
+    is read as written, every time, so Spark reports it."""
+    names = _resolve(path)
+    fp = _fingerprint(names) if names else None
     if fp is None:
-        return read()
+        return read(path)
     scans = state.of(spark).scans
     key = (reader, repr(path), repr(sorted(options.items())))
     hit = scans.get(key)
     if hit is not None and hit.fingerprint == fp:
         return hit.df
-    df = read()
+    df = read(names)
     with _VIEWS:  # a thread that read the same files first wins
         hit = scans.get(key)
         if hit is None or hit.fingerprint != fp:
@@ -140,7 +150,7 @@ def read_csv(spark: SparkSession, path: str, **options) -> DataFrame:
     DuckDB's boundary-detecting parallel CSV scanner has no Spark
     equivalent."""
     return _cached(spark, "csv", path, options,
-                   lambda: _read_csv(spark, path, **options))
+                   lambda paths: _read_csv(spark, paths, **options))
 
 
 def _read_csv(spark: SparkSession, path: str, **options) -> DataFrame:
@@ -326,11 +336,11 @@ def read_parquet(spark: SparkSession, path: str | list[str],
     """`file_row_number` and `filename` append DuckDB's columns of those
     names, in that order; `filename` is the local path, not Spark's
     `file:` URI."""
-    def read() -> DataFrame:
+    def read(paths) -> DataFrame:
         reader = spark.read.options(**options)
         if union_by_name:
             reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*path) if isinstance(path, list) else reader.parquet(path)
+        df = reader.parquet(*paths) if isinstance(paths, list) else reader.parquet(paths)
         extra = []
         if file_row_number:
             extra.append("_metadata.row_index AS file_row_number")
@@ -346,12 +356,12 @@ def read_parquet(spark: SparkSession, path: str | list[str],
 
 
 def read_json(spark: SparkSession, path: str, format: str = "auto", **options) -> DataFrame:
-    def read() -> DataFrame:
+    def read(paths) -> DataFrame:
         reader = spark.read.options(**options)
         if format == "array":
             # DuckDB auto-detects top-level-array JSON; Spark needs multiLine.
             reader = reader.option("multiLine", "true")
-        return reader.json(path)  # Spark accepts str or list here natively
+        return reader.json(paths)  # Spark accepts str or list here natively
 
     return _cached(spark, "json", path, dict(options, format=format), read)
 

@@ -34,6 +34,7 @@ import re
 from typing import Callable, NamedTuple
 
 from duckdb_spark import state
+from duckdb_spark.functions.names import NAMES
 
 _TOKEN_RE = re.compile(
     r"""
@@ -5393,45 +5394,6 @@ def _scope_span(sql: str, pos: int) -> tuple[int, int]:
 
 # -------------------------------------------------- function-call rewrites
 
-# DuckDB SQL function name → Spark SQL name, applied only when the token is
-# immediately followed by `(` (a call). Only names whose ARGUMENT semantics
-# are identical belong here; anything needing arg reshuffling stays in the
-# Column-builder registry (functions/registry.py).
-_SQL_FN_RENAMES: dict[str, str] = {
-    # aggregates
-    "arg_min": "min_by", "arg_max": "max_by",
-    "approx_quantile": "approx_percentile",
-    "quantile_cont": "percentile",
-    "covar_pop": "covar_pop", "every": "bool_and",
-    # list/array
-    "list_sort": "sort_array", "list_distinct": "array_distinct",
-    "list_contains": "array_contains", "array_has": "array_contains",
-    "list_position": "array_position", "list_indexof": "array_position",
-    "array_length": "array_size", "list_value": "array", "list_pack": "array",
-    "array_value": "array",
-    "list_slice": "slice", "array_slice": "slice",
-    "string_split_regex": "split",
-    "list_transform": "transform", "array_transform": "transform",
-    "list_filter": "filter", "array_filter": "filter",
-    "list_aggregate_first": "element_at", "list_zip": "arrays_zip",
-    "flatten": "flatten",
-    # string
-    "strpos": "instr", "ucase": "upper", "lcase": "lower",
-    "unicode": "ascii", "ord": "ascii",
-    "regexp_matches": "regexp_like", "regexp_full_match": "regexp_like",
-    "starts_with": "startswith", "ends_with": "endswith",
-    "prefix": "startswith", "suffix": "endswith",
-    "to_base64": "base64", "from_base64": "unbase64", "chr": "char",
-    "format": "format_string", "printf": "format_string",
-    # misc
-    "strlen": "octet_length", "nextafter": "nextafter",
-    "iif": "if", "error": "raise_error", "unnest": "explode",
-    "json_extract": "get_json_object", "json_extract_path": "get_json_object",
-    "kurtosis_pop": "kurtosis", "skewness_pop": "skewness",
-    "gen_random_uuid": "uuid",
-    "list_reverse": "reverse",
-}
-
 _STRING_AGGS = {"string_agg", "group_concat", "listagg"}
 _LIST_AGGS = {"list", "array_agg"}
 
@@ -5477,7 +5439,8 @@ def _split_top_args(toks: list[str]) -> list[str]:
 
 
 
-_LIST_AGG_NAMES = {"list_aggregate", "list_aggr", "array_aggregate", "array_aggr"}
+_LIST_AGG_NAMES = {"list_aggregate", "list_aggr", "array_aggregate", "array_aggr",
+                   "aggregate"}
 
 
 
@@ -6971,13 +6934,10 @@ def _rewrite_calls(toks: list[str]) -> list[str]:
                         out[i:close + 1] = [repl]
                         i += 1
                         continue
-                if name in _SQL_FN_RENAMES:
-                    out[i] = _SQL_FN_RENAMES[name]
+                _rename_call(out, i, name)
             i += 1
             continue
-        if name in _SQL_FN_RENAMES:
-            out[i] = _SQL_FN_RENAMES[name]
-        elif name == "arbitrary":
+        if name == "arbitrary":
             # DuckDB arbitrary = first INCLUDING NULLs = Spark first default
             out[i] = "first"
         elif name == "any_value":
@@ -7014,8 +6974,18 @@ def _rewrite_calls(toks: list[str]) -> list[str]:
                 # Spark's listagg treats a NULL separator as empty
                 if len(args2) == 2 and args2[1].strip().upper() == "NULL":
                     out[i:close + 1] = ["CAST(NULL AS STRING)"]
+        else:
+            _rename_call(out, i, name)
         i = j
     return out
+
+
+def _rename_call(out: list[str], i: int, name: str) -> None:
+    """Rename the call `name(` at `out[i]` to its Spark name from the
+    function-name table."""
+    spark = NAMES.get(name)
+    if spark and spark != name:
+        out[i] = spark
 
 
 def _has_top_level_comma(toks: list[str]) -> bool:

@@ -917,6 +917,72 @@ def _macro_unnest(args: list[str]) -> str | None:
     for _ in range(min(nest, depth - 1)):
         inner = f"flatten({inner})"
     return f"explode({inner})"
+
+
+# list distance functions (reference core_functions/scalar/list/
+# list_distance.cpp): one zip_with fold each
+_VECTOR_FNS = {"list_inner_product": "inner",
+               "list_cosine_similarity": "cosine", "list_distance": "distance"}
+
+
+def _macro_vector(kind: str, a: str, b: str) -> str:
+    def fold(arr: str, term: str) -> str:
+        return (f"aggregate({arr}, cast(0.0 as double), "
+                f"(__acc, __v) -> __acc + {term})")
+
+    if kind == "distance":
+        return "sqrt(" + fold(
+            f"zip_with({a}, {b}, (__l, __r) -> (__l - __r) * (__l - __r))",
+            "__v") + ")"
+    inner = fold(f"zip_with({a}, {b}, (__l, __r) -> __l * __r)", "__v")
+    if kind == "inner":
+        return inner
+    return (f"{inner} / (sqrt({fold(a, '__v * __v')}) * "
+            f"sqrt({fold(b, '__v * __v')}))")
+
+
+def _regex_arg(a: str) -> str:
+    r"""A DuckDB string literal keeps its backslashes (`'\s+'` is the
+    regex `\s+`); Spark's parser reads `\` as an escape, so a literal
+    pattern gets each one doubled."""
+    if re.fullmatch(r"\s*'(?:[^']|'')*'\s*", a):
+        return a.replace("\\", "\\\\")
+    return a
+
+
+def _macro_date_diff(part: str, a: str, b: str) -> str | None:
+    """date_diff('part', a, b) counts the part boundaries crossed from a
+    to b (reference date_diff.cpp), as `functions.scalar.date_diff` does;
+    Spark's three-argument datediff wants an unquoted unit and counts
+    whole units instead."""
+    p = part.strip().strip("'").lower().removesuffix("s")
+    if p == "day":
+        return f"CAST(datediff(CAST(({b}) AS DATE), CAST(({a}) AS DATE)) AS BIGINT)"
+    ordinal = {"year": "year({x})", "quarter": "year({x}) * 4 + quarter({x})",
+               "month": "year({x}) * 12 + month({x})"}.get(p)
+    if ordinal:
+        return (f"CAST(({ordinal.format(x=b)}) - ({ordinal.format(x=a)}) "
+                f"AS BIGINT)")
+    div = {"hour": 3_600_000_000, "minute": 60_000_000, "second": 1_000_000,
+           "millisecond": 1_000, "microsecond": 1}.get(p)
+    if div:
+        ua, ub = (f"unix_micros(to_timestamp_ltz({x}))" for x in (a, b))
+        return f"(floor(({ub}) / {div}) - floor(({ua}) / {div}))"
+    return None
+
+
+def _macro_format(args: list[str]) -> str | None:
+    """DuckDB format() fills fmt-style `{}` holes: a literal format string
+    with bare holes only becomes Spark's printf-style format_string."""
+    from duckdb_spark.functions.scalar import fmt_to_printf
+
+    m = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", args[0])
+    fmt = fmt_to_printf(m.group(1)) if m else None
+    if fmt is None:
+        return None
+    return "format_string(" + ", ".join([f"'{fmt}'"] + args[1:]) + ")"
+
+
 def _agg_macro(name: str, args: list[str]) -> str | None:
     """Dispatch: returns replacement text, or None to leave the call."""
     n = len(args)
@@ -1034,6 +1100,8 @@ def _agg_macro(name: str, args: list[str]) -> str | None:
         return _seq_expr(name, args)
     if name in _LIST_AGG_NAMES and n == 2:
         return _macro_list_aggregate(args[0], args[1])
+    if name == "list_sum" and n == 1:
+        return _macro_list_aggregate(args[0], "'sum'")
     if name == "approx_top_k" and n == 2:
         return _macro_approx_top_k(args[0], args[1])
     if name == "mad" and n == 1:
@@ -1380,6 +1448,51 @@ def _agg_macro(name: str, args: list[str]) -> str | None:
         # value-preserving) have no double cast — go through LTZ
         # (test_iejoin.test:112 after the NTZ-literal change).
         return f"cast(to_timestamp_ltz({args[0]}) as double)"
+    if name in ("epoch_ms", "epoch_us") and n == 1:
+        if name == "epoch_ms" and re.fullmatch(r"\s*-?\d+\s*", args[0]):
+            # epoch_ms(BIGINT) goes the other way: ms → TIMESTAMP
+            return f"timestamp_millis({args[0]})"
+        fn = "unix_millis" if name == "epoch_ms" else "unix_micros"
+        return f"{fn}(to_timestamp_ltz({args[0]}))"
+    if name in _VECTOR_FNS and n == 2:
+        return _macro_vector(_VECTOR_FNS[name], args[0], args[1])
+    if name in ("list_slice", "array_slice") and n == 3:
+        # DuckDB's end is inclusive, Spark's third argument a length;
+        # clamped as the `l[a:b]` subscript is (dialect._rewrite_brackets)
+        lo = f"greatest(1, ({args[1]}))"
+        return (f"slice({args[0]}, {lo}, "
+                f"greatest(0, ({args[2]}) - {lo} + 1))")
+    if name in ("date_diff", "datediff") and n == 3 and \
+            re.fullmatch(r"\s*'\w+'\s*", args[0]):
+        return _macro_date_diff(args[0], args[1], args[2])
+    if name in ("list_reduce", "array_reduce", "reduce") and n == 2:
+        # DuckDB folds from the first element; Spark's needs a start value
+        return (f"aggregate(slice({args[0]}, 2, greatest(size({args[0]}) - 1,"
+                f" 0)), element_at({args[0]}, 1), {args[1]})")
+    if name == "list_distinct" and n == 1:
+        return f"array_distinct(filter({args[0]}, __e -> __e IS NOT NULL))"
+    if name in ("list_unique", "array_unique") and n == 1:
+        # the number of distinct non-NULL elements
+        return (f"array_size(array_distinct(filter({args[0]}, "
+                f"__e -> __e IS NOT NULL)))")
+    if name == "sign" and n == 1:
+        return f"CAST(sign({args[0]}) AS TINYINT)"
+    if name == "list_prepend" and n == 2:
+        return f"array_prepend({args[1]}, {args[0]})"
+    if name in ("regexp_split_to_array", "str_split_regex",
+                "string_split_regex") and n == 2:
+        return f"split({args[0]}, {_regex_arg(args[1])})"
+    if name == "regexp_full_match" and n == 2:
+        return (f"regexp_like({args[0]}, "
+                f"concat('^(?:', {_regex_arg(args[1])}, ')$'))")
+    if name in ("regexp_extract", "regexp_extract_all") and n == 2:
+        # DuckDB extracts group 0 by default, Spark group 1
+        return f"{name}({args[0]}, {_regex_arg(args[1])}, 0)"
+    if name in ("encode", "decode") and n == 1:
+        return f"{name}({args[0]}, 'utf-8')"
+    if name == "dayofweek" and n == 1:
+        # DuckDB counts from Sunday = 0, Spark's dayofweek from Sunday = 1
+        return f"((weekday({args[0]}) + 1) % 7)"
     if name in _TO_INTERVAL_FNS and n == 1:
         return _TO_INTERVAL_FNS[name].format(x=args[0])
     if name in ("struct_contains", "struct_position") and n == 2:
@@ -1409,6 +1522,8 @@ def _agg_macro(name: str, args: list[str]) -> str | None:
         return f"({args[1]})"
     if name == "unnest" and n >= 1:
         return _macro_unnest(args)
+    if name == "format" and n >= 1 and (fmt := _macro_format(args)):
+        return fmt
     if name in ("printf", "format", "format_string") and n >= 2:
         # Spark's format_string rejects DecimalType args for %g/%e/%f
         # (java.util.Formatter: "g != Decimal"); DuckDB parses bare decimal
@@ -1454,9 +1569,12 @@ def _agg_macro(name: str, args: list[str]) -> str | None:
             return "concat(" + ", ".join(keep) + ")" if keep else (
                 "''" if name == "concat" else "NULL")
         return None
-    if name == "map" and n == 2:
+    if name == "map" and n == 2 and not re.fullmatch(
+        r"\s*('(?:[^']|'')*'|-?\d+(\.\d+)?)\s*", args[0]
+    ):
         # MAP(keys, values) builds from two lists (reference map.cpp);
-        # Spark's two-arg map() would make a single entry instead
+        # Spark's two-arg map() would make a single entry instead. A
+        # scalar key is the one-entry `MAP {k: v}` literal.
         return f"map_from_arrays({args[0]}, {args[1]})"
     if name == "json" and n == 1:
         # json(x) parses/normalizes; the values we compare are already
@@ -1508,5 +1626,11 @@ _MACRO_NAMES = {
     "struct_contains", "struct_position", "try", "concat_ws",
     "string_split", "str_split", "string_to_array",
     "get_bit", "set_bit", "bit_position", "bit_length",
-    "make_timestamp_ns", "epoch_ns", "typeof",
-} | _LIST_AGG_NAMES | set(_TO_INTERVAL_FNS)
+    "make_timestamp_ns", "epoch_ns", "epoch_ms", "epoch_us", "typeof",
+    "list_slice", "array_slice", "list_prepend", "list_reduce",
+    "array_reduce", "reduce", "list_unique", "array_unique", "list_distinct",
+    "list_sum", "date_diff", "datediff", "sign",
+    "dayofweek", "encode", "decode", "regexp_split_to_array",
+    "str_split_regex", "string_split_regex", "regexp_full_match",
+    "regexp_extract", "regexp_extract_all",
+} | _LIST_AGG_NAMES | set(_TO_INTERVAL_FNS) | set(_VECTOR_FNS)

@@ -690,12 +690,10 @@ class SLSession:
     """One logical sqllogictest database over a shared SparkSession."""
 
     def __init__(self, spark: SparkSession | None = None):
-        from duckdb_spark.functions.registry import register_sql_functions
         from duckdb_spark.relation import Connection
         from duckdb_spark.session import get_spark
 
         self.spark = spark or get_spark(shuffle_partitions=2)
-        register_sql_functions(self.spark)
         self.con = Connection(self.spark)
         self.tables: dict[str, tuple] = {}   # name -> (schema, rows)
         self.views: set[str] = set()

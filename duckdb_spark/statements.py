@@ -19,6 +19,7 @@ reports.
 
 from __future__ import annotations
 
+import hashlib
 import itertools
 import re
 
@@ -648,9 +649,10 @@ def sql_table_functions(con, query):
     """Engine-level table functions in SQL text (`FROM
     duckdb_functions()`, `FROM pragma_table_info('t')`, `FROM
     repeat(v, n)`): compute the DataFrame NOW (catalog state is
-    query-time), register a temp view, substitute the call. A file read
-    the session's scan cache holds (`readers.scan_view`) keeps one view
-    for as long as its files do not change."""
+    query-time), register a temp view named from the call text,
+    substitute the call. A file read the session's scan cache holds
+    (`readers.scan_view`) keeps one view for as long as its files do not
+    change."""
     import duckdb_spark.introspection as I
     from duckdb_spark.io import readers
     from duckdb_spark.operators import tablefn
@@ -762,7 +764,9 @@ def sql_table_functions(con, query):
             df = getattr(I, name)(con.spark)
         view = readers.scan_view(con.spark, df)
         if view is None:
-            view = f"__tvf_{name}_{next(_seq)}"
+            # named from the call text: a repeated call replaces its view
+            call = f"{name}({args})".encode()
+            view = f"__tvf_{name}_{hashlib.sha1(call).hexdigest()[:16]}"
             df.createOrReplaceTempView(view)
         return f"{prefix} {view} "
 

@@ -14,9 +14,6 @@ from tests.conftest import SF_DIR
 
 @pytest.fixture(scope="module")
 def con(spark):
-    from duckdb_spark.functions.registry import register_sql_functions
-
-    register_sql_functions(spark)
     return Connection(spark=spark, sf_dir=SF_DIR)
 
 

@@ -3,7 +3,9 @@
 A second read of unchanged local files returns the cached DataFrame and
 runs no Spark job; a read of files that changed since sees their new
 rows; SQL text reads each cached scan through one temp view; and a
-second session starts with no entries.
+second session starts with no entries. Local paths resolve once, in
+Python, the way DuckDB resolves them, and Spark reads what they resolved
+to.
 """
 
 from __future__ import annotations
@@ -75,6 +77,37 @@ def test_one_view_per_read(con):
     views = [t.name for t in con.spark.catalog.listTables()
              if t.name.startswith("__tvf_")]
     assert len(views) == 1, views
+
+
+@pytest.mark.parametrize("call", [
+    "read_text('{f}')", "read_blob('{f}')", "sniff_csv('{f}')",
+    "repeat(7, 3)", "duckdb_tables()"])
+def test_repeated_table_function_keeps_one_view(con, tmp_path, call):
+    f = tmp_path / "t.csv"
+    f.write_text("a,b\n1,x\n")
+    for _ in range(3):
+        _count(con, call.format(f=f))
+    views = [t.name for t in con.spark.catalog.listTables()
+             if t.name.startswith("__tvf_")]
+    assert len(views) == 1, views
+
+
+def test_relative_path_after_chdir(con, tmp_path, monkeypatch):
+    (tmp_path / "g2").mkdir()
+    _write(tmp_path / "g2" / "top.parquet", 2)
+    monkeypatch.chdir(tmp_path)
+    src = "read_parquet('g2/top.parquet')"
+    assert _count(con, src) == duckdb.execute(
+        f"SELECT count(*) FROM {src}").fetchone()[0] == 2
+
+
+def test_double_star_recurses(con, tmp_path):
+    (tmp_path / "a" / "b").mkdir(parents=True)
+    for sub, rows in (("", 3), ("a", 5), ("a/b", 9)):
+        _write(tmp_path / sub / f"f{rows}.parquet", rows)
+    src = f"read_parquet('{tmp_path}/**/*.parquet')"
+    assert _count(con, src) == duckdb.execute(
+        f"SELECT count(*) FROM {src}").fetchone()[0] == 17
 
 
 def test_unresolved_paths_get_no_entry(con, tmp_path):

@@ -807,9 +807,6 @@ PASS_CASES = {
 
 @pytest.fixture(scope="module")
 def con(spark):
-    from duckdb_spark.functions.registry import register_sql_functions
-
-    register_sql_functions(spark)
     return Connection(spark=spark, sf_dir=SF_DIR)
 
 
