@@ -13,13 +13,18 @@ Reference surface:
   read_json.cpp`) → `spark.read.json` (NDJSON default, `multiLine` for
   array-of-objects files).
 
-All readers return lazy DataFrames — scans stay distributed, schema
-inference samples, and pushdown applies (check `.explain` → PushedFilters).
+All readers return lazy DataFrames — scans stay distributed and pushdown
+applies (check `.explain` → PushedFilters).
+
+Every parquet open in the engine goes through `open_parquet`. Like
+DuckDB's reader, it reads the schema from a footer itself, on the driver,
+and hands it to Spark, so opening a local file or directory runs no Spark
+job; Spark's own schema inference runs one per open.
 
 `read_parquet`, `read_csv` and `read_json` keep what they read in the
 session's scan cache (`SessionState.scans`), like DuckDB's
 `ParquetFileMetadataCache`: a second read of unchanged local files returns
-the same DataFrame and runs no schema-inference job.
+the same DataFrame without opening them again.
 """
 
 from __future__ import annotations
@@ -28,6 +33,7 @@ import csv as _csv
 import glob as _glob
 import hashlib
 import io as _io
+import json
 import os
 import threading
 from urllib.parse import urlparse
@@ -330,25 +336,158 @@ def read_csv_with_rejects(
     return clean, rejects
 
 
+# parquet summary files, which Spark's inference prefers in this order
+_SUMMARIES = ("_common_metadata", "_metadata")
+# DataFrameReader options that change which files Spark lists
+_LISTING_OPTIONS = frozenset(("basepath", "pathglobfilter", "recursivefilelookup",
+                              "modifiedbefore", "modifiedafter"))
+
+
+def _spark_lists(name: str) -> bool:
+    """Whether Spark's file listing keeps a file or directory of this name
+    (`InMemoryFileIndex.shouldFilterOutPathName`, negated)."""
+    return (name.startswith(_SUMMARIES)
+            or not ((name.startswith("_") and "=" not in name)
+                    or name.startswith(".") or name.endswith("._COPYING_")))
+
+
+def _schema_file(paths: list[str]) -> str | None:
+    """The file whose footer Spark's schema inference reads for `paths`
+    (`ParquetUtils.inferSchema` without merging): over the files Spark
+    lists, sorted by path, the first `_common_metadata`, else the first
+    `_metadata`, else the first data file. None when Spark would read
+    something else: a non-local or relative path, a glob, a hive-partitioned
+    directory (partition discovery sets those columns' types), or nothing."""
+    files = []
+    for p in paths:
+        if urlparse(p).scheme or not os.path.isabs(p) or _glob.has_magic(p) \
+                or any(c in p for c in "{}\\"):
+            return None
+        if os.path.isdir(p):
+            # without partition columns Spark reads only the directory's
+            # own files (`InMemoryFileIndex.allFiles`)
+            for d, subdirs, fs in os.walk(p):
+                subdirs[:] = [s for s in subdirs if _spark_lists(s)]
+                listed = [os.path.join(d, f) for f in fs if _spark_lists(f)]
+                if d == p:
+                    files += listed
+                elif listed and "=" in os.path.relpath(d, p):
+                    return None
+        elif os.path.isfile(p) and _spark_lists(os.path.basename(p)):
+            files.append(p)
+    files.sort()
+    names = [os.path.basename(f) for f in files]
+    for summary in _SUMMARIES:
+        if summary in names:
+            return files[names.index(summary)]
+    data = [f for f, name in zip(files, names) if name not in _SUMMARIES]
+    return data[0] if data else None
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    """The schema Spark infers from the parquet footer of the local file
+    `path`: the footer is read and converted by Spark's own
+    `ParquetFileFormat.readSchemaFromFooter` and
+    `ParquetToSparkSchemaConverter` under the session's conf, over py4j.
+    None when the file is not on Spark's local file system or its footer
+    cannot be read; Spark's inference then reports the problem itself."""
+    from py4j.protocol import Py4JError
+    from pyspark.errors import PySparkException
+    from pyspark.sql.types import StructType
+
+    jvm, jsession = spark._jvm, spark._jsparkSession
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    try:
+        conf = jsession.sessionState().newHadoopConf()
+        jpath = jvm.org.apache.hadoop.fs.Path(path)
+        if jpath.getFileSystem(conf).getScheme() != "file":
+            return None
+        footer = pq.ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(jpath, conf),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        converter = pq.ParquetToSparkSchemaConverter(jsession.sessionState().conf())
+        schema = pq.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(jpath, footer), converter)
+    except (Py4JError, PySparkException):
+        return None
+    return StructType.fromJson(json.loads(schema.json()))
+
+
+def open_parquet(spark: SparkSession, path: str | list[str], **options) -> DataFrame:
+    """`spark.read.options(**options).parquet(*paths)` with the schema
+    Spark would infer, read from the footer Spark would pick, so the open
+    runs no Spark job. A schema-merging read (`mergeSchema`), a read whose
+    file listing options change what Spark lists, and paths
+    `_schema_file` cannot pick a file for pass no schema: that is Spark's
+    own inference, one job."""
+    paths = [path] if isinstance(path, str) else list(path)
+    reader = spark.read.options(**options)
+    opts = {k.lower(): str(v).lower() for k, v in options.items()}
+    merge = opts.get("mergeschema") or spark.conf.get("spark.sql.parquet.mergeSchema")
+    if merge != "true" and _LISTING_OPTIONS.isdisjoint(opts):
+        f = _schema_file(paths)
+        schema = _footer_schema(spark, f) if f else None
+        if schema is not None:
+            reader = reader.schema(schema)
+    return reader.parquet(*paths)
+
+
+def _as_written(path: str | list[str]) -> list[tuple[str, str]]:
+    """(absolute prefix, prefix as written) for each local path or glob
+    of `path`: a file maps to itself; a directory, or the directory part
+    of a glob before its first wildcard, maps to itself with a trailing
+    `/`. DuckDB's `filename` is each match as the glob gave it."""
+    pairs = []
+    for p in [path] if isinstance(path, str) else path:
+        url = urlparse(p)
+        p = url.path if url.scheme == "file" else p
+        if _glob.has_magic(p):
+            parts = p.split("/")
+            i = next(i for i, part in enumerate(parts) if _glob.has_magic(part))
+            written = "/".join(parts[:i]) + "/" if i else ""
+            pairs.append((os.path.join(os.path.abspath(written or "."), ""), written))
+        elif os.path.isdir(p):
+            pairs.append((os.path.join(os.path.abspath(p), ""), os.path.join(p, "")))
+        else:
+            pairs.append((os.path.abspath(p), p))
+    return pairs
+
+
+def _filename(path: str | list[str]):
+    """DuckDB's `filename` column for a scan of `path`: Spark's
+    `_metadata.file_path` as a local path, each match under the prefix
+    it was written with."""
+    # keep a literal `+` through url_decode
+    local = F.url_decode(F.replace(F.regexp_replace(
+        "_metadata.file_path", "^file:(//)?", ""), F.lit("+"), F.lit("%2B")))
+    name = local
+    for absolute, written in reversed(_as_written(path)):
+        if absolute == written:
+            continue
+        if absolute.endswith("/"):
+            name = F.when(local.startswith(absolute), F.concat(
+                F.lit(written), local.substr(len(absolute) + 1, 1 << 30))).otherwise(name)
+        else:
+            name = F.when(local == absolute, F.lit(written)).otherwise(name)
+    return name.alias("filename")
+
+
 def read_parquet(spark: SparkSession, path: str | list[str],
                  file_row_number: bool = False, filename: bool = False,
                  union_by_name: bool = False, **options) -> DataFrame:
     """`file_row_number` and `filename` append DuckDB's columns of those
-    names, in that order; `filename` is the local path, not Spark's
-    `file:` URI."""
+    names, in that order; `filename` is the local path as written, a
+    glob's match as the glob gave it (relative to the current directory
+    for a relative glob), not Spark's `file:` URI."""
     def read(paths) -> DataFrame:
-        reader = spark.read.options(**options)
-        if union_by_name:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*paths) if isinstance(paths, list) else reader.parquet(paths)
+        df = open_parquet(spark, paths, **dict(
+            options, **({"mergeSchema": "true"} if union_by_name else {})))
         extra = []
         if file_row_number:
-            extra.append("_metadata.row_index AS file_row_number")
+            extra.append(F.col("_metadata.row_index").alias("file_row_number"))
         if filename:
-            # keep a literal `+` through url_decode
-            extra.append("url_decode(replace(regexp_replace(_metadata.file_path, "
-                         "'^file:(//)?', ''), '+', '%2B')) AS filename")
-        return df.selectExpr("*", *extra) if extra else df
+            extra.append(_filename(path))
+        return df.select("*", *extra) if extra else df
 
     return _cached(spark, "parquet", path,
                    dict(options, file_row_number=file_row_number,

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_spark import state
+from duckdb_spark.io.readers import open_parquet
 
 _CREATE_RE = re.compile(
     r"(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?TABLE\s+"
@@ -439,9 +440,7 @@ class ManagedTables:
             df = con.sql(as_m.group(1)).df()
             loc = self._loc(name, 0)
             df.write.mode("overwrite").parquet(loc)
-            self.spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-            self.spark.catalog.createTable(name, path=loc, source="parquet")
-            self.tables[name] = (self.spark.table(name).schema, 0)
+            self._point(name, open_parquet(self.spark, loc).schema, 0)
             return None
         if not body.startswith("("):
             return False

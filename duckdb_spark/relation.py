@@ -159,7 +159,9 @@ class Connection:
     """DuckDB-style connection: `con.sql(...)`, `con.read_parquet(...)`."""
 
     def __init__(self, spark: SparkSession | None = None, sf_dir: str | None = None):
-        self.spark = spark or get_spark()
+        # the active session as it is: `get_spark()` would re-apply the
+        # engine conf over the caller's runtime settings
+        self.spark = spark or SparkSession.getActiveSession() or get_spark()
         if sf_dir:
             register_views(self.spark, sf_dir)
         from duckdb_spark.sql.macros import MacroRegistry, PreparedStatements

@@ -58,6 +58,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from duckdb_spark import state
+from duckdb_spark.io.readers import open_parquet
 
 
 _IV_UNIT_US = {
@@ -738,7 +739,7 @@ class SLSession:
                 _DBGEN_CACHE[sf] = tdir
         for t in ("region", "nation", "customer", "supplier", "part",
                   "partsupp", "orders", "lineitem"):
-            df = self.spark.read.parquet(os.path.join(tdir, f"{t}.parquet"))
+            df = open_parquet(self.spark, os.path.join(tdir, f"{t}.parquet"))
             self._register(t, df.schema, df.collect())
 
     def _drop(self, name: str) -> None:
@@ -825,7 +826,7 @@ class SLSession:
             elif fmt == "json":
                 src = self.spark.read.json(path)
             else:
-                src = self.spark.read.parquet(path)
+                src = open_parquet(self.spark, path)
             view = f"__copy_from_{id(self) % 100000}_{len(self.tables)}"
             src.createOrReplaceTempView(view)
             from pyspark.sql import types as _T2

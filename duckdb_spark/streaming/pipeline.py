@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_spark.io.readers import open_parquet
+
 
 def windowed_counts(
     events: DataFrame,
@@ -95,8 +97,8 @@ def run_batch_as_stream(
     os.makedirs(src_dir)
     for f in glob.glob(parquet_path):
         shutil.copy(f, src_dir)
-    static = spark.read.parquet(src_dir)
-    stream = spark.readStream.schema(static.schema).parquet(src_dir)
+    schema = open_parquet(spark, src_dir).schema
+    stream = spark.readStream.schema(schema).parquet(src_dir)
     if ts_from_ns and dict(stream.dtypes).get("ts") == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif dict(stream.dtypes).get("ts") == "timestamp_ntz":

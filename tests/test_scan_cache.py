@@ -39,10 +39,18 @@ def _count(con, source: str) -> int:
     return con.sql(f"SELECT count(*) AS n FROM {source}").df().collect()[0][0]
 
 
+def _scans(con) -> dict:
+    return dict(state.of(con.spark).scans)
+
+
 def test_second_read_runs_no_job(con):
     text = f"SELECT * FROM read_parquet('{SF_DIR}/region.parquet')"
-    assert spark_jobs(con.spark, lambda: con.sql(text)) >= 1
+    # the first read takes the schema from the footer, on the driver
     assert spark_jobs(con.spark, lambda: con.sql(text)) == 0
+    first = _scans(con)
+    assert len(first) == 1
+    assert spark_jobs(con.spark, lambda: con.sql(text)) == 0
+    assert _scans(con) == first  # the same entry, not a new read
 
 
 def test_relation_api_and_sql_text_share_entries(con):
@@ -58,7 +66,10 @@ def test_second_session_reads_again(con, spark):
     con.sql(text)
     other = Connection(spark.newSession())
     assert state.of(other.spark).scans == {}
-    assert spark_jobs(other.spark, lambda: other.sql(text)) >= 1
+    assert spark_jobs(other.spark, lambda: other.sql(text)) == 0
+    [mine], [theirs] = (_scans(c).values() for c in (con, other))
+    assert theirs.df is not mine.df
+    assert theirs.df.sparkSession is other.spark
 
 
 def test_cached_scans_do_not_keep_their_session_alive(spark):
