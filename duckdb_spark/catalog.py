@@ -21,6 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_spark import state
 from duckdb_spark.io.readers import open_parquet
 
 TPCH_TABLES = (
@@ -93,8 +94,27 @@ def load_tables(
 def register_views(
     spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names: tuple[str, ...] = ALL_TABLES
 ) -> dict[str, DataFrame]:
-    """Register each table as a temp view so `spark.sql` text can use it."""
+    """Register each table as a temp view so `spark.sql` text can use it,
+    and record each view as the session catalog holds it
+    (`SessionState.views`, read by `views_bound`)."""
     tables = load_tables(spark, sf_dir, names)
+    views = state.of(spark).views
+    cat = spark._jsparkSession.sessionState().catalog()
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
+        views[name] = (sf_dir, cat.getRawTempView(name))
     return tables
+
+
+def views_bound(spark: SparkSession, sf_dir: str) -> bool:
+    """Whether every bare-name table view is still the one `register_views`
+    bound at `sf_dir`. Any other writer of a view of that name (a user's
+    `Connection.register`, CREATE VIEW, DROP, IMPORT DATABASE) replaces
+    the catalog's view object, so the check sees it (~2 ms for the 10)."""
+    views = state.of(spark).views
+    cat = spark._jsparkSession.sessionState().catalog()
+    return all(
+        views.get(name, ("",))[0] == sf_dir
+        and cat.getRawTempView(name).equals(views[name][1])
+        for name in ALL_TABLES
+    )

@@ -24,6 +24,7 @@ thousands of times; this module is the scale path for real users.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import tempfile
@@ -237,9 +238,14 @@ class ManagedTables:
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.base = tempfile.mkdtemp(prefix="duckdb_spark_tables_")
         # name -> (schema, current version int)
         self.tables: dict[str, tuple] = {}
+
+    @functools.cached_property
+    def base(self) -> str:
+        """The directory the table versions live in, made on first use, so
+        a connection that creates no table leaves no directory behind."""
+        return tempfile.mkdtemp(prefix="duckdb_spark_tables_")
 
     # -- storage ----------------------------------------------------------
 

@@ -6,9 +6,11 @@ rollups with HAVING, high-cardinality two-key group-bys, derived-key
 grouping (q35), CASE-derived traffic matrices (q39), and deep
 LIMIT/OFFSET pagination (q38/q39/q40/q41/q42).
 
-One SQL text per query runs through BOTH engines — Spark via the dialect
-layer (`sql.dialect.translate` → Catalyst), DuckDB via read_parquet
-substitution — so each is also an arbitrary-SQL-entry proof.
+One SQL text per query runs through BOTH engines — Spark through
+`Connection.sql` (`queries.register_text`), DuckDB via read_parquet
+substitution — so each is also an arbitrary-SQL-entry proof. q32 keeps a
+hand builder (a packed-key plan) beside its text, which loses a paired
+A/B against it at sf0.1 (numbers in its docstring).
 
 Reference query text: `benchmark/clickbench/queries/qNN.sql` (adapted:
 aggregates aliased, non-integer aggregates rounded+cast to DOUBLE, and
@@ -45,7 +47,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from duckdb_spark.queries import register
+from duckdb_spark.queries import Fixture, register, register_text
 
 # _v3: +8 columns (MobilePhone[Model], SearchEngineID, DontCountHits,
 # IsLink, IsDownload, WindowClientWidth/Height) for the full 43-query set;
@@ -134,28 +136,13 @@ def ensure_fixture(mult: int = 1) -> str:
     return out_dir
 
 
-def _bind_hits(spark: SparkSession, sf_dir: str) -> None:
-    from duckdb_spark.queries import bench_scale_mult, bind_views
-
-    bind_views(spark, ensure_fixture(bench_scale_mult(sf_dir)), {"hits": "hits"})
-
-
-def _spark_run(spark: SparkSession, sql: str, sf_dir: str = "") -> DataFrame:
-    from duckdb_spark.sql.dialect import translate
-
-    _bind_hits(spark, sf_dir)
-    return spark.sql(translate(sql.format(hits="hits")))
+FIXTURE = Fixture(("hits",), fixture_dir, ensure_fixture)
 
 
 def _cb(name: str, sql: str):
-    @register(name, oracle=sql.format(hits=f"read_parquet('{CB_DIR}/hits.parquet')"))
-    def q(spark: SparkSession, sf_dir: str, _sql=sql) -> DataFrame:
-        """ClickBench over the deterministic fixture (row count scales with
-        sf_dir; reference benchmark/clickbench/queries)."""
-        return _spark_run(spark, _sql, sf_dir)
-
-    q.__name__ = name
-    return q
+    """ClickBench over the deterministic fixture (row count scales with
+    sf_dir; reference benchmark/clickbench/queries)."""
+    return register_text(name, sql, fixture=FIXTURE)
 
 
 # q01 — selective count (queries/q01.sql)
@@ -239,13 +226,14 @@ ORDER BY c DESC, WatchID, ClientIP LIMIT 10
 """
 
 
-def _packed_two_key(
-    spark: SparkSession, sf_dir: str, key1: str, key1_type: str, where=None
-) -> DataFrame:
-    """Shared packed plan for the (key1, ClientIP) rollups (q30-q32): one
-    packed long KEY and one packed long SUM.
+@register("cb_q32", oracle=FIXTURE.read(_CB_Q32_SQL))
+def cb_q32(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q32 as one packed long KEY and one packed long SUM (see the
+    _CB_Q32_SQL note). Kept beside its text: at sf0.1 (2M rows, 4 cores)
+    it runs in 866 ms against the text's 970 ms (medians of 10
+    alternating pairs; the text was slower in 9 of 10).
 
-    The three aggregates also pack into a single SUM: per-row value
+    The three aggregates pack into a single SUM: per-row value
     2^46 + IsRefresh·2^29 + ResolutionWidth, so the group's sum carries
     COUNT(*) in bits 46+, SUM(IsRefresh) in bits 29-45 and
     SUM(ResolutionWidth) in bits 0-28. Valid while (by _GEN_SQL
@@ -258,11 +246,11 @@ def _packed_two_key(
     five-agg form) → 210.4 MB (−34%), both hash maps one key + one long."""
     from pyspark.sql import functions as F
 
-    _bind_hits(spark, sf_dir)
-    hits = spark.table("hits")
-    if where is not None:
-        hits = hits.filter(where)
-    k = F.shiftleft(F.col(key1).cast("long"), 32) + F.col("ClientIP").cast("long")
+    from duckdb_spark.io.readers import read_parquet
+    from duckdb_spark.queries import bench_scale_mult
+
+    hits = read_parquet(spark, f"{ensure_fixture(bench_scale_mult(sf_dir))}/hits.parquet")
+    k = F.shiftleft(F.col("WatchID").cast("long"), 32) + F.col("ClientIP").cast("long")
     v = (
         F.lit(1 << 46).cast("long")
         + F.shiftleft(F.col("IsRefresh").cast("long"), 29)
@@ -274,7 +262,7 @@ def _packed_two_key(
     w = F.col("__s").bitwiseAND(F.lit((1 << 29) - 1))
     return (
         g.select(
-            F.shiftrightunsigned("__k", 32).cast(key1_type).alias(key1),
+            F.shiftrightunsigned("__k", 32).cast("long").alias("WatchID"),
             F.col("__k").bitwiseAND(F.lit(4294967295)).cast("int").alias("ClientIP"),
             c.alias("c"),
             r.cast("long").alias("sum_refresh"),
@@ -282,20 +270,12 @@ def _packed_two_key(
         )
         .orderBy(
             F.desc("c"),
-            F.col(key1).asc_nulls_last(),
+            F.col("WatchID").asc_nulls_last(),
             F.col("ClientIP").asc_nulls_last(),
         )
         .limit(10)
     )
 
-
-@register(
-    "cb_q32",
-    oracle=_CB_Q32_SQL.format(hits=f"read_parquet('{CB_DIR}/hits.parquet')"),
-)
-def cb_q32(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q32 via the packed single-long group key (see _CB_Q32_SQL note)."""
-    return _packed_two_key(spark, sf_dir, "WatchID", "long")
 
 # q40 — multi-predicate slice + LIMIT/OFFSET pagination (q40.sql)
 _cb("cb_q40", """
@@ -459,51 +439,24 @@ _cb("cb_q29", "SELECT " + ", ".join(
     f"CAST(SUM(ResolutionWidth + {k}) AS BIGINT) AS s{k:02d}" for k in range(90)
 ) + " FROM {hits} hits")
 
-# q30/q31 — engine×IP and watch×IP rollups (q30.sql, q31.sql): same shape
-# as q32, same packed-key Spark plan (SearchEngineID ∈ [0, 5] by
-# construction, so the 32-bit pack is injective for it too).
-_CB_Q30_SQL = """
+# q30 — engine×IP rollup (q30.sql)
+_cb("cb_q30", """
 SELECT SearchEngineID, ClientIP, COUNT(*) AS c,
        CAST(SUM(IsRefresh) AS BIGINT) AS sum_refresh,
        ROUND(CAST(AVG(ResolutionWidth) AS DOUBLE), 2) AS avg_width
 FROM {hits} hits WHERE SearchPhrase <> ''
 GROUP BY SearchEngineID, ClientIP
 ORDER BY c DESC, SearchEngineID, ClientIP LIMIT 10
-"""
+""")
 
-_CB_Q31_SQL = """
+# q31 — watch×IP rollup over searches (q31.sql)
+_cb("cb_q31", """
 SELECT WatchID, ClientIP, COUNT(*) AS c,
        CAST(SUM(IsRefresh) AS BIGINT) AS sum_refresh,
        ROUND(CAST(AVG(ResolutionWidth) AS DOUBLE), 2) AS avg_width
 FROM {hits} hits WHERE SearchPhrase <> ''
 GROUP BY WatchID, ClientIP ORDER BY c DESC, WatchID, ClientIP LIMIT 10
-"""
-
-
-@register(
-    "cb_q30",
-    oracle=_CB_Q30_SQL.format(hits=f"read_parquet('{CB_DIR}/hits.parquet')"),
-)
-def cb_q30(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q30 via the packed single-long group key (see _CB_Q32_SQL note)."""
-    from pyspark.sql import functions as F
-
-    return _packed_two_key(
-        spark, sf_dir, "SearchEngineID", "smallint", F.col("SearchPhrase") != ""
-    )
-
-
-@register(
-    "cb_q31",
-    oracle=_CB_Q31_SQL.format(hits=f"read_parquet('{CB_DIR}/hits.parquet')"),
-)
-def cb_q31(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q31 via the packed single-long group key (see _CB_Q32_SQL note)."""
-    from pyspark.sql import functions as F
-
-    return _packed_two_key(
-        spark, sf_dir, "WatchID", "long", F.col("SearchPhrase") != ""
-    )
+""")
 
 # q33/q34 — URL frequency, with and without a constant group key
 # (q33.sql, q34.sql; q34's positional `GROUP BY 1` keeps a constant in

@@ -3,8 +3,9 @@ secondary gate): 34 queries spanning star joins, OR-of-band demographic
 filters, UNION-spelled rollups + rank windows, correlated count
 subqueries, day-bucket pivots, windowed deviation-from-average, and
 returns-chain statistics — each run from ONE SQL text per query through
-both engines — Spark via our dialect layer (`sql.dialect.translate` →
-Catalyst) and DuckDB via the oracle string.
+both engines — Spark through `Connection.sql` (`queries.register_text`)
+and DuckDB via the oracle string; each `{table}` field reads the fixture
+copy for the caller's scale.
 
 Reference query text: `extension/tpcds/dsdgen/queries/NN.sql` (adapted:
 aggregates aliased + cast to rounded doubles so the driver's value-hash
@@ -30,9 +31,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-
-from duckdb_spark.queries import register
+from duckdb_spark.queries import Fixture, register_text
 
 # v5 (round 6): the all-99-query schema — v4's full-channel tables plus
 # s_market_id, shared 300-value zip pool (s_zip ⊆ ca_zip for q24/q8),
@@ -509,32 +508,7 @@ def ensure_fixture(mult: int = 1) -> str:
     return out_dir
 
 
-def _oracle(sql: str) -> str:
-    return sql.format(**{t: f"read_parquet('{TPCDS_DIR}/{t}.parquet')" for t in TABLES})
-
-
-def _spark_run(spark: SparkSession, sql: str, sf_dir: str = "") -> DataFrame:
-    from duckdb_spark.queries import bench_scale_mult, bind_views
-    from duckdb_spark.sql.dialect import translate
-    from duckdb_spark.statements import materialize_ctes
-
-    # Views carry a tpcds_ prefix: the raw names (customer, ...) collide
-    # with the TPC-H temp views other query modules bind in the SAME
-    # session, and the bind_views record would skip re-registration after a
-    # tpch_* call clobbered them (round-8 scan: 12 tpcds queries threw
-    # UNRESOLVED_COLUMN when run after tpch_* in one session).
-    views = {f"tpcds_{t}": t for t in TABLES}
-    bind_views(spark, ensure_fixture(bench_scale_mult(sf_dir)), views)
-    sql = sql.format(**{t: v for v, t in views.items()})
-
-    def run(text: str) -> DataFrame:
-        return spark.sql(translate(text))
-
-    df = materialize_ctes(spark, sql, run)
-    return run(sql) if df is None else df
-
-
-_AVGR = None
+FIXTURE = Fixture(tuple(TABLES), fixture_dir, ensure_fixture)
 
 
 def _expand_avgr(sql: str) -> str:
@@ -552,32 +526,14 @@ def _expand_avgr(sql: str) -> str:
     )
 
 
-def _tpcds(name: str, sql: str):
-    sql = _expand_avgr(sql)
-
-    @register(name, oracle=_oracle(sql))
-    def q(spark: SparkSession, sf_dir: str, _sql=sql) -> DataFrame:
-        """TPC-DS over the deterministic fixture (fact tables scale with
-        sf_dir; reference extension/tpcds/dsdgen)."""
-        return _spark_run(spark, _sql, sf_dir)
-
-    q.__name__ = name
-    return q
-
-
-def _tpcds_split(name: str, oracle_sql: str, spark_sql: str):
-    """Register a TPC-DS query whose Spark-side SQL is a provably
-    equivalent restructure of the oracle text (guide §2.4: same result,
-    fewer scans/exchanges). The oracle keeps the reference shape."""
-    oracle_sql = _expand_avgr(oracle_sql)
-    spark_sql = _expand_avgr(spark_sql)
-
-    @register(name, oracle=_oracle(oracle_sql))
-    def q(spark: SparkSession, sf_dir: str, _sql=spark_sql) -> DataFrame:
-        return _spark_run(spark, _sql, sf_dir)
-
-    q.__name__ = name
-    return q
+def _tpcds(name: str, sql: str, spark_sql: str | None = None):
+    """Register a TPC-DS query over the deterministic fixture (fact tables
+    scale with sf_dir; reference extension/tpcds/dsdgen). `spark_sql`, when
+    given, is a provably equivalent restructure of the oracle text that
+    Spark runs instead (guide §2.4: same result, fewer scans/exchanges);
+    the oracle keeps the reference shape."""
+    return register_text(name, _expand_avgr(sql), spark_sql and _expand_avgr(spark_sql),
+                         FIXTURE)
 
 
 # q3 — star join, month/manufacturer slice (queries/03.sql)
@@ -1644,7 +1600,7 @@ _Q09_SPARK = (
     )
     + "\n   FROM {store_sales} store_sales) agg\nWHERE r_reason_sk = 1"
 )
-_tpcds_split("tpcds_q09", _Q09_ORACLE, _Q09_SPARK)
+_tpcds("tpcds_q09", _Q09_ORACLE, _Q09_SPARK)
 
 # q12 — web item revenue with class-partitioned ratio window (12.sql)
 _tpcds("tpcds_q12", """

@@ -1,6 +1,10 @@
 """Second TPC-H wave: q02/q11/q16/q20 shapes adapted to the fixture
 (no partsupp table — lineitem's (partkey, suppkey) pairs with unit price
-l_extendedprice/l_quantity stand in for the supplier-part catalog).
+l_extendedprice/l_quantity stand in for the supplier-part catalog). They
+are texts run through `Connection.sql`, as in `tpch`; q11 keeps its
+builder, whose docstring gives its A/B numbers. The sketch_* queries stay
+builders: they exist to run the operators of `operators/sketch.py`, which
+their oracle texts do not call.
 """
 
 from __future__ import annotations
@@ -10,16 +14,16 @@ from pyspark.sql import functions as F
 
 from duckdb_spark.catalog import load_table
 from duckdb_spark.functions import aggregates as A
-from duckdb_spark.queries import register
+from duckdb_spark.queries import register, register_text
 
 
 def _t(spark, sf_dir, *names):
     return [load_table(spark, sf_dir, n) for n in names]
 
 
-@register(
-    "tpch_q02",
-    oracle="""
+# q02 — minimum-cost supplier (reference q02.sql shape): correlated-min
+# subquery as a grouped min; supplycost is the min unit price per (part, supp)
+register_text("tpch_q02", """
 WITH ps AS (
   SELECT l_partkey AS partkey, l_suppkey AS suppkey,
          MIN(l_extendedprice / l_quantity) AS supplycost
@@ -43,39 +47,7 @@ JOIN region ON n_regionkey = r_regionkey
 WHERE r_name = 'EUROPE' AND p_size = 15 AND p_type = 'LARGE'
 ORDER BY s_name, p_partkey
 LIMIT 100
-""",
-)
-def tpch_q02(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Minimum-cost supplier (reference q02.sql shape): correlated-min
-    subquery → grouped min + equi-join (DuckDB's decorrelation produces
-    the same plan). supplycost proxied by min unit price per (part, supp)."""
-    lineitem, part, supplier, nation, region = _t(
-        spark, sf_dir, "lineitem", "part", "supplier", "nation", "region"
-    )
-    ps = (
-        lineitem.filter(F.col("l_quantity") > 0)
-        .groupBy(F.col("l_partkey").alias("partkey"), F.col("l_suppkey").alias("suppkey"))
-        .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("supplycost"))
-    )
-    europe_supp = (
-        supplier.join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(region.filter(F.col("r_name") == "EUROPE"), F.col("n_regionkey") == F.col("r_regionkey"))
-    )
-    ps_eu = ps.join(europe_supp, F.col("suppkey") == F.col("s_suppkey"))
-    best = ps_eu.groupBy(F.col("partkey").alias("b_partkey")).agg(F.min("supplycost").alias("min_cost"))
-    return (
-        ps_eu.join(
-            best,
-            (F.col("partkey") == F.col("b_partkey")) & (F.col("supplycost") == F.col("min_cost")),
-        )
-        .join(
-            part.filter((F.col("p_size") == 15) & (F.col("p_type") == "LARGE")),
-            F.col("p_partkey") == F.col("partkey"),
-        )
-        .select("s_name", "n_name", "p_partkey", "p_brand", F.round("supplycost", 4).alias("cost"))
-        .orderBy("s_name", "p_partkey")
-        .limit(100)
-    )
+""")
 
 
 @register(
@@ -101,7 +73,11 @@ ORDER BY total_value DESC, partkey
 def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Important stock identification (reference q11.sql): grouped value
     with a global-fraction HAVING — scalar subquery computed in the same
-    shuffle via an unpartitioned window (no second scan)."""
+    shuffle via an unpartitioned window (no second scan).
+
+    Kept beside its text: at sf0.1 (4 cores) it runs in 729 ms against
+    the text's 1513 ms (medians of 10 alternating pairs; the text was
+    slower in 10 of 10)."""
     lineitem, supplier = _t(spark, sf_dir, "lineitem", "supplier")
     # value stays in scaled-long "cents" through BOTH aggregation levels —
     # rounding to double between the sums would reintroduce the .xx5
@@ -129,9 +105,9 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "tpch_q16",
-    oracle="""
+# q16 — parts/supplier relationship (reference q16.sql): NOT IN over
+# negative-balance suppliers
+register_text("tpch_q16", """
 SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
 FROM lineitem JOIN part ON p_partkey = l_partkey
 WHERE p_brand <> 'Brand#45' AND p_type NOT LIKE 'MEDIUM%'
@@ -139,32 +115,12 @@ WHERE p_brand <> 'Brand#45' AND p_type NOT LIKE 'MEDIUM%'
   AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
 GROUP BY p_brand, p_type, p_size
 ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-""",
-)
-def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parts/supplier relationship (reference q16.sql): NOT IN → anti join
-    (complaints-filter analogue: negative-balance suppliers excluded)."""
-    lineitem, part, supplier = _t(spark, sf_dir, "lineitem", "part", "supplier")
-    excluded = supplier.filter(F.col("s_acctbal") < 0).select(F.col("s_suppkey").alias("x_suppkey"))
-    return (
-        lineitem.join(
-            part.filter(
-                (F.col("p_brand") != "Brand#45")
-                & (~F.col("p_type").like("MEDIUM%"))
-                & (F.col("p_size").isin(3, 9, 14, 19, 23, 36, 45, 49))
-            ),
-            F.col("p_partkey") == F.col("l_partkey"),
-        )
-        .join(excluded, F.col("l_suppkey") == F.col("x_suppkey"), "left_anti")
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
-    )
+""")
 
 
-@register(
-    "tpch_q20",
-    oracle="""
+# q20 — potential part promotion (reference q20.sql shape): suppliers who
+# shipped >30% of a part's yearly volume
+register_text("tpch_q20", """
 WITH shipped AS (
   SELECT l_suppkey, l_partkey, SUM(l_quantity) AS qty
   FROM lineitem
@@ -185,33 +141,7 @@ WHERE s_suppkey IN (
   WHERE p_name LIKE 'p%' AND qty > 0.3 * total_qty)
   AND s_nationkey IN (1, 2, 3, 4, 5)
 ORDER BY s_suppkey
-""",
-)
-def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Potential part promotion (reference q20.sql shape): suppliers who
-    shipped >30% of a part's yearly volume — nested IN-subqueries → semi
-    joins, shares one scan of the filtered lineitem via cached aggregate."""
-    lineitem, supplier, part = _t(spark, sf_dir, "lineitem", "supplier", "part")
-    year = lineitem.filter(
-        (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
-    )
-    shipped = year.groupBy("l_suppkey", "l_partkey").agg(F.sum("l_quantity").alias("qty"))
-    part_total = year.groupBy(F.col("l_partkey").alias("tp_partkey")).agg(
-        F.sum("l_quantity").alias("total_qty")
-    )
-    heavy = (
-        shipped.join(part_total, F.col("l_partkey") == F.col("tp_partkey"))
-        .join(part.filter(F.col("p_name").like("p%")), F.col("p_partkey") == F.col("l_partkey"))
-        .filter(F.col("qty") > 0.3 * F.col("total_qty"))
-        .select(F.col("l_suppkey").alias("h_suppkey"))
-        .distinct()
-    )
-    return (
-        supplier.filter(F.col("s_nationkey").isin(1, 2, 3, 4, 5))
-        .join(heavy, F.col("s_suppkey") == F.col("h_suppkey"), "left_semi")
-        .select("s_name", "s_suppkey")
-        .orderBy("s_suppkey")
-    )
+""")
 
 
 @register(

@@ -6,6 +6,11 @@ operator (`src/execution/operator/aggregate/physical_window.cpp`,
 aggregate-over-frame (ROWS + RANGE), ntile, percent_rank/cume_dist, and
 QUALIFY. All hash-partition on the PARTITION BY key — the same
 materialize-then-compute strategy the reference uses, distributed.
+
+Each query is its DuckDB-dialect text, run through `Connection.sql`
+(`queries.register_text`). win_frames and win_topk_per_group keep a
+hand-written DataFrame builder, because their texts lose a paired A/B
+against it at sf0.1; each builder's docstring gives its numbers.
 """
 
 from __future__ import annotations
@@ -15,33 +20,20 @@ from pyspark.sql import functions as F
 
 from duckdb_spark.catalog import load_table
 from duckdb_spark.functions import aggregates as A
-from duckdb_spark.queries import register
+from duckdb_spark.queries import register, register_text
 
 
 def _t(spark, sf_dir, *names):
     return [load_table(spark, sf_dir, n) for n in names]
 
 
-@register(
-    "win_running_total",
-    oracle="""
+# running revenue per customer (ROWS UNBOUNDED PRECEDING frame)
+register_text("win_running_total", """
 SELECT o_custkey, o_orderkey,
        ROUND(SUM(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                                      ROWS UNBOUNDED PRECEDING), 2) AS running
 FROM orders
-""",
-)
-def win_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running revenue per customer (ROWS UNBOUNDED PRECEDING frame)."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return orders.select(
-        "o_custkey", "o_orderkey", F.round(F.sum("o_totalprice").over(w), 2).alias("running")
-    )
+""")
 
 
 @register(
@@ -61,7 +53,11 @@ def win_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 parts by revenue per brand (rank + filter ≡ QUALIFY).
 
     Catalyst turns rank<=k into WindowGroupLimit (partial top-k before the
-    shuffle — the reference's topn_window_elimination pass, built in)."""
+    shuffle — the reference's topn_window_elimination pass, built in).
+
+    Kept beside its text: at sf0.1 (4 cores) it runs in 447 ms against
+    the text's 836 ms (medians of 10 alternating pairs; the text was
+    slower in 10 of 10)."""
     lineitem, part = _t(spark, sf_dir, "lineitem", "part")
     rev = (
         lineitem.join(part, F.col("l_partkey") == F.col("p_partkey"))
@@ -77,9 +73,8 @@ def win_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "win_lag_gap",
-    oracle="""
+# inter-event gap via lag() over per-user time order
+register_text("win_lag_gap", """
 SELECT event_type, ROUND(AVG(gap_s), 3) AS avg_gap_s, COUNT(*) AS n
 FROM (
   SELECT event_type,
@@ -88,73 +83,30 @@ FROM (
 WHERE gap_s IS NOT NULL
 GROUP BY event_type
 ORDER BY event_type
-""",
-)
-def win_lag_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-event gap via lag() over per-user time order."""
-    (events,) = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = (F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))) / 1e6
-    return (
-        events.withColumn("gap_s", gap)
-        .filter(F.col("gap_s").isNotNull())
-        .groupBy("event_type")
-        .agg(F.round(F.avg("gap_s"), 3).alias("avg_gap_s"), F.count("*").alias("n"))
-        .orderBy("event_type")
-    )
+""")
 
 
-@register(
-    "win_moving_avg",
-    oracle="""
+# 7-day moving average of daily revenue (unpartitioned ROWS frame,
+# the reference's PhysicalStreamingWindow case)
+register_text("win_moving_avg", """
 SELECT day_epoch, ROUND(AVG(day_rev) OVER (ORDER BY day_epoch ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 2) AS ma7
 FROM (SELECT epoch(date_trunc('day', o_orderdate))::BIGINT AS day_epoch,
              SUM(o_totalprice) AS day_rev
       FROM orders GROUP BY 1)
 ORDER BY day_epoch
-""",
-)
-def win_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """7-day moving average of daily revenue (unpartitioned ROWS frame —
-    the reference's PhysicalStreamingWindow case; single-partition sort is
-    fine because the daily series is tiny after aggregation)."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    daily = (
-        orders.groupBy(
-            (F.unix_micros(F.date_trunc("day", "o_orderdate")) / 1_000_000)
-            .cast("long").alias("day_epoch")
-        )
-        .agg(F.sum("o_totalprice").alias("day_rev"))
-    )
-    w = Window.orderBy("day_epoch").rowsBetween(-6, 0)
-    return daily.select(
-        "day_epoch", F.round(F.avg("day_rev").over(w), 2).alias("ma7")
-    ).orderBy("day_epoch")
+""")
 
 
-@register(
-    "win_ntile",
-    oracle="""
+# account-balance quartiles via ntile(4)
+register_text("win_ntile", """
 SELECT q, COUNT(*) AS n, ROUND(AVG(c_acctbal), 2) AS avg_bal
 FROM (SELECT c_acctbal, NTILE(4) OVER (ORDER BY c_acctbal, c_custkey) AS q FROM customer)
 GROUP BY q ORDER BY q
-""",
-)
-def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Account-balance quartiles via ntile(4)."""
-    (customer,) = _t(spark, sf_dir, "customer")
-    w = Window.orderBy("c_acctbal", "c_custkey")
-    return (
-        customer.withColumn("q", F.ntile(4).over(w))
-        .groupBy("q")
-        .agg(F.count("*").alias("n"), F.round(F.avg("c_acctbal"), 2).alias("avg_bal"))
-        .orderBy("q")
-    )
+""")
 
 
-@register(
-    "win_first_last",
-    oracle="""
+# first_value/last_value over an unbounded frame, per supplier
+register_text("win_first_last", """
 SELECT DISTINCT l_suppkey,
        FIRST_VALUE(l_extendedprice) OVER w AS first_price,
        LAST_VALUE(l_extendedprice)  OVER w AS last_price,
@@ -164,124 +116,52 @@ FROM lineitem
 WINDOW w AS (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber
              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
 ORDER BY l_suppkey
-""",
-)
-def win_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """first_value/last_value over an unbounded frame, per supplier."""
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
-    w = (
-        Window.partitionBy("l_suppkey")
-        .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    return (
-        lineitem.select(
-            "l_suppkey",
-            F.first("l_extendedprice").over(w).alias("first_price"),
-            F.last("l_extendedprice").over(w).alias("last_price"),
-            F.first("l_shipdate").over(w).cast("date").alias("first_ship"),
-            F.last("l_shipdate").over(w).cast("date").alias("last_ship"),
-        )
-        .distinct()
-        .orderBy("l_suppkey")
-    )
+""")
 
 
-@register(
-    "win_range_frame",
-    oracle="""
+# RANGE frame: per order, count same-customer orders within ±30 days
+register_text("win_range_frame", """
 SELECT o_orderkey,
        COUNT(*) OVER (PARTITION BY o_custkey ORDER BY day_no RANGE BETWEEN 30 PRECEDING AND 30 FOLLOWING) AS near_orders
 FROM (SELECT o_orderkey, o_custkey, date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day_no FROM orders)
 ORDER BY o_orderkey
-""",
-)
-def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANGE frame: per order, count same-customer orders within ±30 days."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    day_no = F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date"))
-    w = Window.partitionBy("o_custkey").orderBy("day_no").rangeBetween(-30, 30)
-    return (
-        orders.withColumn("day_no", day_no)
-        .select("o_orderkey", F.count("*").over(w).alias("near_orders"))
-        .orderBy("o_orderkey")
-    )
+""")
 
 
-@register(
-    "win_percent_rank",
-    oracle="""
+# percent_rank + cume_dist within part type
+register_text("win_percent_rank", """
 SELECT p_partkey,
        ROUND(PERCENT_RANK() OVER (PARTITION BY p_type ORDER BY p_retailprice, p_partkey), 4) AS pr,
        ROUND(CUME_DIST()    OVER (PARTITION BY p_type ORDER BY p_retailprice, p_partkey), 4) AS cd
 FROM part ORDER BY p_partkey
-""",
-)
-def win_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """percent_rank + cume_dist within part type."""
-    (part,) = _t(spark, sf_dir, "part")
-    w = Window.partitionBy("p_type").orderBy("p_retailprice", "p_partkey")
-    return part.select(
-        "p_partkey",
-        F.round(F.percent_rank().over(w), 4).alias("pr"),
-        F.round(F.cume_dist().over(w), 4).alias("cd"),
-    ).orderBy("p_partkey")
+""")
 
 
-@register(
-    "win_qualify",
-    oracle="""
+# QUALIFY (reference bind_select_node.cpp qualify binding): top
+# supplier per nation
+register_text("win_qualify", """
 SELECT n_name, s_name, ROUND(s_acctbal, 2) AS bal
 FROM supplier JOIN nation ON s_nationkey = n_nationkey
 QUALIFY ROW_NUMBER() OVER (PARTITION BY n_name ORDER BY s_acctbal DESC, s_suppkey) = 1
 ORDER BY n_name
-""",
-)
-def win_qualify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """QUALIFY (reference bind_select_node.cpp qualify binding): filter on
-    a window result — top supplier per nation."""
-    supplier, nation = _t(spark, sf_dir, "supplier", "nation")
-    w = Window.partitionBy("n_name").orderBy(F.desc("s_acctbal"), F.asc("s_suppkey"))
-    return (
-        supplier.join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("n_name", "s_name", F.round("s_acctbal", 2).alias("bal"))
-        .orderBy("n_name")
-    )
+""")
 
 
-@register(
-    "win_lead_ignorenulls",
-    oracle="""
+# last_value(... IGNORE NULLS) over the rows before: the previous
+# non-null value
+register_text("win_lead_ignorenulls", """
 SELECT event_id,
        LAST_VALUE(value IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_val
 FROM (SELECT event_id, user_id, ts, CASE WHEN event_type = 'error' THEN NULL ELSE value END AS value
       FROM events)
 ORDER BY event_id
-""",
-)
-def win_lead_ignorenulls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag(... IGNORE NULLS) — offset function with null skipping."""
-    (events,) = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val = F.when(F.col("event_type") == "error", F.lit(None)).otherwise(F.col("value"))
-    return (
-        events.withColumn("value2", val)
-        .select(
-            "event_id",
-            F.last("value2", ignorenulls=True).over(
-                w.rowsBetween(Window.unboundedPreceding, -1)
-            ).alias("prev_val"),
-        )
-        .orderBy("event_id")
-    )
+""")
 
 
-@register(
-    "win_ranking",
-    oracle="""
+# all six ranking functions in one window pass (row_number, rank and
+# dense_rank with ties on p_size, ntile, percent_rank, cume_dist)
+register_text("win_ranking", """
 SELECT p_partkey,
        ROW_NUMBER()   OVER (PARTITION BY p_type ORDER BY p_retailprice, p_partkey) AS rn,
        RANK()         OVER (PARTITION BY p_type ORDER BY p_size) AS rnk,
@@ -290,29 +170,12 @@ SELECT p_partkey,
        ROUND(PERCENT_RANK() OVER (PARTITION BY p_type ORDER BY p_retailprice, p_partkey), 4) AS pr,
        ROUND(CUME_DIST()    OVER (PARTITION BY p_type ORDER BY p_retailprice, p_partkey), 4) AS cd
 FROM part ORDER BY p_partkey
-""",
-)
-def win_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All six ranking functions in one window pass (row_number / rank /
-    dense_rank with ties on p_size / ntile / percent_rank / cume_dist) —
-    one shuffle on p_type, every function shares the sort."""
-    (part,) = _t(spark, sf_dir, "part")
-    w = Window.partitionBy("p_type").orderBy("p_retailprice", "p_partkey")
-    wt = Window.partitionBy("p_type").orderBy("p_size")
-    return part.select(
-        "p_partkey",
-        F.row_number().over(w).alias("rn"),
-        F.rank().over(wt).alias("rnk"),
-        F.dense_rank().over(wt).alias("drnk"),
-        F.ntile(4).over(w).alias("q"),
-        F.round(F.percent_rank().over(w), 4).alias("pr"),
-        F.round(F.cume_dist().over(w), 4).alias("cd"),
-    ).orderBy("p_partkey")
+""")
 
 
-@register(
-    "win_offsets",
-    oracle="""
+# offset/value functions in one pass: lag, lead(2), ignore-null
+# last_value, first/last over the full frame, nth_value(3)
+register_text("win_offsets", """
 SELECT event_id,
        ROUND(LAG(value)     OVER w, 2) AS prev_v,
        ROUND(LEAD(value, 2) OVER w, 2) AS next2_v,
@@ -326,32 +189,7 @@ SELECT event_id,
 FROM (SELECT *, CASE WHEN event_type = 'error' THEN NULL ELSE value END AS v2 FROM events)
 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ORDER BY event_id
-""",
-)
-def win_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Offset/value window functions in one pass: lag, lead(2), ignore-null
-    last_value, first/last over the full frame, nth_value(3)."""
-    (events,) = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    v2 = F.when(F.col("event_type") == "error", F.lit(None)).otherwise(F.col("value"))
-    return (
-        events.withColumn("v2", v2)
-        .select(
-            "event_id",
-            F.round(F.lag("value").over(w), 2).alias("prev_v"),
-            F.round(F.lead("value", 2).over(w), 2).alias("next2_v"),
-            F.round(
-                F.last("v2", ignorenulls=True).over(
-                    w.rowsBetween(Window.unboundedPreceding, -1)
-                ), 2,
-            ).alias("prev_nonnull"),
-            F.round(F.first("value").over(w), 2).alias("first_v"),
-            F.round(F.last("value").over(wfull), 2).alias("last_v"),
-            F.round(F.nth_value("value", 3).over(wfull), 2).alias("third_v"),
-        )
-        .orderBy("event_id")
-    )
+""")
 
 
 @register(
@@ -385,9 +223,14 @@ ORDER BY o_orderkey
 def win_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregates over every frame type in one pass: ROWS running total,
     bounded ROWS moving average, value RANGE frame, GROUPS frame
-    (dense_rank→RANGE rewrite, operators/groups_frame.py), and the EXCLUDE
+    (dense_rank→RANGE, as `dialect_window._rewrite_groups_frames` spells
+    it for SQL text), and the EXCLUDE
     modifier (CURRENT ROW + GROUP, operators/exclude_frame.py) against
-    DuckDB's native EXCLUDE execution."""
+    DuckDB's native EXCLUDE execution.
+
+    Kept beside its text: at sf0.1 (4 cores) it runs in 2534 ms against
+    the text's 4202 ms (medians of 10 alternating pairs; the text was
+    slower in 10 of 10)."""
     from duckdb_spark.operators.exclude_frame import sum_exclude
 
     (orders,) = _t(spark, sf_dir, "orders")
@@ -423,9 +266,9 @@ def win_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderkey")
 
 
-@register(
-    "win_groups_frame",
-    oracle="""
+# GROUPS-frame semantics (reference WindowBoundary *_GROUPS) spelled
+# as a dense_rank + RANGE frame
+register_text("win_groups_frame", """
 SELECT o_custkey, o_orderkey,
        CAST(COUNT(*) OVER (PARTITION BY o_custkey ORDER BY grp
                            RANGE BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS BIGINT) AS grp_cnt,
@@ -437,33 +280,13 @@ FROM (SELECT o_custkey, o_orderkey, o_totalprice,
                    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day_no
             FROM orders))
 ORDER BY o_orderkey
-""",
-)
-def win_groups_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPS frame (reference WindowBoundary *_GROUPS — Spark has no
-    native GROUPS, and this DuckDB snapshot parses but does not execute
-    them either): exact dense_rank→RANGE rewrite
-    (operators/groups_frame.py); the oracle expresses the same semantics
-    through an independent dense_rank+RANGE SQL formulation."""
-    from duckdb_spark.operators.groups_frame import groups_frame
-
-    (orders,) = _t(spark, sf_dir, "orders")
-    base = orders.select(
-        "o_custkey", "o_orderkey", "o_totalprice",
-        F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")).alias("day_no"),
-    )
-    out = groups_frame(
-        base, F.count("*"), ["o_custkey"], ["day_no"], 1, 1, "grp_cnt"
-    )
-    out = groups_frame(
-        out, F.sum("o_totalprice"), ["o_custkey"], ["day_no"], 1, 1, "grp_rev"
-    )
-    return out.select(
-        "o_custkey", "o_orderkey", "grp_cnt", F.round("grp_rev", 2).alias("grp_rev")
-    ).orderBy("o_orderkey")
+""")
 
 
-_EXCL_SQL = """
+# EXCLUDE CURRENT ROW / GROUP / TIES frame modifiers (reference
+# window_expression.hpp WindowExcludeMode; SURVEY §2.5): the collect-frame +
+# array-HOF rewrite in sql/dialect.py
+register_text("win_exclude_frames", """
 SELECT o_custkey, o_orderkey,
        CAST(ROUND(CAST(SUM(o_totalprice) OVER (
            PARTITION BY o_custkey ORDER BY o_orderkey
@@ -479,24 +302,13 @@ SELECT o_custkey, o_orderkey,
            EXCLUDE TIES) AS DOUBLE) AS m_ties
 FROM orders WHERE o_custkey % 40 = 1
 ORDER BY o_custkey, o_orderkey
-"""
+""")
 
 
-@register("win_exclude_frames", oracle=_EXCL_SQL)
-def win_exclude_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCLUDE CURRENT ROW / GROUP / TIES frame modifiers in SQL text
-    (reference window_expression.hpp WindowExcludeMode; SURVEY §2.5) —
-    the collect-frame + array-HOF rewrite in sql/dialect.py. One window
-    pass per spec; exclusion filtering is per-row JVM lambdas, no extra
-    shuffle beyond the partition hash."""
-    from duckdb_spark.sql.dialect import translate
-
-    (orders,) = _t(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("orders")
-    return spark.sql(translate(_EXCL_SQL))
-
-
-_WDIST_SQL = """
+# DISTINCT window aggregates over framed and partition-only specs
+# (reference window_distinct_aggregator.cpp; SURVEY §2.5): the
+# array_distinct(collect_list() OVER) rewrite
+register_text("win_distinct_agg", """
 SELECT o_orderkey,
        COUNT(DISTINCT o_orderpriority) OVER (
            PARTITION BY o_custkey ORDER BY o_orderkey
@@ -505,23 +317,13 @@ SELECT o_orderkey,
            PARTITION BY o_custkey) AS BIGINT) AS s_mod
 FROM orders WHERE o_custkey % 40 = 1
 ORDER BY o_orderkey
-"""
+""")
 
 
-@register("win_distinct_agg", oracle=_WDIST_SQL)
-def win_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DISTINCT window aggregates over framed and partition-only specs
-    (reference window_distinct_aggregator.cpp; SURVEY §2.5) — the
-    array_distinct(collect_list() OVER) rewrite. Frame-bounded distinct
-    state per row, exactly the reference's cost class."""
-    from duckdb_spark.sql.dialect import translate
-
-    (orders,) = _t(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("orders")
-    return spark.sql(translate(_WDIST_SQL))
-
-
-_WVARB_SQL = """
+# row-dependent frame bounds (reference window_boundaries_state.cpp
+# START_EXPR/END_EXPR; SURVEY §2.5): the per-row frame materialization
+# rewrite; the WHERE keeps the one ordered partition small at every SF
+register_text("win_variable_bounds", """
 SELECT o_orderkey,
        CAST(ROUND(CAST(AVG(o_totalprice) OVER (
            ORDER BY o_orderkey
@@ -529,18 +331,4 @@ SELECT o_orderkey,
        ) AS DECIMAL(24,6)), 2) AS DOUBLE) AS a
 FROM orders WHERE o_custkey % 100 = 1
 ORDER BY o_orderkey
-"""
-
-
-@register("win_variable_bounds", oracle=_WVARB_SQL)
-def win_variable_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-dependent window frame bounds (reference
-    window_boundaries_state.cpp START_EXPR/END_EXPR; SURVEY §2.5) — the
-    per-row frame materialization rewrite. O(partition) per row, matching
-    the reference's boundary search; the WHERE keeps the single ordered
-    partition small at every SF."""
-    from duckdb_spark.sql.dialect import translate
-
-    (orders,) = _t(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("orders")
-    return spark.sql(translate(_WVARB_SQL))
+""")

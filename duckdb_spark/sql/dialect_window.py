@@ -47,8 +47,7 @@ def _rewrite_groups_frames(toks: list[str]) -> list[str]:
         FROM (SELECT *, dense_rank() OVER (PARTITION BY p ORDER BY o)
               AS __grkN … FROM src) __grt
 
-    (same rewrite operators/groups_frame.py applies at the DataFrame
-    layer). Single-SELECT statements without GROUP BY only — the window
+    Single-SELECT statements without GROUP BY only — the window
     input set is then the WHERE-filtered source, which moves into the
     derived table intact."""
     if not any(_is_word(t, "GROUPS") for t in toks):

@@ -40,17 +40,20 @@ class SessionState:
     enum_cols: dict[str, dict[str, list[str]]] = field(default_factory=dict)
     # Python UDF names registered on the session (register_udf)
     udfs: set[str] = field(default_factory=set)
-    # fixture dir each set of fixture views is bound to (queries.bind_views)
-    bound: dict[tuple[str, ...], str] = field(default_factory=dict)
+    # bare-name table views as catalog.register_views, their only
+    # writer, bound them: name → (sf_dir, the session catalog's view)
+    views: dict[str, tuple[str, object]] = field(default_factory=dict)
     # file scans (io.readers): (reader, paths, options) → Scan
     scans: dict[tuple[str, str, str], Scan] = field(default_factory=dict)
+    # the Connection registered query texts run through (queries.run_text)
+    connection: object = None
 
     def reset(self) -> None:
         """Forget the DuckDB catalog: settings, types, schemas and column
-        marks. UDFs, fixture views and scan views stay registered on the
-        session, so their records stay too."""
+        marks. UDFs, table views and scan views stay registered on the
+        session, so their records stay too, and so does the connection."""
         for f in dataclasses.fields(self):
-            if f.name not in ("udfs", "bound", "scans"):
+            if f.name not in ("udfs", "views", "scans", "connection"):
                 getattr(self, f.name).clear()
 
 

@@ -194,3 +194,24 @@ def test_keywords_inside_string_literals(con):
                 "RETURNING a").df().collect()
     assert [x.a for x in r] == [1]
     con.sql("DROP TABLE kw_t")
+
+
+def test_connection_makes_its_table_directory_on_first_use(spark):
+    """A connection that creates no table leaves no directory behind; the
+    first table makes one, and `base` names it."""
+    import glob
+    import os
+    import tempfile
+
+    def dirs():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "duckdb_spark_tables_*")))
+
+    before = dirs()
+    c = duckdb_spark.Connection(spark)
+    assert c.sql("SELECT 1 AS x").fetchall()[0].x == 1
+    assert dirs() == before
+    c.sql("CREATE OR REPLACE TABLE mt_lazy_dir AS SELECT 1 AS a")
+    try:
+        assert dirs() - before == {c.managed.base}
+    finally:
+        c.sql("DROP TABLE mt_lazy_dir")

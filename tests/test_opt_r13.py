@@ -89,31 +89,17 @@ def test_cb_q32_packed_key_matches_sql_form(spark):
     """The packed-key plan must reproduce the reference SQL text exactly
     (same rows, same schema) on the base fixture."""
     from duckdb_spark.queries import clickbench as CB
-    from duckdb_spark.sql.dialect import translate
+    from duckdb_spark.queries import run_text
+    from tests.conftest import SF_DIR
 
-    CB._bind_hits(spark, "/root/testdata/sf0.001")
-    ref = spark.sql(translate(CB._CB_Q32_SQL.format(hits="hits")))
-    got = CB.cb_q32(spark, "/root/testdata/sf0.001")
+    ref = run_text(spark, SF_DIR, CB.FIXTURE.read(CB._CB_Q32_SQL))
+    got = CB.cb_q32(spark, SF_DIR)
     # name+type must match (nullability may differ: COUNT(*) is
     # non-nullable, the packed SUM is nullable — pandas dtypes identical)
     assert [(f.name, f.dataType) for f in got.schema] == [
         (f.name, f.dataType) for f in ref.schema
     ]
     assert [tuple(r) for r in got.collect()] == [tuple(r) for r in ref.collect()]
-
-
-def test_cb_q30_q31_packed_key_match_sql_form(spark):
-    from duckdb_spark.queries import clickbench as CB
-    from duckdb_spark.sql.dialect import translate
-
-    CB._bind_hits(spark, "/root/testdata/sf0.001")
-    for sql, fn in ((CB._CB_Q30_SQL, CB.cb_q30), (CB._CB_Q31_SQL, CB.cb_q31)):
-        ref = spark.sql(translate(sql.format(hits="hits")))
-        got = fn(spark, "/root/testdata/sf0.001")
-        assert [(f.name, f.dataType) for f in got.schema] == [
-            (f.name, f.dataType) for f in ref.schema
-        ]
-        assert [tuple(r) for r in got.collect()] == [tuple(r) for r in ref.collect()]
 
 
 def test_fold_guard_refuses_oversized_groups(spark):

@@ -75,10 +75,12 @@ def test_materialized_ctes_run_once_and_leave_no_views(spark, monkeypatch):
     real = cls.localCheckpoint
     monkeypatch.setattr(cls, "localCheckpoint", lambda df, *a, **k: (
         checkpoints.append(df), real(df, *a, **k))[1])
-    q.QUERIES["tpcds_q03"](spark, SF_DIR)  # binds the fixture views
+    names = ("tpcds_q04", "tpcds_q11", "tpcds_q14", "tpcds_q23",
+             "tpcds_q31", "tpcds_q47", "tpcds_q57", "tpcds_q74")
+    for name in names:  # the first call of each opens its tables' scan views
+        q.QUERIES[name](spark, SF_DIR)
     before = {t.name for t in spark.catalog.listTables()}
-    for name in ("tpcds_q04", "tpcds_q11", "tpcds_q14", "tpcds_q23",
-                 "tpcds_q31", "tpcds_q47", "tpcds_q57", "tpcds_q74"):
+    for name in names:
         checkpoints.clear()
         q.QUERIES[name](spark, SF_DIR)
         assert len(checkpoints) == q.ORACLE[name].count("AS MATERIALIZED") > 0, name

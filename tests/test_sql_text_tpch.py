@@ -1,23 +1,52 @@
-"""The registered TPC-H oracle texts, VERBATIM, through Connection.sql.
+"""The registered oracle texts, VERBATIM, through Connection.sql.
 
-The DuckDB-dialect SQL that `duckdb_spark.queries.tpch` registers as each
+The DuckDB-dialect SQL that `duckdb_spark.queries` registers as each
 query's ORACLE is fed unmodified through the macro-expansion +
 dialect-translation + Catalyst path and compared to pip duckdb executing
 the same text: an arbitrary-SQL entry point check over TPC-H shapes
-(joins, date ranges, CASE aggregates, IN-subqueries), not over the
-DataFrame builders.
+(joins, date ranges, CASE aggregates, IN-subqueries), and over the texts
+of the queries that keep a hand builder (`KEEP`), so the text path of a
+kept query stays tested too. Every other registered query of the
+text-first modules runs its text through `queries.run_text`.
 """
 
 from __future__ import annotations
 
 import math
+import os
 
+import duckdb
 import pytest
 
-from duckdb_spark.queries import ORACLE, load_all
-from tests.conftest import SF_DIR
+from duckdb_spark import queries
+from duckdb_spark.queries import ORACLE, QUERIES, load_all
+from tests.conftest import SF_DIR, TABLES, assert_matches_oracle
 
 RUNNABLE = ["q01", "q05", "q06", "q07", "q08", "q14", "q18"]
+
+# The registered queries of the text-first modules that keep a hand
+# builder beside their text: the text loses a paired A/B against the
+# builder at sf0.1 (ROADMAP Direction 2 has the table), or, for the last
+# group, the builder runs an operator the text does not (agg_product and
+# agg_distributive: the reference's scan-order PRODUCT, see
+# test_product_builders_match_the_reference_multiply).
+KEEP = (
+    "tpch_q01", "tpch_q11", "tpch_q15", "tpch_q18", "tpch_q21", "tpch_q22",
+    "win_frames", "win_topk_per_group",
+    "agg_collect_list", "agg_entropy", "agg_quantiles", "agg_stats_wide",
+    "cb_q32",
+    "agg_product", "agg_distributive",
+    "sketch_approx_top_k", "sketch_lttb", "sketch_summarize", "sketch_topk_merge",
+)
+# kept builders whose texts fail through Connection.sql, with what is seen
+TEXT_FAILS = {
+    "agg_quantiles": "no result within 25 s",
+    "agg_stats_wide": "no result within 120 s",
+    "sketch_lttb": "CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE: INT and BIGINT in the "
+                   "recursive CTE's UNION ALL",
+    "sketch_summarize": "TABLE_OR_VIEW_NOT_FOUND: SUMMARIZE as a derived table",
+}
+TEXT_FIRST = ("tpch", "tpch2", "windows", "aggregates", "clickbench", "tpcds")
 
 
 @pytest.fixture(scope="module")
@@ -30,17 +59,12 @@ def sql_con(spark):
     return Connection(spark)
 
 
-@pytest.mark.parametrize("name", RUNNABLE)
-def test_oracle_sql_text_verbatim(sql_con, oracle, name):
-    sql = ORACLE[f"tpch_{name}"].strip().rstrip(";")
-    want = oracle.execute(sql).fetchall()
-    got = [tuple(r) for r in sql_con.sql(sql).fetchall()]
+def _assert_close(name, got, want):
     assert len(got) == len(want), (name, len(got), len(want))
 
     def norm(rows):
-        return sorted(
-            tuple(round(x, 4) if isinstance(x, float) else x for x in r) for r in rows
-        )
+        rows = [tuple(round(x, 4) if isinstance(x, float) else x for x in r) for r in rows]
+        return sorted(rows, key=lambda r: tuple((x is None, x) for x in r))
 
     for rg, rw in zip(norm(got), norm(want)):
         for a, b in zip(rg, rw):
@@ -50,3 +74,131 @@ def test_oracle_sql_text_verbatim(sql_con, oracle, name):
                     name, a, b)
             else:
                 assert str(a) == str(b), (name, a, b)
+
+
+@pytest.mark.parametrize("name", RUNNABLE)
+def test_oracle_sql_text_verbatim(sql_con, oracle, name):
+    sql = ORACLE[f"tpch_{name}"].strip().rstrip(";")
+    want = oracle.execute(sql).fetchall()
+    got = [tuple(r) for r in sql_con.sql(sql).fetchall()]
+    _assert_close(name, got, want)
+
+
+@pytest.mark.parametrize(
+    "name", [n for n in KEEP if n not in TEXT_FAILS and n[5:] not in RUNNABLE])
+def test_kept_builder_text_verbatim(sql_con, oracle, name):
+    sql = ORACLE[name].strip().rstrip(";")
+    want = oracle.execute(sql).fetchall()
+    got = [tuple(r) for r in sql_con.sql(sql).fetchall()]
+    _assert_close(name, got, want)
+
+
+def test_text_first_modules_run_their_texts(monkeypatch):
+    """Every registered query of the text-first modules runs its text
+    through `run_text`, or is a hand builder named in KEEP."""
+    load_all()
+    modules = {f"duckdb_spark.queries.{m}" for m in TEXT_FIRST}
+    builders = {n for n, fn in QUERIES.items() if fn.__module__ in modules}
+    assert builders == set(KEEP)
+    calls = []
+    monkeypatch.setattr(queries, "run_text",
+                        lambda spark, sf_dir, text: calls.append((sf_dir, text)))
+    texts = [n for n, fn in QUERIES.items() if fn.__module__ == queries.__name__]
+    assert texts
+    for name in texts:
+        calls.clear()
+        QUERIES[name](None, SF_DIR)
+        # SF_DIR is a base-scale dir, so fixture texts read the base copy
+        # the oracle reads; tpcds_q09 runs a one-scan restructure of it
+        assert len(calls) == 1 and calls[0][0] == SF_DIR, name
+        assert (calls[0][1] == ORACLE[name]) == (name != "tpcds_q09"), name
+
+
+def test_run_text_follows_the_sf_dir_of_each_call(spark):
+    """The bare-name views follow each call's sf_dir, whichever of
+    `run_text` and `Connection(sf_dir=…)` bound them last."""
+    from duckdb_spark.relation import Connection
+
+    small, other = SF_DIR, os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    oracles = {}
+    for d in (small, other):
+        con = oracles[d] = duckdb.connect()
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet')")
+    load_all()
+    try:
+        for d in (small, other, small):
+            assert_matches_oracle(QUERIES["tpch_q03"](spark, d), oracles[d],
+                                  ORACLE["tpch_q03"], name=d)
+        Connection(spark, sf_dir=other)
+        assert_matches_oracle(QUERIES["tpch_q03"](spark, small), oracles[small],
+                              ORACLE["tpch_q03"], name="after Connection")
+    finally:
+        for con in oracles.values():
+            con.close()
+
+
+def test_run_text_rebinds_views_another_writer_replaced(spark, oracle):
+    """A view of a table name that another writer replaced or dropped
+    since `register_views` bound it is bound again before a text runs."""
+    from duckdb_spark.relation import Connection
+
+    load_all()
+    QUERIES["tpch_q03"](spark, SF_DIR)
+    con = Connection(spark)
+    con.register("orders", con.sql("SELECT * FROM orders LIMIT 1"))
+    assert_matches_oracle(QUERIES["tpch_q03"](spark, SF_DIR), oracle,
+                          ORACLE["tpch_q03"], name="after register")
+    con.sql("CREATE OR REPLACE TEMP VIEW customer AS SELECT 1 AS c_custkey")
+    spark.catalog.dropTempView("lineitem")
+    assert_matches_oracle(QUERIES["tpch_q03"](spark, SF_DIR), oracle,
+                          ORACLE["tpch_q03"], name="after CREATE VIEW and DROP")
+
+def test_product_builders_match_the_reference_multiply(spark, tmp_path):
+    """agg_product and agg_distributive keep their builders for PRODUCT:
+    the reference multiplies in scan order, and the exp(Σ ln|x|) that SQL
+    PRODUCT runs lands on other doubles. On a fixture whose products are
+    large enough that ROUND cannot hide the difference (checked here in
+    Python), both builders match pip duckdb exactly."""
+    import random
+
+    rng = random.Random(7)
+    lineitem = [(997 * k, float(rng.randint(1, 50))) for k in range(1, 9) for _ in range(12)]
+    lineitem += [(997 * k + 1, 3.0) for k in range(1, 9)]
+    # nation 0: 400 suppliers, a product near 1e12; nation 1: 12, near 1
+    supplier = [(i, f"Supplier#{i:09d}", 0 if i <= 400 else 1,
+                 round(rng.uniform(5000, 9999.99) if i <= 400 else rng.uniform(-999, 999), 2))
+                for i in range(1, 413)]
+    nation = [(0, "ALGERIA", 0), (1, "ARGENTINA", 1)]
+
+    def seq(vals):
+        p = 1.0
+        for v in vals:
+            p *= v
+        return p
+
+    def exp_ln(vals):
+        return math.exp(math.fsum(math.log(v) for v in vals))
+
+    by_order = {}
+    for k, q in lineitem:
+        by_order.setdefault(k, []).append(q)
+    assert any(abs(seq(v) - exp_ln(v)) >= 1 for v in by_order.values())
+    big = [1 + a / 100000 for _, _, n, a in supplier if n == 0]
+    assert abs(seq(big) - exp_ln(big)) > 1e-4
+
+    con = duckdb.connect()
+    con.execute("SET threads TO 1")
+    for name, cols, rows in (
+        ("lineitem", "l_orderkey BIGINT, l_quantity DOUBLE", lineitem),
+        ("supplier", "s_suppkey BIGINT, s_name VARCHAR, s_nationkey INTEGER, "
+                     "s_acctbal DOUBLE", supplier),
+        ("nation", "n_nationkey INTEGER, n_name VARCHAR, n_regionkey INTEGER", nation),
+    ):
+        con.execute(f"CREATE TABLE {name} ({cols})")
+        con.executemany(f"INSERT INTO {name} VALUES ({', '.join('?' * len(rows[0]))})", rows)
+        con.execute(f"COPY {name} TO '{tmp_path}/{name}.parquet' (FORMAT parquet)")
+    load_all()
+    for name in ("agg_product", "agg_distributive"):
+        got = [tuple(r) for r in QUERIES[name](spark, str(tmp_path)).collect()]
+        assert got == con.execute(ORACLE[name]).fetchall(), name
