@@ -12,20 +12,20 @@ operator is declared through `pyspark.sql` and optimized by Catalyst.
 Entry points:
     from duckdb_spark import connect
     con = connect()                      # DuckDB-style connection facade
+    con = connect(sf_dir)                # …whose SQL text names sf_dir's
+                                         # <table>.parquet files as tables
     rel = con.read_parquet(path)         # Relation (lazy DataFrame wrapper)
     rel.filter("l_quantity < 24").aggregate("sum(l_extendedprice)").df()
 """
 
 import duckdb_spark.types  # noqa: F401 — applies the interval collection patch
 from duckdb_spark.session import get_spark, stop_spark
-from duckdb_spark.catalog import TPCH_TABLES, load_tables, register_views
+from duckdb_spark.catalog import TPCH_TABLES
 from duckdb_spark.relation import Connection, Relation, connect
 
 __all__ = [
     "get_spark",
     "stop_spark",
-    "load_tables",
-    "register_views",
     "TPCH_TABLES",
     "connect",
     "Connection",

@@ -1,13 +1,23 @@
-"""Table catalog: load the test-data star schema and register SQL views.
+"""Table catalog: the test-data star schema, read through the scan cache.
 
 DuckDB's catalog is hierarchical (catalog → schema → entries; reference
-`src/catalog/`); on Spark we use the session catalog (temp views) plus this
-module's loader, which also normalizes physical-encoding differences between
-the parquet files and engine types:
+`src/catalog/`); on Spark the session catalog (temp views) holds the
+entries. The tables of an sf_dir are not entries until a statement names
+one: `Connection(spark, sf_dir)` lists the dir (`list_tables`), and a
+statement binds each listed name it mentions that the session catalog does
+not hold (`bind`), the way DuckDB's binder falls back to a replacement
+scan. A replacement scan makes no catalog entry, so a view the engine
+bound for another sf_dir does not hide this one's table: the session
+records its binds (`SessionState.binds`), and a Connection binds its own
+path over a name whose view is still one the engine bound for another.
+Every read goes through `readers.read_parquet`, so a table is opened once
+per session while its files do not change.
 
-- `events.ts` is parquet TIMESTAMP(NANOS); Spark reads it as long-nanos
-  (session conf `nanosAsLong`) and we truncate to µs `TimestampType`,
-  which is byte-identical to what DuckDB's reader produces (verified).
+`read_table` and `bind` give `events.ts` the `timestamp` type its bare
+table has always had (`normalize_events`). A `read_parquet` of the same
+file gives what DuckDB's `read_parquet` gives: `timestamp_ntz` (DuckDB's
+TIMESTAMP) for its µs TIMESTAMP, also for a TIMESTAMP(NANOS) file, which
+the reader truncates to µs as DuckDB's does.
 
 Scale note: each table is a plain parquet scan — partition pruning, predicate
 pushdown and column pruning all happen in Catalyst; nothing here materializes
@@ -18,11 +28,12 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_spark import state
-from duckdb_spark.io.readers import open_parquet
+from duckdb_spark.io.readers import read_parquet
 
 TPCH_TABLES = (
     "region",
@@ -38,35 +49,53 @@ AUX_TABLES = ("events", "documents", "embeddings")
 
 ALL_TABLES = TPCH_TABLES + AUX_TABLES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+def list_tables(sf_dir: str) -> dict[str, str]:
+    """Lowercase table name → path, for each `<name>.parquet` file or
+    directory in `sf_dir` whose name is an identifier. Reads no file."""
+    with os.scandir(sf_dir) as entries:
+        return {e.name[:-8].lower(): e.path for e in entries
+                if e.name.endswith(".parquet") and e.name[:-8].isidentifier()}
 
 
-# (SparkSession id, sf_dir, name) → DataFrame. Re-opening the same parquet
-# repeats the driver-side file listing and footer read (`open_parquet`,
-# 10-20 ms a table, no Spark job); the logical plan is immutable so
-# memoizing is safe. Keyed by session id so a restarted session doesn't
-# serve stale plans. It stays a module dict rather than session state
-# because the benchmark's traced run probes it by this exact key
-# (perfbench/layers.py).
-_TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The sf_dir table `name`, read through the session's scan cache."""
+    return _normalize(name, read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet")))
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (id(spark), sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = open_parquet(spark, f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+def bind(spark: SparkSession, name: str, path: str, replace: bool = False) -> None:
+    """Register the parquet table at `path` as the temp view `name` and
+    record it in the session's `binds`. Unless `replace`, a temp view of
+    that name that exists by now wins."""
+    df = _normalize(name, read_parquet(spark, path))
+    try:
+        (df.createOrReplaceTempView if replace else df.createTempView)(name)
+    except AnalysisException as e:
+        if e.getCondition() != "TEMP_TABLE_OR_VIEW_ALREADY_EXISTS":
+            raise
+        return
+    view = spark._jsparkSession.sessionState().catalog().getRawTempView(name)
+    state.of(spark).binds[name] = (path, view)
+
+
+def _normalize(name: str, df: DataFrame) -> DataFrame:
+    return normalize_events(df) if name == "events" else df
+
+
+def normalize_events(df: DataFrame) -> DataFrame:
+    """`df` (the events table, a batch or a stream) with `ts` as
+    `timestamp`. A stream of a TIMESTAMP(NANOS) file reads it as
+    long-nanos (`nanosAsLong`); a batch read already has it as µs."""
+    ts = dict(df.dtypes).get("ts")
+    if ts == "bigint":
         # ns → µs truncation (identical to the DuckDB reader's behavior).
         # Integer DIV — float division loses ULPs at 1e18-ns magnitudes.
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif name == "events" and dict(df.dtypes).get("ts") == "timestamp_ntz":
-        # µs-precision parquet TIMESTAMP (e.g. the scaled bench data written
-        # by DuckDB) reads as NTZ; session timezone is UTC so the cast to
-        # TimestampType is value-preserving and unblocks unix_micros().
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _TABLE_CACHE[key] = df
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts == "timestamp_ntz":
+        # µs-precision parquet TIMESTAMP reads as NTZ; session timezone is
+        # UTC so the cast to TimestampType is value-preserving and unblocks
+        # unix_micros() and watermarks.
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
@@ -83,38 +112,3 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < par // 2:
         return df.repartition(par)
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names: tuple[str, ...] = ALL_TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names: tuple[str, ...] = ALL_TABLES
-) -> dict[str, DataFrame]:
-    """Register each table as a temp view so `spark.sql` text can use it,
-    and record each view as the session catalog holds it
-    (`SessionState.views`, read by `views_bound`)."""
-    tables = load_tables(spark, sf_dir, names)
-    views = state.of(spark).views
-    cat = spark._jsparkSession.sessionState().catalog()
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-        views[name] = (sf_dir, cat.getRawTempView(name))
-    return tables
-
-
-def views_bound(spark: SparkSession, sf_dir: str) -> bool:
-    """Whether every bare-name table view is still the one `register_views`
-    bound at `sf_dir`. Any other writer of a view of that name (a user's
-    `Connection.register`, CREATE VIEW, DROP, IMPORT DATABASE) replaces
-    the catalog's view object, so the check sees it (~2 ms for the 10)."""
-    views = state.of(spark).views
-    cat = spark._jsparkSession.sessionState().catalog()
-    return all(
-        views.get(name, ("",))[0] == sf_dir
-        and cat.getRawTempView(name).equals(views[name][1])
-        for name in ALL_TABLES
-    )

@@ -30,7 +30,7 @@ NAMES: dict[str, str] = {
     "substring": "substring", "substr": "substring", "contains": "contains",
     "starts_with": "startswith", "prefix": "startswith",
     "ends_with": "endswith", "suffix": "endswith",
-    "regexp_matches": "regexp_like", "regexp_replace": "regexp_replace",
+    "regexp_matches": "regexp_like",
     "regexp_split_to_array": "split", "str_split_regex": "split",
     "string_split_regex": "split", "split_part": "split_part",
     "translate": "translate", "ascii": "ascii", "unicode": "ascii",

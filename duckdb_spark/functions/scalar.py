@@ -174,6 +174,49 @@ def regexp_extract_all(s, pattern: str, group: int = 0) -> Column:
     return F.regexp_extract_all(_c(s), F.lit(pattern), F.lit(group))
 
 
+def regexp_replace_args(pattern: str, replacement: str, options: str = "") -> tuple[str, str]:
+    r"""DuckDB's `regexp_replace(s, pattern, replacement, options)` as
+    the pattern and replacement Spark's `regexp_replace` (Java's
+    `replaceAll`) takes. DuckDB replaces the first match unless the
+    options hold 'g'; 'i' matches case-insensitively and 'c' (the default)
+    case-sensitively, whichever comes last; 's' lets `.` match a newline;
+    'l' matches the pattern literally. A first-match replace anchors a
+    lazy prefix group to the start and puts it back. In the replacement,
+    DuckDB's (RE2's) `\0`-`\9` name groups and `$` is literal; Java names
+    groups `$N` and escapes with `\`."""
+    if set(options) - set("gicsl"):
+        raise ValueError(f"Invalid Input Error: Unrecognized Regex option {options}")
+    if "l" in options:
+        pattern = re.sub(r"([\\^$.|?*+()\[\]{}])", r"\\\1", pattern)
+    flags = ("s" if "s" in options else "") + \
+        ("i" if options.rfind("i") > options.rfind("c") else "")
+    body = f"(?{flags}:{pattern})"
+    shift = 0 if "g" in options else 2
+    if shift:
+        body = f"^((?s:.*?))({body})"
+    out = "$1" if shift else ""
+    i = 0
+    while i < len(replacement):
+        ch, nxt = replacement[i], replacement[i + 1:i + 2]
+        if ch == "\\" and nxt.isdigit():
+            out += f"${int(nxt) + shift}"
+            i += 2
+            continue
+        if ch == "\\" and nxt:
+            ch, i = nxt, i + 1
+        # escaped, so a digit never extends the group number before it
+        out += "\\" + ch if ch in "\\$" or ch.isdigit() else ch
+        i += 1
+    return body, out
+
+
+def regexp_replace(s, pattern: str, replacement: str, options: str = "") -> Column:
+    """DuckDB regexp_replace: the first match only unless `options` holds
+    'g' (`regexp_replace_args`)."""
+    pat, rep = regexp_replace_args(pattern, replacement, options)
+    return F.regexp_replace(_c(s), pat, rep)
+
+
 def encode(s) -> Column:
     return F.encode(_c(s), "utf-8")
 

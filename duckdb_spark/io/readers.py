@@ -35,6 +35,7 @@ import hashlib
 import io as _io
 import json
 import os
+import re
 import threading
 from urllib.parse import urlparse
 
@@ -386,14 +387,17 @@ def _schema_file(paths: list[str]) -> str | None:
 
 def _footer_schema(spark: SparkSession, path: str):
     """The schema Spark infers from the parquet footer of the local file
-    `path`: the footer is read and converted by Spark's own
+    `path`, and the top-level columns of it the footer types
+    TIMESTAMP(NANOS) that Spark reads as bigint (`nanosAsLong`): name →
+    isAdjustedToUTC. The footer is read and converted by Spark's own
     `ParquetFileFormat.readSchemaFromFooter` and
     `ParquetToSparkSchemaConverter` under the session's conf, over py4j.
-    None when the file is not on Spark's local file system or its footer
-    cannot be read; Spark's inference then reports the problem itself."""
+    (None, {}) when the file is not on Spark's local file system or its
+    footer cannot be read; Spark's inference then reports the problem
+    itself."""
     from py4j.protocol import Py4JError
     from pyspark.errors import PySparkException
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import LongType, StructType
 
     jvm, jsession = spark._jvm, spark._jsparkSession
     pq = jvm.org.apache.spark.sql.execution.datasources.parquet
@@ -401,16 +405,43 @@ def _footer_schema(spark: SparkSession, path: str):
         conf = jsession.sessionState().newHadoopConf()
         jpath = jvm.org.apache.hadoop.fs.Path(path)
         if jpath.getFileSystem(conf).getScheme() != "file":
-            return None
+            return None, {}
         footer = pq.ParquetFooterReader.readFooter(
             jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(jpath, conf),
             jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
         converter = pq.ParquetToSparkSchemaConverter(jsession.sessionState().conf())
         schema = pq.ParquetFileFormat.readSchemaFromFooter(
             jvm.org.apache.parquet.hadoop.Footer(jpath, footer), converter)
+        schema = StructType.fromJson(json.loads(schema.json()))
+        nanos = {}
+        if any(f.dataType == LongType() for f in schema.fields):
+            text = footer.getFileMetaData().getSchema().toString()
+            nanos = {m[1]: m[2] == "true" for m in _NANOS_FIELD.finditer(text)
+                     if m[1] in schema.names and schema[m[1]].dataType == LongType()}
     except (Py4JError, PySparkException):
-        return None
-    return StructType.fromJson(json.loads(schema.json()))
+        return None, {}
+    return schema, nanos
+
+
+# a top-level field of a parquet MessageType's text
+_NANOS_FIELD = re.compile(
+    r"(?m)^  (?:required|optional) int64 (.+) \(TIMESTAMP\(NANOS,(true|false)\)\);$")
+
+
+def _open(spark: SparkSession, path: str | list[str], options: dict):
+    """`open_parquet`'s DataFrame and the footer's nanosecond timestamp
+    columns (`_footer_schema`); none when Spark infers the schema."""
+    paths = [path] if isinstance(path, str) else list(path)
+    reader = spark.read.options(**options)
+    opts = {k.lower(): str(v).lower() for k, v in options.items()}
+    merge = opts.get("mergeschema") or spark.conf.get("spark.sql.parquet.mergeSchema")
+    nanos = {}
+    if merge != "true" and _LISTING_OPTIONS.isdisjoint(opts):
+        f = _schema_file(paths)
+        schema, nanos = _footer_schema(spark, f) if f else (None, {})
+        if schema is not None:
+            reader = reader.schema(schema)
+    return reader.parquet(*paths), nanos
 
 
 def open_parquet(spark: SparkSession, path: str | list[str], **options) -> DataFrame:
@@ -420,16 +451,7 @@ def open_parquet(spark: SparkSession, path: str | list[str], **options) -> DataF
     file listing options change what Spark lists, and paths
     `_schema_file` cannot pick a file for pass no schema: that is Spark's
     own inference, one job."""
-    paths = [path] if isinstance(path, str) else list(path)
-    reader = spark.read.options(**options)
-    opts = {k.lower(): str(v).lower() for k, v in options.items()}
-    merge = opts.get("mergeschema") or spark.conf.get("spark.sql.parquet.mergeSchema")
-    if merge != "true" and _LISTING_OPTIONS.isdisjoint(opts):
-        f = _schema_file(paths)
-        schema = _footer_schema(spark, f) if f else None
-        if schema is not None:
-            reader = reader.schema(schema)
-    return reader.parquet(*paths)
+    return _open(spark, path, options)[0]
 
 
 def _as_written(path: str | list[str]) -> list[tuple[str, str]]:
@@ -478,16 +500,26 @@ def read_parquet(spark: SparkSession, path: str | list[str],
     """`file_row_number` and `filename` append DuckDB's columns of those
     names, in that order; `filename` is the local path as written, a
     glob's match as the glob gave it (relative to the current directory
-    for a relative glob), not Spark's `file:` URI."""
+    for a relative glob), not Spark's `file:` URI. A TIMESTAMP(NANOS)
+    column of a footer-schema read is a µs timestamp, as DuckDB's reader
+    makes it a timestamp, not the bigint Spark reads under `nanosAsLong`."""
     def read(paths) -> DataFrame:
-        df = open_parquet(spark, paths, **dict(
+        df, nanos = _open(spark, paths, dict(
             options, **({"mergeSchema": "true"} if union_by_name else {})))
         extra = []
         if file_row_number:
             extra.append(F.col("_metadata.row_index").alias("file_row_number"))
         if filename:
             extra.append(_filename(path))
-        return df.select("*", *extra) if extra else df
+        df = df.select("*", *extra) if extra else df
+        if not nanos:
+            return df
+        # TIMESTAMP(NANOS) truncated to µs, as Spark types TIMESTAMP(MICROS):
+        # `timestamp` when adjusted to UTC, else `timestamp_ntz`
+        return df.withColumns({c: F.expr(
+            f"timestamp_micros(`{c.replace('`', '``')}` div 1000)" if utc else
+            f"timestampadd(MICROSECOND, `{c.replace('`', '``')}` div 1000, "
+            f"TIMESTAMP_NTZ'1970-01-01 00:00:00')") for c, utc in nanos.items()})
 
     return _cached(spark, "parquet", path,
                    dict(options, file_row_number=file_row_number,

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import udtf as _udtf
 
+from duckdb_spark import state
+
 
 def register_udtf(spark: SparkSession, name: str, cls=None, *, returnType: str):
     """Register `cls` (a plain Python class with eval(self, *args) yielding
@@ -64,8 +66,11 @@ class _NgramRows:
             yield (s[i : i + n], i)
 
 
-def register_builtin_udtfs(spark: SparkSession) -> list[str]:
-    """Install the built-in table-in/out functions into the session."""
-    register_udtf(spark, "tokenize_rows", _SplitText, returnType="token string, pos int")
-    register_udtf(spark, "ngram_rows", _NgramRows, returnType="gram string, pos int")
-    return ["tokenize_rows", "ngram_rows"]
+def register_builtin_udtfs(spark: SparkSession) -> None:
+    """Install the built-in table-in/out functions into the session, once
+    per session (`SessionState.udfs`)."""
+    udfs = state.of(spark).udfs
+    if "tokenize_rows" not in udfs:
+        register_udtf(spark, "tokenize_rows", _SplitText, returnType="token string, pos int")
+        register_udtf(spark, "ngram_rows", _NgramRows, returnType="gram string, pos int")
+        udfs.update(("tokenize_rows", "ngram_rows"))

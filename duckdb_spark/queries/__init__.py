@@ -12,7 +12,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_spark import state
-from duckdb_spark.catalog import register_views, views_bound
+from duckdb_spark.catalog import ALL_TABLES
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -38,17 +38,24 @@ def bench_scale_mult(sf_dir: str) -> int:
 def run_text(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
     """Run the DuckDB-dialect `text` through `Connection.sql`, the one way a
     registered query text runs. The session keeps one Connection for it
-    (13-16 ms to make), and the bare-name table views are bound to
-    `sf_dir` (45-70 ms for the 10 views) only when they are not all still
-    the views `catalog.register_views` bound there (`views_bound`)."""
-    if not views_bound(spark, sf_dir):
-        register_views(spark, sf_dir)
+    (13-16 ms to make); `text` reads its tables by path, so no catalog
+    entry can change what it reads."""
     st = state.of(spark)
     if st.connection is None:
         from duckdb_spark.relation import Connection
 
         st.connection = Connection(spark)
     return st.connection.sql(text).df()
+
+
+def read_dir(sql: str, d: str, tables: tuple[str, ...] = ALL_TABLES) -> str:
+    """`sql` with each `{table}` field of `tables` (by default the sf_dir
+    tables) read from `d/<table>.parquet`. A field reads the types
+    `read_parquet` gives, as in the oracle, where each bare name is a view
+    of `read_parquet`: `{events}`'s `ts` is `timestamp_ntz` (DuckDB's
+    TIMESTAMP), where a Connection's bare `events` keeps `timestamp`
+    (`catalog.normalize_events`)."""
+    return sql.format(**{t: f"read_parquet('{d}/{t}.parquet')" for t in tables})
 
 
 @dataclass(frozen=True)
@@ -63,25 +70,26 @@ class Fixture:
 
     def read(self, sql: str, mult: int = 1) -> str:
         """`sql` with each `{table}` field read from the copy at `mult`."""
-        d = self.path(mult)
-        return sql.format(**{t: f"read_parquet('{d}/{t}.parquet')" for t in self.tables})
+        return read_dir(sql, self.path(mult), self.tables)
 
 
 def register_text(
     name: str, oracle: str, text: str | None = None, fixture: Fixture | None = None
 ) -> QueryFn:
     """Register `name` as a text query: `text`, or its ORACLE text when it
-    has none, runs through `run_text`. The texts of a query over a
-    generated `fixture` name each of its tables as a `{table}` field: the
-    oracle reads the base copy, a call reads the copy scaled to its
-    sf_dir (`bench_scale_mult`)."""
+    has none, runs through `run_text`. The texts name each table as a
+    `{table}` field. A field of an sf_dir table reads the call's sf_dir
+    (`read_dir`); the ORACLE text names it bare, as the oracle's views do.
+    The fields of a generated `fixture` read its base copy in the
+    oracle, and in a call the copy scaled to its sf_dir
+    (`bench_scale_mult`)."""
     text = oracle if text is None else text
-    if fixture is not None:
-        oracle = fixture.read(oracle)
+    oracle = fixture.read(oracle) if fixture is not None else \
+        oracle.format(**{t: t for t in ALL_TABLES})
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         if fixture is None:
-            return run_text(spark, sf_dir, text)
+            return run_text(spark, sf_dir, read_dir(text, sf_dir))
         mult = bench_scale_mult(sf_dir)
         fixture.ensure(mult)
         return run_text(spark, sf_dir, fixture.read(text, mult))
@@ -104,24 +112,22 @@ def register(name: str, oracle: str | None = None):
 
 # The driver's correctness gate hard-checks the FIRST 50 registered queries.
 # Rotate it with every change: a query whose implementation changed must
-# lead the next window. Leads now: the 43 queries whose hand builder was
-# deleted and which run their ORACLE text through `Connection.sql` (16
-# TPC-H, 15 window, 10 aggregate, cb_q30/31), then the queries whose path
-# changed otherwise: cb_q32 reads `hits` through the scan cache, tpcds_q09
-# runs its one-scan text and the MATERIALIZED-CTE queries run
-# `materialize_ctes` as a Connection.sql step. Pre-verified by the
-# driver-faithful scripts/check_contract.py.
+# lead the next window. Leads now: the 41 TPC-H, window and aggregate
+# texts, which read their sf_dir tables by path (`read_dir`) instead of
+# bare-name views, then cb_q30/31, cb_q32, tpcds_q09 and the
+# MATERIALIZED-CTE queries, whose paths changed in the change before.
+# Pre-verified by scripts/check_contract.py.
 PRIORITY: list[str] = [
-    # TPC-H builders replaced by their texts
+    # TPC-H texts
     "tpch_q02", "tpch_q03", "tpch_q04", "tpch_q05", "tpch_q06", "tpch_q07",
     "tpch_q08", "tpch_q09", "tpch_q10", "tpch_q12", "tpch_q13", "tpch_q14",
     "tpch_q16", "tpch_q17", "tpch_q19", "tpch_q20",
-    # window builders replaced by their texts
+    # window texts
     "win_running_total", "win_lag_gap", "win_moving_avg", "win_ntile",
     "win_first_last", "win_range_frame", "win_percent_rank", "win_qualify",
     "win_lead_ignorenulls", "win_ranking", "win_offsets", "win_groups_frame",
     "win_exclude_frames", "win_distinct_agg", "win_variable_bounds",
-    # aggregate builders replaced by their texts
+    # aggregate texts
     "agg_grouping_sets", "agg_rollup", "agg_cube", "agg_filter_distinct",
     "agg_stats", "agg_skew_kurtosis", "agg_string_agg", "agg_argminmax",
     "agg_bool_bit", "agg_grouping",

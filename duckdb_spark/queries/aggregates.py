@@ -20,21 +20,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_spark.catalog import load_table
+from duckdb_spark.catalog import read_table
 from duckdb_spark.functions import aggregates as A
 from duckdb_spark.queries import register, register_text
 
 
 def _t(spark, sf_dir, *names):
-    return [load_table(spark, sf_dir, n) for n in names]
+    return [read_table(spark, sf_dir, n) for n in names]
 
 
 # GROUPING SETS + GROUPING() disambiguation
 register_text("agg_grouping_sets", """
 SELECT r_name, n_name, COUNT(*) AS n, ROUND(SUM(c_acctbal), 2) AS bal,
        GROUPING(r_name) AS g_r, GROUPING(n_name) AS g_n
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-              JOIN region ON n_regionkey = r_regionkey
+FROM {customer} JOIN {nation} ON c_nationkey = n_nationkey
+              JOIN {region} ON n_regionkey = r_regionkey
 GROUP BY GROUPING SETS ((r_name, n_name), (r_name), ())
 ORDER BY g_r, g_n, r_name, n_name
 """)
@@ -44,7 +44,7 @@ ORDER BY g_r, g_n, r_name, n_name
 register_text("agg_rollup", """
 SELECT EXTRACT(year FROM o_orderdate) AS yr, o_orderpriority,
        COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS total
-FROM orders
+FROM {orders}
 GROUP BY ROLLUP (yr, o_orderpriority)
 ORDER BY yr NULLS FIRST, o_orderpriority NULLS FIRST
 """)
@@ -53,7 +53,7 @@ ORDER BY yr NULLS FIRST, o_orderpriority NULLS FIRST
 # CUBE over the two lineitem flags
 register_text("agg_cube", """
 SELECT l_returnflag, l_linestatus, COUNT(*) AS n, ROUND(SUM(l_quantity), 2) AS qty
-FROM lineitem
+FROM {lineitem}
 GROUP BY CUBE (l_returnflag, l_linestatus)
 ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
 """)
@@ -66,7 +66,7 @@ SELECT n_name,
        COUNT(DISTINCT c_mktsegment) AS n_seg,
        COUNT(*) FILTER (WHERE c_acctbal > 0) AS n_positive,
        CAST(SUM(CASE WHEN c_acctbal < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_negative
-FROM customer JOIN nation ON c_nationkey = n_nationkey
+FROM {customer} JOIN {nation} ON c_nationkey = n_nationkey
 GROUP BY n_name ORDER BY n_name
 """)
 
@@ -78,7 +78,7 @@ SELECT l_returnflag,
        ROUND(VAR_POP(l_discount), 6) AS var_disc,
        ROUND(CORR(l_quantity, l_extendedprice), 4) AS corr_qe,
        ROUND(COVAR_SAMP(l_quantity, l_extendedprice), 2) AS cov_qe
-FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+FROM {lineitem} GROUP BY l_returnflag ORDER BY l_returnflag
 """)
 
 
@@ -89,14 +89,14 @@ SELECT l_returnflag,
        ROUND(SKEWNESS(l_extendedprice), 4) AS skew,
        ROUND(KURTOSIS(l_extendedprice), 4) AS kurt,
        ROUND(SEM(l_extendedprice), 4) AS sem
-FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+FROM {lineitem} GROUP BY l_returnflag ORDER BY l_returnflag
 """)
 
 
 # ordered string_agg (reference sorted_aggregate_function.cpp)
 register_text("agg_string_agg", """
 SELECT r_name, STRING_AGG(n_name, ',' ORDER BY n_name) AS nations
-FROM nation JOIN region ON n_regionkey = r_regionkey
+FROM {nation} JOIN {region} ON n_regionkey = r_regionkey
 GROUP BY r_name ORDER BY r_name
 """)
 
@@ -143,7 +143,7 @@ SELECT n_name,
        ARG_MAX(s_name, s_acctbal) AS richest,
        ARG_MIN(s_name, s_acctbal) AS poorest,
        ROUND(MAX(s_acctbal), 2) AS max_bal
-FROM supplier JOIN nation ON s_nationkey = n_nationkey
+FROM {supplier} JOIN {nation} ON s_nationkey = n_nationkey
 GROUP BY n_name ORDER BY n_name
 """)
 
@@ -228,7 +228,7 @@ SELECT n_nationkey AS nk,
        BIT_AND(s_suppkey) AS band,
        BIT_OR(s_suppkey) AS bor,
        BIT_XOR(s_suppkey) AS bxor
-FROM supplier JOIN nation ON s_nationkey = n_nationkey
+FROM {supplier} JOIN {nation} ON s_nationkey = n_nationkey
 GROUP BY n_nationkey ORDER BY nk
 """)
 
@@ -239,19 +239,19 @@ register_text("agg_grouping", """
 SELECT 'gs' AS tag, r_name AS k1, n_name AS k2, COUNT(*) AS n,
        ROUND(SUM(c_acctbal), 2) AS val,
        GROUPING(r_name) AS g1, GROUPING(n_name) AS g2
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-              JOIN region ON n_regionkey = r_regionkey
+FROM {customer} JOIN {nation} ON c_nationkey = n_nationkey
+              JOIN {region} ON n_regionkey = r_regionkey
 GROUP BY GROUPING SETS ((r_name, n_name), (r_name), ())
 UNION ALL
 SELECT 'ru', CAST(EXTRACT(year FROM o_orderdate) AS VARCHAR), o_orderpriority,
        COUNT(*), ROUND(SUM(o_totalprice), 2),
        GROUPING(EXTRACT(year FROM o_orderdate)), GROUPING(o_orderpriority)
-FROM orders
+FROM {orders}
 GROUP BY ROLLUP (EXTRACT(year FROM o_orderdate), o_orderpriority)
 UNION ALL
 SELECT 'cu', l_returnflag, l_linestatus, COUNT(*), ROUND(SUM(l_quantity), 2),
        GROUPING(l_returnflag), GROUPING(l_linestatus)
-FROM lineitem
+FROM {lineitem}
 GROUP BY CUBE (l_returnflag, l_linestatus)
 ORDER BY tag, g1, g2, k1 NULLS FIRST, k2 NULLS FIRST
 """)

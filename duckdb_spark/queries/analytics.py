@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from duckdb_spark.catalog import load_table
+from duckdb_spark.catalog import read_table
 from duckdb_spark.functions import scalar as S
 from duckdb_spark.operators.asof import asof_self_join
 from duckdb_spark.operators.fill import fill_interpolate
@@ -23,7 +23,7 @@ from duckdb_spark.queries import register
 
 
 def _t(spark, sf_dir, *names):
-    return [load_table(spark, sf_dir, n) for n in names]
+    return [read_table(spark, sf_dir, n) for n in names]
 
 
 @register(

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_spark.catalog import load_table
+from duckdb_spark.catalog import read_table
 from duckdb_spark.operators import dedup as D
 from duckdb_spark.queries import register
 
@@ -39,7 +39,7 @@ FROM (SELECT text, COUNT(*) AS cnt, MIN(doc_id) AS keeper FROM documents GROUP B
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup summary: unique texts vs total (hash-groupBy keep-min)."""
-    (docs,) = [load_table(spark, sf_dir, "documents")]
+    (docs,) = [read_table(spark, sf_dir, "documents")]
     uniq = D.exact_dedup(docs)
     total = docs.count()
     return uniq.agg(
@@ -65,7 +65,7 @@ def dedup_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (16 hashes over word 3-shingles) — cross-engine
     deterministic via md5-hex→int; differential on the first 50 docs.
     Signature array serialized to CSV so the driver canon sees scalar rows."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
+    docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     return docs.select(
         "doc_id",
         F.array_join(
@@ -113,7 +113,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     jaccard sums — any added/dropped/changed pair shifts a checksum), so
     the timed bench measures the pipeline rather than 247k-row client
     deserialization (collect() of the raw pair list was ~1.3s at sf1)."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     # ONE md5 pass: 60-bit shingle-hash sets feed both the signatures
     # (top-32-bit bases — identical to the oracle's substr(md5,1,8) values)
     # and Jaccard verification (set sizes match the oracle's string sets
@@ -187,7 +187,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle CASTs list_sum (DuckDB HUGEINT) to BIGINT: pandas renders
     HUGEINT as float64, which breaks the driver's value-hash against our
     int64 column even when every value is numerically identical."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
+    docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return docs.select("doc_id", D.simhash(F.col("text")).alias("sig")).orderBy("doc_id")
 
 
@@ -209,7 +209,7 @@ ORDER BY id_a, id_b
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs 3-gram Jaccard ≥ 0.5 via inverted shingle index."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return D.ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5).orderBy("id_a", "id_b")
 
 
@@ -229,5 +229,5 @@ ORDER BY id_a, id_b
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs (cosine ≥ 0.6, first 200 vectors) — exact
     baseline; the LSH-blocked variant is sim_lsh_topk."""
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
+    emb = read_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
     return D.embedding_neardup_pairs(emb, "vec_id", "embedding", 0.6).orderBy("id_a", "id_b")

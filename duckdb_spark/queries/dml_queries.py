@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_spark.catalog import load_table
+from duckdb_spark.catalog import read_table
 from duckdb_spark.operators.dml import delete_where, merge_into, update_where
 from duckdb_spark.operators.misc import hash_sample, sample_percent
 from duckdb_spark.operators.pivot import dynamic_pivot, unpivot
@@ -43,7 +43,7 @@ def dml_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE INTO (reference physical_merge_into.cpp): matched rows get
     totals replaced by lineitem revenue + status 'U'; unmatched source
     rows insert with status 'I'. One shuffle on the key."""
-    orders, lineitem = (load_table(spark, sf_dir, t) for t in ("orders", "lineitem"))
+    orders, lineitem = (read_table(spark, sf_dir, t) for t in ("orders", "lineitem"))
     target = orders.filter(F.col("o_orderkey") % 3 == 0).select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("total"), "o_orderstatus"
     )
@@ -78,7 +78,7 @@ FROM updated WHERE bal >= 1000 ORDER BY c_custkey
 def dml_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UPDATE (clamp negative balances to 0) then DELETE (bal < 1000) —
     chained rewrite plans, single scan, no shuffle."""
-    customer = load_table(spark, sf_dir, "customer").select(
+    customer = read_table(spark, sf_dir, "customer").select(
         "c_custkey", F.round("c_acctbal", 2).alias("bal")
     )
     updated, changed = update_where(
@@ -122,7 +122,7 @@ def dml_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rewrite-pattern operators, operators/dml.py) so the driver window
     covers the whole DML surface."""
     orders, lineitem, customer = (
-        load_table(spark, sf_dir, t) for t in ("orders", "lineitem", "customer")
+        read_table(spark, sf_dir, t) for t in ("orders", "lineitem", "customer")
     )
     target = orders.filter(F.col("o_orderkey") % 3 == 0).select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("total"), "o_orderstatus"
@@ -171,7 +171,7 @@ GROUP BY c_mktsegment ORDER BY c_mktsegment
 def pivot_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic PIVOT: values discovered by a preliminary distinct pass
     (exactly DuckDB's bind-time discovery, reference bind_pivot.cpp)."""
-    orders, customer = (load_table(spark, sf_dir, t) for t in ("orders", "customer"))
+    orders, customer = (read_table(spark, sf_dir, t) for t in ("orders", "customer"))
     df = orders.join(customer, F.col("o_custkey") == F.col("c_custkey"))
     out = dynamic_pivot(df, ["c_mktsegment"], "o_orderstatus", F.sum("o_totalprice"))
     val_cols = [c for c in out.columns if c != "c_mktsegment"]
@@ -193,7 +193,7 @@ SELECT p_partkey, k AS name, v AS value FROM (
 )
 def unpivot_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNPIVOT/melt (Spark native unpivot)."""
-    part = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") % 41 == 0)
+    part = read_table(spark, sf_dir, "part").filter(F.col("p_partkey") % 41 == 0)
     return unpivot(
         part.select("p_partkey", "p_retailprice", F.col("p_size").cast("double").alias("p_size")),
         ["p_partkey"],
@@ -215,7 +215,7 @@ def sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible and oracle-checkable). Engine-RNG sampling (`USING
     SAMPLE`, reference reservoir_sample.cpp family) stays available as
     sample_percent/reservoir_sample with unit-tested size bounds."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
+    lineitem = read_table(spark, sf_dir, "lineitem")
     return (
         hash_sample(lineitem, 10.0, ["l_orderkey", "l_linenumber"])
         .select("l_orderkey", "l_linenumber")

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_spark.catalog import load_table
+from duckdb_spark.catalog import read_table
 from duckdb_spark.functions import scalar as S
 from duckdb_spark.queries import register
 
@@ -53,7 +53,7 @@ def fn_string_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Dialect shims validated here: strpos≡instr, sha256≡sha2(·,256),
     DuckDB regexp_replace needs the 'g' flag for global (Spark is always
     global), left/right, split_part 1-based."""
-    (nation,) = [load_table(spark, sf_dir, "nation")]
+    (nation,) = [read_table(spark, sf_dir, "nation")]
     n = F.col("n_name")
     return nation.select(
         "n_name",
@@ -114,7 +114,7 @@ def fn_date_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time-function batch incl. DuckDB-semantics dow (Sunday=0),
     isodow (Monday=1), epoch, strftime %-codes, boundary-crossing
     date_diff, and Monday-origin time_bucket weeks."""
-    (orders,) = [load_table(spark, sf_dir, "orders")]
+    (orders,) = [read_table(spark, sf_dir, "orders")]
     d = F.col("o_orderdate")
     return (
         orders.filter(F.col("o_orderkey") % 97 == 0)
@@ -176,7 +176,7 @@ FROM part WHERE p_partkey % 53 = 0 ORDER BY p_partkey
 def fn_math_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math-function batch incl. DuckDB // floor-div, gcd/lcm (expression-
     composed — no UDF), even(), factorial, bit_count."""
-    (part,) = [load_table(spark, sf_dir, "part")]
+    (part,) = [read_table(spark, sf_dir, "part")]
     pr, ps = F.col("p_retailprice"), F.col("p_size")
     return (
         part.filter(F.col("p_partkey") % 53 == 0)
@@ -240,7 +240,7 @@ def fn_list_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Array-valued outputs are array_join'd so the driver's pandas canon sees
     scalar rows (it can't sort/hash numpy arrays); element order inside each
     serialized list is still exact."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
+    docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
     t = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     sorted_t = F.array_sort(t)
     return docs.select(
@@ -286,7 +286,7 @@ def fn_struct_map_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays — raw MAP columns serialize differently across the two Python
     clients (DuckDB returns dict-of-lists), so maps are exercised via
     keys/values/extract instead."""
-    (nation,) = [load_table(spark, sf_dir, "nation")]
+    (nation,) = [read_table(spark, sf_dir, "nation")]
     st = F.struct(F.col("n_name").alias("name"), F.col("n_regionkey").alias("region"))
     mp = F.create_map(F.lit("a"), F.col("n_nationkey"), F.lit("b"), F.col("n_regionkey"))
     return nation.select(
@@ -321,7 +321,7 @@ FROM customer WHERE c_custkey % 71 = 0 ORDER BY c_custkey
 def fn_conditional_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """coalesce/nullif/case/if/ifnull/try_cast (TRY_CAST semantics:
     NULL on failure, reference cast_expression.hpp:54)."""
-    (customer,) = [load_table(spark, sf_dir, "customer")]
+    (customer,) = [read_table(spark, sf_dir, "customer")]
     bal = F.col("c_acctbal")
     return (
         customer.filter(F.col("c_custkey") % 71 == 0)
@@ -389,7 +389,7 @@ def fn_wave2_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     — each against the DuckDB native."""
     from duckdb_spark.functions import scalar2 as S2
 
-    (nation,) = [load_table(spark, sf_dir, "nation")]
+    (nation,) = [read_table(spark, sf_dir, "nation")]
     n, nk = F.col("n_name"), F.col("n_nationkey")
     path = F.concat(F.lit("/data/"), n, F.lit("/doc.csv"))
     arr = F.array((nk % 3).cast("long"), F.lit(5).cast("long"), F.lit(1).cast("long"))
@@ -476,7 +476,7 @@ def fn_wave2_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     = 31743.975 — DuckDB 31743.97, Spark's native regr_sxx 31743.98)."""
     from duckdb_spark.functions import aggregates as A
 
-    supplier, nation = (load_table(spark, sf_dir, t) for t in ("supplier", "nation"))
+    supplier, nation = (read_table(spark, sf_dir, t) for t in ("supplier", "nation"))
     # Scan-position sort key: (file_path, row_index) — row_index alone
     # restarts per file, so on multi-file tables the folds would replay a
     # non-scan order (ADVICE r12); agg_product/agg_distributive already
@@ -583,7 +583,7 @@ def fn_variant_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the construction logic — same differential style as ev_json_extract."""
     from duckdb_spark.functions import variant as V
 
-    events = load_table(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     eid, uid = F.col("event_id"), F.col("user_id")
     src = (
         events.where(eid % 97 == 0)

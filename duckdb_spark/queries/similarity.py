@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_spark.catalog import load_table
+from duckdb_spark.catalog import read_table
 from duckdb_spark.operators.similarity import cosine_topk, lsh_topk
 from duckdb_spark.queries import register
 
@@ -38,7 +38,7 @@ FROM scored WHERE rank <= 5 ORDER BY query_id, rank
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-5: first 5 vectors as queries against
     the rest of the corpus. Queries broadcast; corpus never shuffles."""
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
@@ -73,7 +73,7 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 via 6-plane sign-LSH bucketing (deterministic
     md5-derived hyperplanes — the oracle recomputes them exactly).
     Candidates shrink ~64×; the join is an equi-join on the bucket key."""
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
@@ -97,7 +97,7 @@ def sim_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid (the building block of IVF partitioning /
     k-means): element-wise mean over array column via posexplode +
     re-collect — one shuffle on (label, dim)."""
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     exploded = emb.select(
         "label", F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "val")
     )

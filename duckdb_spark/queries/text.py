@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_spark.catalog import load_table, spread
+from duckdb_spark.catalog import read_table, spread
 from duckdb_spark.operators import text as T
 from duckdb_spark.queries import register
 
@@ -99,7 +99,7 @@ FROM documents GROUP BY source ORDER BY source
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace + BPE-ish token counts per source."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(read_table(spark, sf_dir, "documents"))
     wt = F.size(F.expr("regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]', 0)"))
     # Project both token counts once per row: the agg referenced
     # token_count twice (sum + avg), re-running the regex split per
@@ -136,7 +136,7 @@ FROM hits GROUP BY labeled, predicted ORDER BY labeled, predicted
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID heuristic (stopword-hit argmax, lexicographic ties)
     cross-tabulated against the labeled lang column."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(read_table(spark, sf_dir, "documents"))
     return (
         _with_hits(docs, "lang")
         .select(
@@ -182,7 +182,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     _score_cols) tokenize and regex-strip ONCE per row — the composed form
     inlined 8 split() and 2 regexp_replace() calls into the aggregate
     (plans/r12/text_quality_before.txt)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(read_table(spark, sf_dir, "documents"))
     scored = _with_hits(docs, "source").select("source", *_score_cols())
     return (
         scored.groupBy("source")
@@ -201,7 +201,7 @@ FROM documents WHERE doc_id < 100 ORDER BY doc_id
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-invariant content fingerprint: md5 of sorted distinct tokens."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
+    docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return docs.select("doc_id", T.fingerprint(F.col("text")).alias("fp")).orderBy("doc_id")
 
 
@@ -234,7 +234,7 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (length band + punct ratio + stopword density), and the
     order-invariant content fingerprint — the full curation surface
     of operators/text.py differentially pinned per doc."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
+    docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     scored = _with_hits(docs, "doc_id", "lang").select(
         "doc_id",
         "lang",
@@ -264,7 +264,7 @@ FROM documents GROUP BY bucket ORDER BY bucket
 )
 def text_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length histogram on the n_chars metadata column (equi-width bins)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(read_table(spark, sf_dir, "documents"))
     return (
         docs.groupBy((F.floor(F.col("n_chars") / 100) * 100).alias("bucket"))
         .agg(
@@ -297,7 +297,7 @@ def tf_read_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from duckdb_spark.io.readers import read_text
 
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(read_table(spark, sf_dir, "documents"))
     subset = docs.where(F.col("doc_id") % 7 == 0).select("doc_id", "text")
     corpus = os.path.join(
         "/tmp", "ddbspark_corpus_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10]

@@ -25,13 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from duckdb_spark.catalog import load_table
+from duckdb_spark.catalog import read_table
 from duckdb_spark.functions.aggregates import money_sum
 from duckdb_spark.queries import register, register_text
 
 
 def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [load_table(spark, sf_dir, n) for n in names]
+    return [read_table(spark, sf_dir, n) for n in names]
 
 
 @register(
@@ -86,8 +86,8 @@ register_text("tpch_q03", """
 SELECT o_orderkey,
        CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
        CAST(o_orderdate AS DATE)                         AS orderdate
-FROM customer JOIN orders ON c_custkey = o_custkey
-              JOIN lineitem ON l_orderkey = o_orderkey
+FROM {customer} JOIN {orders} ON c_custkey = o_custkey
+              JOIN {lineitem} ON l_orderkey = o_orderkey
 WHERE c_mktsegment = 'BUILDING'
   AND o_orderdate < TIMESTAMP '1998-01-01'
   AND l_shipdate  > TIMESTAMP '1998-01-01'
@@ -101,9 +101,9 @@ LIMIT 10
 # l_shipdate > o_orderdate + 30 days: the fixture has no commit/receipt dates)
 register_text("tpch_q04", """
 SELECT o_orderpriority, COUNT(*) AS order_count
-FROM orders
+FROM {orders}
 WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1997-04-01'
-  AND EXISTS (SELECT 1 FROM lineitem
+  AND EXISTS (SELECT 1 FROM {lineitem}
               WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
@@ -113,12 +113,12 @@ ORDER BY o_orderpriority
 # q05 — local supplier volume (reference q05.sql): 6-way join
 register_text("tpch_q05", """
 SELECT n_name, CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
+FROM {customer}
+JOIN {orders}   ON c_custkey = o_custkey
+JOIN {lineitem} ON l_orderkey = o_orderkey
+JOIN {supplier} ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+JOIN {nation}   ON s_nationkey = n_nationkey
+JOIN {region}   ON n_regionkey = r_regionkey
 WHERE r_name = 'ASIA'
   AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
 GROUP BY n_name
@@ -129,7 +129,7 @@ ORDER BY revenue DESC
 # q06 — revenue forecast (reference q06.sql): scan, filter, ungrouped sum
 register_text("tpch_q06", """
 SELECT CAST(ROUND(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
-FROM lineitem
+FROM {lineitem}
 WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
   AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
 """)
@@ -142,12 +142,12 @@ FROM (
   SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
          EXTRACT(year FROM l_shipdate) AS l_year,
          l_extendedprice * (1 - l_discount) AS volume
-  FROM supplier
-  JOIN lineitem ON s_suppkey = l_suppkey
-  JOIN orders   ON o_orderkey = l_orderkey
-  JOIN customer ON c_custkey = o_custkey
-  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-  JOIN nation n2 ON c_nationkey = n2.n_nationkey
+  FROM {supplier}
+  JOIN {lineitem} ON s_suppkey = l_suppkey
+  JOIN {orders}   ON o_orderkey = l_orderkey
+  JOIN {customer} ON c_custkey = o_custkey
+  JOIN {nation} n1 ON s_nationkey = n1.n_nationkey
+  JOIN {nation} n2 ON c_nationkey = n2.n_nationkey
   WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
       OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
     AND l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
@@ -165,14 +165,14 @@ FROM (
   SELECT EXTRACT(year FROM o_orderdate) AS o_year,
          l_extendedprice * (1 - l_discount) AS volume,
          n2.n_name AS nation
-  FROM part
-  JOIN lineitem ON p_partkey = l_partkey
-  JOIN supplier ON s_suppkey = l_suppkey
-  JOIN orders   ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-  JOIN region    ON n1.n_regionkey = r_regionkey
-  JOIN nation n2 ON s_nationkey = n2.n_nationkey
+  FROM {part}
+  JOIN {lineitem} ON p_partkey = l_partkey
+  JOIN {supplier} ON s_suppkey = l_suppkey
+  JOIN {orders}   ON l_orderkey = o_orderkey
+  JOIN {customer} ON o_custkey = c_custkey
+  JOIN {nation} n1 ON c_nationkey = n1.n_nationkey
+  JOIN {region}    ON n1.n_regionkey = r_regionkey
+  JOIN {nation} n2 ON s_nationkey = n2.n_nationkey
   WHERE r_name = 'AMERICA' AND p_type = 'STANDARD'
     AND o_orderdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
 ) all_nations
@@ -188,11 +188,11 @@ SELECT nation, o_year, CAST(ROUND(SUM(CAST(amount AS DECIMAL(18,4))), 2) AS DOUB
 FROM (
   SELECT n_name AS nation, EXTRACT(year FROM o_orderdate) AS o_year,
          l_extendedprice * (1 - l_discount) AS amount
-  FROM part
-  JOIN lineitem ON p_partkey = l_partkey
-  JOIN supplier ON s_suppkey = l_suppkey
-  JOIN orders   ON o_orderkey = l_orderkey
-  JOIN nation   ON s_nationkey = n_nationkey
+  FROM {part}
+  JOIN {lineitem} ON p_partkey = l_partkey
+  JOIN {supplier} ON s_suppkey = l_suppkey
+  JOIN {orders}   ON o_orderkey = l_orderkey
+  JOIN {nation}   ON s_nationkey = n_nationkey
   WHERE p_name LIKE '%green%'
 ) profit
 GROUP BY nation, o_year
@@ -204,10 +204,10 @@ ORDER BY nation, o_year DESC
 register_text("tpch_q10", """
 SELECT c_custkey, c_name, CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
        ROUND(c_acctbal, 2) AS acctbal, n_name
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN nation   ON c_nationkey = n_nationkey
+FROM {customer}
+JOIN {orders}   ON c_custkey = o_custkey
+JOIN {lineitem} ON l_orderkey = o_orderkey
+JOIN {nation}   ON c_nationkey = n_nationkey
 WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1997-04-01'
   AND l_returnflag = 'R'
 GROUP BY c_custkey, c_name, c_acctbal, n_name
@@ -222,7 +222,7 @@ register_text("tpch_q12", """
 SELECT l_returnflag,
        CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
        CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+FROM {orders} JOIN {lineitem} ON o_orderkey = l_orderkey
 WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
 GROUP BY l_returnflag
 ORDER BY l_returnflag
@@ -234,7 +234,7 @@ register_text("tpch_q13", """
 SELECT c_count, COUNT(*) AS custdist
 FROM (
   SELECT c_custkey, COUNT(o_orderkey) AS c_count
-  FROM customer LEFT JOIN orders
+  FROM {customer} LEFT JOIN {orders}
     ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
   GROUP BY c_custkey
 ) c_orders
@@ -247,7 +247,7 @@ ORDER BY custdist DESC, c_count DESC
 register_text("tpch_q14", """
 SELECT ROUND(100.00 * SUM(CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0 END)
              / SUM(l_extendedprice * (1 - l_discount)), 4) AS promo_revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
+FROM {lineitem} JOIN {part} ON l_partkey = p_partkey
 WHERE l_shipdate >= TIMESTAMP '1997-03-01' AND l_shipdate < TIMESTAMP '1997-04-01'
 """)
 
@@ -296,9 +296,9 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scalar subquery
 register_text("tpch_q17", """
 SELECT ROUND(SUM(l_extendedprice) / 7.0, 2) AS avg_yearly
-FROM lineitem JOIN part ON p_partkey = l_partkey
+FROM {lineitem} l1 JOIN {part} ON p_partkey = l_partkey
 WHERE p_brand = 'Brand#11'
-  AND l_quantity < (SELECT 0.5 * AVG(l_quantity) FROM lineitem l2 WHERE l2.l_partkey = lineitem.l_partkey)
+  AND l_quantity < (SELECT 0.5 * AVG(l_quantity) FROM {lineitem} l2 WHERE l2.l_partkey = l1.l_partkey)
 """)
 
 
@@ -352,7 +352,7 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q19 — discounted revenue (reference q19.sql): OR-of-ANDs join predicate
 register_text("tpch_q19", """
 SELECT CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
-FROM lineitem JOIN part ON p_partkey = l_partkey
+FROM {lineitem} JOIN {part} ON p_partkey = l_partkey
 WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
    OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
    OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)

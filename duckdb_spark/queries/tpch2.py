@@ -12,13 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from duckdb_spark.catalog import load_table
+from duckdb_spark.catalog import read_table
 from duckdb_spark.functions import aggregates as A
 from duckdb_spark.queries import register, register_text
 
 
 def _t(spark, sf_dir, *names):
-    return [load_table(spark, sf_dir, n) for n in names]
+    return [read_table(spark, sf_dir, n) for n in names]
 
 
 # q02 — minimum-cost supplier (reference q02.sql shape): correlated-min
@@ -27,23 +27,23 @@ register_text("tpch_q02", """
 WITH ps AS (
   SELECT l_partkey AS partkey, l_suppkey AS suppkey,
          MIN(l_extendedprice / l_quantity) AS supplycost
-  FROM lineitem WHERE l_quantity > 0 GROUP BY 1, 2
+  FROM {lineitem} WHERE l_quantity > 0 GROUP BY 1, 2
 ),
 best AS (
   SELECT partkey, MIN(supplycost) AS min_cost FROM ps
-  JOIN supplier ON suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
+  JOIN {supplier} ON suppkey = s_suppkey
+  JOIN {nation} ON s_nationkey = n_nationkey
+  JOIN {region} ON n_regionkey = r_regionkey
   WHERE r_name = 'EUROPE'
   GROUP BY partkey
 )
 SELECT s_name, n_name, p_partkey, p_brand, ROUND(ps.supplycost, 4) AS cost
-FROM part
+FROM {part}
 JOIN ps ON p_partkey = ps.partkey
 JOIN best ON best.partkey = ps.partkey AND ps.supplycost = best.min_cost
-JOIN supplier ON ps.suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
+JOIN {supplier} ON ps.suppkey = s_suppkey
+JOIN {nation} ON s_nationkey = n_nationkey
+JOIN {region} ON n_regionkey = r_regionkey
 WHERE r_name = 'EUROPE' AND p_size = 15 AND p_type = 'LARGE'
 ORDER BY s_name, p_partkey
 LIMIT 100
@@ -109,10 +109,10 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
 # negative-balance suppliers
 register_text("tpch_q16", """
 SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem JOIN part ON p_partkey = l_partkey
+FROM {lineitem} JOIN {part} ON p_partkey = l_partkey
 WHERE p_brand <> 'Brand#45' AND p_type NOT LIKE 'MEDIUM%'
   AND p_size IN (3, 9, 14, 19, 23, 36, 45, 49)
-  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+  AND l_suppkey NOT IN (SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0)
 GROUP BY p_brand, p_type, p_size
 ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 """)
@@ -123,21 +123,21 @@ ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 register_text("tpch_q20", """
 WITH shipped AS (
   SELECT l_suppkey, l_partkey, SUM(l_quantity) AS qty
-  FROM lineitem
+  FROM {lineitem}
   WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
   GROUP BY l_suppkey, l_partkey
 ),
 part_total AS (
   SELECT l_partkey AS tp_partkey, SUM(l_quantity) AS total_qty
-  FROM lineitem
+  FROM {lineitem}
   WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
   GROUP BY 1
 )
 SELECT s_name, s_suppkey
-FROM supplier
+FROM {supplier}
 WHERE s_suppkey IN (
   SELECT l_suppkey FROM shipped JOIN part_total ON l_partkey = tp_partkey
-  JOIN part ON p_partkey = l_partkey
+  JOIN {part} ON p_partkey = l_partkey
   WHERE p_name LIKE 'p%' AND qty > 0.3 * total_qty)
   AND s_nationkey IN (1, 2, 3, 4, 5)
 ORDER BY s_suppkey

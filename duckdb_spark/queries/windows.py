@@ -18,13 +18,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from duckdb_spark.catalog import load_table
+from duckdb_spark.catalog import read_table
 from duckdb_spark.functions import aggregates as A
 from duckdb_spark.queries import register, register_text
 
 
 def _t(spark, sf_dir, *names):
-    return [load_table(spark, sf_dir, n) for n in names]
+    return [read_table(spark, sf_dir, n) for n in names]
 
 
 # running revenue per customer (ROWS UNBOUNDED PRECEDING frame)
@@ -32,7 +32,7 @@ register_text("win_running_total", """
 SELECT o_custkey, o_orderkey,
        ROUND(SUM(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                                      ROWS UNBOUNDED PRECEDING), 2) AS running
-FROM orders
+FROM {orders}
 """)
 
 
@@ -79,7 +79,7 @@ SELECT event_type, ROUND(AVG(gap_s), 3) AS avg_gap_s, COUNT(*) AS n
 FROM (
   SELECT event_type,
          (epoch_us(ts) - epoch_us(LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))) / 1e6 AS gap_s
-  FROM events)
+  FROM {events})
 WHERE gap_s IS NOT NULL
 GROUP BY event_type
 ORDER BY event_type
@@ -92,7 +92,7 @@ register_text("win_moving_avg", """
 SELECT day_epoch, ROUND(AVG(day_rev) OVER (ORDER BY day_epoch ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 2) AS ma7
 FROM (SELECT epoch(date_trunc('day', o_orderdate))::BIGINT AS day_epoch,
              SUM(o_totalprice) AS day_rev
-      FROM orders GROUP BY 1)
+      FROM {orders} GROUP BY 1)
 ORDER BY day_epoch
 """)
 
@@ -100,7 +100,7 @@ ORDER BY day_epoch
 # account-balance quartiles via ntile(4)
 register_text("win_ntile", """
 SELECT q, COUNT(*) AS n, ROUND(AVG(c_acctbal), 2) AS avg_bal
-FROM (SELECT c_acctbal, NTILE(4) OVER (ORDER BY c_acctbal, c_custkey) AS q FROM customer)
+FROM (SELECT c_acctbal, NTILE(4) OVER (ORDER BY c_acctbal, c_custkey) AS q FROM {customer})
 GROUP BY q ORDER BY q
 """)
 
@@ -112,7 +112,7 @@ SELECT DISTINCT l_suppkey,
        LAST_VALUE(l_extendedprice)  OVER w AS last_price,
        CAST(FIRST_VALUE(l_shipdate) OVER w AS DATE) AS first_ship,
        CAST(LAST_VALUE(l_shipdate)  OVER w AS DATE) AS last_ship
-FROM lineitem
+FROM {lineitem}
 WINDOW w AS (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber
              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
 ORDER BY l_suppkey
@@ -123,7 +123,7 @@ ORDER BY l_suppkey
 register_text("win_range_frame", """
 SELECT o_orderkey,
        COUNT(*) OVER (PARTITION BY o_custkey ORDER BY day_no RANGE BETWEEN 30 PRECEDING AND 30 FOLLOWING) AS near_orders
-FROM (SELECT o_orderkey, o_custkey, date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day_no FROM orders)
+FROM (SELECT o_orderkey, o_custkey, date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day_no FROM {orders})
 ORDER BY o_orderkey
 """)
 
@@ -133,7 +133,7 @@ register_text("win_percent_rank", """
 SELECT p_partkey,
        ROUND(PERCENT_RANK() OVER (PARTITION BY p_type ORDER BY p_retailprice, p_partkey), 4) AS pr,
        ROUND(CUME_DIST()    OVER (PARTITION BY p_type ORDER BY p_retailprice, p_partkey), 4) AS cd
-FROM part ORDER BY p_partkey
+FROM {part} ORDER BY p_partkey
 """)
 
 
@@ -141,7 +141,7 @@ FROM part ORDER BY p_partkey
 # supplier per nation
 register_text("win_qualify", """
 SELECT n_name, s_name, ROUND(s_acctbal, 2) AS bal
-FROM supplier JOIN nation ON s_nationkey = n_nationkey
+FROM {supplier} JOIN {nation} ON s_nationkey = n_nationkey
 QUALIFY ROW_NUMBER() OVER (PARTITION BY n_name ORDER BY s_acctbal DESC, s_suppkey) = 1
 ORDER BY n_name
 """)
@@ -154,7 +154,7 @@ SELECT event_id,
        LAST_VALUE(value IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_val
 FROM (SELECT event_id, user_id, ts, CASE WHEN event_type = 'error' THEN NULL ELSE value END AS value
-      FROM events)
+      FROM {events})
 ORDER BY event_id
 """)
 
@@ -169,7 +169,7 @@ SELECT p_partkey,
        NTILE(4)       OVER (PARTITION BY p_type ORDER BY p_retailprice, p_partkey) AS q,
        ROUND(PERCENT_RANK() OVER (PARTITION BY p_type ORDER BY p_retailprice, p_partkey), 4) AS pr,
        ROUND(CUME_DIST()    OVER (PARTITION BY p_type ORDER BY p_retailprice, p_partkey), 4) AS cd
-FROM part ORDER BY p_partkey
+FROM {part} ORDER BY p_partkey
 """)
 
 
@@ -186,7 +186,7 @@ SELECT event_id,
              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING), 2) AS last_v,
        ROUND(NTH_VALUE(value, 3) OVER (PARTITION BY user_id ORDER BY ts, event_id
              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING), 2) AS third_v
-FROM (SELECT *, CASE WHEN event_type = 'error' THEN NULL ELSE value END AS v2 FROM events)
+FROM (SELECT *, CASE WHEN event_type = 'error' THEN NULL ELSE value END AS v2 FROM {events})
 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ORDER BY event_id
 """)
@@ -278,7 +278,7 @@ FROM (SELECT o_custkey, o_orderkey, o_totalprice,
              DENSE_RANK() OVER (PARTITION BY o_custkey ORDER BY day_no) AS grp
       FROM (SELECT o_custkey, o_orderkey, o_totalprice,
                    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day_no
-            FROM orders))
+            FROM {orders}))
 ORDER BY o_orderkey
 """)
 
@@ -300,7 +300,7 @@ SELECT o_custkey, o_orderkey,
            PARTITION BY o_custkey ORDER BY o_orderdate
            ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
            EXCLUDE TIES) AS DOUBLE) AS m_ties
-FROM orders WHERE o_custkey % 40 = 1
+FROM {orders} WHERE o_custkey % 40 = 1
 ORDER BY o_custkey, o_orderkey
 """)
 
@@ -315,7 +315,7 @@ SELECT o_orderkey,
            ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS c_pri,
        CAST(SUM(DISTINCT o_orderkey % 7) OVER (
            PARTITION BY o_custkey) AS BIGINT) AS s_mod
-FROM orders WHERE o_custkey % 40 = 1
+FROM {orders} WHERE o_custkey % 40 = 1
 ORDER BY o_orderkey
 """)
 
@@ -329,6 +329,6 @@ SELECT o_orderkey,
            ORDER BY o_orderkey
            ROWS BETWEEN o_orderkey % 3 PRECEDING AND 2 FOLLOWING
        ) AS DECIMAL(24,6)), 2) AS DOUBLE) AS a
-FROM orders WHERE o_custkey % 100 = 1
+FROM {orders} WHERE o_custkey % 100 = 1
 ORDER BY o_orderkey
 """)

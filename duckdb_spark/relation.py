@@ -14,6 +14,7 @@ string-expression forms, with Catalyst as the binder.
 
 from __future__ import annotations
 
+import functools
 import logging
 import re
 from collections.abc import Iterable
@@ -21,14 +22,17 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_spark import state, statements
-from duckdb_spark.catalog import DEFAULT_SF_DIR, register_views
+from duckdb_spark import catalog, state, statements
 from duckdb_spark.session import get_spark
 from duckdb_spark.sql import dialect
 from duckdb_spark.sql.macros import bind_parameters
 from duckdb_spark.statements import _split_top_level
 
 _log = logging.getLogger("duckdb_spark")
+
+# statements that list the catalog: every sf_dir table is in it for them
+_LISTS_TABLES = re.compile(
+    r"(?i)\b(SHOW|duckdb_tables|duckdb_columns|duckdb_views|information_schema)\b")
 
 
 def _cols(exprs: Iterable[str | Column]) -> list[Column]:
@@ -162,8 +166,8 @@ class Connection:
         # the active session as it is: `get_spark()` would re-apply the
         # engine conf over the caller's runtime settings
         self.spark = spark or SparkSession.getActiveSession() or get_spark()
-        if sf_dir:
-            register_views(self.spark, sf_dir)
+        # the sf_dir tables a statement binds on first mention (`bind`)
+        self.tables = catalog.list_tables(sf_dir) if sf_dir else {}
         from duckdb_spark.sql.macros import MacroRegistry, PreparedStatements
 
         self.macros = MacroRegistry()
@@ -171,36 +175,36 @@ class Connection:
         from duckdb_spark.managed import ManagedTables
 
         self.managed = ManagedTables(self.spark)
-        from duckdb_spark.operators.udtf import register_builtin_udtfs
-
-        register_builtin_udtfs(self.spark)
         self._decorrelate_depth = 0
         self._sql_depth = 0
         self.last_trace: list[tuple[str, str]] = []
-        # __dkrender is reachable from the MAIN translate pass (nested →
-        # VARCHAR casts render DuckDB-style), so register it eagerly
-        from duckdb_spark.sql.textcast import render_duck
-        from duckdb_spark.types import duck_type_text
 
-        state.register_udf(
-            self.spark, "__dkrender",
-            lambda v: None if v is None else render_duck(v), "string")
-        # typeof() renders DuckDB type text through __ducktype
-        state.register_udf(self.spark, "__ducktype", duck_type_text, "string")
-        # nested-comparison UDFs are reachable from the MAIN translate pass
-        # too (rewrite_nested_comparisons); worker threads' active-session
-        # lookup can miss, so bind them to THIS session eagerly
-        from duckdb_spark.sql.nestcmp import register_udfs
+    def bind(self, names: Iterable[str]) -> None:
+        """Bind each sf_dir table among `names` (lowercase) that the
+        session catalog holds no table or view of, as DuckDB's binder
+        falls back to a replacement scan for a name its catalog lacks: a
+        user's table or view of that name wins. A view the engine bound
+        for another path (another Connection's sf_dir) is no entry of the
+        user's, so this Connection binds its own path over it. The temp
+        view names come in one py4j call (0.2 ms); only a name that is
+        none of them pays `tableExists` (1.4 ms)."""
+        names = [n for n in names if n in self.tables]
+        if not names:
+            return
+        views = set(self._session_catalog.getTempViewNames().mkString("\n").split("\n"))
+        binds = state.of(self.spark).binds
+        for name in names:
+            path = self.tables[name]
+            if name not in views:
+                if not self.spark.catalog.tableExists(name):
+                    catalog.bind(self.spark, name, path)
+            elif binds.get(name, (path,))[0] != path and \
+                    self._session_catalog.getRawTempView(name).equals(binds[name][1]):
+                catalog.bind(self.spark, name, path, replace=True)
 
-        register_udfs(self.spark)
-        # C-style %g/%e formatting: java.util.Formatter's %g rounds via a
-        # different decimal path than C printf (0.9999999999999999 at %.17g
-        # → '...90' vs '...89'); Python's % operator is C-compatible
-        # (decimal_float_cast.test:26)
-        state.register_udf(
-            self.spark, "__dkfmtg",
-            lambda fmt, v: None if fmt is None or v is None else fmt % v,
-            "string")
+    @functools.cached_property
+    def _session_catalog(self):
+        return self.spark._jsparkSession.sessionState().catalog()
 
     def sql(self, query: str, params=None) -> "Relation | None":
         """Run DuckDB-dialect SQL: `?`/`$n`/`$name` parameters bound as
@@ -216,7 +220,11 @@ class Connection:
         included: `(step, "rewrote" | "answered" | "raised")`,
         `(fallback, "ok" | "raised" | "failed: <error type>")`, and
         `(pass, "translated" | "raised")` for each `dialect.PASSES` entry
-        that changed or rejected a text `dialect.translate` was given."""
+        that changed or rejected a text `dialect.translate` was given.
+
+        Before the steps, each sf_dir table the statement names is bound
+        (`bind`; all of them for a statement that lists the catalog), and
+        each engine UDF it names registered."""
         state.activate(self.spark)
         if self._sql_depth == 0:
             self.last_trace = []
@@ -226,6 +234,10 @@ class Connection:
             with state.tracing(trace):
                 if params is not None:
                     query = bind_parameters(query, params)
+                if self.tables:  # before any step reads a table
+                    self.bind(self.tables.keys() if _LISTS_TABLES.search(query) else
+                              self.tables.keys() & set(re.findall(r"\w+", query.lower())))
+                dialect.register_udfs(query)
                 for step in statements.STEPS:
                     try:
                         out = step(self, query)
@@ -277,6 +289,7 @@ class Connection:
     execute = sql
 
     def table(self, name: str) -> Relation:
+        self.bind([name.lower()])
         return Relation(self.spark.table(name))
 
     def read_duckdb(self, db_path: str, table: str) -> Relation:

@@ -283,6 +283,27 @@ def _alias_of(toks: list[str], lo: int, hi: int):
     return None, -1
 
 
+# words that end an expression instead of naming it
+_EXPR_END = {"END", "NULL", "TRUE", "FALSE", "ASC", "DESC", "FIRST", "LAST"}
+# words an expression continues after
+_EXPR_CONTINUES = {"IS", "NOT", "AND", "OR", "CASE", "WHEN", "THEN", "ELSE",
+                   "COLLATE", "LIKE", "ILIKE", "IN", "BETWEEN", "DISTINCT"}
+_NAME = r'[A-Za-z_]\w*|"[^"]*"|`[^`]*`'
+
+
+def _implicit_alias(body: str) -> bool:
+    """Whether the select entry `body` ends in an alias without AS
+    (`max(x) m`): a name right after a closing parenthesis, a literal or
+    a name that does not continue the expression."""
+    code = [t for t in _tokens(body) if not t.isspace()]
+    if len(code) < 2 or not re.fullmatch(_NAME, code[-1]) \
+            or code[-1].upper() in _EXPR_END:
+        return False
+    prev = code[-2]
+    return prev == ")" or prev[0] in "'0123456789" or (
+        re.fullmatch(_NAME, prev) is not None and prev.upper() not in _EXPR_CONTINUES)
+
+
 def expand_columns(sql: str, resolve_cols: Callable[[], list[str]]) -> str:
     """Expand every COLUMNS(...) occurrence; resolve_cols() supplies the
     source column names (probed lazily, once)."""
@@ -345,9 +366,12 @@ def expand_columns(sql: str, resolve_cols: Callable[[], list[str]]) -> str:
                     a = a if len(expansions) == 1 else f"{a}_{colname}"
                 if kind == "select":
                     body = f"{body} AS {_quote(a)}"
-            elif kind == "select" and not body.strip().lstrip("`") \
-                    .rstrip("`").replace(colname, "").strip():
-                pass  # bare column reference names itself
+            elif kind == "select" and body.strip().lstrip("`") \
+                    .rstrip("`").replace(colname, "").strip() \
+                    and not _implicit_alias(body):
+                # an unaliased replica takes its column's name, as the
+                # reference's bind_star_expression names it
+                body = f"{body.strip()} AS {_quote(colname)}"
             replicas.append(body.strip())
         repl = ", ".join(replicas)
         sql = "".join(toks[:lo]) + " " + repl + " " + "".join(toks[hi:])

@@ -35,6 +35,10 @@ from typing import Callable, NamedTuple
 
 from duckdb_spark import state
 from duckdb_spark.functions.names import NAMES
+from duckdb_spark.operators import udtf
+from duckdb_spark.sql import nestcmp
+from duckdb_spark.sql.textcast import render_duck
+from duckdb_spark.types import duck_type_text
 
 _TOKEN_RE = re.compile(
     r"""
@@ -6477,7 +6481,7 @@ def _rewrite_calls(toks: list[str]) -> list[str]:
             listy = re.search(
                 r"(?i)\[|collect_list|array|transform|slice|sequence|split|"
                 r"approx_top_k|list_sort|map_keys|map_values|flatten|"
-                r"__dktc_", argtext,
+                r"__dktc_", re.sub(r"'(?:[^']|'')*'", "''", argtext),
             )
             if not listy and re.match(r"^[A-Za-z_]\w*$", argtext):
                 full = "".join(out)
@@ -7633,7 +7637,46 @@ def translate(sql: str) -> str:
             text = out
         else:
             toks = out
-    return restore(text) if toks is None else "".join(toks)
+    out = restore(text) if toks is None else "".join(toks)
+    register_udfs(out)
+    return out
+
+
+def _render_duck(v):
+    return None if v is None else render_duck(v)
+
+
+def _format_g(fmt, v):
+    # C-style %g/%e: java.util.Formatter's %g rounds via a different
+    # decimal path than C printf (0.9999999999999999 at %.17g → '...90'
+    # vs '...89'); Python's % operator is C-compatible
+    # (decimal_float_cast.test:26)
+    return None if fmt is None or v is None else fmt % v
+
+
+# the engine's Python UDFs and UDTFs, by the name SQL text calls them
+# (a prefix for the nested-comparison family): each registers on a
+# session the first time a text names it
+_SESSION_UDFS = {
+    "__dkrender": lambda s: state.register_udf(s, "__dkrender", _render_duck, "string"),
+    "__ducktype": lambda s: state.register_udf(s, "__ducktype", duck_type_text, "string"),
+    "__dkfmtg": lambda s: state.register_udf(s, "__dkfmtg", _format_g, "string"),
+    "__dknest": nestcmp.register_udfs,
+    "tokenize_rows": udtf.register_builtin_udtfs,
+    "ngram_rows": udtf.register_builtin_udtfs,
+}
+
+
+def register_udfs(text: str) -> None:
+    """Register each engine UDF `text` names on the session
+    `Connection.sql` activated (else Spark's active one), once per
+    session."""
+    named = [reg for name, reg in _SESSION_UDFS.items() if name in text]
+    if named:
+        spark = _get_active_spark()
+        if spark is not None:
+            for reg in named:
+                reg(spark)
 
 
 def _union_by_name_text(inner: str) -> str | None:
@@ -9202,15 +9245,7 @@ def rewrite_nested_comparisons(sql: str) -> str:
     has_literal_hint = bool(re.search(
         r"(?i)\b(array|named_struct|struct|map)\s*\(", sql))
     if not nested_cols and not has_literal_hint:
-        if changed:
-            try:
-                from duckdb_spark.sql.nestcmp import register_udfs
-
-                register_udfs(_get_active_spark())
-            except Exception:  # noqa: BLE001
-                pass
-            return "".join(toks)
-        return sql
+        return "".join(toks) if changed else sql
     # ---- comparison operators (right-to-left so indices stay valid)
     op_idx = [k for k, t in enumerate(toks) if t in _NESTCMP_OPS]
     for k in reversed(op_idx):
@@ -9383,15 +9418,7 @@ def rewrite_nested_comparisons(sql: str) -> str:
                 continue
             break
         i = j if j > i else i + 1
-    if not changed:
-        return sql
-    try:
-        from duckdb_spark.sql.nestcmp import register_udfs
-
-        register_udfs(_get_active_spark())
-    except Exception:  # noqa: BLE001
-        pass
-    return "".join(toks)
+    return "".join(toks) if changed else sql
 
 
 def limit_scalar_subqueries(toks: list[str]) -> list[str]:

@@ -13,6 +13,7 @@ from __future__ import annotations
 import re
 
 from duckdb_spark import state
+from duckdb_spark.functions.scalar import regexp_replace_args
 from duckdb_spark.sql.dialect import (  # noqa: E402 — bound at the END
     # of dialect.py's module body (ordered-pipeline split), so every
     # helper below is already defined when this executes
@@ -950,6 +951,41 @@ def _regex_arg(a: str) -> str:
     return a
 
 
+def _literal(a: str) -> str | None:
+    """The value of the DuckDB string literal `a`, or None."""
+    m = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", a)
+    return m.group(1).replace("''", "'") if m else None
+
+
+def _spark_literal(v: str) -> str:
+    return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def _macro_regexp_replace(args: list[str]) -> str | None:
+    """DuckDB regexp_replace (`functions.scalar.regexp_replace_args`) as
+    Spark's four-argument form with position 1, which this leaves alone,
+    as it does options known only at run time. A pattern or replacement
+    known only at run time gets the anchor and the prefix group put
+    around it, and no other change."""
+    if len(args) == 4 and _literal(args[3]) is None:
+        return None
+    opts = _literal(args[3]) if len(args) == 4 else ""
+    pat_v, rep_v = _literal(args[1]), _literal(args[2])
+    if set(opts) - set("gicsl") or pat_v is None and "l" in opts:
+        return None
+    pat, rep = regexp_replace_args("\0" if pat_v is None else pat_v, rep_v or "", opts)
+    if pat_v is None:
+        pre, post = pat.split("\0")
+        pat = f"concat({_spark_literal(pre)}, {args[1]}, {_spark_literal(post)})"
+    else:
+        pat = _spark_literal(pat)
+    if rep_v is not None:
+        rep = _spark_literal(rep)
+    else:
+        rep = f"concat({_spark_literal(rep)}, {args[2]})" if rep else args[2]
+    return f"regexp_replace({args[0]}, {pat}, {rep}, 1)"
+
+
 def _macro_date_diff(part: str, a: str, b: str) -> str | None:
     """date_diff('part', a, b) counts the part boundaries crossed from a
     to b (reference date_diff.cpp), as `functions.scalar.date_diff` does;
@@ -1041,7 +1077,7 @@ def _agg_macro(name: str, args: list[str]) -> str | None:
         if a0 == "row()":
             return "'TUPLE'"
         # DuckDB type spelling over Spark's typeof (reference
-        # LogicalType::ToString; __ducktype registered in functions/registry)
+        # LogicalType::ToString; __ducktype registered by dialect.register_udfs)
         return f"__ducktype(typeof({args[0]}))"
     if name == "make_timestamp_ns" and n == 1:
         # TIMESTAMP_NS carried as BIGINT epoch nanos (SURVEY §1.2: Spark
@@ -1485,6 +1521,8 @@ def _agg_macro(name: str, args: list[str]) -> str | None:
     if name == "regexp_full_match" and n == 2:
         return (f"regexp_like({args[0]}, "
                 f"concat('^(?:', {_regex_arg(args[1])}, ')$'))")
+    if name == "regexp_replace" and n in (3, 4):
+        return _macro_regexp_replace(args)
     if name in ("regexp_extract", "regexp_extract_all") and n == 2:
         # DuckDB extracts group 0 by default, Spark group 1
         return f"{name}({args[0]}, {_regex_arg(args[1])}, 0)"
@@ -1510,7 +1548,7 @@ def _agg_macro(name: str, args: list[str]) -> str | None:
             return f"split({args[0]}, '{esc}')"
         return (
             f"split({args[0]}, regexp_replace({sep}, "
-            r"'([.^$*+?()\\[\\]{}|\\\\])', '\\\\\\\\$1'))"
+            r"'([.^$*+?()\\[\\]{}|\\\\])', '\\\\\\\\$1', 1))"
         )
     if name == "concat_ws" and n == 2 and re.search(
         r"(?i)\[|\barray\s*\(|collect_list|string_split|\bsplit\s*\(|"
@@ -1632,5 +1670,5 @@ _MACRO_NAMES = {
     "list_sum", "date_diff", "datediff", "sign",
     "dayofweek", "encode", "decode", "regexp_split_to_array",
     "str_split_regex", "string_split_regex", "regexp_full_match",
-    "regexp_extract", "regexp_extract_all",
+    "regexp_extract", "regexp_extract_all", "regexp_replace",
 } | _LIST_AGG_NAMES | set(_TO_INTERVAL_FNS) | set(_VECTOR_FNS)

@@ -97,7 +97,7 @@ def _time_fmt_sql(x: str) -> str:
         f"STRING), 2, '0'), "
         f"CASE WHEN {m} % 1000000 = 0 THEN '' ELSE "
         f"regexp_replace(concat('.', lpad(CAST({m} % 1000000 AS "
-        f"STRING), 6, '0')), '0+$', '') END) END"
+        f"STRING), 6, '0')), '0+$', '', 1) END) END"
     )
 def _timetz_parse_sql(op: str, lenient: bool = False) -> str:
     """Runtime 'HH:MM:SS[.f][±HH[:MM[:SS]]]' text → packed TIMETZ int64

@@ -38,11 +38,11 @@ class SessionState:
     time_cols: dict[str, set[str]] = field(default_factory=dict)
     timetz_cols: dict[str, set[str]] = field(default_factory=dict)
     enum_cols: dict[str, dict[str, list[str]]] = field(default_factory=dict)
-    # Python UDF names registered on the session (register_udf)
+    # Python UDF and UDTF names registered on the session (register_udf)
     udfs: set[str] = field(default_factory=set)
-    # bare-name table views as catalog.register_views, their only
-    # writer, bound them: name → (sf_dir, the session catalog's view)
-    views: dict[str, tuple[str, object]] = field(default_factory=dict)
+    # sf_dir tables a Connection bound on first mention (catalog.bind):
+    # name → (path, the session catalog's view as bound)
+    binds: dict[str, tuple[str, object]] = field(default_factory=dict)
     # file scans (io.readers): (reader, paths, options) → Scan
     scans: dict[tuple[str, str, str], Scan] = field(default_factory=dict)
     # the Connection registered query texts run through (queries.run_text)
@@ -50,10 +50,10 @@ class SessionState:
 
     def reset(self) -> None:
         """Forget the DuckDB catalog: settings, types, schemas and column
-        marks. UDFs, table views and scan views stay registered on the
+        marks. UDFs, bound tables and scan views stay registered on the
         session, so their records stay too, and so does the connection."""
         for f in dataclasses.fields(self):
-            if f.name not in ("udfs", "views", "scans", "connection"):
+            if f.name not in ("udfs", "binds", "scans", "connection"):
                 getattr(self, f.name).clear()
 
 

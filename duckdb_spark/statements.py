@@ -2236,7 +2236,7 @@ def bit_count(con, query, tq, msg):
         return None
     new_q = _rewrite_fn_calls(
         query, "bit_count",
-        lambda a: (f"CAST(length(regexp_replace(CAST(({a}) AS "
+        lambda a: (f"CAST(length(replace(CAST(({a}) AS "
                    f"STRING), '0', '')) AS INT)"),
     )
     return dialect.translate(new_q) if new_q != query else None

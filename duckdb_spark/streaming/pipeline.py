@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_spark.catalog import normalize_events
 from duckdb_spark.io.readers import open_parquet
 
 
@@ -99,12 +100,9 @@ def run_batch_as_stream(
         shutil.copy(f, src_dir)
     schema = open_parquet(spark, src_dir).schema
     stream = spark.readStream.schema(schema).parquet(src_dir)
-    if ts_from_ns and dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        # TIMESTAMP(MICROS, adjusted=false) parquet → NTZ; watermarks need
-        # TimestampType (same normalization as catalog.load_table)
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    if ts_from_ns or dict(stream.dtypes).get("ts") != "bigint":
+        # watermarks need TimestampType
+        stream = normalize_events(stream)
 
     out = transform(stream)
     # NOTE: "complete" for aggregations — append mode only emits windows

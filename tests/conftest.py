@@ -9,9 +9,11 @@ float-repr noise in the comparison itself).
 
 from __future__ import annotations
 
+import gc
 import math
 import os
 import sys
+import threading
 import uuid
 
 import duckdb
@@ -47,6 +49,30 @@ def spark_jobs(spark, fn) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def py4j_calls(spark, fn) -> int:
+    """The number of py4j round trips `fn()` makes to the JVM, counted at
+    the gateway client's `send_command` on the calling thread. py4j's
+    finalizer thread sends the deletes of JVM objects Python dropped
+    before, on the same client; they are not `fn`'s, so they are not
+    counted."""
+    gc.collect()
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls, caller = 0, threading.get_ident()
+
+    def counted(*args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == caller
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        fn()
+    finally:
+        del client.send_command
+    return calls
 
 
 @pytest.fixture(scope="session")

@@ -60,7 +60,6 @@ SAMPLES = {
     "ends_with": "ends_with('hello', 'lo')",
     "suffix": "suffix('hello', 'lo')",
     "regexp_matches": "regexp_matches('abc123', '[0-9]+')",
-    "regexp_replace": "regexp_replace('a1b22', '[0-9]+', '#')",
     "regexp_split_to_array": "regexp_split_to_array('a1b22c', '[0-9]+')",
     "str_split_regex": "str_split_regex('a1b22c', '[0-9]+')",
     "string_split_regex": "string_split_regex('a1b22c', '[0-9]+')",
@@ -236,6 +235,7 @@ TEMPLATES = {
     "array_slice": "array_slice([1, 2, 3, 4, 5], 2, 4)",
     "list_prepend": "list_prepend(0, [1, 2])",
     "regexp_full_match": "regexp_full_match('abc123', '[a-z]+')",
+    "regexp_replace": "regexp_replace('a1b22', '[0-9]+', '#')",
     "dayofweek": "dayofweek(DATE '2024-03-17')",
     "encode": "encode('abc')",
     "decode": "decode('abc'::BLOB)",
@@ -311,9 +311,6 @@ KNOWN_GAPS: dict[tuple[str, str], object] = {
     # DuckDB 1.0's element_at on a MAP is map_extract: a list
     ("element_at", "sql"): [(2,)],
     ("element_at", "py"): [(2,)],
-    # DuckDB replaces the first match only, unless given the 'g' option
-    ("regexp_replace", "sql"): ["a#b22"],
-    ("regexp_replace", "py"): ["a#b22"],
     # DuckDB's split takes a literal separator, Spark's a regex; SQL text
     # reaches Spark's (the dialect's own rewrites emit it with a regex)
     ("split", "sql"): [("a", "b", "", "c")],
@@ -539,6 +536,50 @@ def test_date_diff_counts_boundaries(con, duck, sql):
     crossed, as DuckDB's date_diff counts (not whole units elapsed)."""
     assert [tuple(r) for r in con.sql(sql).fetchall()] == \
         duck.execute(sql).fetchall()
+
+
+REGEXP_REPLACE_CALLS = [
+    r"regexp_replace('a1b22', '[0-9]+', '#')",
+    r"regexp_replace('a1b22', '[0-9]+', '#', 'g')",
+    r"regexp_replace('aAbA', 'a', '#', 'i')",
+    r"regexp_replace('aAbA', 'a', '#', 'gi')",
+    r"regexp_replace('aAbA', 'a', '#', 'ic')",
+    r"regexp_replace('abcb', '(b)', '<\1\0>')",
+    r"regexp_replace('abcb', '(b)(c)?', '[\2\1]', 'g')",
+    r"regexp_replace('a$b', 'b', '$x\\')",
+    r"regexp_replace('a.b.', '.', 'X', 'l')",
+    r"regexp_replace('a.b.', '.', 'X', 'gl')",
+    r"regexp_replace('a' || chr(10) || 'b', 'a.b', 'X')",
+    r"regexp_replace('a' || chr(10) || 'b', 'a.b', 'X', 's')",
+    r"regexp_replace('baaa', 'a*', '#')",
+    r"regexp_replace('xyz', 'q', '#')",
+    r"regexp_replace('it''s 1', '\d', '''')",
+    r"regexp_replace(NULL, 'b', 'c')",
+]
+
+
+@pytest.mark.parametrize("call", REGEXP_REPLACE_CALLS)
+def test_regexp_replace_options(con, duck, call):
+    r"""The first match only unless 'g'; 'i'/'c' case, 's' dot-all, 'l'
+    literal; `\N` group references in the replacement. Both surfaces."""
+    want = duck.execute(f"SELECT {call}").fetchall()
+    assert [tuple(r) for r in con.sql(f"SELECT {call}").fetchall()] == want
+    lit = r"'((?:[^']|'')*)'"
+    m = re.fullmatch(rf"regexp_replace\({lit}, {lit}, {lit}(?:, '(\w+)')?\)", call)
+    if m:
+        value, pat, rep, opts = (g and g.replace("''", "'") for g in m.groups())
+        got = con.spark.range(1).select(
+            FUNCTIONS["regexp_replace"](F.lit(value), pat, rep, opts or "")).collect()
+        assert [tuple(r) for r in got] == want
+
+
+def test_regexp_replace_over_columns(con, duck):
+    """A pattern or replacement known only at run time."""
+    sql = ("SELECT regexp_replace(s, p, r), regexp_replace(s, p, r, 'g'), "
+           "regexp_replace(s, p, '#', 'i') FROM (VALUES ('a1b22', '[0-9]+', '#'), "
+           "('AbA', 'a', '-')) t(s, p, r)")
+    assert sorted(tuple(r) for r in con.sql(sql).fetchall()) == \
+        sorted(duck.execute(sql).fetchall())
 
 
 @pytest.mark.parametrize("sql", [

@@ -147,14 +147,14 @@ def test_regr_folds_bit_identical_to_duckdb(spark):
 
     from pyspark.sql import functions as F
 
-    from duckdb_spark.catalog import load_table
+    from duckdb_spark.catalog import read_table
     from duckdb_spark.functions.aggregates import covar_sxy_fold, welford_sq_fold
 
     sf_dir = "/root/testdata/sf0.01"
-    sup = load_table(spark, sf_dir, "supplier").select(
+    sup = read_table(spark, sf_dir, "supplier").select(
         "*", F.col("_metadata.row_index").alias("__pos")
     )
-    nat = load_table(spark, sf_dir, "nation")
+    nat = read_table(spark, sf_dir, "nation")
     sk, bal = F.col("s_suppkey"), F.col("s_acctbal")
     vals = F.array_sort(
         F.collect_list(
@@ -246,16 +246,16 @@ def test_product_fold_bit_identical_to_duckdb(spark):
 
     from pyspark.sql import functions as F
 
-    from duckdb_spark.catalog import load_table
+    from duckdb_spark.catalog import read_table
     from duckdb_spark.functions.aggregates import product_fold
 
     sf_dir = "/root/testdata/sf0.01"
-    sup = load_table(spark, sf_dir, "supplier").select(
+    sup = read_table(spark, sf_dir, "supplier").select(
         "*",
         F.col("_metadata.file_path").alias("__f"),
         F.col("_metadata.row_index").alias("__p"),
     )
-    nat = load_table(spark, sf_dir, "nation")
+    nat = read_table(spark, sf_dir, "nation")
     vals = F.array_sort(
         F.collect_list(
             F.struct(

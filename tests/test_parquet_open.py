@@ -10,16 +10,18 @@ pick: summary files, `_SUCCESS`, files that differ, hive partitions.
 from __future__ import annotations
 
 import ast
+import gc
 import os
 import pathlib
 import sys
+import weakref
 
 import duckdb
 import pytest
 
 from duckdb_spark.io import readers
-from duckdb_spark.relation import Connection
-from tests.conftest import SF_DIR, spark_jobs
+from duckdb_spark.relation import Connection, connect
+from tests.conftest import SF_DIR, py4j_calls, spark_jobs
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 BASE = ROOT / "perfbench" / "tables" / "sf0.01"
@@ -143,6 +145,33 @@ def test_merge_schema_reads_every_file(spark, tmp_path):
 def test_connect_runs_no_job(spark):
     session = spark.newSession()
     assert spark_jobs(session, lambda: Connection(session, sf_dir=SF_DIR)) == 0
+
+
+def test_connect_does_no_per_table_work(spark):
+    """`connect(sf_dir)` lists the dir and binds nothing: on a warm
+    session it makes a handful of py4j round trips (to find the active
+    session), whatever the number of tables."""
+    spark.createDataFrame([(1,)], "a INT")  # makes `spark` the active session
+    connect(SF_DIR)
+    assert py4j_calls(spark, lambda: connect(SF_DIR)) <= 5
+    assert py4j_calls(spark, lambda: Connection(spark, sf_dir=SF_DIR)) == 0
+
+
+def test_dropped_connections_free_their_sessions(spark):
+    """Nothing the engine keeps outside a session holds on to it: 30
+    sessions, each with a Connection that ran a statement, are all
+    collected once dropped and no longer the context's active one."""
+    refs = []
+    for _ in range(30):
+        con = Connection(spark.newSession(), sf_dir=SF_DIR)
+        con.sql("SELECT count(*) FROM nation").fetchall()
+        refs.append(weakref.ref(con.spark))
+        del con
+    # the context points at the session it last ran a statement on, and
+    # pyspark's `RDD.toDF` patch at the session made last
+    Connection(spark.newSession()).sql("SELECT 1")
+    gc.collect()
+    assert [r for r in refs if r() is not None] == []
 
 
 def test_ctas_runs_only_the_write(spark):

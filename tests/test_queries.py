@@ -1,7 +1,7 @@
 """Differential test: every registered query vs the DuckDB oracle.
 
 This is the same gate the driver runs (CORRECTNESS_r{N}.json), at sf0.001
-for speed. Queries without an oracle entry get a rows-only smoke check.
+for speed. Every registered query has an oracle entry.
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from tests.conftest import SF_DIR, assert_matches_oracle
 q.load_all()
 
 WITH_ORACLE = sorted(n for n in q.QUERIES if n in q.ORACLE)
-ROWS_ONLY = sorted(n for n in q.QUERIES if n not in q.ORACLE)
 
 
 @pytest.mark.parametrize("name", WITH_ORACLE)
@@ -23,11 +22,8 @@ def test_query_matches_oracle(spark, oracle, name):
     assert_matches_oracle(df, oracle, q.ORACLE[name], name=name)
 
 
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_query_runs(spark, name):
-    df = q.QUERIES[name](spark, SF_DIR)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
+def test_every_query_has_an_oracle_text():
+    assert sorted(set(q.QUERIES) - set(q.ORACLE)) == []
 
 
 def test_no_driver_unstable_output_types(spark):

@@ -164,16 +164,13 @@ def test_concurrent_sessions_answer_as_one_thread_does(spark):
 # ------------------------------------------------------- no module state
 
 _FORBIDDEN_TEXT = re.compile(r"threading\.local\(|\bid\(spark\)")
-_FORBIDDEN_NAME = re.compile(r"\w*_TABLE_COLS|_BOUND|_REGISTERED")
-# catalog._TABLE_CACHE stays keyed by session id: the benchmark's traced
-# run probes it by that key (perfbench/layers.py)
-_ALLOWED = {("catalog.py", "    key = (id(spark), sf_dir, name)")}
+_FORBIDDEN_NAME = re.compile(r"\w*_TABLE_COLS|\w*_TABLE_CACHE|_BOUND|_REGISTERED")
 
 
 def _module_state(path: pathlib.Path) -> list[str]:
     hits = []
     for line in path.read_text().splitlines():
-        if _FORBIDDEN_TEXT.search(line) and (path.name, line) not in _ALLOWED:
+        if _FORBIDDEN_TEXT.search(line):
             hits.append(line.strip())
     for node in ast.parse(path.read_text()).body:
         targets = node.targets if isinstance(node, ast.Assign) else \

@@ -145,3 +145,18 @@ def test_sequence(con):
     r = con.sql("SELECT nextval('seq1') AS a, nextval('seq1') AS b").fetchall()[0]
     assert (r["a"], r["b"]) == (100, 101)
     assert con.sql("SELECT currval('seq1') AS c").fetchall()[0]["c"] == 101
+
+
+@pytest.mark.parametrize("sql", [
+    "SELECT max(COLUMNS('n_.*key')) FROM nation",
+    "SELECT COLUMNS('n_.*key') + 1 FROM nation ORDER BY n_nationkey",
+    "SELECT min(COLUMNS(*)), max(COLUMNS(*)) FROM region",
+    "SELECT max(COLUMNS('n_.*key')) m FROM nation",
+])
+def test_columns_replicas_take_their_column_names(con, oracle, sql):
+    """An unaliased select entry over COLUMNS(…) is named after each
+    expanded column, as DuckDB names it."""
+    df = con.sql(sql).df()
+    res = oracle.execute(sql)
+    assert df.columns == [d[0] for d in res.description]
+    assert [tuple(r) for r in df.collect()] == res.fetchall()

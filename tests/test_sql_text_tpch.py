@@ -51,12 +51,10 @@ TEXT_FIRST = ("tpch", "tpch2", "windows", "aggregates", "clickbench", "tpcds")
 
 @pytest.fixture(scope="module")
 def sql_con(spark):
-    from duckdb_spark.catalog import register_views
     from duckdb_spark.relation import Connection
 
     load_all()
-    register_views(spark, SF_DIR)
-    return Connection(spark)
+    return Connection(spark.newSession(), sf_dir=SF_DIR)
 
 
 def _assert_close(name, got, want):
@@ -109,14 +107,20 @@ def test_text_first_modules_run_their_texts(monkeypatch):
         calls.clear()
         QUERIES[name](None, SF_DIR)
         # SF_DIR is a base-scale dir, so fixture texts read the base copy
-        # the oracle reads; tpcds_q09 runs a one-scan restructure of it
+        # the oracle reads; tpcds_q09 runs a one-scan restructure of it.
+        # The oracle names the sf_dir tables bare.
         assert len(calls) == 1 and calls[0][0] == SF_DIR, name
-        assert (calls[0][1] == ORACLE[name]) == (name != "tpcds_q09"), name
+        text = calls[0][1]
+        for t in TABLES:
+            text = text.replace(f"read_parquet('{SF_DIR}/{t}.parquet')", t)
+        assert (text == ORACLE[name]) == (name != "tpcds_q09"), name
 
 
 def test_run_text_follows_the_sf_dir_of_each_call(spark):
-    """The bare-name views follow each call's sf_dir, whichever of
-    `run_text` and `Connection(sf_dir=…)` bound them last."""
+    """A registered text reads its sf_dir tables by path, so each call
+    reads its own sf_dir. A bare name follows the sf_dir of the
+    Connection that runs it, also when another Connection on the same
+    session bound it first: a replacement scan makes no catalog entry."""
     from duckdb_spark.relation import Connection
 
     small, other = SF_DIR, os.path.join(os.path.dirname(SF_DIR), "sf0.01")
@@ -126,32 +130,35 @@ def test_run_text_follows_the_sf_dir_of_each_call(spark):
         for t in TABLES:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet')")
     load_all()
+    count = "SELECT count(*) AS n, round(sum(o_totalprice), 2) AS s FROM orders"
+    session = spark.newSession()
     try:
         for d in (small, other, small):
             assert_matches_oracle(QUERIES["tpch_q03"](spark, d), oracles[d],
                                   ORACLE["tpch_q03"], name=d)
-        Connection(spark, sf_dir=other)
-        assert_matches_oracle(QUERIES["tpch_q03"](spark, small), oracles[small],
-                              ORACLE["tpch_q03"], name="after Connection")
+        for d in (small, other, small):
+            assert_matches_oracle(Connection(session, sf_dir=d).sql(count).df(),
+                                  oracles[d], count, name=f"bare orders at {d}")
     finally:
         for con in oracles.values():
             con.close()
 
 
 def test_run_text_rebinds_views_another_writer_replaced(spark, oracle):
-    """A view of a table name that another writer replaced or dropped
-    since `register_views` bound it is bound again before a text runs."""
+    """A registered text reads its sf_dir tables by path, so a view of a
+    table name that another writer replaced or dropped changes nothing it
+    reads."""
     from duckdb_spark.relation import Connection
 
     load_all()
-    QUERIES["tpch_q03"](spark, SF_DIR)
-    con = Connection(spark)
+    con = Connection(spark.newSession(), sf_dir=SF_DIR)
+    QUERIES["tpch_q03"](con.spark, SF_DIR)
     con.register("orders", con.sql("SELECT * FROM orders LIMIT 1"))
-    assert_matches_oracle(QUERIES["tpch_q03"](spark, SF_DIR), oracle,
+    assert_matches_oracle(QUERIES["tpch_q03"](con.spark, SF_DIR), oracle,
                           ORACLE["tpch_q03"], name="after register")
     con.sql("CREATE OR REPLACE TEMP VIEW customer AS SELECT 1 AS c_custkey")
-    spark.catalog.dropTempView("lineitem")
-    assert_matches_oracle(QUERIES["tpch_q03"](spark, SF_DIR), oracle,
+    con.spark.catalog.dropTempView("lineitem")
+    assert_matches_oracle(QUERIES["tpch_q03"](con.spark, SF_DIR), oracle,
                           ORACLE["tpch_q03"], name="after CREATE VIEW and DROP")
 
 def test_product_builders_match_the_reference_multiply(spark, tmp_path):
