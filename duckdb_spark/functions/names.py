@@ -4,9 +4,10 @@ DuckDB resolves every function through one catalog (reference
 `src/function/function_list.cpp`); this table is its name-for-name part
 here, read by both surfaces:
 
-- SQL text: `sql.dialect._rewrite_calls` renames a call `name(` to the
-  Spark name once every call handler and `dialect_macros._agg_macro`
-  expansion has had its turn;
+- SQL text: `sql.dialect._rewrite_calls` looks each call `name(` up in
+  its `_CALL_HANDLERS` table; a call no handler rewrote goes to
+  `_call_default`, which tries `dialect_macros._agg_macro_windowed` and
+  `_agg_macro` and then renames it to the Spark name found here;
 - Python: `functions.registry.FUNCTIONS[name]` binds
   `pyspark.sql.functions.<spark name>`, or `call_function(<spark name>, …)`
   when PySpark has no function of that name.

@@ -362,8 +362,6 @@ def expand_columns(sql: str, resolve_cols: Callable[[], list[str]]) -> str:
                     a = m.expand(a[1:-1].replace("''", "'")) if m else colname
                 elif a.startswith("'") or a.startswith('"'):
                     a = a[1:-1]
-                else:
-                    a = a if len(expansions) == 1 else f"{a}_{colname}"
                 if kind == "select":
                     body = f"{body} AS {_quote(a)}"
             elif kind == "select" and body.strip().lstrip("`") \

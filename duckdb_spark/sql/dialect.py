@@ -4153,8 +4153,10 @@ def _normalize_null_order(toks: list[str]) -> list[str]:
     order tests; max_n_all_types_grouped.test ranks DESC with NULLs
     last). Spark's defaults are direction-coupled (ASC→FIRST, DESC→LAST),
     so make the positional order explicit on every ORDER BY term lacking
-    a NULLS spec — query scopes and OVER specs; in-call aggregate ORDER
-    BYs keep their own comparator handling."""
+    a NULLS spec — query scopes and OVER specs. The placement of a term
+    comes from `_order_terms`; an in-call ORDER BY (`list(x ORDER BY y)`,
+    `ARRAY(SELECT … ORDER BY …)`) is left to the `calls` and
+    `array_subquery` passes, which sort through `_keyed_sort`."""
     out = list(toks)
     # classify each paren: normalize inside OVER(...) and subqueries,
     # skip inside function-call parens
@@ -4254,29 +4256,28 @@ def _normalize_null_order(toks: list[str]) -> list[str]:
         # walk items at this depth
         k = b + 1
         depth = 0
-        item_start = _next_code(out, k)
+        term_start = _next_code(out, k)
         last_code = -1
         item_codes: list[int] = []
-        desc = False
         has_nulls = False
 
-        def _close(end_at: int) -> None:
-            nonlocal desc, has_nulls
-            nf = get_session_setting("default_null_order") in (
-                "nulls_first", "nulls first",
-            )
+        def _close(end_at: int) -> int:
+            """Make the term ending at `end_at` explicit; the number of
+            tokens inserted."""
+            nonlocal has_nulls
+            terms = [] if last_code < 0 or has_nulls else \
+                _order_terms(out[term_start:end_at])
             # Only touch terms where Spark's direction-coupled default
-            # (ASC→FIRST, DESC→LAST) differs from DuckDB's positional
-            # setting: nulls_last needs explicit NULLS LAST on ASC terms,
+            # (ASC→FIRST, DESC→LAST) differs from DuckDB's placement:
+            # nulls_last needs explicit NULLS LAST on ASC terms,
             # nulls_first needs explicit NULLS FIRST on DESC terms. The
             # matching-direction terms stay untouched (and so avoid the
             # ordinal-substitution path entirely — grouping.test:23).
-            needed = desc if nf else not desc
-            if last_code < 0 or has_nulls or not needed:
-                desc = False
+            if not terms or terms[0][1] != terms[0][2]:
                 has_nulls = False
                 item_codes.clear()
-                return
+                return 0
+            nf = terms[0][2]
             # bare ordinal: `N NULLS LAST` loses ordinal semantics in
             # Spark (the literal folds away and the SORT IS DROPPED) —
             # substitute the select item it points at, or leave it bare
@@ -4298,17 +4299,16 @@ def _normalize_null_order(toks: list[str]) -> list[str]:
                     out[item_codes[0]] = alias or "".join(
                         _rewrite_calls(_tokens("(" + expr + ")")))
                 else:
-                    desc = False
                     has_nulls = False
                     item_codes.clear()
-                    return
+                    return 0
             out[end_at:end_at] = [
                 " NULLS FIRST " if nf else " NULLS LAST "]
-            desc = False
             has_nulls = False
             item_codes.clear()
+            return 1
 
-        k = item_start
+        k = term_start
         while k < len(out):
             t2 = out[k]
             if t2 == "(":
@@ -4324,8 +4324,8 @@ def _normalize_null_order(toks: list[str]) -> list[str]:
                     last_code = k
                     item_codes.append(k)
             elif depth == 0 and t2 == ",":
-                _close(last_code + 1)
-                k += 2  # account for the inserted token
+                k += 1 + _close(last_code + 1)  # past the comma
+                term_start = k
                 last_code = -1
                 continue
             elif depth == 0 and t2 == ";":
@@ -4339,18 +4339,14 @@ def _normalize_null_order(toks: list[str]) -> list[str]:
                 if up == "ALL" and last_code < 0:
                     # ORDER BY ALL: expanded later; leave untouched
                     break
-                if up == "DESC":
-                    desc = True
-                elif up == "ASC":
-                    desc = False
-                elif up == "NULLS" or re.fullmatch(
+                if up == "NULLS" or re.fullmatch(
                     r"(?i)NULLS\s+(FIRST|LAST)", t2
                 ):
                     has_nulls = True
-                else:
+                elif up not in ("ASC", "DESC"):
                     item_codes.append(k)
                 last_code = k
-            elif depth == 0 and not t2.isspace():
+            elif depth == 0 and not t2.isspace() and not t2.startswith("--"):
                 last_code = k
                 item_codes.append(k)
             k += 1
@@ -4358,6 +4354,88 @@ def _normalize_null_order(toks: list[str]) -> list[str]:
             _close(last_code + 1)
         i += 1
     return out
+
+
+def _order_terms(toks: list[str]) -> list[tuple[str, bool, bool]]:
+    """An ORDER BY list → [(key, desc, nulls_first)], one entry per
+    distinct key (a repeated key cannot change the order).
+
+    A term without NULLS FIRST/LAST takes the placement of DuckDB's
+    `default_null_order`, read here and nowhere else: positional for
+    'nulls_last' (the default) and 'nulls_first', direction-coupled for
+    'nulls_first_on_asc_last_on_desc' and 'nulls_last_on_asc_first_on_desc'.
+    A trailing IGNORE/RESPECT NULLS belongs to the call, not the term."""
+    setting = get_session_setting("default_null_order").replace(" ", "_")
+    terms: list[tuple[str, bool, bool]] = []
+    for part in _split_top_args(toks):
+        p = re.sub(r"(?i)\s+(IGNORE|RESPECT)\s+NULLS\s*$", "", part).strip()
+        nm = re.search(r"(?i)\s*\bNULLS\s+(FIRST|LAST)\s*$", p)
+        if nm:
+            p = p[:nm.start()]
+        dm = re.search(r"(?i)\s+(ASC|DESC)\s*$", p)
+        desc = bool(dm) and dm.group(1).upper() == "DESC"
+        key = (p[:dm.start()] if dm else p).strip()
+        if nm:
+            nf = nm.group(1).upper() == "FIRST"
+        else:
+            nf = setting.startswith("nulls_first") != (
+                "_on_asc_" in setting and desc)
+        if key and key not in [k for k, _, _ in terms]:
+            terms.append((key, desc, nf))
+    return terms
+
+
+def _terms_cmp(terms: list[tuple[str, bool, bool]], lf, rf) -> str:
+    """-1/0/1 comparator over `_order_terms` keys; lf(i)/rf(i) give the
+    SQL for key i on each side (struct field ref or raw current-row
+    expression)."""
+    cmp = "0"
+    for x, (_, d, nf) in reversed(list(enumerate(terms))):
+        l, r = lf(x), rf(x)
+        lt, gt = ("1", "-1") if d else ("-1", "1")
+        ln, rn = ("-1", "1") if nf else ("1", "-1")
+        cmp = (
+            f"case when {l} <=> {r} then {cmp} "
+            f"when {l} is null then {ln} "
+            f"when {r} is null then {rn} "
+            f"when {l} < {r} then {lt} else {gt} end"
+        )
+    return cmp
+
+
+def _keyed_sort(
+    val: str,
+    terms: list[tuple[str, bool, bool]],
+    *,
+    src: str = "",
+    over: str = "",
+    when: str = "",
+    distinct: bool = False,
+    pick: str = "",
+) -> str:
+    """`val` of every row, in the order of `terms` (`_order_terms`
+    entries): each row becomes a `(v, k0, k1, …)` struct, the structs are
+    collected — a struct is never NULL, so NULL values survive
+    collect_list — sorted by `_terms_cmp`, and projected back to v
+    (reference sorted aggregate, SURVEY §PhysicalHashAggregate).
+
+    src: an array to sort instead of collecting rows (its element is
+    `__e`); over: the window the collect runs over; when: the rows kept;
+    distinct: drop repeated (value, keys) structs; pick: the 1-based
+    index of the one value wanted, instead of the list."""
+    fields = [f"'v', {val}"] + [f"'k{x}', ({k})" for x, (k, _, _) in enumerate(terms)]
+    el = f"named_struct({', '.join(fields)})"
+    if when:
+        el = f"case when {when} then {el} end"
+    arr = f"transform({src}, __e -> {el})" if src else \
+        f"collect_list({el})" + (f" {over}" if over else "")
+    if distinct:
+        arr = f"array_distinct({arr})"
+    if terms:
+        cmp = _terms_cmp(terms, "l.k{}".format, "r.k{}".format)
+        arr = f"array_sort({arr}, (l, r) -> {cmp})"
+    return f"try_element_at({arr}, {pick}).v" if pick else \
+        f"transform({arr}, __s -> __s.v)"
 
 
 def _rewrite_array_subquery(toks: list[str]) -> list[str]:
@@ -4479,16 +4557,7 @@ def _array_subquery_repl(inner: list[str]) -> str | None:
             return None
         oend = min(p for p in (pos_limit, pos_offset, len(inner))
                    if p >= 0 and p > pos_order)
-        nf_default = get_session_setting("default_null_order") in (
-            "nulls_first", "nulls first", "'nulls_first'", "'nulls first'",
-        )
-        for part in _split_top_args(inner[ob + 1:oend]):
-            p = part.strip()
-            nm = re.search(r"(?i)\bNULLS\s+(FIRST|LAST)\s*$", p)
-            nf = nm.group(1).upper() == "FIRST" if nm else nf_default
-            p = re.sub(r"(?i)\s*NULLS\s+(FIRST|LAST)\s*$", "", p).strip()
-            d = bool(re.search(r"(?i)\s+DESC\s*$", p))
-            key = re.sub(r"(?i)\s+(ASC|DESC)\s*$", "", p).strip()
+        for key, d, nf in _order_terms(inner[ob + 1:oend]):
             if alias and re.fullmatch(alias, key, re.I):
                 key = sel
             entries.append((_array_ordinal_key(key, sel), d, nf))
@@ -4514,39 +4583,21 @@ def _array_subquery_repl(inner: list[str]) -> str | None:
                 return re.sub(rf"(?i)\b{re.escape(alias)}\b", "__e", k) \
                     if alias else k
 
-            cmp_entries = [(_elkey(k), d, nf) for k, d, nf in entries]
-            karr = (
-                f"transform({arr}, __e -> named_struct('v', __e, "
-                + ", ".join(
-                    f"'k{x}', ({k})" for x, (k, _, _) in enumerate(cmp_entries)
-                ) + "))"
-            )
-            cmp = _ow_cmp(entries, lambda x: f"l.k{x}", lambda x: f"r.k{x}")
-            arr = f"transform(array_sort({karr}, (l, r) -> {cmp}), __s -> __s.v)"
+            arr = _keyed_sort(
+                "__e", [(_elkey(k), d, nf) for k, d, nf in entries], src=arr)
         expr = arr
     else:
         # ORDER BY rowid (already rewritten to monotonically_increasing_id,
         # which cannot appear inside an aggregate): collect_list already
         # buffers in scan order, so natural order ≡ rowid ASC.
-        natural_desc = (
+        natural = (
             len(entries) == 1
             and entries[0][0].replace(" ", "") == "monotonically_increasing_id()"
         )
-        if natural_desc:
-            rev = entries[0][1]
-            entries = []
-        fields = [f"'v', ({sel})"] + [
-            f"'k{x}', ({k})" for x, (k, _, _) in enumerate(entries)
-        ]
-        collected = f"collect_list(named_struct({', '.join(fields)}))"
-        if distinct:
-            collected = f"array_distinct({collected})"
-        if entries:
-            cmp = _ow_cmp(entries, lambda x: f"l.k{x}", lambda x: f"r.k{x}")
-            collected = f"array_sort({collected}, (l, r) -> {cmp})"
-        if natural_desc and rev:
-            collected = f"reverse({collected})"
-        expr = f"transform({collected}, __s -> __s.v)"
+        expr = _keyed_sort(f"({sel})", [] if natural else entries,
+                           distinct=distinct)
+        if natural and entries[0][1]:
+            expr = f"reverse({expr})"
     if offset is not None or limit is not None:
         start = f"(({offset}) + 1)" if offset else "1"
         length = f"({limit})" if limit is not None else "2147483647"
@@ -4587,30 +4638,14 @@ def _array_union_repl(
             return None
         oend = min(p for p in (pos_limit, pos_offset, len(inner))
                    if p >= 0 and p > pos_order)
-        nf_default = get_session_setting("default_null_order") in (
-            "nulls_first", "nulls first", "'nulls_first'", "'nulls first'",
-        )
-        for part in _split_top_args(inner[ob + 1:oend]):
-            p = part.strip()
-            nm = re.search(r"(?i)\bNULLS\s+(FIRST|LAST)\s*$", p)
-            nf = nm.group(1).upper() == "FIRST" if nm else nf_default
-            p = re.sub(r"(?i)\s*NULLS\s+(FIRST|LAST)\s*$", "", p).strip()
-            d = bool(re.search(r"(?i)\s+DESC\s*$", p))
-            key = re.sub(r"(?i)\s+(ASC|DESC)\s*$", "", p).strip()
+        for key, d, nf in _order_terms(inner[ob + 1:oend]):
             key = _array_ordinal_key(key, "__v")
             # a (qualified) column ref can only name the single output
             # column (DuckDB binds union ORDER BY against the output list)
             if re.fullmatch(r"[A-Za-z_][\w.]*", key):
                 key = "__v"
             entries.append((key, d, nf))
-    fields = ["'v', (__v)"] + [
-        f"'k{x}', ({k})" for x, (k, _, _) in enumerate(entries)
-    ]
-    collected = f"collect_list(named_struct({', '.join(fields)}))"
-    if entries:
-        cmp = _ow_cmp(entries, lambda x: f"l.k{x}", lambda x: f"r.k{x}")
-        collected = f"array_sort({collected}, (l, r) -> {cmp})"
-    expr = f"transform({collected}, __s -> __s.v)"
+    expr = _keyed_sort("(__v)", entries)
     limit = "".join(
         inner[_next_code(inner, pos_limit + 1):
               min(p for p in (pos_offset, len(inner)) if p >= 0 and p > pos_limit)]
@@ -5398,10 +5433,6 @@ def _scope_span(sql: str, pos: int) -> tuple[int, int]:
 
 # -------------------------------------------------- function-call rewrites
 
-_STRING_AGGS = {"string_agg", "group_concat", "listagg"}
-_LIST_AGGS = {"list", "array_agg"}
-
-
 # ------------------------------------------- aggregate macro expansions
 #
 # DuckDB aggregates with no Spark builtin, expressible as compositions of
@@ -6024,9 +6055,6 @@ def _unify_array_struct_elems(toks: list[str]) -> list[str]:
 
 
 
-_FIRST_LAST = {"first", "last", "any_value", "arbitrary"}
-
-
 
 
 
@@ -6395,593 +6423,493 @@ def _rewrite_struct_literals(toks: list[str]) -> list[str]:
     return out
 
 
-def _rewrite_calls(toks: list[str]) -> list[str]:
-    """Call-site rewrites: DuckDB→Spark function names, `count()` →
-    `count(*)`, single-arg `log` → `log10` (DuckDB log is base-10,
-    reference function_list.cpp), and in-aggregate ORDER BY:
+class _Call(NamedTuple):
+    """A call `name(…)` in a token list: the name at `i`, its `(` at
+    `j` and `)` at `close`, and the OVER right after it at `over` (-1 for
+    a call that is not windowed)."""
+    name: str
+    i: int
+    j: int
+    close: int
+    over: int
 
-    - order-insensitive aggregates: the clause is dropped (DuckDB accepts
-      `count(x ORDER BY y)`; order cannot change the result)
-    - string_agg/group_concat → `listagg(...) WITHIN GROUP (ORDER BY ...)`
-    - list/array_agg ordered by their own argument → sort_array(collect_list)
-    - first/last ordered by one key → min_by/max_by (struct-free fast path)
-    """
+
+def _rewrite_calls(toks: list[str]) -> list[str]:
+    """Call-site rewrites, DuckDB → Spark. Each call `name(…)` goes to
+    its entry of `_CALL_HANDLERS`, which rewrites it and returns the
+    index to go on from, or returns None to leave it to `_call_default`
+    (`_agg_macro_windowed`, `_agg_macro`, an in-call ORDER BY dropped,
+    then the `NAMES` rename). A replacement is one opaque token, so a
+    handler rewrites the calls inside its arguments first."""
     out = list(toks)
     i = 0
     while i < len(out):
-        t = out[i]
-        if not re.match(r"^[A-Za-z_]", t):
+        if not re.match(r"^[A-Za-z_]", out[i]):
             i += 1
             continue
         j = _next_code(out, i + 1)
         if j >= len(out) or out[j] != "(":
             i += 1
             continue
-        name = t.lower()
-        if name in ("argmin", "argmax"):  # reference aliases (function_list.cpp)
-            name = "arg_" + name[3:]
-        # GROUPING(a, b) is the bitmask form in DuckDB ≡ Spark grouping_id
-        # (before the non-function-word skip: GROUPING SETS never has `(`
-        # directly after GROUPING, so this only hits the call form)
-        if name == "grouping":
-            gc = _match_paren(out, j)
-            if gc > 0 and _next_code(out, j + 1) == gc:
-                # GROUPING() = bitmask over all grouping columns
-                out[i] = "grouping_id"
-                i = j
-                continue
-            if gc > 0 and _has_top_level_comma(out[j + 1:gc]):
-                # GROUPING(a, b[, …]): DuckDB's bitmask accepts any order
-                # and duplicates; Spark's grouping_id wants the grouping
-                # sets verbatim — compose from single-arg grouping() bits
-                gargs = _split_top_args(out[j + 1:gc])
-                n = len(gargs)
-                if n > 64:
-                    raise ValueError(
-                        "Binder Error: GROUPING statement cannot have "
-                        "more than 64 groups"
-                    )
-                parts = [
-                    f"cast(grouping({a.strip()}) as bigint) * {2 ** (n - 1 - x)}"
-                    for x, a in enumerate(gargs)
-                ]
-                out[i:gc + 1] = ["(" + " + ".join(parts) + ")"]
-                i += 1
-                continue
-            i = j
-            continue
-        if name in _NONFN_WORDS:
+        name = out[i].lower()
+        name = _CALL_ALIASES.get(name, name)
+        handler = _CALL_HANDLERS.get(name)
+        if handler is None and name in _NONFN_WORDS:
             i = j
             continue
         close = _match_paren(out, j)
         if close < 0:
             i += 1
             continue
-        # count() → count(*); DuckDB binder strictness re-checks
-        if name == "count":
-            if _next_code(out, j + 1) == close:
-                out[j + 1:j + 1] = ["*"]
-                i = j
-                continue
-            cargs = _split_top_args(out[j + 1:close])
-            if len(cargs) > 1:
-                raise ValueError(
-                    "Binder Error: count() accepts at most one argument"
-                )
-            if cargs and re.match(r"(?is)^\s*DISTINCT\s*\*\s*$", cargs[0]):
-                raise ValueError(
-                    "Binder Error: STAR expression is only allowed as the "
-                    "root element of COUNT"
-                )
-        # len(x): DuckDB's is polymorphic (string length / list length);
-        # Spark's is string-only. Use size() when the arg is visibly a list
-        # or aliased from a list-producing call anywhere in the statement.
-        if name in ("len", "length") and close > 0:
-            argtext = "".join(out[j + 1:close]).strip()
-            listy = re.search(
-                r"(?i)\[|collect_list|array|transform|slice|sequence|split|"
-                r"approx_top_k|list_sort|map_keys|map_values|flatten|"
-                r"__dktc_", re.sub(r"'(?:[^']|'')*'", "''", argtext),
-            )
-            if not listy and re.match(r"^[A-Za-z_]\w*$", argtext):
-                full = "".join(out)
-                listy = re.search(
-                    r"(?i)(approx_top_k|list_sort|collect_list|array_agg|"
-                    r"string_split|split|sequence|list)\s*\([^;]*?\)\s*"
-                    rf"(?:as\s+)?{re.escape(argtext)}\b", full,
-                )
-            if listy:
-                out[i] = "size"
-                i = j
-                continue
-        if name == "log":
-            depth, commas = 0, 0
-            for k in range(j, close):
-                if out[k] == "(":
-                    depth += 1
-                elif out[k] == ")":
-                    depth -= 1
-                elif out[k] == "," and depth == 1:
-                    commas += 1
-            if commas == 0:
-                out[i] = "log10"
-            i = j
-            continue
-        if name == "make_timestamp":
-            # 1-arg form is µs-since-epoch (reference timestamp functions);
-            # Spark's make_timestamp is the 6-arg calendar form only
-            depth, commas = 0, 0
-            for k in range(j, close):
-                if out[k] == "(":
-                    depth += 1
-                elif out[k] == ")":
-                    depth -= 1
-                elif out[k] == "," and depth == 1:
-                    commas += 1
-            if commas == 0:
-                out[i] = "timestamp_micros"
-            i = j
-            continue
-        nxt = _next_code(out, close + 1) if close > 0 else -1
-        windowed = 0 <= nxt < len(out) and _is_word(out[nxt], "OVER")
+        nxt = _next_code(out, close + 1)
+        windowed = nxt < len(out) and _is_word(out[nxt], "OVER")
+        c = _Call(name, i, j, close, nxt if windowed else -1)
         if windowed:
-            inner = out[j + 1:close]
-            if any(_is_word(x, "OVER") for x in inner) and not any(
-                _is_word(x, "SELECT") for x in inner
-            ):
-                raise ValueError(
-                    "Binder Error: window function calls cannot be nested"
-                )
-            # ... nor appear inside the OVER specification itself
-            op_ = _next_code(out, nxt + 1)
-            if op_ < len(out) and out[op_] == "(":
-                oc_ = _match_paren(out, op_)
-                spec = out[op_ + 1:oc_] if oc_ > 0 else []
-                if any(_is_word(x, "OVER") for x in spec) and not any(
-                    _is_word(x, "SELECT") for x in spec
-                ):
-                    raise ValueError(
-                        "Parser Error: window functions are not allowed "
-                        "in the window specification"
-                    )
-        if (
-            windowed
-            and name in _LIST_AGGS
-            and _top_level_index(out, j + 1, close, "ORDER") < 0
-        ):
-            # DuckDB LIST/ARRAY_AGG keeps NULL elements; Spark collect_list
-            # drops them (window/test_list_window.test). Struct-wrap the
-            # value so nulls survive the collect, then project back out —
-            # frame order is preserved because transform is elementwise.
-            op = _next_code(out, nxt + 1)
-            argtext = "".join(_rewrite_calls(out[j + 1:close])).strip()
-            if (
-                argtext
-                and not re.match(r"(?is)^DISTINCT\b", argtext)
-                and op < len(out)
-                and out[op] == "("
-            ):
-                oc = _match_paren(out, op)
-                if oc > 0:
-                    spec = "".join(_rewrite_calls(out[op + 1:oc])).strip()
-                    out[i:oc + 1] = [
-                        f"transform(collect_list(named_struct('v', {argtext}))"
-                        f" OVER ({spec}), __s -> __s.v)"
-                    ]
-                    i += 1
-                    continue
-        if windowed and name in _WINDOWED_MACROS:
-            op = _next_code(out, nxt + 1)
-            if op < len(out) and out[op] == "(":
-                oc = _match_paren(out, op)
-                if oc > 0:
-                    over = "".join(out[nxt:oc + 1])
-                    repl = _agg_macro_windowed(
-                        name,
-                        _split_top_args(_rewrite_calls(out[j + 1:close])),
-                        over,
-                    )
-                    if repl is not None:
-                        out[i:oc + 1] = [repl]
-                        i += 1
-                        continue
-        if (
-            name in _MACRO_NAMES
-            and not windowed  # macro compositions cannot be window-framed
-            and _top_level_index(out, j + 1, close, "ORDER") < 0
-        ):
-            # rewrite nested calls inside the args first (the replacement is
-            # a single opaque token later passes won't descend into)
-            repl = _agg_macro(name, _split_top_args(_rewrite_calls(out[j + 1:close])))
-            if repl is not None:
-                out[i:close + 1] = [repl]
-                i += 1
-                continue
-        ob = _top_level_index(out, j + 1, close, "ORDER")
-        has_order = ob >= 0 and _is_word(out[_next_code(out, ob + 1)], "BY")
-        # a top-level SELECT before the ORDER means the ORDER belongs to a
-        # subquery (EXISTS(SELECT … ORDER BY …)), not to the call itself
-        if has_order and _top_level_index(out, j + 1, ob, "SELECT") >= 0:
-            has_order = False
-        if has_order:
-            order_toks = out[_next_code(out, _next_code(out, ob + 1) + 1):close]
-            arg_toks = out[j + 1:ob]
-            # a trailing FILTER (WHERE cond): compositions can't carry a
-            # native FILTER clause — fold the condition into the value arg
-            # (CASE yields NULL, which null-skipping aggregates drop)
-            filt_cond, filt_end = None, close
-            fi = _next_code(out, close + 1)
-            if fi < len(out) and _is_word(out[fi], "FILTER"):
-                fp = _next_code(out, fi + 1)
-                if fp < len(out) and out[fp] == "(":
-                    fc = _match_paren(out, fp)
-                    inner = _next_code(out, fp + 1)
-                    if fc > 0 and inner < fc:
-                        # the WHERE keyword is optional in DuckDB (and the
-                        # normalizing pass runs after this one)
-                        body = "".join(out[inner:fc]).strip()
-                        filt_cond = re.sub(r"(?is)^WHERE\b", "", body).strip()
-                        filt_end = fc
-            if name in ("lttb", "lttb_ts"):
-                # lttb(x, y, n ORDER BY o) (reference core_functions lttb)
-                # → one JVM-side collect_list + aggregate() fold; the
-                # lttb_ts spelling is the TIMESTAMP-keys retry
-                largs = _split_top_args(arg_toks)
-                if len(largs) == 3:
-                    nt = largs[2].strip()
-                    if re.fullmatch(r"[\d\s()+\-*/.]+", nt):
-                        nval = float(eval(nt, {"__builtins__": {}}))
-                    else:
-                        nval = _try_const_eval(nt)
-                    if nval is None:
-                        raise ValueError(
-                            "Binder Error: lttb target count must be a "
-                            "constant"
-                        )
-                    if float(nval) < 2:
-                        raise ValueError(
-                            "Binder Error: lttb target count must be at "
-                            "least 2"
-                        )
-                    okey = re.sub(
-                        r"(?i)\s+(ASC|DESC)\s*$", "",
-                        "".join(order_toks).strip(),
-                    ).strip()
-                    out[i:close + 1] = [
-                        _macro_lttb(largs[0], largs[1], largs[2], okey,
-                                    ts_keys=name == "lttb_ts")
-                    ]
-                    i += 1
-                    continue
-            if name in ("arg_min", "arg_max", "min_by", "max_by"):
-                margs = _split_top_args(arg_toks)
-                if len(margs) == 3:
-                    order = "".join(order_toks).strip()
-                    o_desc = order.upper().endswith(" DESC")
-                    okey = re.sub(r"(?i)\s+(ASC|DESC)\s*$", "", order).strip()
-                    out[i:close + 1] = [_macro_arg_n(
-                        margs[0], margs[1].rstrip(", \t"), margs[2],
-                        want_max=name in ("arg_max", "max_by"),
-                        order=okey, order_desc=o_desc,
-                    )]
-                    i += 1
-                    continue
-            if name in _ORDERED_WINDOW_FNS or name in _OW_ALIASES:
-                # `fn(args ORDER BY keys) OVER (spec)`; an in-call IGNORE
-                # NULLS may have been hoisted between `)` and OVER already
-                k2 = _next_code(out, close + 1)
-                ig = name in ("any_value", "arbitrary")
-                nm = re.fullmatch(
-                    r"\s*(IGNORE|RESPECT)\s+NULLS\s*", out[k2], re.I
-                ) if k2 < len(out) else None
-                if nm:
-                    # single hoisted token (from _rewrite_ignore_nulls_args)
-                    ig = ig or nm.group(1).upper() == "IGNORE"
-                    k2 = _next_code(out, k2 + 1)
-                elif k2 < len(out) and (
-                    _is_word(out[k2], "IGNORE") or _is_word(out[k2], "RESPECT")
-                ):
-                    k3 = _next_code(out, k2 + 1)
-                    if k3 < len(out) and _is_word(out[k3], "NULLS"):
-                        ig = ig or _is_word(out[k2], "IGNORE")
-                        k2 = _next_code(out, k3 + 1)
-                if k2 < len(out) and _is_word(out[k2], "OVER"):
-                    op = _next_code(out, k2 + 1)
-                    if op < len(out) and out[op] == "(":
-                        oc = _match_paren(out, op)
-                        if oc > 0:
-                            spec = "".join(
-                                _rewrite_calls(out[op + 1:oc])
-                            ).strip()
-                            repl = _ordered_window_repl(
-                                _OW_ALIASES.get(name, name),
-                                _split_top_args(_rewrite_calls(arg_toks)),
-                                _ow_entries(_rewrite_calls(order_toks)),
-                                ig,
-                                spec,
-                            )
-                            if repl is not None:
-                                out[i:oc + 1] = [repl]
-                                i += 1
-                                continue
-            if name in _STRING_AGGS:
-                order = "".join(order_toks).strip()
-                sep_needed = not _has_top_level_comma(arg_toks)
-                sargs = _split_top_args(arg_toks)
-                sdm = re.match(r"(?is)^\s*DISTINCT\s+(.*)$",
-                               sargs[0] if sargs else "")
-                # constant-literal order keys have no effect — drop them
-                okeys = [k.strip() for k in _split_top_args(
-                    _rewrite_calls(order_toks))]
-                okeys = [k for k in okeys if not re.fullmatch(
-                    r"(?is)'[^']*'(\s+(ASC|DESC))?", k)]
-                order1 = okeys[0] if len(okeys) == 1 else order
-                skey = re.sub(r"(?i)\s+(ASC|DESC)\s*$", "", order1).strip()
-                if sdm and len(okeys) == 1 and \
-                        skey != sdm.group(1).strip():
-                    # DISTINCT ordered by an expression OF the argument
-                    # (e.g. ORDER BY upper(x)) dedupes+sorts via (key,
-                    # value) structs; a key NOT built from the argument
-                    # is the reference's binder error
-                    if not re.search(
-                        re.escape(sdm.group(1).strip()), skey
-                    ):
-                        raise ValueError(
-                            "Binder Error: In a DISTINCT aggregate, ORDER "
-                            "BY expressions must appear in the argument "
-                            "list"
-                        )
-                    val = sdm.group(1).strip()
-                    if filt_cond:
-                        val = f"case when {filt_cond} then {val} end"
-                    sep = sargs[1] if len(sargs) > 1 else "','"
-                    sdesc = order1.upper().endswith(" DESC")
-                    cs = (f"array_sort(collect_set(case when ({val}) is "
-                          f"not null then named_struct('k', {skey}, "
-                          f"'v', {val}) end), (l, r) -> case "
-                          f"when l.k < r.k then {'1' if sdesc else '-1'} "
-                          f"when l.k > r.k then {'-1' if sdesc else '1'} "
-                          f"else 0 end)")
-                    out[i:(filt_end if filt_cond else close) + 1] = [
-                        f"case when size({cs}) = 0 then NULL else "
-                        f"array_join(transform({cs}, __s -> __s.v), {sep})"
-                        f" end"
-                    ]
-                    i += 1
-                    continue
-                if sdm and skey == sdm.group(1).strip():
-                    # string_agg(DISTINCT x, sep ORDER BY x [DESC]):
-                    # Spark's listagg rejects a FILTER-wrapped or
-                    # expression input with DISTINCT+WITHIN GROUP —
-                    # sorted collect_set is exactly this semantics
-                    val = sdm.group(1).strip()
-                    if filt_cond:
-                        val = f"case when {filt_cond} then {val} end"
-                    sep = sargs[1] if len(sargs) > 1 else "','"
-                    sdesc = order1.upper().endswith(" DESC")
-                    cs = (f"sort_array(collect_set({val})"
-                          f"{', false' if sdesc else ''})")
-                    # no aggregated rows → NULL, not '' (string_agg.cpp)
-                    out[i:(filt_end if filt_cond else close) + 1] = [
-                        f"case when size({cs}) = 0 then NULL "
-                        f"else array_join({cs}, {sep}) end"
-                    ]
-                    i += 1
-                    continue
-                if sdm:
-                    # DISTINCT ordered by a non-argument key (reference
-                    # bound_aggregate_expression.cpp binder error)
-                    raise ValueError(
-                        "Binder Error: In a DISTINCT aggregate, ORDER BY "
-                        "expressions must appear in the argument list"
-                    )
-                del out[ob:close]
-                close = _match_paren(out, j)
-                if sep_needed and name != "listagg":
-                    # DuckDB string_agg/group_concat default separator is ','
-                    out[close:close] = [", ','"]
-                    close += 1
-                out[close + 1:close + 1] = [f" WITHIN GROUP (ORDER BY {order})"]
-                out[i] = "listagg"
-            elif name in _LIST_AGGS:
-                order = "".join(_rewrite_calls(order_toks)).strip()
-                arg = "".join(_rewrite_calls(arg_toks)).strip()
-                desc = order.upper().endswith(" DESC")
-                key = re.sub(r"(?i)\s+(ASC|DESC)\s*$", "", order).strip()
-                dm = re.match(r"(?is)^\s*DISTINCT\s+(.*)$", arg)
-                if dm and key == dm.group(1).strip():
-                    # list(DISTINCT x ORDER BY x [DESC])
-                    val = dm.group(1).strip()
-                    if filt_cond:
-                        val = f"case when {filt_cond} then {val} end"
-                    repl = (
-                        f"sort_array(array_distinct(collect_list({val}))"
-                        f"{', false' if desc else ''})"
-                    )
-                    # zero aggregated rows -> NULL, not [] (list fun)
-                    repl = (f"case when size({repl}) = 0 then NULL "
-                            f"else {repl} end")
-                    out[i:(filt_end if filt_cond else close) + 1] = [repl]
-                elif dm:
-                    # DISTINCT ordered by a non-argument key is a binder
-                    # error in DuckDB too — leave for Spark to reject
-                    i = j
-                    continue
-                elif key == arg.strip():
-                    val = arg if not filt_cond else (
-                        f"case when {filt_cond} then {arg} end"
-                    )
-                    repl = f"sort_array(collect_list({val}){', false' if desc else ''})"
-                    repl = (f"case when size({repl}) = 0 then NULL "
-                            f"else {repl} end")
-                    out[i:(filt_end if filt_cond else close) + 1] = [repl]
-                else:
-                    # ordered by other key(s): comparator-sorted collect of
-                    # (value, keys) structs, then project the values back
-                    entries = []
-                    for part in _split_top_args(_rewrite_calls(order_toks)):
-                        p = part.strip()
-                        nf = bool(re.search(r"(?i)\bNULLS\s+FIRST\s*$", p))
-                        p = re.sub(r"(?i)\s+NULLS\s+(FIRST|LAST)\s*$", "", p).strip()
-                        d = bool(re.search(r"(?i)\s+DESC\s*$", p))
-                        p = re.sub(r"(?i)\s+(ASC|DESC)\s*$", "", p).strip()
-                        entries.append((p, d, nf))
-                    el = f"named_struct('v', {arg}, " + ", ".join(
-                        f"'k{x}', {k}" for x, (k, _, _) in enumerate(entries)
-                    ) + ")"
-                    cmp = "0"
-                    for x, (_, d, nf) in reversed(list(enumerate(entries))):
-                        lt, gt = ("1", "-1") if d else ("-1", "1")
-                        ln, rn = ("-1", "1") if nf else ("1", "-1")
-                        cmp = (
-                            f"case when l.k{x} <=> r.k{x} then {cmp} "
-                            f"when l.k{x} is null then {ln} "
-                            f"when r.k{x} is null then {rn} "
-                            f"when l.k{x} < r.k{x} then {lt} else {gt} end"
-                        )
-                    if filt_cond:
-                        el = f"case when {filt_cond} then {el} end"
-                    out[i:(filt_end if filt_cond else close) + 1] = [
-                        f"transform(array_sort(collect_list({el}), "
-                        f"(l, r) -> {cmp}), s -> s.v)"
-                    ]
-            elif name in _FIRST_LAST:
-                arg = "".join(arg_toks).strip().rstrip(",")
-                # parse the order list: (key, desc, nulls_first) per entry;
-                # DuckDB's default null order is NULLS LAST either direction
-                entries = []
-                for part in _split_top_args(order_toks):
-                    p = part.strip()
-                    nf = bool(re.search(r"(?i)\bNULLS\s+FIRST\s*$", p))
-                    p = re.sub(r"(?i)\s+NULLS\s+(FIRST|LAST)\s*$", "", p).strip()
-                    d = bool(re.search(r"(?i)\s+DESC\s*$", p))
-                    p = re.sub(r"(?i)\s+(ASC|DESC)\s*$", "", p).strip()
-                    if p not in [k for k, _, _ in entries]:
-                        entries.append((p, d, nf))  # ORDER BY i, i, i
-                if not entries:
-                    i = j
-                    continue
-                # `last` = `first` under the fully inverted order
-                if name == "last":
-                    entries = [(k, not d, not nf) for k, d, nf in entries]
-                uniform = len({d for _, d, _ in entries}) == 1
-                no_nf = not any(nf for _, _, nf in entries)
-                if uniform and no_nf:
-                    # fast path: min_by/max_by (NULL keys skipped = the
-                    # NULLS LAST default; struct key for multi-column)
-                    desc = entries[0][1]
-                    keys = [k for k, _, _ in entries]
-                    key = keys[0] if len(keys) == 1 else (
-                        "struct(" + ", ".join(keys) + ")"
-                    )
-                    if name == "any_value":
-                        # any_value = first NON-NULL value in order: a NULL
-                        # key makes min_by/max_by skip the row
-                        key = f"case when ({arg}) is not null then {key} end"
-                    fn = "max_by" if desc else "min_by"
-                    out[i:close + 1] = [f"{fn}({arg}, {key})"]
-                else:
-                    # general path: comparator-sorted collect (mixed
-                    # directions / NULLS FIRST); JVM-side lambda, exact
-                    el = f"named_struct('v', {arg}, " + ", ".join(
-                        f"'k{x}', {k}" for x, (k, _, _) in enumerate(entries)
-                    ) + ")"
-                    if name in ("any_value",):
-                        # any_value skips NULL values (CASE drops them:
-                        # collect_list skips NULL elements)
-                        el = f"case when ({arg}) is not null then {el} end"
-                    cmp = "0"
-                    for x, (_, d, nf) in reversed(list(enumerate(entries))):
-                        lt, gt = ("1", "-1") if d else ("-1", "1")
-                        ln, rn = ("-1", "1") if nf else ("1", "-1")
-                        cmp = (
-                            f"case when l.k{x} <=> r.k{x} then {cmp} "
-                            f"when l.k{x} is null then {ln} "
-                            f"when r.k{x} is null then {rn} "
-                            f"when l.k{x} < r.k{x} then {lt} else {gt} end"
-                        )
-                    if filt_cond:
-                        el = f"case when {filt_cond} then {el} end"
-                    _slow = (f"try_element_at(array_sort(collect_list({el}),"
-                             f" (l, r) -> {cmp}), 1).v")
-                    # TIME/TIMETZ carriers: the trailing `.v` defeats the
-                    # whole-item formatter match — re-mark the result
-                    # (test_last.test:124)
-                    if "__dktz" in arg:
-                        _slow = f"__dktz({_slow})"
-                    elif "__dktm" in arg:
-                        _slow = f"__dktm({_slow})"
-                    out[i:(filt_end if filt_cond else close) + 1] = [_slow]
-            else:
-                # every other aggregate: DuckDB permits ORDER BY in any
-                # aggregate; for order-insensitive ones it cannot change
-                # the result — drop it (scalar calls never parse with it).
-                _odesc = "".join(order_toks).strip().upper() \
-                    .endswith("DESC")
-                _qa2 = _split_top_args(arg_toks) if _odesc and \
-                    name == "quantile_cont" else None
-                if _qa2 and len(_qa2) == 2:
-                    # DESC order: the interpolated quantile is taken from
-                    # the top — complement the fraction (reference
-                    # quantile.cpp ordered path; test_quantile_cont:134)
-                    out[j + 1:close] = _tokens(
-                        f"{_qa2[0].strip()}, 1.0 - ({_qa2[1].strip()})")
-                    close = _match_paren(out, j)
-                else:
-                    del out[ob:close]
-                if name in _MACRO_NAMES:
-                    close = _match_paren(out, j)
-                    repl = _agg_macro(
-                        name, _split_top_args(_rewrite_calls(out[j + 1:close]))
-                    )
-                    if repl is not None:
-                        out[i:close + 1] = [repl]
-                        i += 1
-                        continue
-                _rename_call(out, i, name)
-            i += 1
-            continue
-        if name == "arbitrary":
-            # DuckDB arbitrary = first INCLUDING NULLs = Spark first default
-            out[i] = "first"
-        elif name == "any_value":
-            # DuckDB any_value = first NON-NULL; Spark defaults ignoreNulls=false
-            out[close:close] = [", true"]
-        elif name in _LIST_AGGS:
-            argtext = "".join(out[j + 1:close]).strip()
-            if argtext and not windowed and not re.match(
-                r"(?is)^DISTINCT\b", argtext
-            ):
-                # DuckDB LIST keeps NULL elements; collect_list drops them —
-                # struct-wrap so nulls survive, then project back out
-                out[i:close + 1] = [
-                    f"transform(collect_list(named_struct('v', {argtext})), "
-                    f"__s -> __s.v)"
-                ]
-                i += 1
-                continue
-            out[i] = "collect_list"
-        elif name in ("string_agg", "group_concat"):
-            out[i] = "listagg"
-            if not _has_top_level_comma(out[j + 1:close]):
-                out[close:close] = [", ','"]
-            else:
-                args2 = _split_top_args(out[j + 1:close])
-                if len(args2) == 2 and re.fullmatch(
-                    r"-?[\d.]+", args2[0].strip()
-                ):
-                    # numerics are not auto-cast (reference binder)
-                    raise ValueError(
-                        "Binder Error: No function matches the given name "
-                        "and argument types 'string_agg(INTEGER, INTEGER)'")
-                # NULL separator → NULL result (reference string_agg.cpp);
-                # Spark's listagg treats a NULL separator as empty
-                if len(args2) == 2 and args2[1].strip().upper() == "NULL":
-                    out[i:close + 1] = ["CAST(NULL AS STRING)"]
-        else:
-            _rename_call(out, i, name)
-        i = j
+            _check_window_call(out, c)
+        resume = handler(out, c) if handler is not None else None
+        i = _call_default(out, c) if resume is None else resume
     return out
+
+
+# reference aliases (function_list.cpp) of names with a handler
+_CALL_ALIASES = {"argmin": "arg_min", "argmax": "arg_max"}
+
+
+def _check_window_call(out: list[str], c: _Call) -> None:
+    """A window call nests no window call, in its arguments or in its
+    OVER specification (reference binder / parser errors)."""
+    oc = _over_end(out, c.over)
+    for part, msg in (
+        (out[c.j + 1:c.close],
+         "Binder Error: window function calls cannot be nested"),
+        (out[c.over + 1:oc] if oc > 0 else [],
+         "Parser Error: window functions are not allowed in the window "
+         "specification"),
+    ):
+        if any(_is_word(x, "OVER") for x in part) and not any(
+            _is_word(x, "SELECT") for x in part
+        ):
+            raise ValueError(msg)
+
+
+def _over_end(out: list[str], k: int) -> int:
+    """The `)` closing the parenthesized spec of the OVER at `k`, or -1."""
+    op = _next_code(out, k + 1)
+    return _match_paren(out, op) if op < len(out) and out[op] == "(" else -1
+
+
+def _over_spec(out: list[str], k: int, oc: int) -> str:
+    """The spec of the OVER at `k` whose `)` is at `oc`, with the calls
+    inside it rewritten."""
+    return "".join(_rewrite_calls(out[_next_code(out, k + 1) + 1:oc])).strip()
+
+
+def _call_order(
+    out: list[str], c: _Call
+) -> tuple[int, list[str], list[str]] | None:
+    """The call's own ORDER BY: (index of ORDER, argument tokens, term
+    tokens), or None. An ORDER after a top-level SELECT belongs to a
+    subquery (`EXISTS(SELECT … ORDER BY …)`)."""
+    ob = _top_level_index(out, c.j + 1, c.close, "ORDER")
+    if ob < 0 or _top_level_index(out, c.j + 1, ob, "SELECT") >= 0:
+        return None
+    by = _next_code(out, ob + 1)
+    if not _is_word(out[by], "BY"):
+        return None
+    return ob, out[c.j + 1:ob], out[_next_code(out, by + 1):c.close]
+
+
+def _call_filter(out: list[str], c: _Call) -> tuple[str, int]:
+    """A `FILTER (WHERE cond)` after the call: (cond, index of its `)`),
+    else ("", c.close). A composition cannot carry a native FILTER, so a
+    handler folds cond into the value (CASE yields NULL, which
+    null-skipping aggregates drop)."""
+    fi = _next_code(out, c.close + 1)
+    if fi < len(out) and _is_word(out[fi], "FILTER"):
+        fp = _next_code(out, fi + 1)
+        if fp < len(out) and out[fp] == "(":
+            fc = _match_paren(out, fp)
+            inner = _next_code(out, fp + 1)
+            if fc > 0 and inner < fc:
+                # the WHERE keyword is optional in DuckDB (and the
+                # normalizing pass runs after this one)
+                body = "".join(out[inner:fc]).strip()
+                return re.sub(r"(?is)^WHERE\b", "", body).strip(), fc
+    return "", c.close
+
+
+def _call_default(out: list[str], c: _Call) -> int:
+    """A call no handler took: a windowed aggregate macro, an aggregate
+    macro, and the `NAMES` rename. DuckDB permits ORDER BY in any
+    aggregate; in an order-insensitive one it cannot change the result,
+    so it is dropped (scalar calls never parse with it)."""
+    name, i, j = c.name, c.i, c.j
+    if c.over >= 0 and name in _WINDOWED_MACROS:
+        oc = _over_end(out, c.over)
+        repl = _agg_macro_windowed(
+            name, _split_top_args(_rewrite_calls(out[j + 1:c.close])),
+            "".join(out[c.over:oc + 1]),
+        ) if oc > 0 else None
+        if repl is not None:
+            out[i:oc + 1] = [repl]
+            return i + 1
+    order = _call_order(out, c)
+    if order is not None:
+        del out[order[0]:c.close]
+    elif _top_level_index(out, j + 1, c.close, "ORDER") >= 0:
+        _rename_call(out, i, name)
+        return j
+    if name in _MACRO_NAMES and (c.over < 0 or order is not None):
+        close = _match_paren(out, j)
+        repl = _agg_macro(name, _split_top_args(_rewrite_calls(out[j + 1:close])))
+        if repl is not None:
+            out[i:close + 1] = [repl]
+            return i + 1
+    _rename_call(out, i, name)
+    return j
+
+
+def _call_grouping(out: list[str], c: _Call) -> int:
+    """GROUPING(a, b) is DuckDB's bitmask form ≡ Spark grouping_id. Only
+    the call form has `(` right after GROUPING (never GROUPING SETS)."""
+    if _next_code(out, c.j + 1) == c.close:
+        # GROUPING() = bitmask over all grouping columns
+        out[c.i] = "grouping_id"
+    elif _has_top_level_comma(out[c.j + 1:c.close]):
+        # DuckDB's bitmask accepts any order and duplicates; Spark's
+        # grouping_id wants the grouping sets verbatim — compose from
+        # single-arg grouping() bits
+        gargs = _split_top_args(out[c.j + 1:c.close])
+        n = len(gargs)
+        if n > 64:
+            raise ValueError(
+                "Binder Error: GROUPING statement cannot have more than 64 "
+                "groups"
+            )
+        parts = [
+            f"cast(grouping({a.strip()}) as bigint) * {2 ** (n - 1 - x)}"
+            for x, a in enumerate(gargs)
+        ]
+        out[c.i:c.close + 1] = ["(" + " + ".join(parts) + ")"]
+        return c.i + 1
+    return c.j
+
+
+def _call_count(out: list[str], c: _Call) -> int | None:
+    """count() → count(*), with DuckDB's binder checks."""
+    if _next_code(out, c.j + 1) == c.close:
+        out[c.j + 1:c.j + 1] = ["*"]
+        return c.j
+    cargs = _split_top_args(out[c.j + 1:c.close])
+    if len(cargs) > 1:
+        raise ValueError("Binder Error: count() accepts at most one argument")
+    if cargs and re.match(r"(?is)^\s*DISTINCT\s*\*\s*$", cargs[0]):
+        raise ValueError(
+            "Binder Error: STAR expression is only allowed as the root "
+            "element of COUNT"
+        )
+    return None
+
+
+def _call_len(out: list[str], c: _Call) -> int | None:
+    """len(x): DuckDB's is polymorphic (string length / list length);
+    Spark's is string-only. size() when the arg is visibly a list, or
+    aliased from a list-producing call anywhere in the statement."""
+    argtext = "".join(out[c.j + 1:c.close]).strip()
+    listy = re.search(
+        r"(?i)\[|collect_list|array|transform|slice|sequence|split|"
+        r"approx_top_k|list_sort|map_keys|map_values|flatten|"
+        r"__dktc_", re.sub(r"'(?:[^']|'')*'", "''", argtext),
+    )
+    if not listy and re.match(r"^[A-Za-z_]\w*$", argtext):
+        listy = re.search(
+            r"(?i)(approx_top_k|list_sort|collect_list|array_agg|"
+            r"string_split|split|sequence|list)\s*\([^;]*?\)\s*"
+            rf"(?:as\s+)?{re.escape(argtext)}\b", "".join(out),
+        )
+    if not listy:
+        return None
+    out[c.i] = "size"
+    return c.j
+
+
+# one-argument forms with another Spark name: DuckDB log is base-10
+# (reference function_list.cpp); make_timestamp(µs since epoch), where
+# Spark's make_timestamp is the 6-argument calendar form only
+_ONE_ARG_NAMES = {"log": "log10", "make_timestamp": "timestamp_micros"}
+
+
+def _call_one_arg(out: list[str], c: _Call) -> int:
+    if not _has_top_level_comma(out[c.j + 1:c.close]):
+        out[c.i] = _ONE_ARG_NAMES[c.name]
+    return c.j
+
+
+def _call_list(out: list[str], c: _Call) -> int:
+    """list/array_agg. DuckDB keeps NULL elements, which collect_list
+    drops: the value is struct-wrapped (`_keyed_sort`), also over a
+    window frame, whose order transform keeps."""
+    order = _call_order(out, c)
+    if order is None:
+        arg = "".join(_rewrite_calls(out[c.j + 1:c.close])).strip()
+        end = _over_end(out, c.over) if c.over >= 0 else c.close
+        if not arg or re.match(r"(?is)^DISTINCT\b", arg) or end < 0:
+            out[c.i] = "collect_list"
+            return c.j
+        over = f"OVER ({_over_spec(out, c.over, end)})" if c.over >= 0 else ""
+        out[c.i:end + 1] = [_keyed_sort(arg, [], over=over)]
+        return c.i + 1
+    resume = _call_ordered_window(out, c)
+    if resume is not None:
+        return resume
+    terms = _order_terms(_rewrite_calls(order[2]))
+    arg = "".join(_rewrite_calls(order[1])).strip()
+    cond, end = _call_filter(out, c)
+    dm = re.match(r"(?is)^DISTINCT\s+(.*)$", arg)
+    val = dm.group(1).strip() if dm else arg
+    if len(terms) == 1 and terms[0][0] == val and not terms[0][2]:
+        # ordered by its own argument, NULLs last: a plain sort_array,
+        # which loses the NULL elements DuckDB keeps at the end
+        if cond:
+            val = f"case when {cond} then {val} end"
+        lst = f"array_distinct(collect_list({val}))" if dm else \
+            f"collect_list({val})"
+        lst = f"sort_array({lst}{', false' if terms[0][1] else ''})"
+        # zero aggregated rows -> NULL, not [] (list fun)
+        out[c.i:end + 1] = [f"case when size({lst}) = 0 then NULL else {lst} end"]
+    elif dm:
+        # DISTINCT ordered by a non-argument key is a binder error in
+        # DuckDB too — leave for Spark to reject
+        return c.j
+    else:
+        out[c.i:end + 1] = [_keyed_sort(arg, terms, when=cond and f"({cond})")]
+    return c.i + 1
+
+
+def _call_string_agg(out: list[str], c: _Call) -> int:
+    """string_agg/group_concat → listagg, with DuckDB's ',' default
+    separator, NULL result on a NULL separator, and the in-call ORDER BY
+    as `WITHIN GROUP (ORDER BY …)` with DuckDB's null placement."""
+    order = _call_order(out, c)
+    if order is None:
+        if c.name == "listagg":
+            return c.j
+        out[c.i] = "listagg"
+        args = _split_top_args(out[c.j + 1:c.close])
+        if not _has_top_level_comma(out[c.j + 1:c.close]):
+            out[c.close:c.close] = [", ','"]
+        elif len(args) == 2 and re.fullmatch(r"-?[\d.]+", args[0].strip()):
+            # numerics are not auto-cast (reference binder)
+            raise ValueError(
+                "Binder Error: No function matches the given name and "
+                "argument types 'string_agg(INTEGER, INTEGER)'")
+        elif len(args) == 2 and args[1].strip().upper() == "NULL":
+            # NULL separator → NULL result (reference string_agg.cpp);
+            # Spark's listagg treats a NULL separator as empty
+            out[c.i:c.close + 1] = ["CAST(NULL AS STRING)"]
+        return c.j
+    ob, arg_toks, order_toks = order
+    args = _split_top_args(arg_toks)
+    # constant-literal order keys have no effect — drop them
+    terms = [t for t in _order_terms(_rewrite_calls(order_toks))
+             if not re.fullmatch(r"'[^']*'", t[0])]
+    dm = re.match(r"(?is)^\s*DISTINCT\s+(.*)$", args[0] if args else "")
+    if dm:
+        val = dm.group(1).strip()
+        # DISTINCT may be ordered by the argument or by an expression of
+        # it (reference bound_aggregate_expression.cpp binder error)
+        if len(terms) != 1 or not re.search(re.escape(val), terms[0][0]):
+            raise ValueError(
+                "Binder Error: In a DISTINCT aggregate, ORDER BY expressions "
+                "must appear in the argument list"
+            )
+        own = terms[0][0] == val
+        cond, end = _call_filter(out, c)
+        if cond:
+            val = f"case when {cond} then {val} end"
+        if own:
+            lst = f"sort_array(collect_set({val}){', false' if terms[0][1] else ''})"
+        else:
+            lst = _keyed_sort(val, terms, when=f"({val}) is not null",
+                              distinct=True)
+        sep = args[1] if len(args) > 1 else "','"
+        # no aggregated rows → NULL, not '' (string_agg.cpp)
+        out[c.i:end + 1] = [
+            f"case when size({lst}) = 0 then NULL else array_join({lst}, {sep}) end"]
+        return c.i + 1
+    del out[ob:c.close]
+    close = _match_paren(out, c.j)
+    if c.name != "listagg" and not _has_top_level_comma(arg_toks):
+        out[close:close] = [", ','"]
+        close += 1
+    # Spark's default is ASC NULLS FIRST, DESC NULLS LAST
+    within = ", ".join(
+        k + (" DESC" if d else "")
+        + ((" NULLS FIRST" if nf else " NULLS LAST") if d == nf else "")
+        for k, d, nf in terms)
+    if within:
+        out[close + 1:close + 1] = [f" WITHIN GROUP (ORDER BY {within})"]
+    out[c.i] = "listagg"
+    return c.i + 1
+
+
+def _call_first_last(out: list[str], c: _Call) -> int:
+    """first/last/any_value/arbitrary. DuckDB arbitrary = first
+    INCLUDING NULLs (Spark first's default), any_value = first NON-NULL.
+    Ordered: min_by/max_by where that is exact, else a `_keyed_sort`."""
+    order = _call_order(out, c)
+    if order is None:
+        if c.name == "arbitrary":
+            out[c.i] = "first"
+        elif c.name == "any_value":
+            out[c.close:c.close] = [", true"]
+        return c.j
+    resume = _call_ordered_window(out, c)
+    if resume is not None:
+        return resume
+    terms = _order_terms(_rewrite_calls(order[2]))
+    if not terms:
+        return c.j
+    arg = "".join(_rewrite_calls(order[1])).strip().rstrip(",")
+    if c.name == "last":
+        # `last` = `first` under the fully inverted order
+        terms = [(k, not d, not nf) for k, d, nf in terms]
+    if len({d for _, d, _ in terms}) == 1 and not any(nf for *_, nf in terms):
+        # min_by/max_by skip NULL keys, which is NULLS LAST; a struct key
+        # orders several columns
+        keys = [k for k, _, _ in terms]
+        key = keys[0] if len(keys) == 1 else "struct(" + ", ".join(keys) + ")"
+        if c.name == "any_value":
+            # a NULL key makes min_by/max_by skip the row
+            key = f"case when ({arg}) is not null then {key} end"
+        fn = "max_by" if terms[0][1] else "min_by"
+        out[c.i:c.close + 1] = [f"{fn}({arg}, {key})"]
+        return c.i + 1
+    cond, end = _call_filter(out, c)
+    when = [f"({cond})"] if cond else []
+    if c.name == "any_value":
+        when.append(f"({arg}) is not null")
+    first = _keyed_sort(arg, terms, when=" and ".join(when), pick="1")
+    # TIME/TIMETZ carriers: the trailing `.v` defeats the whole-item
+    # formatter match — re-mark the result (test_last.test:124)
+    for mark in ("__dktz", "__dktm"):
+        if mark in arg:
+            first = f"{mark}({first})"
+            break
+    out[c.i:end + 1] = [first]
+    return c.i + 1
+
+
+def _call_ordered_window(out: list[str], c: _Call) -> int | None:
+    """`fn(args ORDER BY keys) OVER (spec)` (`_ordered_window_repl`); an
+    in-call IGNORE NULLS may have been hoisted between `)` and OVER
+    already. any_value in order is the first non-NULL value."""
+    order = _call_order(out, c)
+    if order is None:
+        return None
+    k = _next_code(out, c.close + 1)
+    ignore = c.name in ("any_value", "arbitrary")
+    nm = re.fullmatch(r"\s*(IGNORE|RESPECT)\s+NULLS\s*", out[k], re.I) \
+        if k < len(out) else None
+    if nm:
+        # single hoisted token (from _rewrite_ignore_nulls_args)
+        ignore = ignore or nm.group(1).upper() == "IGNORE"
+        k = _next_code(out, k + 1)
+    elif k < len(out) and (_is_word(out[k], "IGNORE") or _is_word(out[k], "RESPECT")):
+        k3 = _next_code(out, k + 1)
+        if k3 < len(out) and _is_word(out[k3], "NULLS"):
+            ignore = ignore or _is_word(out[k], "IGNORE")
+            k = _next_code(out, k3 + 1)
+    oc = _over_end(out, k) if k < len(out) and _is_word(out[k], "OVER") else -1
+    if oc < 0:
+        return None
+    repl = _ordered_window_repl(
+        _OW_ALIASES.get(c.name, c.name),
+        _split_top_args(_rewrite_calls(order[1])),
+        _order_terms(_rewrite_calls(order[2])),
+        ignore,
+        _over_spec(out, k, oc),
+    )
+    if repl is None:
+        return None
+    out[c.i:oc + 1] = [repl]
+    return c.i + 1
+
+
+def _call_lttb(out: list[str], c: _Call) -> int | None:
+    """lttb(x, y, n ORDER BY o) (reference core_functions lttb) → one
+    JVM-side collect_list + aggregate() fold; the lttb_ts spelling is the
+    TIMESTAMP-keys retry."""
+    order = _call_order(out, c)
+    args = _split_top_args(_rewrite_calls(order[1])) if order else []
+    terms = _order_terms(_rewrite_calls(order[2])) if order else []
+    if len(args) != 3 or not terms:
+        return None
+    n = args[2].strip()
+    nval = float(n) if re.fullmatch(r"\d+(\.\d*)?|\.\d+", n) \
+        else _try_const_eval(n)
+    if nval is None:
+        raise ValueError("Binder Error: lttb target count must be a constant")
+    if float(nval) < 2:
+        raise ValueError("Binder Error: lttb target count must be at least 2")
+    out[c.i:c.close + 1] = [_macro_lttb(
+        args[0], args[1], args[2], terms[0][0], ts_keys=c.name == "lttb_ts")]
+    return c.i + 1
+
+
+def _call_arg_n(out: list[str], c: _Call) -> int | None:
+    """arg_min/arg_max/min_by/max_by(x, key, n ORDER BY o): the n
+    extremes of key, ties broken by o."""
+    order = _call_order(out, c)
+    args = _split_top_args(_rewrite_calls(order[1])) if order else []
+    terms = _order_terms(_rewrite_calls(order[2])) if order else []
+    if len(args) != 3 or not terms:
+        return None
+    out[c.i:c.close + 1] = [_macro_arg_n(
+        args[0], args[1].rstrip(", \t"), args[2],
+        want_max=c.name in ("arg_max", "max_by"),
+        order=terms[0][0], order_desc=terms[0][1],
+    )]
+    return c.i + 1
+
+
+def _call_quantile_cont(out: list[str], c: _Call) -> int | None:
+    """quantile_cont(x, q ORDER BY x DESC): the interpolated quantile is
+    taken from the top — complement the fraction (reference quantile.cpp
+    ordered path; test_quantile_cont:134)."""
+    order = _call_order(out, c)
+    if order is None or c.over >= 0:
+        return None
+    args = _split_top_args(order[1])
+    terms = _order_terms(order[2])
+    if len(args) != 2 or not terms or not terms[0][1]:
+        return None
+    out[c.j + 1:c.close] = _tokens(f"{args[0].strip()}, 1.0 - ({args[1].strip()})")
+    return _call_default(out, c._replace(close=_match_paren(out, c.j)))
+
+
+def _call_struct_insert(out: list[str], c: _Call) -> int | None:
+    """struct_insert(s, k := v, …): the pairs join a `named_struct(…)`
+    argument, or `struct(s.*, v AS k)` for a struct column."""
+    args = _split_top_args(_rewrite_calls(out[c.j + 1:c.close]))
+    pairs = [re.match(r"(?s)^\s*([A-Za-z_]\w*)\s*(?::\s*=|=\s*>)\s*(.*)$", a)
+             for a in args[1:]]
+    if not pairs or not all(pairs):
+        return None
+    base = _tokens(args[0].strip())
+    op = _next_code(base, 1)
+    if base and base[0].lower() == "named_struct" and op < len(base) and \
+            base[op] == "(" and _match_paren(base, op) == len(base) - 1:
+        fields = ["".join(base[op + 1:-1]).strip()] + [
+            f"'{m.group(1)}', {m.group(2).strip()}" for m in pairs]
+        repl = "named_struct(" + ", ".join(f for f in fields if f) + ")"
+    elif re.fullmatch(r"[A-Za-z_][\w.]*", args[0].strip()):
+        repl = f"struct({args[0].strip()}.*, " + ", ".join(
+            f"{m.group(2).strip()} AS {m.group(1)}" for m in pairs) + ")"
+    else:
+        return None
+    out[c.i:c.close + 1] = [repl]
+    return c.i + 1
 
 
 def _rename_call(out: list[str], i: int, name: str) -> None:
@@ -9679,8 +9607,6 @@ from duckdb_spark.sql.dialect_macros import (  # noqa: E402,F401
 from duckdb_spark.sql.dialect_window import (  # noqa: E402,F401
     _WITHIN_GROUP_FOLD,
     _neg_q,
-    _ow_cmp,
-    _ow_entries,
     _rewrite_within_group,
     duck_blob_hex,
     _DISTINCT_WINDOW_FNS,
@@ -9730,6 +9656,25 @@ from duckdb_spark.sql.dialect_cast import (  # noqa: E402,F401
     _runtime_cast_chain,
     _unsigned_range_probes,
 )
+
+
+# `_rewrite_calls`'s handlers, by DuckDB function name; tests/
+# test_statement_pins.py pins every entry
+_CALL_HANDLERS: dict[str, Callable[[list[str], _Call], int | None]] = {
+    "grouping": _call_grouping,
+    "count": _call_count,
+    "len": _call_len, "length": _call_len,
+    **dict.fromkeys(_ONE_ARG_NAMES, _call_one_arg),
+    **dict.fromkeys(_ORDERED_WINDOW_FNS, _call_ordered_window),
+    "list": _call_list, "array_agg": _call_list,
+    "string_agg": _call_string_agg, "group_concat": _call_string_agg,
+    "listagg": _call_string_agg,
+    **dict.fromkeys(_OW_ALIASES, _call_first_last),
+    "lttb": _call_lttb, "lttb_ts": _call_lttb,
+    **dict.fromkeys(("arg_min", "arg_max", "min_by", "max_by"), _call_arg_n),
+    "quantile_cont": _call_quantile_cont,
+    "struct_insert": _call_struct_insert,
+}
 
 
 # `translate`'s passes, in order. Each name is what `Connection.last_trace`

@@ -4,8 +4,11 @@ DuckDB aggregates with no Spark equivalent expand to compositions of
 built-in JVM-side expressions at translate time: product/entropy via
 log-sum-exp, histogram family via sorted entry maps, lttb downsampling,
 bitstring_agg, mad, approx_top_k, arg_min/arg_max n-heaps, skew/kurtosis
-moment composition, plus the central `_agg_macro` dispatch consumed by
-dialect._rewrite_calls. Reference: src/core_functions/aggregate/.
+moment composition, plus the central `_agg_macro` dispatch. In
+dialect._rewrite_calls a call reaches `_agg_macro` only when no entry of
+`_CALL_HANDLERS` rewrote it (`_call_default`): after the windowed macros
+of dialect_window, before the `NAMES` rename. Reference:
+src/core_functions/aggregate/.
 """
 
 from __future__ import annotations
@@ -1625,7 +1628,7 @@ def _agg_macro(name: str, args: list[str]) -> str | None:
                 f"'-')")
     if name == "struct_pack" and (n == 0 or (n == 1 and not args[0].strip())):
         return "named_struct()"
-    if name in ("struct_pack", "struct_insert") and n >= 1:
+    if name == "struct_pack" and n >= 1:
         kvs = []
         for a in args:
             m = re.match(r"(?s)^\s*([A-Za-z_]\w*)\s*(?::\s*=|=\s*>)\s*(.*)$", a)

@@ -18,15 +18,18 @@ from duckdb_spark.sql.dialect import (  # noqa: E402 — bound at the
     _has_bare_unnest,
     _is_word,
     _iter_depth,
+    _keyed_sort,
     _macro_skew_kurt,
     _match_paren,
     _match_paren_rev,
     _next_code,
+    _order_terms,
     _prev_code,
     _qdisc_pick,
     _scope_span,
     _split_top_args,
     _sql_scalar,
+    _terms_cmp,
     _tokens,
     _top_level_index,
     _try_const_eval,
@@ -1700,17 +1703,8 @@ def _agg_macro_windowed(name: str, args: list[str], over: str) -> str | None:
         arg = args[0]
         om = re.search(r"(?is)\bORDER\s+BY\b", arg)
         if om:
-            x = arg[:om.start()].strip()
-            entries = _ow_entries(_tokens(arg[om.end():]))
-            fields = [f"'v', ({x})"] + [
-                f"'k{i}', ({k})" for i, (k, _, _) in enumerate(entries)
-            ]
-            cmp = _ow_cmp(entries, lambda i: f"l.k{i}", lambda i: f"r.k{i}")
-            lst = (
-                f"transform(array_sort("
-                f"collect_list(named_struct({', '.join(fields)})) {over}, "
-                f"(l, r) -> {cmp}), __s -> __s.v)"
-            )
+            lst = _keyed_sort(f"({arg[:om.start()].strip()})",
+                              _order_terms(_tokens(arg[om.end():])), over=over)
             lst = f"filter({lst}, __fv -> __fv is not null)"
         else:
             lst = f"collect_list({arg}) {over}"
@@ -1853,7 +1847,7 @@ def _ordered_window_repl(
     om = re.search(
         r"(?is)\bORDER\s+BY\s+(.*?)(?:\b(?:ROWS|RANGE|GROUPS)\b|$)", spec
     )
-    spec_entries = _ow_entries(_tokens(om.group(1))) if om else []
+    spec_entries = _order_terms(_tokens(om.group(1))) if om else []
     pos_entries = entries + [
         e for e in spec_entries if e[0] not in [k for k, _, _ in entries]
     ]
@@ -1884,12 +1878,12 @@ def _ordered_window_repl(
 
     keyfields = _fields(entries)
     x_lt_cur = (
-        _ow_cmp(entries, lambda x: f"__x.k{x}",
-                lambda x: f"({entries[x][0]})") + " < 0"
+        _terms_cmp(entries, lambda x: f"__x.k{x}",
+                   lambda x: f"({entries[x][0]})") + " < 0"
     )
     pos_lt_cur = (
-        _ow_cmp(pos_entries, lambda x: f"__x.k{x}",
-                lambda x: f"({pos_entries[x][0]})") + " < 0"
+        _terms_cmp(pos_entries, lambda x: f"__x.k{x}",
+                   lambda x: f"({pos_entries[x][0]})") + " < 0"
     )
     if name in ("rank", "dense_rank", "row_number"):
         if name == "row_number":
@@ -1928,58 +1922,39 @@ def _ordered_window_repl(
     if name == "cume_dist":
         karr = f"collect_list(named_struct({keyfields})) {over}"
         cur_lt_x = (
-            _ow_cmp(entries, lambda x: f"({entries[x][0]})",
-                    lambda x: f"__x.k{x}") + " < 0"
+            _terms_cmp(entries, lambda x: f"({entries[x][0]})",
+                       lambda x: f"__x.k{x}") + " < 0"
         )
         return (
             f"(case when size({karr}) = 0 then cast(0 as double) "
             f"else cast(size(filter({karr}, __x -> not({cur_lt_x}))) "
             f"as double) / size({karr}) end)"
         )
-    sort_cmp = _ow_cmp(pos_entries, lambda x: f"l.k{x}", lambda x: f"r.k{x}")
-    if name in ("list", "array_agg"):
-        val = args[0] if args else None
-        if val is None:
-            return None
-        el = f"named_struct('v', ({val}), {_fields(pos_entries)})"
-        if ignore_nulls:
-            el = f"case when ({val}) is not null then {el} end"
-        sorted_ = f"array_sort(collect_list({el}) {over}, (l, r) -> {sort_cmp})"
-        return f"transform({sorted_}, __s -> __s.v)"
-    if name in ("first_value", "last_value", "nth_value"):
-        val = args[0] if args else None
-        if val is None:
-            return None
-        if name == "last_value":
-            # last under keys ≡ first under the fully inverted order
-            inv = [(k, not d, not nf) for k, d, nf in pos_entries]
-            sort_cmp = _ow_cmp(inv, lambda x: f"l.k{x}", lambda x: f"r.k{x}")
-        el = f"named_struct('v', ({val}), {_fields(pos_entries)})"
-        if ignore_nulls:
-            el = f"case when ({val}) is not null then {el} end"
-        sorted_ = f"array_sort(collect_list({el}) {over}, (l, r) -> {sort_cmp})"
-        n = args[1].strip() if name == "nth_value" and len(args) > 1 else "1"
-        return f"try_element_at({sorted_}, {n}).v"
+    if not args:
+        return None
+    val = f"({args[0]})"
     if name in ("lag", "lead"):
-        val = args[0] if args else None
-        if val is None:
-            return None
         n = f"({args[1].strip()})" if len(args) > 1 and args[1].strip() else "1"
         dflt = args[2].strip() if len(args) > 2 and args[2].strip() else "null"
         # the ordered-argument variant is an ordered aggregate over the
         # FRAME (unlike plain lag/lead, which range over the partition)
-        el = f"named_struct('v', ({val}), {_fields(pos_entries)})"
-        arr = f"collect_list({el}) {over}"
-        sorted_ = f"array_sort({arr}, (l, r) -> {sort_cmp})"
-        idx = (f"(size(filter({arr}, __x -> ({pos_lt_cur}))) "
+        karr = f"collect_list(named_struct({_fields(pos_entries)})) {over}"
+        idx = (f"(size(filter({karr}, __x -> ({pos_lt_cur}))) "
                f"+ {_eq_before()})")
         sgn = "-" if name == "lag" else "+"
         tgt = f"({idx} + 1 {sgn} {n})"
+        pick = _keyed_sort(val, pos_entries, over=over, pick=tgt)
         return (
-            f"(case when {tgt} between 1 and size({arr}) "
-            f"then try_element_at({sorted_}, {tgt}).v else ({dflt}) end)"
+            f"(case when {tgt} between 1 and size({karr}) "
+            f"then {pick} else ({dflt}) end)"
         )
-    return None
+    if name == "last_value":
+        # last under keys ≡ first under the fully inverted order
+        pos_entries = [(k, not d, not nf) for k, d, nf in pos_entries]
+    pick = "" if name in ("list", "array_agg") else \
+        args[1].strip() if name == "nth_value" and len(args) > 1 else "1"
+    return _keyed_sort(val, pos_entries, over=over, pick=pick,
+                       when=f"{val} is not null" if ignore_nulls else "")
 
 
 def _strip_orderless_range_frames(toks: list[str]) -> list[str]:
@@ -2187,33 +2162,3 @@ def _rewrite_within_group(toks: list[str]) -> list[str]:
         out[i:pc + 1] = _tokens(f"{fn}(" + ", ".join(args) + ")")
         i += 1
     return out
-def _ow_entries(order_toks: list[str]) -> list[tuple[str, bool, bool]]:
-    """Parse an in-call ORDER BY list → [(key, desc, nulls_first)];
-    DuckDB's default null order is NULLS LAST in either direction."""
-    entries: list[tuple[str, bool, bool]] = []
-    for part in _split_top_args(order_toks):
-        p = part.strip()
-        p = re.sub(r"(?i)\s+(IGNORE|RESPECT)\s+NULLS\s*$", "", p).strip()
-        if not p:
-            continue
-        nf = bool(re.search(r"(?i)\bNULLS\s+FIRST\s*$", p))
-        p = re.sub(r"(?i)\s+NULLS\s+(FIRST|LAST)\s*$", "", p).strip()
-        d = bool(re.search(r"(?i)\s+DESC\s*$", p))
-        p = re.sub(r"(?i)\s+(ASC|DESC)\s*$", "", p).strip()
-        entries.append((p, d, nf))
-    return entries
-def _ow_cmp(entries: list[tuple[str, bool, bool]], lf, rf) -> str:
-    """-1/0/1 comparator over key tuples; lf(i)/rf(i) give the SQL for
-    key i on each side (struct field ref or raw current-row expression)."""
-    cmp = "0"
-    for x, (_, d, nf) in reversed(list(enumerate(entries))):
-        l, r = lf(x), rf(x)
-        lt, gt = ("1", "-1") if d else ("-1", "1")
-        ln, rn = ("-1", "1") if nf else ("1", "-1")
-        cmp = (
-            f"case when {l} <=> {r} then {cmp} "
-            f"when {l} is null then {ln} "
-            f"when {r} is null then {rn} "
-            f"when {l} < {r} then {lt} else {gt} end"
-        )
-    return cmp

@@ -152,10 +152,12 @@ def test_sequence(con):
     "SELECT COLUMNS('n_.*key') + 1 FROM nation ORDER BY n_nationkey",
     "SELECT min(COLUMNS(*)), max(COLUMNS(*)) FROM region",
     "SELECT max(COLUMNS('n_.*key')) m FROM nation",
+    "SELECT max(COLUMNS('n_.*key')) AS m FROM nation",
 ])
 def test_columns_replicas_take_their_column_names(con, oracle, sql):
     """An unaliased select entry over COLUMNS(…) is named after each
-    expanded column, as DuckDB names it."""
+    expanded column, as DuckDB names it; an aliased one gives every
+    replica the alias."""
     df = con.sql(sql).df()
     res = oracle.execute(sql)
     assert df.columns == [d[0] for d in res.description]

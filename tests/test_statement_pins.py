@@ -17,6 +17,7 @@ engines read, `{tmp}` a directory each engine writes on its own.
 from __future__ import annotations
 
 import logging
+import time
 from dataclasses import dataclass
 from datetime import datetime
 from decimal import Decimal
@@ -731,6 +732,14 @@ PASS_CASES = {
         "order_by_all", "SELECT n_regionkey, n_name FROM nation ORDER BY ALL"),
     "null_order": Case(
         "null_order", "SELECT x FROM (VALUES (1), (NULL)) t(x) ORDER BY x LIMIT 1"),
+    # the NULLS LAST lands before a line comment, not inside it
+    "null_order-comment": Case(
+        "null_order",
+        "SELECT x FROM (VALUES (1), (NULL), (2)) t(x) ORDER BY x -- asc\nLIMIT 2"),
+    "null_order-no_space_after_comma": Case(
+        "null_order",
+        "SELECT y FROM (VALUES (1, NULL), (1, 2)) t(x, y) ORDER BY x DESC,y "
+        "LIMIT 1"),
     "calls": Case("calls", "SELECT count() AS n FROM nation"),
     "values_structs": Case(
         "values_structs", "SELECT s[1] AS a FROM (VALUES ((1, 2)), ((3, 4))) t(s)"),
@@ -805,6 +814,139 @@ PASS_CASES = {
 }
 
 
+# y holds a NULL: DuckDB sorts it last unless told otherwise
+NULL_KEYS = "(VALUES (1, 3), (2, NULL), (3, 2)) t(x, y)"
+RANKED = "(VALUES (1, 30), (2, NULL), (3, 20), (4, 10)) t(x, y)"
+NULLS_FIRST = ("SET default_null_order = 'nulls_first'",)
+LTTB_ROWS = [([{"x": 1, "y": Decimal("1.0")}, {"x": 2, "y": Decimal("5.0")},
+               {"x": 4, "y": Decimal("3.0")}],)]
+
+
+def _window(call, expect, rows=RANKED, **kw):
+    """A windowed ordered call over `rows`; duckdb 1.0.0 raises "ORDER BY
+    is not implemented for window functions"."""
+    return Case("calls", f"SELECT x, {call} AS w FROM {rows}",
+                expect=expect, **kw)
+
+
+# one case (or more) per `dialect._CALL_HANDLERS` key, the key before any
+# `-`: its trace shows ("calls", "translated")
+CALL_CASES = {
+    "grouping": Case(
+        "calls",
+        "SELECT n_regionkey, GROUPING(n_regionkey, n_nationkey) AS g, "
+        "count(*) AS c FROM nation GROUP BY ROLLUP (n_regionkey, n_nationkey)"),
+    "count": Case(
+        "calls",
+        "SELECT count() AS n, count(n_name ORDER BY n_nationkey) AS m FROM nation"),
+    "len": Case("calls", "SELECT len([1, 2, 3]) AS a, len('abc') AS b"),
+    "length": Case("calls", "SELECT length([1, 2]) AS a, length('abcd') AS b"),
+    "log": Case("calls", "SELECT log(100) AS a, log(2, 8) AS b"),
+    "make_timestamp": Case(
+        "calls",
+        "SELECT make_timestamp(1000000) AS a, "
+        "make_timestamp(2020, 1, 2, 3, 4, 5) AS b"),
+    "list": Case("calls", f"SELECT list(x ORDER BY y) AS l FROM {NULL_KEYS}"),
+    "list-nulls_first": Case(
+        "calls", f"SELECT list(x ORDER BY y) AS l FROM {NULL_KEYS}",
+        setup=NULLS_FIRST, own_session=True),
+    "list-desc_nulls_first": Case(
+        "calls", f"SELECT list(x ORDER BY y DESC) AS l FROM {NULL_KEYS}",
+        setup=NULLS_FIRST, own_session=True),
+    "list-window_keeps_nulls": Case(
+        "calls", f"SELECT x, list(y) OVER (ORDER BY x) AS l FROM {NULL_KEYS}"),
+    "list-window_nulls_first": _window(
+        "list(x ORDER BY y) OVER ()", [(x, [2, 3, 1]) for x in (1, 2, 3)],
+        rows=NULL_KEYS, setup=NULLS_FIRST, own_session=True),
+    "array_agg": Case(
+        "calls",
+        f"SELECT array_agg(x ORDER BY y DESC NULLS FIRST, x) AS l FROM {RANKED}"),
+    "string_agg": Case(
+        "calls",
+        f"SELECT string_agg(x::VARCHAR, ',' ORDER BY y) AS s FROM {NULL_KEYS}"),
+    "string_agg-nulls_first": Case(
+        "calls",
+        f"SELECT string_agg(x::VARCHAR, ',' ORDER BY y) AS s FROM {NULL_KEYS}",
+        setup=NULLS_FIRST, own_session=True),
+    "string_agg-distinct_key_expression": Case(
+        "calls",
+        "SELECT string_agg(DISTINCT s, ',' ORDER BY upper(s)) AS s "
+        "FROM (VALUES ('b'), ('A'), ('b'), (NULL)) t(s)"),
+    "group_concat": Case(
+        "calls",
+        f"SELECT group_concat(x::VARCHAR ORDER BY y) AS s FROM {NULL_KEYS}"),
+    "listagg": Case(
+        "calls",
+        f"SELECT listagg(x::VARCHAR, '-' ORDER BY y DESC) AS s FROM {NULL_KEYS}"),
+    "first": Case("calls", f"SELECT first(x ORDER BY y) AS f FROM {NULL_KEYS}"),
+    "first-nulls_first": Case(
+        "calls", f"SELECT first(x ORDER BY y) AS f FROM {NULL_KEYS}",
+        setup=NULLS_FIRST, own_session=True),
+    "first-null_placement": Case(
+        "calls",
+        f"SELECT first(x ORDER BY y NULLS FIRST) AS a, "
+        f"first(x ORDER BY y DESC) AS b FROM {RANKED}"),
+    "last": Case("calls", f"SELECT last(x ORDER BY y) AS l FROM {NULL_KEYS}"),
+    "any_value": Case(
+        "calls", f"SELECT any_value(y ORDER BY x DESC) AS a FROM {RANKED}"),
+    "arbitrary": Case(
+        "calls", f"SELECT arbitrary(y ORDER BY x DESC) AS a FROM {RANKED}"),
+    # duckdb 1.0.0 has no lttb aggregate
+    "lttb": Case(
+        "calls",
+        "SELECT lttb(x, y, 3 ORDER BY x) AS l FROM (VALUES (1, 1.0), "
+        "(2, 5.0), (3, 2.0), (4, 3.0)) t(x, y)", expect=LTTB_ROWS),
+    "lttb_ts": Case(
+        "calls",
+        "SELECT lttb_ts(x, y, 3 ORDER BY x) AS l FROM (VALUES (1, 1.0), "
+        "(2, 5.0), (3, 2.0), (4, 3.0)) t(x, y)", expect=LTTB_ROWS),
+    # duckdb 1.0.0 has no n-argument arg_min / min_by
+    "arg_min": Case(
+        "calls", f"SELECT arg_min(x, y, 2 ORDER BY x) AS a FROM {RANKED}",
+        expect=[([4, 3],)]),
+    "arg_max": Case(
+        "calls", f"SELECT arg_max(x, y, 2 ORDER BY x) AS a FROM {RANKED}",
+        expect=[([1, 3],)]),
+    "min_by": Case(
+        "calls", f"SELECT min_by(x, y, 2 ORDER BY x) AS a FROM {RANKED}",
+        expect=[([4, 3],)]),
+    "max_by": Case(
+        "calls", f"SELECT max_by(x, y, 2 ORDER BY x) AS a FROM {RANKED}",
+        expect=[([1, 3],)]),
+    "quantile_cont": Case(
+        "calls",
+        f"SELECT quantile_cont(x, 0.25 ORDER BY x DESC) AS q FROM {RANKED}"),
+    "struct_insert": Case(
+        "calls", "SELECT struct_insert({{'a': 1}}, b := 2) AS s"),
+    "struct_insert-column": Case(
+        "calls",
+        "SELECT struct_insert(s, b := 2) AS r FROM (SELECT {{'a': 1}} AS s)"),
+    "rank": _window("rank(ORDER BY y) OVER ()", [(1, 3), (2, 4), (3, 2), (4, 1)]),
+    "dense_rank": _window(
+        "dense_rank(ORDER BY y DESC) OVER ()", [(1, 1), (2, 4), (3, 2), (4, 3)]),
+    "percent_rank": _window(
+        "percent_rank(ORDER BY y) OVER ()",
+        [(1, 2 / 3), (2, 1.0), (3, 1 / 3), (4, 0.0)]),
+    "cume_dist": _window(
+        "cume_dist(ORDER BY y) OVER ()",
+        [(1, 0.75), (2, 1.0), (3, 0.5), (4, 0.25)]),
+    "row_number": _window(
+        "row_number(ORDER BY y) OVER ()", [(1, 3), (2, 4), (3, 2), (4, 1)]),
+    "ntile": _window(
+        "ntile(2 ORDER BY y) OVER ()", [(1, 2), (2, 2), (3, 1), (4, 1)]),
+    "lag": _window(
+        "lag(x ORDER BY y) OVER ()", [(1, 3), (2, 1), (3, 4), (4, None)]),
+    "lead": _window(
+        "lead(x ORDER BY y) OVER ()", [(1, 2), (2, None), (3, 1), (4, 3)]),
+    "first_value": _window(
+        "first_value(x ORDER BY y) OVER ()", [(x, 4) for x in range(1, 5)]),
+    "last_value": _window(
+        "last_value(x ORDER BY y) OVER ()", [(x, 2) for x in range(1, 5)]),
+    "nth_value": _window(
+        "nth_value(x, 2 ORDER BY y) OVER ()", [(x, 3) for x in range(1, 5)]),
+}
+
+
 @pytest.fixture(scope="module")
 def con(spark):
     return Connection(spark=spark, sf_dir=SF_DIR)
@@ -876,7 +1018,7 @@ def _statement_entries(trace):
 
 @pytest.mark.parametrize("case", [
     pytest.param(c, id=k) for k, c in
-    {**STEP_CASES, **FALLBACK_CASES, **PASS_CASES}.items()])
+    {**STEP_CASES, **FALLBACK_CASES, **PASS_CASES, **CALL_CASES}.items()])
 def test_pin(con, duck, dirs, case):
     if case.own_session:
         con, duck = Connection(con.spark.newSession()), duckdb.connect()
@@ -904,6 +1046,25 @@ def test_every_translate_pass_is_pinned():
     assert len(set(names)) == len(names)
     assert not set(names) & {f.__name__ for f in (*STEPS, *FALLBACKS)}
     assert set(names) == {c.fired for c in PASS_CASES.values()}
+
+
+def test_every_call_handler_is_pinned():
+    from duckdb_spark.sql.dialect import _CALL_HANDLERS
+
+    assert set(_CALL_HANDLERS) == {k.split("-")[0] for k in CALL_CASES}
+
+
+def test_lttb_count_is_never_evaluated_in_python():
+    """The target count is a literal or a constant Spark can fold; a
+    power tower must not be computed in Python."""
+    from duckdb_spark.sql.dialect import translate
+
+    start = time.monotonic()
+    try:
+        translate("SELECT lttb(x, y, 9**9**9 ORDER BY o) AS r FROM t")
+    except ValueError as e:
+        assert str(e).startswith("Binder Error"), e
+    assert time.monotonic() - start < 2
 
 
 def test_where_paren_reads_whole_words():
